@@ -8,6 +8,7 @@ shuffles are the final aggregates.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -583,10 +584,26 @@ _BPE_MIN_PAIR = 2  # stop early when the best pair is unrepeated
 # Driver-collect row budget for the trainer's distinct-word table (round-15
 # guard; see _bpe_train). 10M short-word rows ≈ hundreds of MB of driver
 # heap — generous for any natural-language vocabulary, small enough to fail
-# loudly before the JVM does.
-_BPE_DRIVER_ROW_BUDGET = int(
-    os.environ.get("SPARK_GRAFT_BPE_DRIVER_ROWS", 10_000_000)
-)
+# loudly before the JVM does. SPARK_GRAFT_BPE_DRIVER_ROWS overrides it; it
+# is read when the trainer runs, so a malformed value cannot break the
+# import of this module.
+_BPE_DRIVER_ROW_BUDGET = 10_000_000
+
+
+def _bpe_driver_row_budget() -> int:
+    raw = os.environ.get("SPARK_GRAFT_BPE_DRIVER_ROWS")
+    if raw is None:
+        return _BPE_DRIVER_ROW_BUDGET
+    try:
+        return int(raw)
+    except ValueError:
+        warnings.warn(
+            f"SPARK_GRAFT_BPE_DRIVER_ROWS={raw!r} is not an integer; using "
+            f"the default budget of {_BPE_DRIVER_ROW_BUDGET} rows"
+        )
+        return _BPE_DRIVER_ROW_BUDGET
+
+
 # Merge-resolution history (each step measured before shipping): r14 build
 # measured the non-interacting batch rule (batch sizes collapse to 1 after
 # ~6 merges; rejected) and shipped in-plan chunked resolution (19 -> 7
@@ -754,10 +771,11 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     words0 = _bpe_words0(spark, sf_dir).persist()
     try:
         n_words = words0.count()
-        if n_words > _BPE_DRIVER_ROW_BUDGET:
+        budget = _bpe_driver_row_budget()
+        if n_words > budget:
             raise ValueError(
                 f"BPE trainer: distinct-word table has {n_words} rows, over "
-                f"the driver collect budget ({_BPE_DRIVER_ROW_BUDGET}; env "
+                f"the driver collect budget ({budget}; env "
                 "SPARK_GRAFT_BPE_DRIVER_ROWS). Revive the in-plan chunked "
                 "merge trainer (round-14 build, git history) for corpora "
                 "whose vocabulary outgrows the driver."

@@ -21,6 +21,7 @@ File-source streaming here stands in for Kafka: same API, different source.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -296,7 +297,9 @@ def source_bytes(*paths: str) -> int:
     input-size signal :func:`run_to_memory` sizes state partitions from."""
     total = 0
     for p in paths:
-        p = p.removeprefix("file:")
+        if p.startswith("file:"):
+            # file:/p, file:///p and file://host/p all name the local /p
+            p = unquote(urlparse(p).path)
         if os.path.isdir(p):
             for root, _, files in os.walk(p):
                 for f in files:

@@ -178,3 +178,44 @@ def test_ensure_checkpoint_dir_refreshes_own_heartbeat(spark):
     os.utime(marker, (old, old))
     ensure_checkpoint_dir(spark)  # idempotent claim → heartbeat touch
     assert os.path.getmtime(marker) > time.time() - 60
+
+
+def test_build_session_defaults_to_usable_cpus(monkeypatch):
+    """Without SPARK_GRAFT_CPUS, local[N] and the shuffle partition count
+    follow the CPUs this process may run on (its affinity mask), not a
+    fixed 32; with it, the variable decides both."""
+    from als_pyspark_spark import session
+
+    seen = {}
+
+    class Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            seen["master"] = master
+            return self
+
+        def config(self, key, value):
+            seen[key] = value
+            return self
+
+        def getOrCreate(self):
+            return "spark"
+
+    class FakeSparkSession:
+        builder = Builder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSparkSession)
+    monkeypatch.setattr(session, "ensure_checkpoint_dir", lambda spark: None)
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.build_session() == "spark"
+    n = len(os.sched_getaffinity(0))
+    assert seen["master"] == f"local[{n}]"
+    assert seen["spark.sql.shuffle.partitions"] == str(n)
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    session.build_session()
+    assert seen["master"] == "local[3]"
+    assert seen["spark.sql.shuffle.partitions"] == "3"

@@ -271,3 +271,34 @@ def test_pca_projection_witness_and_planted_direction(spark, tmp_path):
     assert [(r.pc1, r.pc2, r.pc3, r.pc4) for r in rows] == [
         (r.pc1, r.pc2, r.pc3, r.pc4) for r in rows2
     ]
+
+
+def test_pq_encode_skips_zero_row_batches():
+    """A zero-row Arrow batch (an empty partition after the repartition)
+    must pass through the IVF-PQ encode pass without reaching the
+    witness threshold's np.partition, and must not disturb the batches
+    around it."""
+    import numpy as np
+    import pyarrow as pa
+
+    from als_pyspark_spark.similarity.queries import _pq_encode_batches
+
+    rng = np.random.default_rng(0)
+    dim, m_sub, ksub = 4, 2, 2
+    cents = rng.normal(size=(3, dim))
+    books = rng.normal(size=(m_sub, ksub, dim // m_sub))
+    q_units = rng.normal(size=(2, dim))
+    encode = _pq_encode_batches(cents, books, q_units, np.array([0, 1]), 10)
+
+    def batch(n):
+        rows = rng.normal(size=(n, dim)).tolist()
+        return pa.RecordBatch.from_arrays(
+            [pa.array(range(n), pa.int64()), pa.array(rows, pa.list_(pa.float32()))],
+            ["vec_id", "embedding"],
+        )
+
+    assert list(encode(iter([batch(0)]))) == []
+    out = list(encode(iter([batch(0), batch(3), batch(0)])))
+    assert [b.num_rows for b in out] == [3]
+    # every non-self row of a 3-row batch clears the top-10 threshold
+    assert [len(w) for w in out[0].column("wit").to_pylist()] == [1, 1, 2]

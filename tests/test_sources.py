@@ -86,3 +86,116 @@ def test_app_scratch_gc_respects_nested_activity(spark, tmp_path):
         assert not os.path.exists(dead), "fully-stale sibling survived GC"
     finally:
         sinks._SCRATCH = orig
+
+
+def _job_ids(spark, group: str, fn):
+    """Run ``fn`` under a fresh job group; return its result and the ids of
+    the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _copy_tables(sf_dir, dest, names):
+    import shutil
+
+    for t in names:
+        shutil.copy(f"{sf_dir}/{t}.parquet", dest / f"{t}.parquet")
+    return str(dest)
+
+
+def test_second_load_of_a_file_starts_no_job(spark, sf_dir, tmp_path):
+    """The first load of a file infers its schema (a footer-reading Spark
+    job); every later load declares the memoized schema, starts no job and
+    yields the same schema and rows, for every fixture table."""
+    from als_pyspark_spark.sources.tables import TABLES, load_table
+
+    d = _copy_tables(sf_dir, tmp_path, TABLES)
+    for t in TABLES:
+        inferred, jobs1 = _job_ids(spark, f"infer-{t}", lambda: load_table(spark, d, t))
+        declared, jobs2 = _job_ids(spark, f"declare-{t}", lambda: load_table(spark, d, t))
+        assert jobs1, f"{t}: inference ran no job, so the count proves nothing"
+        assert jobs2 == [], t
+        assert declared.schema == inferred.schema, t
+        assert declared.collect() == inferred.collect(), t
+
+
+def test_nanos_events_memo_keeps_nanos_as_long(spark, sf_dir, tmp_path):
+    """An events file whose ts is parquet TIMESTAMP(NANOS) infers ts as
+    LongType under nanosAsLong; the memoized read keeps that physical type
+    and the same converted rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.sql import types as T
+
+    from als_pyspark_spark.sources.tables import events_ts_physical_type, load_table
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(t, tmp_path / "events.parquet", version="2.6")
+    d = str(tmp_path)
+
+    first, jobs1 = _job_ids(spark, "nanos-first", lambda: load_table(spark, d, "events"))
+    second, jobs2 = _job_ids(spark, "nanos-second", lambda: load_table(spark, d, "events"))
+    ts_type, jobs3 = _job_ids(spark, "nanos-type", lambda: events_ts_physical_type(spark, d))
+    assert jobs1 and jobs2 == [] and jobs3 == []
+    assert isinstance(ts_type, T.LongType)
+    assert second.schema == first.schema
+    assert isinstance(second.schema["ts"].dataType, T.TimestampType)
+    micros = load_table(spark, sf_dir, "events")
+    assert second.collect() == micros.collect()
+
+    # the memo key holds nanosAsLong: with it off, the file infers again
+    # and fails as it always has, instead of reading the memoized LongType
+    from pyspark.errors import PySparkException
+
+    from als_pyspark_spark.sources.tables import _read_parquet
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    try:
+        with pytest.raises(PySparkException, match="PARQUET_TYPE_ILLEGAL"):
+            _read_parquet(spark, f"{d}/events.parquet")
+    finally:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def test_rewritten_file_infers_again(spark, sf_dir, tmp_path):
+    """A file rewritten with another column is inferred again, and the new
+    column is read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from als_pyspark_spark.sources.tables import load_table
+
+    d = _copy_tables(sf_dir, tmp_path, ["region"])
+    before = load_table(spark, d, "region")
+    assert "r_extra" not in before.columns
+    t = pq.read_table(tmp_path / "region.parquet")
+    t = t.append_column("r_extra", pa.array(range(t.num_rows), pa.int64()))
+    pq.write_table(t, tmp_path / "region.parquet")
+
+    after, jobs = _job_ids(spark, "rewritten", lambda: load_table(spark, d, "region"))
+    assert jobs, "a rewritten file must infer its schema again"
+    assert after.columns == before.columns + ["r_extra"]
+    assert sorted(r.r_extra for r in after.collect()) == list(range(t.num_rows))
+
+
+def test_directory_table_still_infers(spark, sf_dir, tmp_path):
+    """A table stored as a parquet directory keeps the inferring read on
+    every load: Spark's listing, not a file stat, decides what it holds."""
+    from als_pyspark_spark.sources.tables import load_table
+
+    spark.read.parquet(f"{sf_dir}/nation.parquet").write.parquet(
+        str(tmp_path / "nation.parquet")
+    )
+    d = str(tmp_path)
+    first, jobs1 = _job_ids(spark, "dir-first", lambda: load_table(spark, d, "nation"))
+    second, jobs2 = _job_ids(spark, "dir-second", lambda: load_table(spark, d, "nation"))
+    assert jobs1 and jobs2
+    assert second.schema == first.schema

@@ -423,3 +423,16 @@ def test_dedup_exactly_once_at_watermark_boundary_probe(spark, tmp_path):
         got = run_to_memory(op(src()), name, mode="append").collect()
         emitted = sorted(r.event_id for r in got)
         assert emitted == [1, 2, 9], (name, got)
+
+
+def test_source_bytes_reads_every_file_uri_form(tmp_path):
+    """file:/p, file:///p and file://host/p all measure the local file /p
+    (a plain prefix strip left //host/p, which silently measured 0)."""
+    from als_pyspark_spark.streaming.events import source_bytes
+
+    f = tmp_path / "a b.parquet"
+    f.write_bytes(b"x" * 123)
+    p = str(f)
+    quoted = p.replace(" ", "%20")
+    for uri in (p, f"file:{p}", f"file://{p}", f"file://localhost{quoted}"):
+        assert source_bytes(uri) == 123, uri
