@@ -923,9 +923,9 @@ def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle COMPOSITION (drift-proof): the oracle reuses _bpe_train_ctes()
     VERBATIM — the train oracle's own CTE chain — and reads the final
     w{_BPE_MERGES} table as the encoding map, so train and encode cannot
-    diverge: any change to training semantics rewrites both oracles and
-    both fingerprints (tests/test_text.py asserts the textual containment
-    and the tokenizer coupling).
+    diverge: any change to training semantics rewrites both oracles
+    (tests/test_text.py asserts the textual containment and the tokenizer
+    coupling).
 
     Training itself runs first (one corpus-collapse job + a driver-side
     merge loop, see _bpe_train) because the merge table is a model

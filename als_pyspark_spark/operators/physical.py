@@ -10,18 +10,14 @@ persisted form of the same contract.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from als_pyspark_spark.registry import query
+from als_pyspark_spark.sources.sinks import app_scratch
 from als_pyspark_spark.sources.tables import load_table
 
 _PRICE = "decimal(12,2)"
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch"
-)
 _N_BUCKETS = 8
 _N_SALTS = 8
 
@@ -44,7 +40,6 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py). The persisted form of the reference's
     co-partitioning trick, and how a 100 TB fact-fact join avoids
     re-shuffling on every query."""
-    os.makedirs(_SCRATCH, exist_ok=True)
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_extendedprice").cast(_PRICE).alias("price")
     )
@@ -53,7 +48,7 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             df.write.mode("overwrite")
-            .option("path", os.path.join(_SCRATCH, name))
+            .option("path", app_scratch(spark, name))
             .bucketBy(_N_BUCKETS, key)
             .sortBy(key)
             .saveAsTable(name)

@@ -30,10 +30,10 @@ class Query:
     # Importable module names this query needs beyond the baked-in stack
     # (e.g. ("google.protobuf",) for transformWithState). Registration is
     # UNCONDITIONAL — the registry's contents are identical on every
-    # machine — but sweep views (``__spark_entry__``) and the window
-    # invariants exclude queries whose requirements are absent, so a
-    # missing optional dependency shows up as a deterministic skip, never
-    # as an environment-dependent registry or a guaranteed-red driver row.
+    # machine — but sweep views (``__spark_entry__``) exclude queries whose
+    # requirements are absent, so a missing optional dependency shows up as
+    # a deterministic skip, never as an environment-dependent registry or a
+    # guaranteed-red driver row.
     requires: tuple[str, ...] = field(default_factory=tuple)
 
 
@@ -46,9 +46,16 @@ def query(
     tags: tuple[str, ...] = (),
     requires: tuple[str, ...] = (),
 ):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
+    Raises ``ValueError`` if ``name`` is already registered."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        prev = QUERIES.get(name)
+        if prev is not None:
+            raise ValueError(
+                f"query {name!r} registered twice: by {prev.build.__module__} "
+                f"and by {fn.__module__}"
+            )
         QUERIES[name] = Query(
             name=name,
             build=fn,
@@ -60,150 +67,6 @@ def query(
         return fn
 
     return deco
-
-
-# ---------------------------------------------------------------------------
-# Stale-evidence fingerprinting (round-5 upgrade of the round-4 snapshot).
-#
-# A driver row is only evidence for the code that produced it, so each
-# query carries a fingerprint over its build function's source, its oracle
-# SQL, AND the source of every package-internal helper transitively
-# reachable from the build function — module-level globals and local
-# `from als_pyspark_spark... import` statements alike. Round 4's
-# build-source-only hash missed helper rewrites (the word_ngrams class of
-# change that created round-3 hoist debt); this closes that gap
-# mechanically: a helper-only edit flips the fingerprint of every query
-# that reaches the helper, and test_registry.py then forces those queries
-# into the round's verification window.
-
-_PKG_PREFIX = "als_pyspark_spark"
-
-
-def _code_names(code) -> set[str]:
-    import types
-
-    names = set(code.co_names)
-    for const in code.co_consts:
-        if isinstance(const, types.CodeType):
-            names |= _code_names(const)
-    return names
-
-
-def _collect_reachable(obj, seen: set[str], out: dict[str, str]) -> None:
-    import importlib
-    import inspect
-    import re
-
-    # Unwrap decorated callables (e.g. pandas_udf wrappers) to the real
-    # function whose source we can read.
-    for attr in ("__wrapped__", "func"):
-        inner = getattr(obj, attr, None)
-        if inspect.isfunction(inner):
-            obj = inner
-            break
-    if not (inspect.isfunction(obj) or inspect.isclass(obj)):
-        return
-    if not getattr(obj, "__module__", "").startswith(_PKG_PREFIX):
-        return
-    key = f"{obj.__module__}.{getattr(obj, '__qualname__', obj.__name__)}"
-    if key in seen:
-        return
-    seen.add(key)
-    try:
-        src = inspect.getsource(obj)
-    except (OSError, TypeError):
-        return
-    out[key] = src
-
-    codes = []
-    if inspect.isfunction(obj):
-        codes.append(obj.__code__)
-        namespaces = [obj.__globals__]
-    else:  # class: walk its methods' code, resolve against its module
-        namespaces = [importlib.import_module(obj.__module__).__dict__]
-        for v in vars(obj).values():
-            if isinstance(v, (staticmethod, classmethod)):
-                v = v.__func__
-            if inspect.isfunction(v):
-                codes.append(v.__code__)
-
-    names: set[str] = set()
-    for code in codes:
-        names |= _code_names(code)
-
-    # Local `from als_pyspark_spark.x import y` / `import als_pyspark_spark.x`
-    # inside the body never reach __globals__ — import those modules and add
-    # their dicts as lookup namespaces (over-approximation is fine: an extra
-    # helper in the fingerprint only makes staleness detection stricter).
-    for modname in set(re.findall(rf"(?:from|import)\s+({_PKG_PREFIX}[\w.]*)", src)):
-        try:
-            namespaces.append(importlib.import_module(modname).__dict__)
-        except ImportError:
-            pass
-    # Package modules referenced by name (`sinks.app_scratch`): their dicts
-    # become namespaces too, so attribute names in co_names resolve.
-    for name in list(names):
-        for ns in list(namespaces):
-            v = ns.get(name)
-            if inspect.ismodule(v) and v.__name__.startswith(_PKG_PREFIX):
-                namespaces.append(v.__dict__)
-
-    for name in names:
-        for ns in namespaces:
-            v = ns.get(name)
-            if v is not None:
-                _collect_reachable(v, seen, out)
-            # Round-12 upgrade: module-level scalar CONSTANTS enter the
-            # fingerprint too. A tuning-knob edit (_PQ_NPROBE = 8 -> 12,
-            # _PQ_SHORTLIST = 256 -> 1024) changes a query's OUTPUT
-            # without changing any function's source text, so the
-            # source-only hash silently kept stale driver evidence alive
-            # (the r11 shortlist retune was hoisted by hand; this makes
-            # it mechanical). Simple immutables only — their repr is
-            # deterministic — and only from package modules.
-            if _is_const(v) and ns.get("__name__", "").startswith(_PKG_PREFIX):
-                out[f"{ns['__name__']}::{name}"] = repr(v)
-
-
-def _is_const(v) -> bool:
-    """True for values whose repr is a stable fingerprint component.
-    None is excluded on purpose: ``ns.get(name)`` returns None for every
-    co_name ABSENT from a namespace (attribute names, builtins), and
-    recording those would bloat the fingerprint with no-information
-    entries."""
-    if isinstance(v, bool):
-        return True
-    if isinstance(v, (int, float, str, bytes)):
-        return True
-    if isinstance(v, tuple):
-        return v != () and all(_is_const(x) for x in v)
-    return False
-
-
-def reachable_sources(fn) -> dict[str, str]:
-    """'module.qualname' -> source for every package-internal function or
-    class transitively reachable from ``fn`` (including ``fn`` itself)."""
-    out: dict[str, str] = {}
-    _collect_reachable(fn, set(), out)
-    return out
-
-
-def fingerprint_from_sources(oracle: str | None, sources: dict[str, str]) -> str:
-    """Pure hash step, exposed so tests can prove a single-helper edit
-    flips the fingerprint."""
-    import hashlib
-
-    parts = [oracle or ""]
-    for key in sorted(sources):
-        parts.append(key + "\n" + sources[key])
-    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
-
-
-def query_fingerprint(q: Query) -> str:
-    """Evidence fingerprint: build source + oracle + transitive package
-    helpers. Stored per-query in tests/query_source_hashes.json at round
-    end; compared by test_registry.py during the round."""
-    return fingerprint_from_sources(q.oracle, reachable_sources(q.build))
 
 
 def requirements_met(q: Query) -> bool:
@@ -218,11 +81,8 @@ def requirements_met(q: Query) -> bool:
     return True
 
 
-# Registration (= driver verification) order. External correctness sweeps
-# walk the registry in insertion order and may only cover a prefix, so
-# modules with the least accumulated driver evidence register first; the
-# per-round verification agenda itself lives in _HOISTED below, which
-# overrides module order query-by-query.
+# Registration order is the import order of these modules, so it is the
+# same in every process.
 _MODULE_ORDER = (
     "als_pyspark_spark.operators.graph",
     "als_pyspark_spark.operators.warehouse",
@@ -252,111 +112,9 @@ _MODULE_ORDER = (
     "als_pyspark_spark.operators.timeseries",
 )
 
-# Individual queries hoisted to the very front of the registry, ahead of
-# their home module's slot. The external sweep verifies a ~50-entry prefix
-# per round, so the hoist list IS the round's driver-verification agenda.
-#
-# Round 15 agenda (optimization round 2 of 2), composed per the standing
-# ritual:
-#   1. the FIFTEEN rows deferred past the round-14 boundary LEAD, exactly
-#      as the round-14 agenda promised (code-unchanged formerly-green:
-#      the eight TPC-H siblings plus q14/q13/q12, als_predictions,
-#      q_events_user_daily, q_stream_sliding_halfhour*, q_most_rated_items
-#      — *sliding_halfhour is ALSO re-changed this round, see 2);
-#   2. every query whose fingerprint flipped this round — the round-15
-#      optimization rewrites (PageRank single-exchange base + closed
-#      round 1 + nodes-join elision; LPA one-exchange vote chain;
-#      triangle in-row edge explode + raw-edge persist; CC self-loop
-#      single-reference rounds; adaptive streaming state partitions via
-#      run_to_memory, which flips the whole run_to_memory family; jaccard
-#      window-df; IVF single-window witness; BPE driver-budget guard;
-#      e2e gram materialization) plus the round-14 rewrites whose
-#      snapshot entries are still r13-vintage (fuzzy, neardup, bfs,
-#      triangle, pagerank, clusters — hoisted again so their newest
-#      driver evidence matches the code that now ships). Every rewrite
-#      is oracle-verified at sf0.001/0.01/0.1 before landing
-#      (OPTIMIZATION_r15.md).
-#   3. two family canaries the window invariant requires beyond the
-#      flipped families: q_sink_sorted_layout (oldest sinks evidence,
-#      r11) and q_arrow_map_token_stats (oldest pandas-UDF evidence, r9).
-#
-# q_stream_tws_user_max also flipped (run_to_memory) but is
-# requirements-gated (google.protobuf, absent in every driver container
-# so far) and therefore excluded from the sweep view — hoisting it would
-# spend nothing and verify nothing; its protobuf-free twin
-# q_stream_apws_user_max carries the semantics into the window.
-#
-# The carryover mechanism stays DRAINED (empty since round 6); a future
-# overflow must repopulate it consciously, with the same three rules
-# test_carryover enforces.
-_CARRYOVER: tuple[str, ...] = ()
-
-_HOISTED = (
-    # 1. the fifteen deferred round-14 rows lead
-    "q11_important_part_values",
-    "q15_top_supplier_revenue",
-    "q16_supplier_counts_by_part",
-    "q18_in_big_orders",
-    "q19_disjunctive_revenue",
-    "q22_wealthy_inactive_customers",
-    "q2_min_cost_supplier",
-    "q7_nation_volume_shipping",
-    "q14_promo_revenue_pct",
-    "als_predictions",
-    "q_events_user_daily",
-    "q_stream_sliding_halfhour",
-    "q13_customer_order_distribution",
-    "q_most_rated_items",
-    "q12_late_shipment_priority",
-    # 2. the round-15 changed set: graph family
-    "q_pagerank_copurchase",
-    "q_pagerank_converged",
-    "q_label_propagation_communities",
-    "q_triangle_count_parts",
-    "q_triangle_count_doulion",
-    "q_bfs_part_distances",
-    # dedup/similarity family
-    "q_dedup_clusters",
-    "q_semantic_dedup_clusters",
-    "q_embedding_neardup_pairs",
-    "q_dedup_jaccard_prefix_join",
-    "q_dedup_tier_recall",
-    "q_fuzzy_part_match",
-    "q_ann_ivf_top10",
-    "q_ann_ivfpq_top10",
-    # text / pipeline family
-    "q_bpe_train_merges",
-    "q_bpe_encode_corpus",
-    "q_pipeline_e2e",
-    # streaming family (the run_to_memory adaptive-state-partition flip)
-    "q_stream_tumbling_hourly",
-    "q_stream_static_enrich",
-    "q_stream_stream_join",
-    "q_stream_stateful_threshold",
-    "q_stream_apws_user_max",
-    "q_stream_dedup_count",
-    "q_stream_dedup_within_watermark",
-    "q_stream_session_windows",
-    "q_stream_ohlc_hourly",
-    "q_stream_left_outer_join",
-    "q_stream_update_mode_totals",
-    "q_stream_late_data_drop",
-    "q_stream_join_then_window",
-    "q_stream_dynamic_session_gap",
-    "q_stream_full_outer_join",
-    "q_stream_static_left_enrich",
-    # 3. family canaries: oldest sinks evidence (r11), oldest
-    # pandas-UDF-surface evidence (r9)
-    "q_sink_sorted_layout",
-    "q_arrow_map_token_stats",
-    # --- 50-entry sweep-prefix boundary: exactly 50 names above
-    # (q_stream_sliding_halfhour serves both as a deferred row and as a
-    # member of the changed streaming family).
-)
 
 def load_all_queries() -> dict[str, Query]:
-    """Import every module that registers queries, then return the registry
-    in verification-priority order (see ``_MODULE_ORDER``)."""
+    """Import every module that registers queries and return the registry."""
     import importlib
 
     # Imports are side-effectful (decorator registration); keep the list
@@ -364,9 +122,4 @@ def load_all_queries() -> dict[str, Query]:
     # coverage.
     for mod in _MODULE_ORDER:
         importlib.import_module(mod)
-
-    ordered = {n: QUERIES[n] for n in _HOISTED if n in QUERIES}
-    ordered.update(QUERIES)
-    QUERIES.clear()
-    QUERIES.update(ordered)
     return QUERIES

@@ -173,9 +173,8 @@ HAVING MAX(value) >= 400.0
     tags=("streaming", "state", "transformWithState"),
     # transformWithStateInPandas talks to its state server over protobuf;
     # the module is not in every container. Registration is unconditional
-    # (deterministic registry on every machine); sweep views and the
-    # window invariants exclude the query where the dependency is absent,
-    # and build() raises a clear error rather than an obscure py4j one.
+    # (deterministic registry on every machine); sweep views exclude the
+    # query where the dependency is absent, and build() raises a clear error rather than an obscure py4j one.
     requires=("google.protobuf",),
 )
 def q_stream_tws_user_max(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,9 +11,7 @@ was structurally blind to: ``min_label_components`` required the
 checkpoint dir that only ``build_session`` wires, so both CC queries were
 locally green and driver-red. Every query must be self-sufficient on a
 bare session (per-query UTC pin, lazy checkpoint dir, per-query recursion
-limit); this flag is how that property is gated locally. The end-of-round
-ritual runs the verification window once with ``--bare`` in addition to
-the 3x factory-session passes.
+limit); this flag is how that property is gated locally.
 """
 
 from __future__ import annotations

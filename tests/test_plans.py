@@ -130,6 +130,22 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
     assert "Exchange hashpartitioning(o_orderkey" not in plan, plan
 
 
+def test_bucketed_tables_live_in_session_scratch(spark, sf_dir):
+    """The bucketed copies are written under a per-application scratch
+    path, so two concurrent processes never overwrite each other's
+    tables."""
+    QUERIES["q_bucketed_colocated_join"].build(spark, sf_dir)
+    app_id = spark.sparkContext.applicationId
+    for table in ("bkt_lineitem", "bkt_orders"):
+        location = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
+            .filter("col_name = 'Location'")
+            .first()
+            .data_type
+        )
+        assert app_id in location, (table, location)
+
+
 def test_approx_count_distinct_within_bounds(spark, sf_dir):
     exact = {
         r.l_returnflag: r.d

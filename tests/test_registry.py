@@ -1,47 +1,30 @@
-"""Registry-order invariants: external correctness sweeps may verify only a
-prefix of the registry (observed: first 50 entries, insertion order), so the
-per-round verification agenda — encoded in _HOISTED — MUST land inside that
-prefix, and every query must have driver evidence from SOME round.
+"""Registry invariants and the static lints that guard the driver contract.
 
-Round 7 agenda (the vintage-rotation round): (a) the fixed round-6 red row
-leads, (b) the one fingerprint-flipped query, (c) all 35 r1-vintage rows,
-(d) a 12-entry r2 block keeping every displaced family's canary in-window,
-(e) a freshest-green sinks canary; the tail pre-stages round 8's remaining
-18 r2-vintage rows. These tests read the actual CORRECTNESS_r0*.json files, so they
-fail loudly if a future reorder silently re-orphans a query that only a
-past round's rotation covers.
+The registry itself: names are unique and availability-gated queries
+(Query.requires non-empty) are registered unconditionally, so the
+registry's CONTENTS are identical on every machine; the sweep view
+(__spark_entry__.queries()) excludes them when their optional dependency
+is absent.
 
-Availability-gated queries (Query.requires non-empty) are registered
-unconditionally — the registry's CONTENTS are identical on every machine —
-but are excluded from the sweep view (__spark_entry__.queries()) when their
-optional dependency is absent, so they are exempt from the driver-evidence
-invariant in environments where they cannot run.
+The lints: every oracle's LIMIT sits under an ORDER BY, oracle output types
+survive the driver's pandas load, the comparator rejects non-scalar cells,
+and every ``.persist()`` in the package is released or documented.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
+import pytest
+
 from als_pyspark_spark.registry import (
-    _CARRYOVER,
-    _HOISTED,
+    QUERIES,
     load_all_queries,
+    query,
     requirements_met,
 )
 
-_WINDOW = 50
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_ROUNDS = (1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14)
-
-
-def _driver_verified() -> set[str]:
-    seen: set[str] = set()
-    for i in _ROUNDS:
-        path = os.path.join(_REPO, f"CORRECTNESS_r{i:02d}.json")
-        with open(path) as f:
-            seen |= set(json.load(f))
-    return seen
 
 
 def _sweep_names() -> list[str]:
@@ -49,51 +32,6 @@ def _sweep_names() -> list[str]:
     minus queries whose optional dependencies are absent here."""
     q = load_all_queries()
     return [n for n in q if requirements_met(q[n])]
-
-
-def test_every_query_has_driver_evidence_or_sits_in_window():
-    """Union(driver rows r1..r3, current 50-entry sweep prefix) must cover
-    every sweepable query — none may be unverifiable by the next sweep."""
-    names = _sweep_names()
-    covered = _driver_verified() | set(names[:_WINDOW]) | set(_CARRYOVER)
-    orphans = [n for n in names if n not in covered]
-    assert not orphans, (
-        f"queries with no driver row in any round AND outside the "
-        f"{_WINDOW}-entry verification window: {orphans} — hoist them in "
-        f"registry.py"
-    )
-
-
-def test_never_verified_queries_all_hoisted():
-    """Everything past sweeps missed must sit in the prefix THIS round."""
-    names = _sweep_names()
-    window = set(names[:_WINDOW])
-    never = [n for n in names if n not in _driver_verified()]
-    outside = [n for n in never if n not in window and n not in _CARRYOVER]
-    assert not outside, outside
-
-
-def test_carryover_is_minimal_and_leads_next_window():
-    """_CARRYOVER entries must (a) genuinely not fit (prefix already full
-    of never-verified queries), (b) be hoisted adjacent to the prefix
-    boundary so they lead the next round's sweep, (c) never duplicate a
-    query that already has driver evidence (that would waste the
-    exemption). Round 6 drained the list — the rules apply to any future
-    repopulation."""
-    names = _sweep_names()
-    never = [n for n in names if n not in _driver_verified()]
-    in_prefix = [n for n in never if n in set(names[:_WINDOW])]
-    if _CARRYOVER:
-        # (a) exemption only allowed while the prefix is saturated with
-        # never-verified queries
-        assert len(in_prefix) >= 40, (len(in_prefix), _WINDOW)
-    for n in _CARRYOVER:
-        # (c) only never-verified queries may be carried over
-        assert n not in _driver_verified(), n
-        # (b) contiguous with the boundary: every carryover entry sits in
-        # the first WINDOW + len(_CARRYOVER) slots, i.e. the block starts
-        # at the prefix edge and leads the next round's window
-        assert n in names[: _WINDOW + len(_CARRYOVER)], n
 
 
 def test_gated_queries_registered_unconditionally():
@@ -105,115 +43,38 @@ def test_gated_queries_registered_unconditionally():
     gated = q["q_stream_tws_user_max"]
     assert gated.requires == ("google.protobuf",)
     sweep = set(_sweep_names())
-    for name, query in q.items():
-        assert (name in sweep) == requirements_met(query)
-
-
-def test_window_keeps_family_canaries():
-    """Each extension family displaced from the prefix keeps at least one
-    previously-green canary inside it, so a family-wide environment
-    regression (not just a per-query bug) still shows up in the sweep."""
-    q = load_all_queries()
-    names = _sweep_names()
-    window = names[:_WINDOW]
-    fams = {q[n].build.__module__ for n in names}
-    for fam in (
-        "als_pyspark_spark.streaming.queries",
-        "als_pyspark_spark.sources.sinks",
-        "als_pyspark_spark.functions.pandas_udfs",
-        "als_pyspark_spark.functions.text_queries",
-        "als_pyspark_spark.dedup.queries",
-        "als_pyspark_spark.similarity.queries",
-    ):
-        assert fam in fams, f"module {fam} registers no queries"
-        assert any(q[n].build.__module__ == fam for n in window), (
-            f"no canary from {fam} inside the {_WINDOW}-entry window"
-        )
-
-
-def test_changed_queries_are_hoisted():
-    """Driver rows older than a query's last code change are not evidence
-    (round-3 ADVICE): any query whose fingerprint — build source + oracle
-    + transitive package helpers (round-5 upgrade) — differs from the
-    end-of-last-round snapshot must sit in THIS round's window. Fix a
-    failure by hoisting the changed query in registry.py; regenerate the
-    snapshot (scripts/snapshot_query_sources.py) only at round end, once
-    the window is final."""
-    from als_pyspark_spark.registry import query_fingerprint
-
-    path = os.path.join(_REPO, "tests", "query_source_hashes.json")
-    with open(path) as f:
-        snapshot = json.load(f)
-    q = load_all_queries()
-    names = _sweep_names()
-    window = set(names[:_WINDOW])
-    stale = []
-    for name in names:
-        if name not in snapshot:
-            continue  # new query — covered by the never-verified invariant
-        if query_fingerprint(q[name]) != snapshot[name] and name not in window:
-            stale.append(name)
-    assert not stale, (
-        f"changed since their last driver evidence but outside the "
-        f"{_WINDOW}-entry window: {stale}"
-    )
-
-
-def test_fingerprint_reaches_transitive_helpers():
-    """The round-5 fingerprint closes round 4's acknowledged granularity
-    gap: helpers reached ONLY through a local import inside the build
-    body, helpers behind decorator wrappers (pandas_udf), and cross-module
-    text helpers (the word_ngrams class that caused round-3 hoist debt)
-    must all contribute source to the fingerprint."""
-    from als_pyspark_spark.registry import reachable_sources
-
-    q = load_all_queries()
-
-    # local `from als_pyspark_spark.streaming.events import ...` in body
-    srcs = reachable_sources(q["q_stream_apws_user_max"].build)
-    assert any(k.endswith("user_max_value_apws") for k in srcs), sorted(srcs)
-
-    # pandas_udf-wrapped helper referenced as a module-level global
-    srcs = reachable_sources(q["q_pandas_udf_doc_stats"].build)
-    assert any(k.endswith("word_count_udf") for k in srcs), sorted(srcs)
-
-    # cross-module helper (functions/text.py) used by a text query
-    srcs = reachable_sources(q["q_text_top_tokens"].build)
-    assert any(".text." in k or k.endswith("word_tokens") for k in srcs), sorted(srcs)
-
-
-def test_helper_edit_flips_fingerprint():
-    """Mechanical freshness: a one-character change in ANY reachable
-    helper's source yields a different fingerprint."""
-    from als_pyspark_spark.registry import (
-        fingerprint_from_sources,
-        reachable_sources,
-    )
-
-    q = load_all_queries()["q_stream_apws_user_max"]
-    srcs = reachable_sources(q.build)
-    helper = next(k for k in srcs if k.endswith("user_max_value_apws"))
-    base = fingerprint_from_sources(q.oracle, srcs)
-    edited = dict(srcs)
-    edited[helper] += " "
-    assert fingerprint_from_sources(q.oracle, edited) != base
-
-
-def test_hoisted_queries_lead():
-    names = list(load_all_queries())
-    assert names[: len(_HOISTED)] == list(_HOISTED)
+    for name, entry in q.items():
+        assert (name in sweep) == requirements_met(entry)
 
 
 def test_no_duplicate_registrations():
-    q = load_all_queries()
-    assert len(q) == len(set(q)), "duplicate query names"
+    """A second registration under a taken name raises, names both
+    modules, and leaves the first registration in place."""
+    load_all_queries()
+    name = "q_registry_duplicate_probe"
+    assert name not in QUERIES
+
+    def first(spark, sf_dir):
+        return None
+
+    def second(spark, sf_dir):
+        return None
+
+    query(name)(first)
+    try:
+        with pytest.raises(ValueError, match=name) as err:
+            query(name, oracle="SELECT 1")(second)
+        assert str(err.value).count(__name__) == 2, err.value
+        assert QUERIES[name].build is first
+        assert QUERIES[name].oracle is None
+    finally:
+        del QUERIES[name]
 
 
 def test_output_schema_lint_rejects_complex_types():
     """Driver-contract lint (round-5 red rows): a top-level ArrayType /
     MapType / StructType output column must fail the gate BEFORE any value
     comparison — the driver's pandas canonicalizer cannot hash list cells."""
-    import pytest
     from pyspark.sql import types as T
 
     from als_pyspark_spark.canon import assert_scalar_schema
@@ -241,8 +102,6 @@ def test_canon_mirrors_driver_on_list_cells():
     """The local comparator must fail on list-valued cells exactly like
     the driver's ``sort_values``-based canonicalizer — not silently pass
     them the way the old repr-sort did."""
-    import pytest
-
     from als_pyspark_spark.canon import canon
 
     # scalar rows: order-insensitive, float-rounded
@@ -343,7 +202,6 @@ def test_dtype_parity_catches_hugeint_class():
     int64 column vs an oracle frame pandas materialized as float64, with
     values that compare equal in Python."""
     import pandas as pd
-    import pytest
 
     from als_pyspark_spark.canon import assert_dtype_parity
 
@@ -366,7 +224,6 @@ def test_every_persist_site_is_released_or_documented():
     the documented trade (dedup/queries.py module docstring: 3-4 readers,
     measured 56x recompute, corpus-proportional results). A bare persist
     with none of these is exactly how the r8/r9 ADVICE leaks shipped."""
-    import os
     import re
 
     pkg = os.path.join(_REPO, "als_pyspark_spark")
@@ -405,28 +262,3 @@ def test_every_persist_site_is_released_or_documented():
         "persist() without release, caller-release convention, or the "
         f"documented-cache marker: {offenders}"
     )
-
-
-def test_constant_knob_edit_flips_fingerprint():
-    """Round-12 fingerprint upgrade: module-level scalar tuning knobs
-    (_PQ_NPROBE-style) are output-determining but live outside any
-    function's source, so the source-only hash silently kept stale
-    driver evidence alive across retunes. A knob value change must flip
-    the fingerprint of every query that reads the knob — and the r11
-    shortlist retune's manual hoist becomes mechanical."""
-    import als_pyspark_spark.similarity.queries as sq
-    from als_pyspark_spark.registry import query_fingerprint, reachable_sources
-
-    q = load_all_queries()["q_ann_ivfpq_top10"]
-    srcs = reachable_sources(q.build)
-    key = "als_pyspark_spark.similarity.queries::_PQ_NPROBE"
-    assert key in srcs and srcs[key] == repr(sq._PQ_NPROBE)
-
-    base = query_fingerprint(q)
-    old = sq._PQ_NPROBE
-    try:
-        sq._PQ_NPROBE = old + 1
-        assert query_fingerprint(q) != base
-    finally:
-        sq._PQ_NPROBE = old
-    assert query_fingerprint(q) == base

@@ -128,8 +128,7 @@ def test_bare_session_gate_on_checkpoint_dependent_queries():
     in a SUBPROCESS via ``check_correctness.py --bare`` over the two
     queries that exercise the one correctness-critical session dependency
     (Dataset.checkpoint needs a checkpoint dir; UTC and the CTE recursion
-    limit are already pinned per-query). The end-of-round ritual widens
-    this to the full verification window."""
+    limit are already pinned per-query)."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

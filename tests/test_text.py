@@ -7,8 +7,7 @@ resolution) trainer:
 - the Spark side tokenizes with ``tokens()`` while the BPE oracles
   hardcode DuckDB ``string_split(text, ' ')`` — pin ``tokens()`` to
   exact single-space-split semantics on crafted inputs so a future
-  ``tokens()`` change fails HERE (and flips the BPE fingerprints into
-  the verification window) instead of silently diverging the pair;
+  ``tokens()`` change fails HERE instead of silently diverging the pair;
 - the encode oracle must compose the train oracle's CTE chain VERBATIM
   (the q_pipeline_e2e substitution discipline) so train and encode
   cannot drift.
