@@ -2,7 +2,7 @@
 
 Queries that ``persist()`` an intermediate (an edge list both sides of a
 self-join read, a bucket table reused across phases) must not leak that
-cache past their own lifetime: a 247-query registry sweep in one Spark
+cache past their own lifetime: a full registry sweep in one Spark
 session would otherwise accumulate hundreds of cached tables (the
 reference's C1-C3 persist→materialize→unpersist discipline, which its
 training loop applies per iteration, applies per QUERY here).
@@ -34,21 +34,19 @@ def collected(spark: SparkSession, result: DataFrame, *cached: DataFrame) -> Dat
 # Caches whose query RESULT is corpus-proportional (so ``collected`` would
 # bottleneck the driver) but that have NO readers beyond their own query's
 # plan: they cannot be unpersisted before the caller materializes the
-# lazily-returned result, so they register here and the harness releases
-# them at its next between-queries checkpoint (round-11 ADVICE — the
-# decontaminate gram table was the one such cache, leaking for the session
-# lifetime in repeated multi-query sessions). An embedding application that
-# runs many queries per session should call :func:`release_deferred` after
-# consuming each result; one-job-per-query runs release at session end
-# anyway. Distinct from the 'deliberate session-lifetime cache' sites
-# (dedup/similarity pair tables), which ARE read by multiple queries and
-# must stay resident between them.
+# lazily-returned result, so they register here and are released when the
+# caller is done with the result — ``runner.built`` does it on exit, and an
+# embedding application that runs many queries per session should call
+# :func:`release_deferred` after consuming each result (otherwise such a
+# cache lives as long as the session). Distinct from the
+# 'deliberate session-lifetime cache' sites (dedup/similarity pair tables),
+# which ARE read by multiple queries and must stay resident between them.
 _DEFERRED: list[DataFrame] = []
 
 
 def deferred(df: DataFrame) -> DataFrame:
-    """Register a persisted DataFrame for release at the harness's next
-    :func:`release_deferred` checkpoint; returns it for inline use."""
+    """Register a persisted DataFrame for release at the next
+    :func:`release_deferred` call; returns it for inline use."""
     _DEFERRED.append(df)
     return df
 

@@ -17,7 +17,7 @@ cross join. At 100 TB the bucket join shuffles ~n_docs×bands rows of
 whose expected size is O(1) for near-uniform hash keys. Skewed buckets
 (e.g. empty-doc signatures) are pre-filtered.
 
-Cache-lifetime note (round-9 audit): the pair queries persist their
+Cache-lifetime note: the pair queries persist their
 signature/shingle table DELIBERATELY without an in-query release. The
 table is read 3-4× per execution (both self-join sides + the verify
 re-fetch) and the hash projection dominates the query — measured 56×
@@ -55,7 +55,7 @@ _BANDS = 4
 _ROWS_PER_BAND = 4  # 16 = 4 bands × 4 rows; ~0.5 candidate prob at j≈0.7
 
 # ---------------------------------------------------------------------------
-# Adaptive clone-class collapse (round-12 VERDICT item 3).
+# Adaptive clone-class collapse.
 #
 # The pairwise tiers (prefix join / MinHash / SimHash) can run two
 # physically different but output-identical plans: DOC-LEVEL (one row per
@@ -72,8 +72,8 @@ _ROWS_PER_BAND = 4  # 16 = 4 bands × 4 rows; ~0.5 candidate prob at j≈0.7
 # only misclassify corpora near the threshold, where BOTH plans are
 # correct and within noise of each other. Memoized per fixture dir —
 # the three tiers share one scan, exactly like a warehouse reusing
-# ANALYZE statistics (bench.py clears the memo between passes so every
-# pass reprices it honestly).
+# ANALYZE statistics (``runner.reset_memos`` clears the memo, so every
+# bench pass reprices it honestly).
 _COLLAPSE_MAX_DISTINCT_RATIO = 0.95
 _CLONE_RATIO: dict[str, float] = {}
 
@@ -331,10 +331,10 @@ def q_dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order either engine used — the doc-level oracle hash-matches.
     Measured 17.5 → ~4s at sf1; at 100 TB this is the difference
     between verifying every boilerplate clone pair and verifying each
-    boilerplate ONCE. ADAPTIVE since round 12: on a clone-FREE corpus
-    (distinct-text ratio > 0.95, see ``_collapse_clones``) the class
-    groupBy is pure overhead, so the plan falls through to identity
-    classes (gid = doc_id, no groupBy) — the r10 doc-level shape. Both
+    boilerplate ONCE. ADAPTIVE: on a clone-FREE corpus (distinct-text
+    ratio > 0.95, see ``_collapse_clones``) the class groupBy is pure
+    overhead, so the plan falls through to identity classes (gid =
+    doc_id, no groupBy) — the doc-level shape. Both
     paths hash-match the same doc-level oracle; tests pin both.
     """
     return _prefix_join_plan(spark, sf_dir, _collapse_clones(spark, sf_dir))
@@ -380,7 +380,7 @@ def _prefix_join_plan(
     )
     tok = sets_.select("gid", "n", F.explode("hs").alias("h"))
     # Document frequency stays a groupBy + join, NOT a window count over
-    # the gram key (round-15 A/B): a partitionBy(h) window looked like
+    # the gram key (A/B measured): a partitionBy(h) window looked like
     # the §2.4 shared-exchange move but measured ~1.4× SLOWER (8-9s →
     # 12-13s isolated at sf0.1) — h is a maximal-cardinality key, so
     # WindowExec pays per-group buffering over millions of 1-3-row
@@ -544,9 +544,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     were all candidates and all qualified in the doc-level plan too).
     The clone-dense sf1 fixture verifies 100× fewer pairs and hashes
     10× fewer signatures; the oracle stays the doc-level replay, so the
-    hash-match also certifies the collapse's equivalence. ADAPTIVE since
-    round 12: clone-free corpora (see ``_collapse_clones``) skip the
-    class groupBy and run identity classes — the r10 doc-level shape.
+    hash-match also certifies the collapse's equivalence. ADAPTIVE:
+    clone-free corpora (see ``_collapse_clones``) skip the class groupBy
+    and run identity classes — the doc-level shape.
     """
     return _minhash_plan(spark, sf_dir, _collapse_clones(spark, sf_dir))
 
@@ -685,10 +685,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     over every token — computing it once per DISTINCT text is the
     exact-dedup-before-enrichment pipeline ordering, paid for by one
     corpus-text shuffle (tens of MB per million docs, trivial next to
-    the fold). ADAPTIVE since round 12: clone-free corpora (see
-    ``_collapse_clones``) skip the md5(text) groupBy — the corpus-text
-    shuffle buys nothing when every text is distinct — and compute the
-    fold once per doc (the r10 doc-level shape).
+    the fold). ADAPTIVE: clone-free corpora (see ``_collapse_clones``)
+    skip the md5(text) groupBy — the corpus-text shuffle buys nothing
+    when every text is distinct — and compute the fold once per doc.
     """
     return _simhash_plan(spark, sf_dir, _collapse_clones(spark, sf_dir))
 
@@ -880,8 +879,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     # repartition-before-shingling + persist-the-self-join-input — the
-    # module's round-3 discipline (PERF.md), which this query had missed
-    # (round-14 fix): the corpus parquet is a single row group, so the
+    # module's discipline: the corpus parquet is a single row group, so the
     # CPU-heavy gram build otherwise runs on ONE task, and the self-join
     # re-ran it for BOTH sides. Measured at sf0.1: pair build 4.8-6.9s →
     # 0.7-1.3s, identical pairs.
@@ -1173,7 +1171,7 @@ def q_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental NEAR-DUP dedup (round 14): a new crawl batch probed against
+# Incremental NEAR-DUP dedup: a new crawl batch probed against
 # the historical corpus at the MinHash tier — the incremental twin of
 # q_bloom_incremental_dedup, which covers only EXACT dedup (the Bloom
 # filter's byte-identity can't see the %5==1 "page changed since last
@@ -1422,7 +1420,7 @@ def q_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     widget' vs 'bold widget' is invisible to 3-gram Jaccard (no shared
     shingles at n=3 tokens) but distance 1 here.
 
-    NAME-CLASS COLLAPSE (round-14 optimization; output unchanged —
+    NAME-CLASS COLLAPSE (output unchanged —
     the module's exact-dedup-before-near-dup ordering applied to entity
     matching): Levenshtein depends only on the STRING pair, and clone-
     dense catalogs repeat names — this fixture family collapses 20,000
@@ -1669,8 +1667,8 @@ def _dup_window_positions(toked: DataFrame) -> DataFrame:
     hash), never window text.
 
     Cross-doc counting is a TWO-PHASE aggregate, not a collect_set
-    window (round 11, closing the salting caveat the round-10 docstring
-    promised): distinct (hh, doc_id) pairs — unskewed by construction —
+    window (which would need salting on hot keys): distinct (hh, doc_id)
+    pairs — unskewed by construction —
     then a count per hh whose map-side combine hands the hot reducer at
     most one partial per upstream partition. A corpus-wide boilerplate
     window (every doc sharing one 16-gram) therefore costs O(#partitions)
@@ -1764,8 +1762,8 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries (doc_id, pos, 32-hex), never the window text, and a
     pathological corpus-wide boilerplate key degrades to O(#partitions)
     at the hot reducer instead of shipping every occurrence to one task
-    (the round-10 salting caveat, now closed structurally and pinned by
-    the planted-boilerplate test). (2) one partial+final agg back on
+    (no salting needed — structural, and pinned by the
+    planted-boilerplate test). (2) one partial+final agg back on
     doc_id, where the
     span merge runs as an in-row fold over the doc's sorted duplicated
     positions (a single doc's positions always fit one row — the
@@ -1981,7 +1979,7 @@ def _tier_recall_oracle() -> str:
     strings (DuckDB allows WITH inside a CTE body), so the audit's ground
     truth and probes can never drift from the queries they audit.
 
-    ``truth`` is MATERIALIZED (round 15, VERDICT r14 item 10): it is
+    ``truth`` is MATERIALIZED: it is
     referenced twice (the recall join AND the n_truth count), and DuckDB
     inlines a plain CTE per reference — at sf1 that re-ran the ~1300s
     prefix-join ground-truth replay a second time inside the sweep's

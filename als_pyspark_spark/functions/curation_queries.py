@@ -1,4 +1,4 @@
-"""Corpus-curation operators, round 4: repetition metrics, boilerplate
+"""Corpus-curation operators: repetition metrics, boilerplate
 n-gram detection, a composite quality gate with reasons, curriculum
 staging, token-length histograms, and source-mixture rebalancing.
 
@@ -36,8 +36,7 @@ from als_pyspark_spark.functions.text import (
     tokens,
     word_ngrams,
 )
-from als_pyspark_spark.caching import collected
-from als_pyspark_spark.registry import query
+from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.sources.tables import load_table
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -46,7 +45,7 @@ _BOILER_N = 3  # boilerplate shingle width
 # gram must appear in ≥ this many distinct docs. Calibrated against the
 # fixture corpus (500 docs at every SF; the most repeated 3-gram spans
 # 7-9 docs) so the report is non-vacuous at sf0.001 AND sf0.01 — a
-# 0-row driver row proves nothing (VERDICT r2 on q_embedding_neardup_pairs).
+# 0-row driver row proves nothing.
 _BOILER_MIN_DOCS = 5
 _BOILER_TOP = 50
 
@@ -129,7 +128,7 @@ def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _G = " || ' ' || ".join(f"t[i+{j}]" if j else "t[i]" for j in range(_BOILER_N))
 
 
-@query(
+@collected_query(
     "q_boilerplate_ngrams",
     oracle=f"""
 WITH tk AS (
@@ -150,7 +149,7 @@ LIMIT {_BOILER_TOP}
 """,
     tags=("pipeline", "quality", "boilerplate"),
 )
-def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _boilerplate_plan(spark: SparkSession, sf_dir: str):
     """Corpus-level boilerplate report: the top {n}-grams by the number of
     DISTINCT documents containing them (≥ threshold). The cross-document
     twin of per-doc repetition — in a web corpus these are cookie banners
@@ -160,19 +159,12 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is a plain COUNT(*) on (gram) — one shuffle with map-side
     combine, then TakeOrderedAndProject for the bounded report.
 
-    The gram table materializes through a released cache (round 10):
+    The gram table materializes through a released cache:
     exploding an array built by an expensive inline HOF pipeline re-pays
     the pipeline ~per OUTPUT row (the decontaminate Generate class) —
     measured 6.2s inline vs 0.6s from the materialized column at sf1.
     The result is a bounded ≤{top}-row report, so ``collected`` releases
     the cache instead of leaking it."""
-    top, caches = _boilerplate_plan(spark, sf_dir)
-    return collected(spark, top, *caches)
-
-
-def _boilerplate_plan(spark: SparkSession, sf_dir: str):
-    """Lazy boilerplate-report plan + the persisted per-doc gram table
-    (plan tests inspect the DataFrame without materializing)."""
     d = load_table(spark, sf_dir, "documents")
     n_part = spark.sparkContext.defaultParallelism
     grams = (

@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import collected, deferred
+from als_pyspark_spark.caching import deferred
 from als_pyspark_spark.functions.text import STOPWORDS, tokens, word_ngrams
-from als_pyspark_spark.registry import query
+from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.sources.tables import load_table
 
 # 'cd' = 205/256 ≈ 80.1% of uniformly-distributed 2-hex-digit prefixes.
@@ -203,17 +203,17 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup band-join. The benchmark side is tiny (≈1% of docs) and
     broadcast; counting shared grams per doc is one partial+final agg.
 
-    The gram table is PERSISTED, for two measured reasons (sf1, round 10):
+    The gram table is PERSISTED, for two measured reasons (sf1):
     it feeds both sides of the bench/train split, and — the dominant one —
     exploding an array built by an expensive inline HOF pipeline re-pays
     that pipeline ~per OUTPUT row (Generate evaluation, 18×: 11.6s inline
     vs 0.74s materialize + 0.47s explode; a shuffle barrier does NOT help
     because the optimizer reorders the projection across it). Query total
-    11.6 → 1.7s warm. Cache lifetime (round-11 ADVICE): the result is
+    11.6 → 1.7s warm. Cache lifetime: the result is
     corpus-proportional so collected() would bottleneck the driver, and
     the gram table has no readers outside this query's own plan — so it
-    registers with ``caching.deferred`` and the harness releases it at
-    the next between-queries checkpoint instead of leaking it for the
+    registers with ``caching.deferred`` and the runner releases it once
+    the caller is done with the result instead of leaking it for the
     session lifetime (a one-job-per-query 100 TB run releases at session
     end either way, or stages grams to a temp table)."""
     d = load_table(spark, sf_dir, "documents")
@@ -1230,7 +1230,7 @@ def q_quality_linear_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # Alias the aggregate ONCE and derive the verdict from the alias:
     # single evaluation of the token HOF is structural, not dependent on
-    # the optimizer spotting the common subexpression (round-9 ADVICE).
+    # the optimizer spotting the common subexpression.
     scored = d.select("doc_id", score.alias("qscore"))
     return scored.select(
         "doc_id",
@@ -1247,9 +1247,9 @@ def _contrastive_oracle() -> str:
     stack it samples from."""
     # Side-effect registration: the MinHash tier registers on import of
     # its home module. Without this, importing pipeline_queries standalone
-    # (targeted test runs, tools) raised KeyError because only the driver
-    # path's _MODULE_ORDER happened to import dedup.queries first
-    # (round-12 ADVICE) — the module must be self-sufficiently importable.
+    # (targeted test runs, tools) would raise KeyError unless something
+    # else happened to import dedup.queries first — the module must be
+    # self-sufficiently importable.
     import als_pyspark_spark.dedup.queries  # noqa: F401
 
     from als_pyspark_spark.registry import QUERIES
@@ -1367,7 +1367,7 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# End-to-end composed pipeline (round 13): every stage above is verified
+# End-to-end composed pipeline: every stage above is verified
 # alone; this verifies them COMPOSED as one DataFrame DAG.
 
 
@@ -1379,9 +1379,9 @@ def _e2e_oracle() -> str:
     composition discipline), and from the same module constants
     (_DECONTAM_N, _CHUNK, _STRIDE, _PACK_BUDGET) everywhere else, so the
     composition cannot drift from the stages it composes."""
-    # registration side effects: this module stays standalone-importable
-    # (round-12 ADVICE), so pull in the stage modules explicitly rather
-    # than assuming registry load order
+    # registration side effects: this module stays standalone-importable,
+    # so pull in the stage modules explicitly rather than assuming
+    # registry load order
     import als_pyspark_spark.dedup.queries  # noqa: F401
     import als_pyspark_spark.functions.curation_queries  # noqa: F401
     from als_pyspark_spark.registry import QUERIES
@@ -1476,12 +1476,12 @@ tot t
 """
 
 
-@query(
+@collected_query(
     "q_pipeline_e2e",
     oracle=_e2e_oracle(),
     tags=("pipeline", "e2e", "composition", "dedup", "quality"),
 )
-def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _e2e_plan(spark: SparkSession, sf_dir: str):
     """The WHOLE training-data pipeline as ONE composed DataFrame DAG:
     quality gate -> exact dedup -> near dedup (winnow-fp-blocked exact
     Jaccard >= 0.5, drop the larger doc of each pair) -> benchmark
@@ -1511,14 +1511,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages survivors to parquet between super-stages instead of caching
     text twice, but the operator composition is unchanged.
     """
-    out, caches = _e2e_plan(spark, sf_dir)
-    return collected(spark, out, *caches)
-
-
-def _e2e_plan(spark: SparkSession, sf_dir: str):
-    """Lazy end-to-end pipeline plan + its persisted intermediates (plan
-    tests and the explain audit inspect the DataFrame without running
-    the composed job)."""
     from als_pyspark_spark.dedup.queries import _SHINGLE_N
     from als_pyspark_spark.functions.curation_queries import gate_reason
     from als_pyspark_spark.functions.text import fingerprint, word_ngrams

@@ -563,9 +563,8 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Iterative BPE tokenizer TRAINING (round 13; merge resolution moved
-# in-plan in round 14): N convergent merge rounds, not just the first
-# round's pair statistics (q_bpe_pair_counts).
+# Iterative BPE tokenizer TRAINING: N convergent merge rounds, not just
+# the first round's pair statistics (q_bpe_pair_counts).
 #
 # Word representation shared by BOTH engines: a word's symbol sequence is
 # the concatenation of '\x1f<sym>\x1f' units ('\x1f' = ASCII unit
@@ -581,8 +580,8 @@ _BPE_SEP = "\x1f"
 _BPE_SEP2 = _BPE_SEP * 2
 _BPE_MERGES = 18  # vocab budget: max merge rounds (real trainers use ~32k)
 _BPE_MIN_PAIR = 2  # stop early when the best pair is unrepeated
-# Driver-collect row budget for the trainer's distinct-word table (round-15
-# guard; see _bpe_train). 10M short-word rows ≈ hundreds of MB of driver
+# Driver-collect row budget for the trainer's distinct-word table (see
+# _bpe_train). 10M short-word rows ≈ hundreds of MB of driver
 # heap — generous for any natural-language vocabulary, small enough to fail
 # loudly before the JVM does. SPARK_GRAFT_BPE_DRIVER_ROWS overrides it; it
 # is read when the trainer runs, so a malformed value cannot break the
@@ -604,15 +603,6 @@ def _bpe_driver_row_budget() -> int:
         return _BPE_DRIVER_ROW_BUDGET
 
 
-# Merge-resolution history (each step measured before shipping): r14 build
-# measured the non-interacting batch rule (batch sizes collapse to 1 after
-# ~6 merges; rejected) and shipped in-plan chunked resolution (19 -> 7
-# driver actions); the r14 OPTIMIZATION round moved resolution to the
-# driver outright — the word table is vocabulary-bounded at any corpus
-# scale, so the whole merge loop after the one corpus-collapse job is
-# plain Python (see _bpe_train). 7 actions -> 1, ~6x on the trainer.
-
-
 def _bpe_words0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Initial BPE word table: (w = unit-encoded char sequence, wc = corpus
     frequency). The ONLY corpus-sized shuffle of the whole training loop —
@@ -628,11 +618,6 @@ def _bpe_words0(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wc",
         )
     )
-
-
-def _bpe_syms(col: str = "w"):
-    """Symbol array of a unit-encoded word."""
-    return F.split(F.col(col).substr(F.lit(2), F.length(col) - 2), _BPE_SEP2)
 
 
 def _bpe_plan(spark: SparkSession, sf_dir: str):
@@ -732,42 +717,41 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     rows (round, left, right, merged, pair_count, vocab_after,
     corpus_tokens_after) — bounded by _BPE_MERGES, never corpus-sized.
 
-    ROUND-14 OPTIMIZATION — merge resolution moved to the DRIVER (guide
-    §1.2 step 1: fix the distributed algorithm before the per-task work).
-    The corpus-sized step is the ONE Spark job that collapses the corpus
-    to its distinct-word frequency table (``_bpe_words0``); everything
-    after operates on a VOCABULARY-bounded table (Heaps' law keeps a
-    natural-language vocabulary sub-linear in corpus size; this fixture
-    family collapses to ~30 words at every tier, a 100 TB web corpus to
-    the tens of millions of rows every production trainer — Sennrich's
-    reference code, HuggingFace tokenizers, SentencePiece — holds on one
-    machine by design). So the word table collects ONCE and the merge
-    loop runs as plain Python: exact pair counts, argmax by (count desc,
-    pair lex asc), greedy left-to-right non-overlapping merge — the
-    identical semantics the in-plan chunked variant resolved with one
-    Spark job per 3 merges (git history, round-14 build), at ~19 Spark
-    stages fewer. Measured at sf0.1: 9.3-15.7s → ~1.6s, byte-identical
-    merge table (the DuckDB oracle and the independent sequential
-    reference in tests/test_text.py both still gate it). The driver-side
-    fit follows the IVF coarse-quantizer precedent (similarity/queries.py:
-    bounded fit set ⇒ driver milliseconds beat a chain of bounded-row
-    Spark jobs); a corpus whose DISTINCT-WORD table outgrows the driver
-    is the signal to revive the in-plan chunked trainer.
+    Merge resolution runs on the DRIVER. The corpus-sized step is the ONE
+    Spark job that collapses the corpus to its distinct-word frequency
+    table (``_bpe_words0``); everything after operates on a
+    VOCABULARY-bounded table (Heaps' law keeps a natural-language
+    vocabulary sub-linear in corpus size; this fixture family collapses to
+    ~30 words at every tier, a 100 TB web corpus to the tens of millions
+    of rows every production trainer — Sennrich's reference code,
+    HuggingFace tokenizers, SentencePiece — holds on one machine by
+    design). So the word table collects ONCE and the merge loop runs as
+    plain Python: exact pair counts, argmax by (count desc, pair lex asc),
+    greedy left-to-right non-overlapping merge — the identical semantics
+    an in-plan chunked variant resolves with one Spark job per 3 merges,
+    at ~19 Spark stages fewer (a non-interacting batch rule was rejected:
+    batch sizes collapse to 1 after ~6 merges). Measured at sf0.1:
+    9.3-15.7s → ~1.6s, byte-identical merge table (the DuckDB oracle and
+    the independent sequential reference in tests/test_text.py both still
+    gate it). The driver-side fit follows the IVF coarse-quantizer
+    precedent (similarity/queries.py: bounded fit set ⇒ driver
+    milliseconds beat a chain of bounded-row Spark jobs); a corpus whose
+    DISTINCT-WORD table outgrows the driver is the signal to revive the
+    in-plan chunked trainer.
 
-    DRIVER-BUDGET GUARD (round-15, VERDICT r14 item 1 / ADVICE): the
-    Heaps'-law bound is an argument, not a proof — a pathological corpus
-    (URLs, hashes, code identifiers) can push the distinct-"word" table
-    to billions of rows and OOM the driver silently inside collect().
-    The word table is persisted, counted (one cheap action on the cached
-    table — the corpus-sized job still runs exactly once), and the
-    collect only proceeds under ``_BPE_DRIVER_ROW_BUDGET`` rows
-    (env ``SPARK_GRAFT_BPE_DRIVER_ROWS``; default 10M ≈ several hundred
-    MB of driver heap for short words). Over budget, the trainer raises
-    a clear error pointing at the archived in-plan chunked trainer
-    (git history, round-14 build) instead of dying in the JVM. A
-    frequency-floor prune was considered and REJECTED as inexact: pair
-    counts sum wc over words, so many wc=1 words can jointly host a
-    winning pair — dropping them could change the learned merge list."""
+    DRIVER-BUDGET GUARD: the Heaps'-law bound is an argument, not a proof — a
+    pathological corpus (URLs, hashes, code identifiers) can push the
+    distinct-"word" table to billions of rows and OOM the driver silently
+    inside collect(). The word table is persisted, counted (one cheap
+    action on the cached table — the corpus-sized job still runs exactly
+    once), and the collect only proceeds under ``_BPE_DRIVER_ROW_BUDGET``
+    rows (env ``SPARK_GRAFT_BPE_DRIVER_ROWS``; default 10M ≈ several
+    hundred MB of driver heap for short words). Over budget, the trainer
+    raises a clear error pointing at the archived in-plan chunked trainer
+    instead of dying in the JVM. A frequency-floor prune was considered
+    and REJECTED as inexact: pair counts sum wc over words, so many wc=1
+    words can jointly host a winning pair — dropping them could change the
+    learned merge list."""
     words0 = _bpe_words0(spark, sf_dir).persist()
     try:
         n_words = words0.count()
@@ -827,6 +811,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     "q_bpe_train_merges",
     oracle=_bpe_oracle(),
     tags=("text", "bpe", "tokenizer", "iterative", "convergence"),
+    plan=_bpe_plan,
 )
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL iterative BPE tokenizer training (Sennrich): up to
@@ -848,9 +833,9 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale, so it collects once and the merge loop runs driver-side
     in plain Python — the Sennrich reference design every production
     trainer (HuggingFace tokenizers, SentencePiece) uses, and this
-    repo's IVF-quantizer precedent for bounded fit sets (round-14
-    optimization; previously one Spark job per 3 in-plan merge levels,
-    measured ~6x slower end-to-end with an identical merge table). The
+    repo's IVF-quantizer precedent for bounded fit sets (one Spark job
+    per 3 in-plan merge levels measured ~6x slower end-to-end with an
+    identical merge table). The
     independent sequential reference in tests/test_text.py and the full
     DuckDB replay both gate the loop's exactness.
     """

@@ -62,9 +62,11 @@ class ALSEngine:
         self.params = params or ALSParams()
         self.model: ALSModel | None = None
 
-    def train(self, ratings: DataFrame) -> "ALSEngine":
+    def estimator(self) -> ALS:
+        """The MLlib estimator for these params (storage levels left at
+        MLlib's defaults)."""
         p = self.params
-        als = ALS(
+        return ALS(
             rank=p.rank,
             maxIter=p.max_iter,
             regParam=p.reg_param,
@@ -80,7 +82,9 @@ class ALSEngine:
             ratingCol=p.rating_col,
             coldStartStrategy="drop",
         )
-        self.model = als.fit(ratings)
+
+    def train(self, ratings: DataFrame) -> "ALSEngine":
+        self.model = self.estimator().fit(ratings)
         return self
 
     # -- factor tables: what NewALS.train returns (reference ALS.py:191) ----
@@ -188,23 +192,10 @@ def train(
             seed=seed,
         )
     )
-    als = ALS(
-        rank=rank,
-        maxIter=max_iter,
-        regParam=reg_param,
-        numUserBlocks=num_user_blocks,
-        numItemBlocks=num_item_blocks,
-        implicitPrefs=implicit_prefs,
-        alpha=alpha,
-        nonnegative=nonnegative,
-        checkpointInterval=check_point_interval,
-        seed=seed,
-        userCol="user",
-        itemCol="item",
-        ratingCol="rating",
-        coldStartStrategy="drop",
-        intermediateStorageLevel=intermediate_rdd_storage_level,
-        finalStorageLevel=final_rdd_storage_level,
+    eng.model = (
+        eng.estimator()
+        .setIntermediateStorageLevel(intermediate_rdd_storage_level)
+        .setFinalStorageLevel(final_rdd_storage_level)
+        .fit(ratings)
     )
-    eng.model = als.fit(ratings)
     return eng.user_factors, eng.item_factors

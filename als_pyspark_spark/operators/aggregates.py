@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.registry import query
+from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.sources.tables import load_table
 
 
@@ -724,7 +724,7 @@ def q_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@collected_query(
     "q_equidepth_deciles",
     oracle="""
 WITH c AS (
@@ -744,7 +744,7 @@ FROM t JOIN s ON s.rn = t.r
 """,
     tags=("aggregate", "percentile", "equi-depth", "two-phase"),
 )
-def q_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _equidepth_plan(spark: SparkSession, sf_dir: str):
     """GLOBAL exact equi-depth decile boundaries (value at rank ⌊k·n/10⌋,
     k=1..9) over order prices — without ever globally sorting the fact
     table. This is the distributed exact-quantile algorithm:
@@ -774,16 +774,6 @@ def q_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches ~(9/buckets) of the data while a naive global rank would
     sort all of it.
     """
-    deciles, caches = _equidepth_plan(spark, sf_dir)
-    # bounded result (9 rows): materialize + free the persisted bucket table
-    from als_pyspark_spark.caching import collected
-
-    return collected(spark, deciles, *caches)
-
-
-def _equidepth_plan(spark: SparkSession, sf_dir: str):
-    """Lazy phase-3 decile plan + the persisted bucket table (plan tests
-    inspect the DataFrame; the query materializes it)."""
     o = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v")
     )

@@ -18,13 +18,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from als_pyspark_spark.caching import collected
-from als_pyspark_spark.registry import query
+from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.sources.tables import load_table
 
 _PR_ITERS = 3
 
 
-@query(
+@collected_query(
     "q_pagerank_copurchase",
     oracle=f"""
 WITH li AS (
@@ -76,7 +76,7 @@ LIMIT 25
 """,
     tags=("graph", "pagerank", "iterative"),
 )
-def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pagerank_plan(spark: SparkSession, sf_dir: str):
     """PageRank (damping 0.85, three iterations) over the undirected
     supplier↔part co-purchase graph derived from lineitem, in exact
     fixed-point integer arithmetic (micro-units): per iteration each node
@@ -103,10 +103,24 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean no dangling-mass correction is needed — every node has
     out-degree ≥ 1 by construction.
     """
-    top, caches = _pagerank_plan(spark, sf_dir)
-    # bounded result (25 rows at any SF): materialize + free the cached
-    # edge list / node table instead of leaking them past the query
-    return collected(spark, top, *caches)
+    eo = _copurchase_rank_base(spark, sf_dir)
+    ranks = _pr_round1(eo)
+    for _ in range(_PR_ITERS - 1):
+        ranks = _pr_round(eo, ranks)
+    top = (
+        ranks.select(
+            F.when(F.col("node") % 2 == 0, "supplier")
+            .otherwise("part")
+            .alias("node_type"),
+            F.expr("node DIV 2").alias("entity_id"),
+            F.col("r").alias("rank_micro"),
+            "node",
+        )
+        .orderBy(F.desc("rank_micro"), F.asc("node"))
+        .limit(25)
+        .drop("node")
+    )
+    return top, [eo]
 
 
 _PR_R0 = 1_000_000  # initial rank mass per node (micro-units)
@@ -117,16 +131,13 @@ def _copurchase_rank_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank family — shared by the fixed-3-iteration query and the
     convergence-driven one. Caller owns the unpersist.
 
-    SINGLE-EXCHANGE build (round 15, guide §2.4): the previous shape paid
-    a distinct exchange on the (src, dst) grain, THEN a second full
-    repartition of the doubled list by src. Now the doubling happens
-    in-row (explode of both orientations — one lineitem scan instead of
-    the union's two), ONE exchange hash-partitions the raw doubled pairs
-    by src, and everything keyed on src rides it: the (src, dst) dedup
-    (hash(src) clusters equal (src, dst) rows, so the dropDuplicates
-    aggregate is partition-local) and the out-degree window count
-    (round-14 optimization). Plan: 2 exchanges + 2 lineitem scans → 1
-    exchange + 1 scan for the whole base build.
+    SINGLE-EXCHANGE build: the doubling happens in-row (explode of both
+    orientations — one lineitem scan instead of a union's two), ONE
+    exchange hash-partitions the raw doubled pairs by src, and everything
+    keyed on src rides it: the (src, dst) dedup (hash(src) clusters equal
+    (src, dst) rows, so the dropDuplicates aggregate is partition-local)
+    and the out-degree window count. A distinct on the (src, dst) grain
+    followed by a repartition by src would pay 2 exchanges + 2 scans.
 
     Persisting the edge list ALREADY hash-partitioned on the iteration
     join key means every iteration join reuses the cached partitioning
@@ -164,10 +175,9 @@ def _pr_round(eo: DataFrame, ranks: DataFrame) -> DataFrame:
     ``150000 + (85 · Σ inbound) DIV 100`` — the single-round plan both
     PageRank queries repeat (one rank⋈edge hash join + one dst aggregate).
 
-    The per-round ``nodes LEFT JOIN contrib`` of the oracle (and of the
-    pre-round-15 plan) is STRUCTURALLY a no-op here and is elided (guide
-    §2.4 "remove shuffles outright" — it cost a sort-merge join per
-    round): the doubled edge list is symmetric, so distinct(dst) =
+    The per-round ``nodes LEFT JOIN contrib`` of the oracle is
+    STRUCTURALLY a no-op here and is elided (it costs a sort-merge join
+    per round): the doubled edge list is symmetric, so distinct(dst) =
     distinct(src) = the node set, and by induction every round's rank
     vector covers exactly that node set (r0 covers it by construction;
     an inner join on src then keeps every edge, so the dst aggregate
@@ -187,7 +197,7 @@ def _pr_round(eo: DataFrame, ranks: DataFrame) -> DataFrame:
 
 
 def _pr_round1(eo: DataFrame) -> DataFrame:
-    """Round 1 in CLOSED FORM (round 15): r0 ≡ _PR_R0 for every node, so
+    """Round 1 in CLOSED FORM: r0 ≡ _PR_R0 for every node, so
     the rank⋈edge join is the identity — each edge's share is the
     constant ``_PR_R0 DIV od`` read straight off the persisted edge
     table. Removes round 1's rank-vector shuffle + join AND the r0 node
@@ -205,31 +215,7 @@ def _pr_round1(eo: DataFrame) -> DataFrame:
     )
 
 
-def _pagerank_plan(spark: SparkSession, sf_dir: str):
-    """Lazy top-25 PageRank plan + the persisted intermediates it reads
-    (returned so the caller can unpersist after the final action; plan
-    tests inspect the DataFrame without materializing)."""
-    eo = _copurchase_rank_base(spark, sf_dir)
-    ranks = _pr_round1(eo)
-    for _ in range(_PR_ITERS - 1):
-        ranks = _pr_round(eo, ranks)
-    top = (
-        ranks.select(
-            F.when(F.col("node") % 2 == 0, "supplier")
-            .otherwise("part")
-            .alias("node_type"),
-            F.expr("node DIV 2").alias("entity_id"),
-            F.col("r").alias("rank_micro"),
-            "node",
-        )
-        .orderBy(F.desc("rank_micro"), F.asc("node"))
-        .limit(25)
-        .drop("node")
-    )
-    return top, [eo]
-
-
-# Convergence-driven PageRank (round-12 VERDICT item 5): run the SAME
+# Convergence-driven PageRank: run the SAME
 # integer fixed-point iteration until the L1 residual halves the total
 # rank mass, with a hard cap as the safety bound. The decay per round is
 # the damping factor (0.85 — the bipartite supplier↔part graph sits at
@@ -301,10 +287,32 @@ FROM flagged f, rstar WHERE f.round <= rstar.rs
 """
 
 
+def _prc_chain(spark: SparkSession, sf_dir: str, n_rounds: int):
+    """Lazy n-round convergence-PageRank chain for plan tests and the
+    explain audit: same per-round plan and checkpoint cadence as
+    ``q_pagerank_converged`` but with LAZY checkpoints (``eager=False``
+    plans each round, runs NO jobs, writes no files — the k-core
+    audit-path discipline), and no residual actions. Returns the final
+    rank plan + the persisted base tables."""
+    eo = _copurchase_rank_base(spark, sf_dir)
+    ranks = _pr_round1(eo)
+    for rnd in range(2, n_rounds + 1):
+        ranks = _pr_round(eo, ranks)
+        if rnd % _PRC_CHECKPOINT_EVERY == 0:
+            ranks = ranks.checkpoint(eager=False)
+    return ranks, [eo]
+
+
+def _prc_plan(spark: SparkSession, sf_dir: str):
+    """Steady-state audit plan: one round past a checkpoint boundary."""
+    return _prc_chain(spark, sf_dir, _PRC_CHECKPOINT_EVERY + 1)
+
+
 @query(
     "q_pagerank_converged",
     oracle=_prc_oracle(),
     tags=("graph", "pagerank", "iterative", "convergence"),
+    plan=_prc_plan,
 )
 def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank run to CONVERGENCE instead of a fixed unroll: iterate the
@@ -370,13 +378,13 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         row = residual.collect()[0]
         # SUM over zero rows is NULL: an empty node set must end the loop
-        # with an empty curve, not a TypeError (round-13 ADVICE)
+        # with an empty curve, not a TypeError
         l1, mass = int(row["l1"] or 0), int(row["mass"] or 0)
         # the residual action above materialized this round (and, on
         # checkpoint rounds, completed the reliable write) — the
         # superseded caches release NOW, so executor cache footprint is
-        # ≤2 rank vectors at any round count (round-13 ADVICE; the
-        # reference's per-iteration C3 unpersist, ALS.py:153-156)
+        # ≤2 rank vectors at any round count (the reference's
+        # per-iteration C3 unpersist, ALS.py:153-156)
         if prev_cache is not None:
             prev_cache.unpersist()
         if new is not new_cached:
@@ -401,34 +409,12 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _prc_chain(spark: SparkSession, sf_dir: str, n_rounds: int):
-    """Lazy n-round convergence-PageRank chain for plan tests and the
-    explain audit: same per-round plan and checkpoint cadence as
-    ``q_pagerank_converged`` but with LAZY checkpoints (``eager=False``
-    plans each round, runs NO jobs, writes no files — the k-core
-    audit-path discipline), and no residual actions. Returns the final
-    rank plan + the persisted base tables."""
-    eo = _copurchase_rank_base(spark, sf_dir)
-    ranks = _pr_round1(eo)
-    for rnd in range(2, n_rounds + 1):
-        ranks = _pr_round(eo, ranks)
-        if rnd % _PRC_CHECKPOINT_EVERY == 0:
-            ranks = ranks.checkpoint(eager=False)
-    return ranks, [eo]
-
-
-def _prc_plan(spark: SparkSession, sf_dir: str):
-    """Steady-state audit plan: one round past a checkpoint boundary."""
-    return _prc_chain(spark, sf_dir, _PRC_CHECKPOINT_EVERY + 1)
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected distinct part co-purchase edge set (x < y): edge when
     two parts share an order. Basket fan-out bounds the per-order pair
     explosion (the q_market_basket_pairs argument).
 
-    Built by BASKET EXPANSION, not a self-join (round-14 optimization,
-    guide §2.4 "remove shuffles outright"): group lineitem once by
+    Built by BASKET EXPANSION, not a self-join: group lineitem once by
     orderkey into a sorted distinct part array, expand the (i < j) pairs
     in-row with nested ``transform`` HOFs, then distinct. The previous
     shape — distinct(orderkey, partkey) then self-equi-join on orderkey —
@@ -505,13 +491,12 @@ def _tri_intersections(ed: DataFrame) -> DataFrame:
     stays a keyed shuffle-hash join (the wedge-era lesson: never sort
     the heavy side).
 
-    Round 15 (guide §2.4): the ``ed ⋈ adj`` edge-side attach is gone —
-    the (u, v, N+(u)) stream is EXPLODED in-row from the adjacency table
-    itself (v ∈ N+(u) enumerates every oriented edge exactly once, by
-    construction of adj), so the edge list is shuffled/hashed once (the
-    adjacency groupBy) instead of twice, and only the closing-side
-    attach joins. ``ed`` is consumed exactly once now (the adjacency
-    build)."""
+    There is no ``ed ⋈ adj`` edge-side attach: the (u, v, N+(u)) stream
+    is EXPLODED in-row from the adjacency table itself (v ∈ N+(u)
+    enumerates every oriented edge exactly once, by construction of adj),
+    so the edge list is shuffled/hashed once (the adjacency groupBy), and
+    only the closing-side attach joins. ``ed`` is consumed exactly once
+    (the adjacency build)."""
     adj = ed.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("nu"))
     e2 = adj.select("u", "nu", F.explode("nu").alias("v")).join(
         adj.select(
@@ -524,7 +509,7 @@ def _tri_intersections(ed: DataFrame) -> DataFrame:
     ).where(F.size("s") > 0)
 
 
-@query(
+@collected_query(
     "q_triangle_count_parts",
     oracle="""
 WITH op AS (
@@ -550,17 +535,17 @@ LIMIT 20
 """,
     tags=("graph", "triangles", "self-join"),
 )
-def q_triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _triangle_top_plan(spark: SparkSession, sf_dir: str):
     """Top-20 parts by triangle participation in the part co-purchase
     graph (edge = two parts share an order): the clustering/community
     primitive behind recommendation diversity and graph-quality metrics.
 
     The Spark side uses the DEGREE-ORIENTED algorithm: each undirected
     edge is directed from its lower-(degree, id) endpoint to the higher,
-    so every triangle is found exactly once — since round 14 as the
-    adjacency intersection N+(u) ∩ N+(v) on its unique base edge u→v
-    (``_tri_intersections``; previously as a wedge row join measured
-    2.3-2.7× slower end-to-end). Orientation bounds per-node out-degree
+    so every triangle is found exactly once — as the adjacency
+    intersection N+(u) ∩ N+(v) on its unique base edge u→v
+    (``_tri_intersections``; a wedge row join measured 2.3-2.7× slower
+    end-to-end). Orientation bounds per-node out-degree
     by O(√m), keeping both the adjacency arrays and the per-row
     intersections bounded — the O(m^1.5) total work that survives dense
     co-purchase graphs at 100 TB — while the ORACLE enumerates triangles
@@ -579,15 +564,6 @@ def q_triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability p cuts that volume by ~p^1.5 (p=1/2 → ~2.8×, p=1/10 →
     ~32×) for a count estimator whose error the twin query witnesses
     in-row against this exact count.
-    """
-    top, caches = _triangle_top_plan(spark, sf_dir)
-    # bounded result (20 rows): materialize + free the oriented edge list
-    return collected(spark, top, *caches)
-
-
-def _triangle_top_plan(spark: SparkSession, sf_dir: str):
-    """Lazy top-20 triangle-participation plan + persisted intermediates
-    (plan tests inspect the DataFrame; the query materializes it).
 
     Node credits off the per-edge intersections: the base edge's two
     endpoints each participate in |s| triangles, every closing vertex in
@@ -595,13 +571,14 @@ def _triangle_top_plan(spark: SparkSession, sf_dir: str):
     union), emitted by ONE in-row explode instead of three reads of a
     wedge-join output.
 
-    The RAW edge set persists (round 15): its basket-expansion +
-    distinct subtree is read 5× inside ``_oriented_edges`` (the degree
-    union twice, each degree broadcast re-deriving deg over it, plus
-    the edge probe), and the r14 plan showed ZERO exchange reuse across
-    those reads — 20 lineitem scans for one query. One cache, one scan.
-    The oriented list itself no longer persists: since the in-row edge
-    explode (see ``_tri_intersections``), it is consumed exactly once."""
+    The RAW edge set persists: its basket-expansion + distinct subtree
+    is read 5× inside ``_oriented_edges`` (the degree union twice, each
+    degree broadcast re-deriving deg over it, plus the edge probe), and
+    without the cache the plan showed ZERO exchange reuse across those
+    reads — 20 lineitem scans for one query. One cache, one scan. The
+    oriented list itself does not persist: since the in-row edge explode
+    (see ``_tri_intersections``), it is consumed exactly once.
+    """
     e = _copurchase_edges(spark, sf_dir).persist()
     inter = _tri_intersections(_oriented_edges(e))
     credits = inter.select(
@@ -704,8 +681,7 @@ def q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # share exchanges — without the persist it would execute ≥2×.
     # All persisted intermediates are tracked and unpersisted in ONE
     # finally, so a failure during either action cannot leak a cached
-    # oriented edge list for the session (round-7 ADVICE: the previous
-    # shape unpersisted exact_ed/samp_ed only on the success path).
+    # edge list for the session.
     def _tri_total(ed: DataFrame) -> int:
         # one row per base edge with a non-empty closure; Σ|s| = T
         row = (
@@ -722,10 +698,10 @@ def q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
         # §2.6 "overlap independent jobs"): the sampled tier's tasks
         # back-fill executor slots freed by the exact tier's stragglers
         # instead of waiting for the whole tier to drain. The oriented
-        # lists no longer persist (round 15): since the in-row edge
-        # explode in _tri_intersections, each oriented list is consumed
-        # exactly once (the adjacency groupBy) — only the raw edge set
-        # has multiple readers (degree union + edge probe per tier).
+        # lists do not persist: with the in-row edge explode in
+        # _tri_intersections, each is consumed exactly once (the
+        # adjacency groupBy) — only the raw edge set has multiple
+        # readers (degree union + edge probe per tier).
         e.count()
 
         p_den = 2  # keep-probability 1/p_den
@@ -768,7 +744,7 @@ def q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_ROUNDS = 3
 
 
-@query(
+@collected_query(
     "q_bfs_part_distances",
     oracle=f"""
 WITH op AS (
@@ -809,7 +785,7 @@ GROUP BY dist
 """,
     tags=("graph", "bfs", "shortest-path", "iterative"),
 )
-def q_bfs_part_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
     """Single-source BFS shortest-path distances (3 rounds) from the
     lowest part key over the part co-purchase graph — the FRONTIER
     iteration shape (expand + min-combine) that complements PageRank's
@@ -832,22 +808,14 @@ def q_bfs_part_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubling-plan reason. The naive "frontier only" optimization (join
     only newly-labeled nodes) drops the join's left side to the frontier
     size per round — noted, not needed at 3 rounds.
-    """
-    hist, caches = _bfs_hist_plan(spark, sf_dir)
-    # bounded result (≤ _BFS_ROUNDS+1 histogram rows): materialize + free
-    # the persisted edge list
-    return collected(spark, hist, *caches)
-
-
-def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
-    """Lazy BFS distance-histogram plan + persisted intermediates.
 
     The directed edge set (both directions, x ≠ y) is the undirected
-    basket-expansion pair set (``_copurchase_edges``, round-14
-    optimization — one lineitem shuffle + in-row expansion instead of
-    the distinct-then-self-join on orderkey) unioned with its swap; the
-    root is min(l_partkey) straight off lineitem (identical to min over
-    the distinct pair grain, one narrow agg instead of a distinct)."""
+    basket-expansion pair set (``_copurchase_edges`` — one lineitem
+    shuffle + in-row expansion instead of the distinct-then-self-join
+    on orderkey) unioned with its swap; the root is min(l_partkey)
+    straight off lineitem (identical to min over the distinct pair
+    grain, one narrow agg instead of a distinct).
+    """
     half = _copurchase_edges(spark, sf_dir).select(
         F.col("x").alias("src"), F.col("y").alias("dst")
     )
@@ -866,8 +834,8 @@ def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
         # unrolled tree re-COMPUTED 2^rounds copies of the edge join
         # inside the one final job; persisting the round's dist table
         # (node-sized) makes the second reference an InMemoryTableScan
-        # — 3 edge joins total instead of 7 (round-14 optimization,
-        # measured 16.9s → ~4s at sf0.1, identical histogram)
+        # — 3 edge joins total instead of 7 (measured 16.9s → ~4s at
+        # sf0.1, identical histogram)
         dist = dist.persist()
         caches.append(dist)
         expanded = (
@@ -893,7 +861,7 @@ _LPA_ROUNDS = 2
 _LPA_LBL_SPACE = 1 << 32  # packed-argmax label space; node ids < 2^32
 
 
-@query(
+@collected_query(
     "q_label_propagation_communities",
     oracle="""
 WITH li AS (
@@ -929,7 +897,7 @@ ORDER BY n_members DESC, community ASC LIMIT 25
 """,
     tags=("graph", "community", "label-propagation", "iterative"),
 )
-def q_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lpa_plan(spark: SparkSession, sf_dir: str):
     """Synchronous label propagation (Raghavan et al. 2007) over the
     parity-packed supplier↔part co-purchase graph (the PageRank graph:
     supplier→2k, part→2k+1, doubled to both directions), 2 rounds,
@@ -973,13 +941,6 @@ def q_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFra
     Output is the bounded top-25 histogram, so ``collected`` frees the
     edge cache.
     """
-    top, caches = _lpa_plan(spark, sf_dir)
-    return collected(spark, top, *caches)
-
-
-def _lpa_plan(spark: SparkSession, sf_dir: str):
-    """Lazy top-25 LPA plan + persisted intermediates (plan tests and the
-    explain audit inspect the DataFrame without materializing)."""
     n_part = spark.sparkContext.defaultParallelism
     li = (
         load_table(spark, sf_dir, "lineitem")
@@ -1007,13 +968,12 @@ def _lpa_plan(spark: SparkSession, sf_dir: str):
         F.col("u").alias("node"), "lbl"
     )
     for _ in range(_LPA_ROUNDS - 1):
-        # ONE exchange for the whole vote→count→argmax chain (round 15,
-        # guide §2.4): the vote rows repartition by u once — projected
-        # down to (u, lbl) first, §2.3 — and BOTH aggregates ride that
-        # partitioning (hash(u) satisfies the (u, lbl) clustering of the
-        # count and the (u) clustering of the packed argmax), replacing
-        # the previous two aggregate exchanges over the ~2|E|-row vote
-        # table with one.
+        # ONE exchange for the whole vote→count→argmax chain: the vote rows
+        # repartition by u once — projected down to (u, lbl) first —
+        # and BOTH aggregates ride that partitioning (hash(u)
+        # satisfies the (u, lbl) clustering of the count and the (u)
+        # clustering of the packed argmax), replacing the previous two
+        # aggregate exchanges over the ~2|E|-row vote table with one.
         votes = (
             e.join(labels.withColumnRenamed("node", "v"), "v")
             .select("u", "lbl")
@@ -1039,8 +999,8 @@ def _lpa_plan(spark: SparkSession, sf_dir: str):
     return top, [e]
 
 
-# Reliable-checkpoint cadence for the CC loop. Round 15 measured the
-# PRC-style every-3 cadence SLOWER here despite the self-loop linear
+# Reliable-checkpoint cadence for the CC loop. The PRC-style every-3
+# cadence measured SLOWER here despite the self-loop linear
 # lineage (15.7s → 21.4s for the two CC queries at sf0.1): between
 # checkpoints every round re-ANALYZES the accumulated logical tree —
 # including the LSH/shingle self-join base lineage — and at these label
@@ -1065,12 +1025,12 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     stop at fixpoint. Rounds needed = component diameter (near-dup
     components are tiny cliques/chains, so 2-4).
 
-    SELF-LOOP SINGLE-REFERENCE FORM (round 15). The pre-r15 round
-    referenced the previous label table TWICE (under the neighbor join
-    and again under the left join that folded the node's own label), so
-    the unrolled plan doubled per round (round-8 audit: 3,133 exchanges
-    after ~4 rounds) and every round HAD to eager-checkpoint — a full
-    recompute + reliable write + read-back per round. Now the edge list
+    SELF-LOOP SINGLE-REFERENCE FORM. A round that references the previous
+    label table TWICE (under the neighbor join and again under a left
+    join folding the node's own label) doubles the unrolled plan per
+    round (3,133 exchanges after ~4 rounds) and must eager-checkpoint
+    every round — a full recompute + reliable write + read-back. Instead
+    the edge list
     carries one tagged SELF-LOOP per node: the node's own previous label
     arrives through the same join + groupBy that folds neighbor labels
     (``label = min over incoming``, ``old = min over the self rows``, and
@@ -1091,14 +1051,14 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     Unconverged labels are WRONG labels, so the bound raises instead of
     returning them.
 
-    Session self-sufficiency (round-9 fix for round 8's only red driver
-    rows): ``Dataset.checkpoint`` requires ``SparkContext.setCheckpointDir``
-    to have run, and the external driver — like any application embedding
-    this package — builds its own bare SparkSession where no dir is set,
-    so the first checkpoint call threw on both CC queries. The loop
-    claims a scratch dir LAZILY on the input DataFrame's own session
+    Session self-sufficiency: ``Dataset.checkpoint`` requires
+    ``SparkContext.setCheckpointDir`` to have run, and an application
+    embedding this package may build its own bare SparkSession where no
+    dir is set, so a checkpoint call would throw. The loop claims a
+    scratch dir LAZILY on the input DataFrame's own session
     (session.ensure_checkpoint_dir — idempotent, respects a dir the
-    embedding application already configured, e.g. HDFS/S3 on a cluster).
+    embedding application already configured, e.g. HDFS/S3 on a
+    cluster).
     """
     from als_pyspark_spark.session import ensure_checkpoint_dir
 
@@ -1201,72 +1161,6 @@ _KCORE_K = 3
 _KCORE_ROUNDS = 3
 
 
-@query(
-    "q_kcore_peeling",
-    oracle=f"""
-WITH li AS MATERIALIZED (
-    SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
-    FROM lineitem
-), e0 AS MATERIALIZED (
-    SELECT src AS u, dst AS v FROM li UNION ALL SELECT dst, src FROM li
-), k1 AS MATERIALIZED (
-    SELECT u FROM (SELECT u, COUNT(*) AS c FROM e0 GROUP BY u) WHERE c >= {_KCORE_K}
-), e1 AS MATERIALIZED (
-    SELECT u, v FROM e0
-    WHERE u IN (SELECT u FROM k1) AND v IN (SELECT u FROM k1)
-), k2 AS MATERIALIZED (
-    SELECT u FROM (SELECT u, COUNT(*) AS c FROM e1 GROUP BY u) WHERE c >= {_KCORE_K}
-), e2 AS MATERIALIZED (
-    SELECT u, v FROM e1
-    WHERE u IN (SELECT u FROM k2) AND v IN (SELECT u FROM k2)
-), k3 AS MATERIALIZED (
-    SELECT u FROM (SELECT u, COUNT(*) AS c FROM e2 GROUP BY u) WHERE c >= {_KCORE_K}
-), e3 AS MATERIALIZED (
-    SELECT u, v FROM e2
-    WHERE u IN (SELECT u FROM k3) AND v IN (SELECT u FROM k3)
-)
-SELECT CAST(1 AS BIGINT) AS peel_round,
-       CAST(COUNT(DISTINCT u) AS BIGINT) AS n_nodes,
-       CAST(COUNT(*) AS BIGINT) AS n_directed_edges FROM e1
-UNION ALL
-SELECT CAST(2 AS BIGINT), CAST(COUNT(DISTINCT u) AS BIGINT),
-       CAST(COUNT(*) AS BIGINT) FROM e2
-UNION ALL
-SELECT CAST(3 AS BIGINT), CAST(COUNT(DISTINCT u) AS BIGINT),
-       CAST(COUNT(*) AS BIGINT) FROM e3
-""",
-    tags=("graph", "kcore", "iterative", "peeling"),
-)
-def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-core peeling (k = 3, 3 synchronous rounds) over the
-    parity-packed supplier↔part co-purchase graph: per round, drop every
-    node whose remaining degree is < k, then drop edges touching dropped
-    nodes — the densest-subgraph / graph-degeneracy primitive that
-    complements the other iterative shapes (PageRank's score
-    propagation, BFS's frontier expansion, CC's min-label fixpoint,
-    LPA's frequency vote) with the fourth one: ITERATIVE SUBGRAPH
-    SHRINKING, where the working set gets monotonically smaller each
-    round (per-round keyed join + aggregate, the reference's loop shape —
-    reference ALS.py:137-156 — with a filter instead of a solver). At
-    100 TB that monotonicity is the point — unlike the other loops,
-    round r's cost is bounded by round r−1's survivors.
-
-    Per round: one degree aggregate + two left-semi joins (both keyed on
-    a node id), each round's edge table CHECKPOINTED eagerly — round r's
-    plan references round r−1 THREE times (degree subtree + both
-    semi-join filter subtrees), so unrolled lineage grows 3^rounds (the
-    first audit measured 120 exchanges at 3 rounds); the reliable
-    checkpoint truncates each round to a leaf scan, exactly the
-    ``min_label_components`` discipline, and makes run-to-convergence
-    peeling safe, not just the fixed 3 rounds. Output is the 3-row
-    per-round (nodes, directed edges) shrinkage curve — integer counts,
-    exact unrolled DuckDB oracle; ``collected`` frees the base edge
-    cache.
-    """
-    out, caches = _kcore_plan(spark, sf_dir, eager=True)
-    return collected(spark, out, *caches)
-
-
 def _kcore_plan(spark: SparkSession, sf_dir: str, eager: bool = False):
     """K-core shrinkage-curve plan + the per-round persisted edge tables.
 
@@ -1276,9 +1170,9 @@ def _kcore_plan(spark: SparkSession, sf_dir: str, eager: bool = False):
     ``eager=True`` (per-round materialization: each round's checkpoint is
     written before the next round's 3 references read it, bounding
     recompute at 2× per round instead of 3^rounds inside one final job).
-    Plan tests and the explain audit use the default ``eager=False``,
-    which plans each round but runs NO jobs and writes no checkpoint
-    files (round-12 ADVICE: the audit path must stay genuinely lazy)."""
+    ``Query.plan`` uses the default ``eager=False``, which plans each
+    round but runs NO jobs and writes no checkpoint files, so the audit
+    path stays lazy."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -1319,3 +1213,70 @@ def _kcore_plan(spark: SparkSession, sf_dir: str, eager: bool = False):
     for p in per_round[1:]:
         out = out.unionByName(p)
     return out, caches
+
+
+@query(
+    "q_kcore_peeling",
+    oracle=f"""
+WITH li AS MATERIALIZED (
+    SELECT DISTINCT l_suppkey * 2 AS src, l_partkey * 2 + 1 AS dst
+    FROM lineitem
+), e0 AS MATERIALIZED (
+    SELECT src AS u, dst AS v FROM li UNION ALL SELECT dst, src FROM li
+), k1 AS MATERIALIZED (
+    SELECT u FROM (SELECT u, COUNT(*) AS c FROM e0 GROUP BY u) WHERE c >= {_KCORE_K}
+), e1 AS MATERIALIZED (
+    SELECT u, v FROM e0
+    WHERE u IN (SELECT u FROM k1) AND v IN (SELECT u FROM k1)
+), k2 AS MATERIALIZED (
+    SELECT u FROM (SELECT u, COUNT(*) AS c FROM e1 GROUP BY u) WHERE c >= {_KCORE_K}
+), e2 AS MATERIALIZED (
+    SELECT u, v FROM e1
+    WHERE u IN (SELECT u FROM k2) AND v IN (SELECT u FROM k2)
+), k3 AS MATERIALIZED (
+    SELECT u FROM (SELECT u, COUNT(*) AS c FROM e2 GROUP BY u) WHERE c >= {_KCORE_K}
+), e3 AS MATERIALIZED (
+    SELECT u, v FROM e2
+    WHERE u IN (SELECT u FROM k3) AND v IN (SELECT u FROM k3)
+)
+SELECT CAST(1 AS BIGINT) AS peel_round,
+       CAST(COUNT(DISTINCT u) AS BIGINT) AS n_nodes,
+       CAST(COUNT(*) AS BIGINT) AS n_directed_edges FROM e1
+UNION ALL
+SELECT CAST(2 AS BIGINT), CAST(COUNT(DISTINCT u) AS BIGINT),
+       CAST(COUNT(*) AS BIGINT) FROM e2
+UNION ALL
+SELECT CAST(3 AS BIGINT), CAST(COUNT(DISTINCT u) AS BIGINT),
+       CAST(COUNT(*) AS BIGINT) FROM e3
+""",
+    tags=("graph", "kcore", "iterative", "peeling"),
+    plan=_kcore_plan,
+)
+def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K-core peeling (k = 3, 3 synchronous rounds) over the
+    parity-packed supplier↔part co-purchase graph: per round, drop every
+    node whose remaining degree is < k, then drop edges touching dropped
+    nodes — the densest-subgraph / graph-degeneracy primitive that
+    complements the other iterative shapes (PageRank's score
+    propagation, BFS's frontier expansion, CC's min-label fixpoint,
+    LPA's frequency vote) with the fourth one: ITERATIVE SUBGRAPH
+    SHRINKING, where the working set gets monotonically smaller each
+    round (per-round keyed join + aggregate, the reference's loop shape —
+    reference ALS.py:137-156 — with a filter instead of a solver). At
+    100 TB that monotonicity is the point — unlike the other loops,
+    round r's cost is bounded by round r−1's survivors.
+
+    Per round: one degree aggregate + two left-semi joins (both keyed on
+    a node id), each round's edge table CHECKPOINTED eagerly — round r's
+    plan references round r−1 THREE times (degree subtree + both
+    semi-join filter subtrees), so unrolled lineage grows 3^rounds (the
+    first audit measured 120 exchanges at 3 rounds); the reliable
+    checkpoint truncates each round to a leaf scan, exactly the
+    ``min_label_components`` discipline, and makes run-to-convergence
+    peeling safe, not just the fixed 3 rounds. Output is the 3-row
+    per-round (nodes, directed edges) shrinkage curve — integer counts,
+    exact unrolled DuckDB oracle; ``collected`` frees the base edge
+    cache.
+    """
+    out, caches = _kcore_plan(spark, sf_dir, eager=True)
+    return collected(spark, out, *caches)

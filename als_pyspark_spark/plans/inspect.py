@@ -29,11 +29,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return [l.strip() for l in formatted(df).splitlines() if "PushedFilters" in l]
 
 
-def read_schemas(df: DataFrame) -> list[str]:
-    """All ReadSchema lines — what each scan actually decodes."""
-    return [l.strip() for l in formatted(df).splitlines() if "ReadSchema" in l]
-
-
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan (broadcast
     exchanges excluded — those move dimension-sized data)."""

@@ -4,6 +4,9 @@ Every operator/query this engine claims (SURVEY.md §2 inventory + the
 extension operators) registers here with:
 
 - ``build(spark, sf_dir) -> DataFrame``  — the Spark-native implementation
+- ``plan(spark, sf_dir) -> (df, caches)`` — for queries whose build runs on
+  the driver, the distributed plan before it runs, plus the intermediates
+  it persisted; ``None`` when ``build`` itself is lazy
 - ``oracle``                             — equivalent DuckDB ANSI SQL, or
   ``None`` for genuinely non-SQL-expressible ops (ML training, LSH, streaming)
 
@@ -14,10 +17,15 @@ the driver's contract.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+# ``(spark, sf_dir) -> (df, caches)``: the distributed plan, not yet run, and
+# the intermediates it persisted (the caller unpersists them when done).
+Plan = Callable[[SparkSession, str], tuple[DataFrame, Sequence[DataFrame]]]
 
 
 @dataclass
@@ -35,6 +43,7 @@ class Query:
     # a deterministic skip, never as an environment-dependent registry or a
     # guaranteed-red driver row.
     requires: tuple[str, ...] = field(default_factory=tuple)
+    plan: Plan | None = None
 
 
 QUERIES: dict[str, Query] = {}
@@ -45,8 +54,10 @@ def query(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     requires: tuple[str, ...] = (),
+    plan: Plan | None = None,
 ):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``,
+    with ``plan`` as its lazy view when ``fn`` runs jobs on the driver.
     Raises ``ValueError`` if ``name`` is already registered."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
@@ -63,7 +74,30 @@ def query(
             tags=tags,
             doc=fn.__doc__ or "",
             requires=requires,
+            plan=plan,
         )
+        return fn
+
+    return deco
+
+
+def collected_query(name: str, **kwargs):
+    """Decorator: register the lazy plan ``fn(spark, sf_dir) -> (df, caches)``
+    of a query with a bounded result under ``name`` (``kwargs`` as for
+    :func:`query`). Its build collects ``df`` through
+    :func:`caching.collected`, which frees ``caches``."""
+
+    def deco(fn: Plan):
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            # Looked up per call, not bound at import, so a wrapper a
+            # tracer installs on ``caching.collected`` is always seen.
+            from als_pyspark_spark import caching
+
+            df, caches = fn(spark, sf_dir)
+            return caching.collected(spark, df, *caches)
+
+        query(name, plan=fn, **kwargs)(build)
         return fn
 
     return deco

@@ -1,7 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Defaults are chosen for the local[32]/128GiB test box but every knob is the
-one you would also set on a 1000-executor cluster:
+Defaults are chosen for a single local box but every knob is the one you
+would also set on a 1000-executor cluster:
 
 - AQE on (runtime re-plan: coalesce shuffle partitions, skew-join split).
 - Arrow on (vectorized pandas UDF / toPandas transfers).
@@ -24,8 +24,8 @@ from pyspark.sql import SparkSession
 _OWNER_MARKER = ".owner_pid"
 # Fallback age past which even a "live"-pid checkpoint dir is swept —
 # guards against pid reuse by an unrelated long-lived process making a
-# dead session's dir immortal (round-10 ADVICE). Far above any real
-# local session lifetime, far below "forever".
+# dead session's dir immortal. Far above any real local session lifetime,
+# far below "forever".
 _PID_REUSE_AGE_S = 48 * 3600.0
 
 
@@ -48,18 +48,16 @@ def _sweep_stale_checkpoints(base: str, max_age_s: float = 3 * 3600) -> None:
 
     Spark never removes a session's checkpoint directory (it only creates
     ``<base>/<uuid>`` per context), so crashed or kill -9'd runs leak disk
-    forever — 309 MB had accumulated across eight rounds before this sweep
-    existed. Liveness is decided by the ``.owner_pid`` marker each session
-    plants in its own dir (round-9 ADVICE fix: mtime alone deleted a
-    CONCURRENT live session's dir if it went 3 h without writing — long
-    idle gate, debugger pause — which is unrecoverable, since a reliable
-    checkpoint truncated the lineage that could rebuild it):
+    forever. Liveness is decided by the ``.owner_pid`` marker each session
+    plants in its own dir (mtime alone would delete a CONCURRENT live
+    session's dir if it went 3 h without writing — long idle gate,
+    debugger pause — which is unrecoverable, since a reliable checkpoint
+    truncated the lineage that could rebuild it):
 
     - marker present, owner pid alive  → kept, unless the dir has sat
-      untouched past a generous 48 h fallback gate (round-10 ADVICE: pid
-      REUSE can hand a dead session's recorded pid to an unrelated
-      long-lived process, which would otherwise make the dir immortal —
-      no local session here lives remotely close to 48 h);
+      untouched past a generous 48 h fallback gate (pid REUSE can hand a
+      dead session's recorded pid to an unrelated long-lived process,
+      which would otherwise make the dir immortal);
     - marker present, owner pid dead   → removed immediately (no other
       session can ever read those checkpoints);
     - no marker (foreign / pre-marker) → the original mtime age gate
@@ -95,11 +93,9 @@ def _sweep_stale_checkpoints(base: str, max_age_s: float = 3 * 3600) -> None:
                     # no genuine local session can still own this dir.
                     # Age is judged from the MARKER's mtime, which the
                     # owner re-touches on every ensure_checkpoint_dir
-                    # call (round-11 ADVICE: checkpoint WRITES land in
-                    # nested rdd-N subdirs and never bump the base dir's
-                    # mtime, so a genuinely live long session — CI soak,
-                    # attached notebook — looked idle by dir mtime and
-                    # lost its unrecoverable checkpoints). Liveness is
+                    # call: checkpoint WRITES land in nested rdd-N subdirs
+                    # and never bump the base dir's mtime, so a live long
+                    # session would look idle by dir mtime. Liveness is
                     # owner-asserted, not inferred from write patterns.
                     shutil.rmtree(path, ignore_errors=True)
                 continue
@@ -117,10 +113,9 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
     ``Dataset.checkpoint`` (the connected-components loop in
     operators/graph.py) invoke this lazily on the DataFrame's OWN session,
     so the iterative queries work on any externally-built bare
-    SparkSession — round 8's only red driver rows were both
-    ``Dataset.checkpoint`` throwing because the dir was wired only inside
-    :func:`build_session` and the external driver builds its own session.
-    Same pattern as the per-query UTC pin in sources/tables.py.
+    SparkSession, where ``Dataset.checkpoint`` would otherwise throw for
+    want of a dir. Same pattern as the per-query UTC pin in
+    sources/tables.py.
 
     Hygiene owned here (idempotent; a dir already set — by this helper,
     by ``build_session``, or by the embedding application — is respected
@@ -177,19 +172,25 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
     return own
 
 
+def local_cpus() -> str:
+    """The N of ``local[N]``: $SPARK_GRAFT_CPUS, else the CPUs this process
+    may run on (its affinity mask, which a container's cpuset narrows below
+    the host's core count)."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+
+
 def build_session(
     app_name: str = "als-pyspark-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    # Default to the CPUs this process may run on (its affinity mask, which
-    # a container's cpuset narrows below the host's core count).
-    usable = len(os.sched_getaffinity(0))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(usable))
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else usable
+        shuffle_partitions = (
+            int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+        )
 
     b = (
         SparkSession.builder.appName(app_name)

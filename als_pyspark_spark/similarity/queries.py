@@ -23,9 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import collected
 from als_pyspark_spark.functions.arrays import cosine, l2_norm
-from als_pyspark_spark.registry import query
+from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.sources.tables import load_table
 
 _DIM = 64
@@ -121,7 +120,7 @@ def _bucket_udf(planes: np.ndarray):
     UDF policy reserves pandas UDFs for: Catalyst HOFs interpret the fold
     per element with an array allocation per lambda, and the plane matrix
     as a plan literal costs real ANALYSIS time per execution. Measured at
-    sf1 (20k rows × 48 planes, round 10): HOF pipeline 1.31s execute +
+    sf1 (20k rows × 48 planes): HOF pipeline 1.31s execute +
     0.79s analyze vs 0.60s + 0.03s here — and the planes ship inside the
     serialized function (a few KiB), not the plan.
 
@@ -172,7 +171,7 @@ def _with_buckets(e: DataFrame, n_planes: int, n_blocks: int, spread: bool = Fal
     )
 
 
-@query(
+@collected_query(
     "q_ann_lsh_top10",
     oracle=f"""
 WITH bk AS (
@@ -195,7 +194,7 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id 
 """,
     tags=("similarity", "ann", "lsh"),
 )
-def q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ann_lsh_plan(spark: SparkSession, sf_dir: str):
     """LSH-bucketed ANN top-10: candidates share a random-hyperplane bucket
     in ≥1 of 4 blocks; exact cosine re-rank within candidates.
 
@@ -209,16 +208,9 @@ def q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bounded result (≤ _N_QUERIES × _TOP_K rows): materialized via
     ``collected`` so the persisted bucket table is released instead of
-    leaking for the session lifetime (round-9 ADVICE; the
-    caching.collected discipline every other persisting query follows).
+    leaking for the session lifetime (the caching.collected discipline
+    every other persisting query follows).
     """
-    top, caches = _ann_lsh_plan(spark, sf_dir)
-    return collected(spark, top, *caches)
-
-
-def _ann_lsh_plan(spark: SparkSession, sf_dir: str):
-    """Lazy LSH top-10 plan + the persisted bucket table it reads twice
-    (plan tests inspect the DataFrame without materializing)."""
     e = load_table(spark, sf_dir, "embeddings")
     # Bucket ONCE and derive the query side by filter: the bucketing plan
     # is the expensive thing to analyze/codegen (a 3072-double literal
@@ -307,7 +299,7 @@ def _fit_coarse_quantizer(sample: np.ndarray, k: int, iters: int, seed: int) -> 
             + (cents * cents).sum(axis=1)
         )
         assign = d2.argmin(axis=1)
-        # vectorized M-step (round 10): the per-cluster Python mask loop
+        # vectorized M-step: the per-cluster Python mask loop
         # cost ~3.6s across the 8 PQ codebook fits (k=256 × iters × masks
         # over the sample); scatter-add + bincount is the same mean.
         sums = np.zeros_like(cents)
@@ -321,48 +313,10 @@ def _fit_coarse_quantizer(sample: np.ndarray, k: int, iters: int, seed: int) -> 
     return cents
 
 
-@query("q_ann_ivf_top10", oracle=None, tags=("similarity", "ann", "ivf"))
-def q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-10: coarse quantizer fit on a bounded seeded sample →
-    inverted lists by cluster id → probe the nprobe nearest centroids per
-    query → exact cosine re-rank within the probed lists.
-
-    The scale path beside hyperplane LSH: at 100 TB the corpus is
-    partitioned by cluster id (the inverted index), each query touches
-    nprobe/k of the data, and the centroids ship inside the serialized
-    assignment function (k×dim floats). Driver-side data is bounded by
-    construction at every corpus size: the fixed-size fit sample
-    (``_IVF_FIT_N`` rows, taken as the first rows in xxhash64(vec_id)
-    order — one scale-safe TakeOrderedAndProject pass, deterministic, no
-    count() needed), the k centroids, and the _N_QUERIES query vectors
-    (collected once to route probes with |q|×k numpy distances — a
-    constant, never corpus-proportional). Corpus assignment +
-    unit-normalization is ONE vectorized Arrow batch pass
-    (:func:`_assign_udf`); candidate and witness scoring is a single
-    JVM-side dot fold over unit vectors.
-
-    Rows-only check (the learned quantizer makes the neighbor set
-    implementation-specific) — but the ROWS THEMSELVES witness the
-    quality floor: each carries the query's recall@10 against an exact
-    brute-force pass computed in the same job, plus a within_bound flag
-    (mean recall over the query set ≥ 0.5, the same floor the local test
-    pins). The witness columns cost one extra O(q·n) scored pass over the
-    bounded query set — the labeled recall baseline; at 100 TB you would
-    drop the witness and sample-audit recall offline instead.
-
-    Bounded result (≤ _N_QUERIES × _TOP_K rows): materialized via
-    ``collected`` so the persisted assignment table is released instead
-    of leaking for the session lifetime (round-9 cache discipline, same
-    as the LSH/rerank pair).
-    """
-    top, caches = _ivf_plan(spark, sf_dir)
-    return collected(spark, top, *caches)
-
-
 def _embedding_matrix(batch, dim: int) -> np.ndarray:
     """(n, dim) float64 matrix from an Arrow batch's ``embedding`` list
-    column, refusing null or ragged rows BEFORE the reshape (round-11
-    ADVICE): ``ListArray.flatten()`` silently DROPS a null row's slot and
+    column, refusing null or ragged rows BEFORE the reshape:
+    ``ListArray.flatten()`` silently DROPS a null row's slot and
     concatenates ragged rows, so a corrupt embedding column either died
     in a confusing reshape error or — when the lengths happened to divide
     evenly — shifted every subsequent row one slot over and misassigned
@@ -444,20 +398,47 @@ def _assign_batches(cents: np.ndarray, q_units: np.ndarray):
     return assign
 
 
+@collected_query("q_ann_ivf_top10", oracle=None, tags=("similarity", "ann", "ivf"))
 def _ivf_plan(spark: SparkSession, sf_dir: str):
-    """Lazy IVF plan + the persisted tables it reads more than once (the
-    cluster assignment: candidate lists + witness; the ≤ q·k-row top-k:
-    output + recall join).
+    """IVF ANN top-10: coarse quantizer fit on a bounded seeded sample →
+    inverted lists by cluster id → probe the nprobe nearest centroids per
+    query → exact cosine re-rank within the probed lists.
 
-    Round-10 reshape (the honest-cost target VERDICT r9 set): the corpus
-    pass is one Arrow-batched assign-and-normalize UDF; the nprobe
-    nearest centroids per query are computed DRIVER-side with numpy over
-    the already-driver-resident centroids and the _N_QUERIES collected
-    query vectors (bounded by construction — q is a constant, never
-    corpus-proportional), replacing a crossJoin + HOF distance + window
-    chain of Spark jobs; and candidate/witness scoring is a single
-    zip_with/aggregate dot over unit vectors. Measured at sf1: 7.7s →
-    ~1.6s warm, plans still broadcast-only."""
+    The scale path beside hyperplane LSH: at 100 TB the corpus is
+    partitioned by cluster id (the inverted index), each query touches
+    nprobe/k of the data, and the centroids ship inside the serialized
+    assignment function (k×dim floats). Driver-side data is bounded by
+    construction at every corpus size: the fixed-size fit sample
+    (``_IVF_FIT_N`` rows, taken as the first rows in xxhash64(vec_id)
+    order — one scale-safe TakeOrderedAndProject pass, deterministic, no
+    count() needed), the k centroids, and the _N_QUERIES query vectors
+    (collected once to route probes with |q|×k numpy distances — a
+    constant, never corpus-proportional). Corpus assignment +
+    unit-normalization is ONE vectorized Arrow batch pass
+    (:func:`_assign_udf`); candidate and witness scoring is a single
+    JVM-side dot fold over unit vectors.
+
+    Rows-only check (the learned quantizer makes the neighbor set
+    implementation-specific) — but the ROWS THEMSELVES witness the
+    quality floor: each carries the query's recall@10 against an exact
+    brute-force pass computed in the same job, plus a within_bound flag
+    (mean recall over the query set ≥ 0.5, the same floor the local test
+    pins). The witness columns cost one extra O(q·n) scored pass over the
+    bounded query set — the labeled recall baseline; at 100 TB you would
+    drop the witness and sample-audit recall offline instead.
+
+    Bounded result (≤ _N_QUERIES × _TOP_K rows): materialized via
+    ``collected`` so the persisted assignment table is released instead
+    of leaking for the session lifetime (same as the LSH/rerank pair).
+
+    The persisted tables are the ones read more than once: the cluster
+    assignment (candidate lists + witness) and the ≤ q·k-row top-k
+    (output + recall join). The nprobe nearest centroids per query are
+    computed DRIVER-side with numpy over the already-driver-resident
+    centroids and the _N_QUERIES collected query vectors, replacing a
+    crossJoin + HOF distance + window chain of Spark jobs (measured at
+    sf1: 7.7s → ~1.6s warm, plans still broadcast-only).
+    """
     e = load_table(spark, sf_dir, "embeddings")
     fit_rows = (
         e.select("embedding")
@@ -525,8 +506,8 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
         .where(F.col("neighbor_id") != F.col("query_id"))
     )
     # Two window passes — one over the probed subset (the IVF top-k),
-    # one over the full stream (the brute-force witness). A round-15
-    # attempt merged them into ONE pass (row_number + a running count of
+    # one over the full stream (the brute-force witness). An attempt
+    # merged them into ONE pass (row_number + a running count of
     # probed rows over the same total order — provably identical output,
     # verified by sorted-row diff) but the BENCH measured it 0.60× — a
     # confirmed ~1.6s regression at sf0.1 — so the split form stays; the
@@ -578,19 +559,19 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
 _PQ_M = 8  # product-quantizer subspaces (64 dims → 8 × 8-dim)
 _PQ_KSUB = 256  # centroids per subspace → 1 byte/code, 8 bytes/vector
 _PQ_ITERS = 6
-# ADC shortlist size refined by exact re-rank. 1024, from the round-11
-# sweep (scripts/sweep_ivfpq.py, PERF.md): on this isotropic corpus the
+# ADC shortlist size refined by exact re-rank. 1024, from the
+# scripts/sweep_ivfpq.py sweep: on this isotropic corpus the
 # shortlist — not the probe count — was the binding recall constraint at
 # sf1 (sim recall@10 0.82→0.92 at L=256→1024; real witness 0.66→0.76 at
 # sf1 / 0.86 at sf0.1, runtime unchanged), and the refine stage's cost is
 # L·|q| bounded rows, so the bump is ~free.
 _PQ_SHORTLIST = 1024
-# Probe count for the PQ tier — its own knob since round 12, ADJUDICATED
-# BY DECOMPOSITION (PERF.md round-12): instrumenting recall@10 at sf1 as
+# Probe count for the PQ tier — its own knob, ADJUDICATED BY
+# DECOMPOSITION: instrumenting recall@10 at sf1 as
 # coverage (truth ∩ probed cells) × shortlist survival (truth surviving
 # the ADC cut, GIVEN covered) showed survival = 1.00 and coverage = the
 # entire loss (0.72-0.92 across 8 fit-sample seeds at nprobe 8/16). So
-# the round-11 hypothesis "quantization error binds" is measured FALSE —
+# the hypothesis "quantization error binds" is measured FALSE —
 # and every codebook-side candidate was a measured no-op at fixed scan:
 # per-list residual codebooks, 5-10× larger PQ fit samples, 2× Lloyd
 # iterations, best-of-5 restarts, spherical k-means routing, and 2-way
@@ -607,9 +588,8 @@ _PQ_SHORTLIST = 1024
 # the same recall; the knob is per-corpus and this fixture's honest
 # operating point prices the no-structure worst case explicitly.
 _PQ_NPROBE = 12
-# In-row witness floor (within_bound): raised 0.5 → 0.85 with the
-# nprobe-12 operating point (round-12 VERDICT item 4). Margin ≥ 0.05 at
-# the measured min-over-seeds coverage of 0.90.
+# In-row witness floor (within_bound): 0.85 at the nprobe-12 operating
+# point, a margin ≥ 0.05 at the measured min-over-seeds coverage of 0.90.
 _PQ_RECALL_FLOOR = 0.85
 
 
@@ -650,7 +630,7 @@ def _pq_encode_batches(
     m_sub residual PQ codes (argmin per subspace codebook — the 8-byte
     compressed representation that is the entire point of PQ at 100 TB:
     the inverted lists hold codes, not vectors), the fused recall-
-    witness cosines against the |q| query units, AND (round 15) the
+    witness cosines against the |q| query units, AND the
     per-BATCH witness top-k candidates as a pruned (qi, cos) list per
     row — same zero-copy Arrow discipline and rationale as
     :func:`_assign_batches`.
@@ -742,8 +722,10 @@ def _pq_encode_batches(
     return encode
 
 
-@query("q_ann_ivfpq_top10", oracle=None, tags=("similarity", "ann", "ivf", "pq"))
-def q_ann_ivfpq_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
+@collected_query(
+    "q_ann_ivfpq_top10", oracle=None, tags=("similarity", "ann", "ivf", "pq")
+)
+def _ivfpq_plan(spark: SparkSession, sf_dir: str):
     """IVF-PQ ANN top-10 — the memory-compressed scale tier of the ANN
     stack (the FAISS IVFPQ + refine architecture): coarse inverted lists
     over unit vectors (cosine = inner product on the unit sphere),
@@ -769,7 +751,7 @@ def q_ann_ivfpq_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     as IVF: recall@10 per query against the exact brute-force ranking
     computed in the same corpus pass, and a within_bound flag (mean
     recall ≥ ``_PQ_RECALL_FLOOR`` = 0.85; the local test pins the same
-    floor). The floor sits at 0.85 since round 12 because the recall
+    floor). The floor sits at 0.85 because the recall
     loss was DECOMPOSED, not guessed: ADC-shortlist survival of covered
     true neighbors measured 1.00, so the entire loss was coarse-cell
     coverage, fixed by the tier's own probe knob ``_PQ_NPROBE`` = 12 —
@@ -783,13 +765,6 @@ def q_ann_ivfpq_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bounded result (≤ _N_QUERIES × _TOP_K rows): materialized via
     ``collected``; caches released (assigned codes + the ≤50-row top-k).
     """
-    top, caches = _ivfpq_plan(spark, sf_dir)
-    return collected(spark, top, *caches)
-
-
-def _ivfpq_plan(spark: SparkSession, sf_dir: str):
-    """Lazy IVF-PQ plan + persisted intermediates (code table read by the
-    candidate stage and the witness; the ≤ q·k top-k read twice)."""
     e = load_table(spark, sf_dir, "embeddings")
     fit_rows = (
         e.select("embedding")
@@ -894,8 +869,8 @@ def _ivfpq_plan(spark: SparkSession, sf_dir: str):
         .persist()
     )
 
-    # fused witness: exact cosine top-10 from the same corpus pass. Since
-    # round 15 the explode runs over the PRUNED per-batch candidate list
+    # fused witness: exact cosine top-10 from the same corpus pass. The
+    # explode runs over the PRUNED per-batch candidate list
     # the encode pass tagged (``wit``: ≤ batches · |q| · (k + ties) rows),
     # not the full (corpus × |q|) score matrix — the global top-k of a
     # total order is contained in the union of per-batch top-k's, so the
@@ -987,9 +962,9 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _with_buckets(e.unionByName(planted), _DUP_PLANES, _DUP_BLOCKS, spread=True).persist()
     a = b.alias("a")
     c = b.alias("b")
-    # threshold BEFORE the dedup shuffle (round-14, guide §2.3 "shuffle
-    # fewer bytes"): a pair spread across several blocks computes the
-    # same cosine in each, so distinct-on-ids after the cos ≥ 0.9 filter
+    # threshold BEFORE the dedup shuffle (shuffle fewer bytes): a pair
+    # spread across several blocks computes the same cosine in each, so
+    # distinct-on-ids after the cos ≥ 0.9 filter
     # returns exactly the rows distinct-then-filter did — but the
     # exchange now carries only the qualifying pairs (planted dups),
     # not every bucket collision with its cosine.
@@ -1154,7 +1129,7 @@ _RERANK_CAND = 40
 _RERANK_K = 5
 
 
-@query(
+@collected_query(
     "q_rerank_two_stage_topk",
     oracle=f"""
 WITH bk AS (
@@ -1193,7 +1168,7 @@ WHERE rk <= {_RERANK_K}
 """,
     tags=("similarity", "ann", "rerank", "two-stage"),
 )
-def q_rerank_two_stage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _rerank_plan(spark: SparkSession, sf_dir: str):
     """Retrieve-then-rerank top-k: stage 1 shortlists 40
     candidates per query by LSH-bucketed cosine (the q_ann_lsh_top10
     recall stage); stage 2 re-fetches ONLY the shortlist's vectors and
@@ -1216,15 +1191,8 @@ def q_rerank_two_stage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bounded result (≤ _N_QUERIES × _RERANK_K rows): materialized via
     ``collected`` so the stage-1 bucket cache is released instead of
-    leaking for the session lifetime (round-9 ADVICE).
+    leaking for the session lifetime.
     """
-    top, caches = _rerank_plan(spark, sf_dir)
-    return collected(spark, top, *caches)
-
-
-def _rerank_plan(spark: SparkSession, sf_dir: str):
-    """Lazy two-stage rerank plan + the persisted stage-1 bucket table
-    (plan tests inspect the DataFrame without materializing)."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS, spread=True).persist()
     queries = corpus.where(F.col("vec_id") < _N_QUERIES).select(
@@ -1342,10 +1310,10 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = _with_buckets(union, _DUP_PLANES, _DUP_BLOCKS, spread=True).persist()
     a, c = b.alias("a"), b.alias("b")
-    # threshold BEFORE the dedup shuffle (round-14, guide §2.3): the
-    # distinct used to ship every bucket collision + cosine; filtering
-    # first ships only the qualifying edges — identical edge set (a pair
-    # spread across blocks computes the same cosine everywhere).
+    # threshold BEFORE the dedup shuffle: the distinct would ship every
+    # bucket collision + cosine; filtering first ships only the qualifying
+    # edges — identical edge set (a pair spread across blocks computes the
+    # same cosine everywhere).
     pairs = (
         a.join(
             c,
@@ -1365,8 +1333,7 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     b.unpersist()
     # cluster size as a window over the SAME key the stats aggregate
     # used — one exchange on label instead of groupBy + join-back
-    # (round-14, guide §2.4: operations keyed the same way share one
-    # exchange)
+    # (operations keyed the same way share one exchange)
     return (
         labels.withColumn(
             "cluster_size", F.count("*").over(Window.partitionBy("label"))

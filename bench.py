@@ -14,17 +14,18 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from als_pyspark_spark.caching import release_deferred
+from als_pyspark_spark import runner
 from als_pyspark_spark.registry import load_all_queries
 from als_pyspark_spark.session import build_session
 
 # Headline set: the scan/agg/join/window/topk core (TPC-H-ish), the extension
 # operators (dedup, similarity, text), and the ALS flagship — one per family,
 # weighted toward the queries that dominate at 100 TB (full-table shuffles).
+# Append only: the per-query map is compared across runs, so existing
+# entries stay, and a total is comparable only over the common query set.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_top_orders",
@@ -47,110 +48,63 @@ HEADLINE = [
     "q_range_join_purchase_context",
     "q_stream_tumbling_hourly",
     "als_mse",
-    # round 3: the two most shuffle-interesting pipeline operators — their
-    # cost story should be measured, not asserted (VERDICT r2 item 7)
+    # Later additions, each a cost shape the core lacks:
+    # pipeline shuffles (global shuffle order, n-gram decontamination)
     "q_shuffle_order",
     "q_decontaminate",
-    # round 3 additions: chunking feeds training-sequence volume (output >
-    # input); BM25 is the one-agg-broadcast + TakeOrdered retrieval probe
+    # output > input chunking; one-agg-broadcast + TakeOrdered retrieval
     "q_chunk_documents",
     "q_bm25_retrieval",
-    # md5 hash family (exact-oracle upgrade): measure its cost, don't
-    # assert it — simhash is the hash-heaviest per-token op, LSH ANN the
-    # bucketed-join probe
+    # per-token md5 hashing; bucketed-join ANN
     "q_dedup_simhash",
     "q_ann_lsh_top10",
-    # round 4: the repetition family — the zero-shuffle sorted-run fold
-    # vs the gram-keyed shuffle report are the two cost shapes the new
-    # curation operators add; measure them, don't assert them
+    # zero-shuffle sorted-run fold vs gram-keyed shuffle report
     "q_repetition_metrics",
     "q_boilerplate_ngrams",
-    # round 5: the three new cost shapes — Bloom prefilter probe join
-    # (broadcast bit-set + per-doc K probes), Python arbitrary-state
-    # streaming (applyInPandasWithState over RocksDB-backed state), and
-    # the mergeable-sketch aggregate (DataSketches HLL build/union)
+    # Bloom probe join, Python arbitrary-state streaming, HLL sketch union
     "q_bloom_incremental_dedup",
     "q_stream_apws_user_max",
     "q_hll_sketch_union",
-    # late round 5: the iterative-graph shape (3 unrolled join+agg rounds
-    # over the co-purchase edge list) and the corpus-wide posting-list
-    # build — the two heaviest of the warehouse/graph additions
+    # unrolled iterative graph join+agg; corpus-wide posting lists
     "q_pagerank_copurchase",
     "q_inverted_index_tokens",
-    # round 5 tail: the distributed two-phase prefix sum (sweep-line
-    # concurrency) and the Morton range-shuffle rewrite sink — the two
-    # cheap-but-new cost shapes of the timeseries/layout additions. The
-    # heavy tail shapes (triangle wedge join 31s, two-batch streaming
-    # stages 22-26s at sf0.1) are measured once in PERF.md instead of
-    # doubling the per-round bench wall time.
+    # two-phase distributed prefix sum; Morton range-shuffle sink
     "q_max_concurrent_sessions",
     "q_zorder_layout_sink",
-    # round 8: the three new cost shapes — two-stage retrieve-then-rerank
-    # (bucketed candidate join + shortlist-bounded rescoring), semantic
-    # CC clustering (iterative keyed join+agg over the embedding edge
-    # list), and the versioned foreachBatch MERGE upsert (per-batch keyed
-    # shuffle + state-table read-merge-write ×3 epochs + 2 replay
-    # witnesses)
+    # retrieve-then-rerank, iterative CC over embeddings, foreachBatch MERGE
     "q_rerank_two_stage_topk",
     "q_semantic_dedup_clusters",
     "q_stream_idempotent_merge",
     "q_cms_heavy_hitters",
-    # round 9: the new cost shapes — the zero-shuffle per-doc HOF fold
-    # family (sorted-run span stats, literal-weight linear scoring), the
-    # chunk-hash window+agg double shuffle, and the two remaining Python
-    # batch surfaces (cogrouped pandas merge_asof: co-partitioned dual
-    # shuffle + per-key pandas; mapInArrow: pure Arrow-kernel scan map)
+    # per-doc HOF folds, chunk-hash double shuffle, cogrouped pandas and
+    # mapInArrow Python batch surfaces
     "q_dedup_intra_doc_spans",
     "q_quality_linear_scorer",
     "q_dedup_chunk_level",
     "q_cogroup_asof_merge",
     "q_arrow_map_token_stats",
-    # round 10: the new cost shapes — the overlapping-window-hash
-    # substring tier (hash-key window shuffle + in-row interval fold),
-    # its scrub transform (one extra co-partitioned join + string
-    # rebuild), and the code-compressed ANN tier (Arrow encode pass +
-    # broadcast ADC + bounded exact refine)
+    # window-hash substring tier, its scrub join, PQ-compressed ANN
     "q_dedup_substring_spans",
     "q_dedup_scrub_spans",
     "q_ann_ivfpq_top10",
-    # round 11: the exact-complete prefix-filtered set-similarity join
-    # (PPJoin tier — guaranteed-complete Jaccard pairs, never all-pairs)
-    # and distributed PCA (one-pass Gramian moments + driver eig +
-    # distributed projection; ~1.3s flat from sf0.1 to sf1 — the corpus
-    # passes dominate and they are embarrassingly parallel)
+    # prefix-filtered set-similarity join; Gramian PCA
     "q_dedup_jaccard_prefix_join",
     "q_embedding_pca_project",
-    # round 11 (extended session): the two new cost shapes — synchronous
-    # LPA (argmax label propagation: join+count+struct-max agg per round,
-    # the frequency-vote variant of the iterative-graph family) and the
-    # A-ES weighted reservoir (per-row bounded md5 fan-out + two-phase
-    # salted per-group top-k)
+    # label propagation; weighted reservoir sampling
     "q_label_propagation_communities",
     "q_sample_weighted_reservoir",
-    # round 15 (VERDICT r14 item 7): the suite's heaviest operator joins
-    # the headline so it is measured every round, not once per PERF.md
-    # probe. ADDITION-ONLY per the driver contract (existing entries
-    # unchanged); the raw headline_total grows by this query's cost, so
-    # round-over-round total comparisons must use the common-query set
-    # (the driver's per_query map already does).
+    # the suite's heaviest operator
     "q_triangle_count_parts",
 ]
-
-
-def force(df) -> int:
-    """Force full execution without driver collect (noop sink)."""
-    df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
-    # Host-contention telemetry (round-11 VERDICT item 6): this is a
-    # shared box and a loaded host inflates the headline multi-×
-    # (measured: 72.4s vs 55.1s at identical HEAD/plans). Recording the
-    # 1/5/15-min load averages at start and end makes a noisy headline
-    # self-explaining from the artifact alone.
+    # Host-contention telemetry: this is a shared box and a loaded host
+    # inflates the headline multi-× (measured: 72.4s vs 55.1s at identical
+    # plans). Recording the 1/5/15-min load averages at start and end makes
+    # a noisy headline self-explaining from the artifact alone.
     loadavg_start = list(os.getloadavg())
     spark = build_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -168,65 +122,44 @@ def main() -> int:
     # query swinging 1.6s ↔ 6.5s between back-to-back runs at identical
     # plans); min-of-2 measures the ENGINE, not the neighbors. Every query
     # still executes its complete plan each pass — streaming queries
-    # re-drain their state machines, ALS retrains (its cross-query model
-    # memo is cleared between passes so pass 2 pays full training cost).
+    # re-drain their state machines, ALS retrains and the clone-ratio
+    # statistics are rescanned, because the memos are reset per pass.
+    # Each timing is build + noop write, cold plans; cache release is not
+    # timed.
     passes: list[dict[str, float]] = []
     for pass_i in range(2):
-        from als_pyspark_spark.dedup import queries as dedup_queries
-        from als_pyspark_spark.ml import queries as ml_queries
-
-        ml_queries._TRAINED.clear()
-        # honest repricing: every pass re-pays the adaptive-collapse
-        # decision scan (fixture-statistics memo, shared by 3 queries)
-        dedup_queries._CLONE_RATIO.clear()
+        runner.reset_memos()
         timings: dict[str, float] = {}
         for name in HEADLINE:
-            q = queries[name]
-            # each timing includes planning + execution, cold plans.
-            t0 = time.time()
-            force(q.build(spark, sf_dir))
-            dt = time.time() - t0
+            dt = runner.force(spark, queries[name], sf_dir)
             timings[name] = round(dt, 3)
-            # harness checkpoint for caching.deferred registrants — every
-            # pass re-pays the real cache-build cost (honest repricing)
-            release_deferred()
             print(f"# pass{pass_i} {name}: {dt:.2f}s", file=sys.stderr)
         passes.append(timings)
 
     best = {n: min(p[n] for p in passes) for n in HEADLINE}
-    # min over the two FULL passes only — the epoch-comparable statistic.
-    # E[min of 3] < E[min of 2] under this host's noise, so cross-round
-    # comparisons against the r6 record (which is min-of-2) must use
+    # min over the two FULL passes only. E[min of 3] < E[min of 2] under
+    # this host's noise, so comparisons against a min-of-2 record must use
     # queries_min2, not the fast-tier-augmented headline, or a genuine
     # sub-2s regression can hide inside the extra sampling draw.
     best2 = dict(best)
 
-    # Round-7 addition (VERDICT r6 item 6): a third pass over the FAST
-    # tier only. On this shared host the sub-2s queries carry the worst
-    # relative noise (scheduler quanta + JIT residue dominate their
-    # wall), and they are cheap to re-measure; the heavy tier's min-of-2
-    # already amortizes its noise. Bounded cost: the fast tier sums to a
-    # few seconds, not a third full pass.
+    # A third pass over the FAST tier only. On this shared host the sub-2s
+    # queries carry the worst relative noise (scheduler quanta + JIT
+    # residue dominate their wall), and they are cheap to re-measure; the
+    # heavy tier's min-of-2 already amortizes its noise. Bounded cost: the
+    # fast tier sums to a few seconds, not a third full pass.
     fast = [n for n in HEADLINE if best[n] < 2.0]
     if fast:
-        from als_pyspark_spark.ml import queries as ml_queries
-
-        ml_queries._TRAINED.clear()
-        dedup_queries._CLONE_RATIO.clear()
+        runner.reset_memos()
         for name in fast:
-            t0 = time.time()
-            force(queries[name].build(spark, sf_dir))
-            dt = round(time.time() - t0, 3)
-            release_deferred()
+            dt = round(runner.force(spark, queries[name], sf_dir), 3)
             print(f"# pass3(fast) {name}: {dt:.2f}s", file=sys.stderr)
             best[name] = min(best[name], dt)
-    # The driver captures only the tail of stdout and parses the final
-    # line, so that line must stay comfortably under ~1,800 bytes
-    # (round 7's line outgrew the capture when queries_min2 doubled it
-    # and the driver recorded parsed: null). Keep the contract fields
-    # (metric/value/unit/queries/sf) on stdout and write the full
-    # epoch-comparison detail — per-pass timings and the min-of-2
-    # statistic — to a committed side file.
+    # Consumers of this contract capture only the tail of stdout and parse
+    # the final line, so that line must stay comfortably under ~1,800
+    # bytes. Keep the contract fields (metric/value/unit/queries/sf) on
+    # stdout and write the full epoch-comparison detail — per-pass timings
+    # and the min-of-2 statistic — to a committed side file.
     out = {
         "metric": "headline_total",
         "value": round(sum(best.values()), 3),
@@ -237,25 +170,21 @@ def main() -> int:
         # artifact itself distinguish host contention from regression
         # (the full 3-tuple + spread detail lives in BENCH_full_last.json)
         "load1": [round(loadavg_start[0], 1), round(os.getloadavg()[0], 1)],
-        # actual JVM task parallelism (round-14 VERDICT item 2: the scaling
-        # artifact must prove what parallelism the session really used —
-        # $SPARK_GRAFT_CPUS is honored by build_session, but that was
-        # invisible from the artifact alone)
+        # actual JVM task parallelism: $SPARK_GRAFT_CPUS is honored by
+        # build_session, but that is invisible from the artifact alone
         "parallelism": spark.sparkContext.defaultParallelism,
     }
     full = dict(out)
-    # epoch-comparison detail lives ONLY in the side file (round-9 ADVICE:
-    # every extra stdout field brings the line closer to the driver's
-    # ~1.8 KB tail capture; pass_totals/min2_total are not driver-contract
-    # fields, so they moved off stdout entirely)
+    # epoch-comparison detail lives ONLY in the side file: every extra
+    # stdout field brings the line closer to the ~1.8 KB tail capture
     full["pass_totals"] = [round(sum(p.values()), 3) for p in passes]
     full["min2_total"] = round(sum(best2.values()), 3)
     full["queries_min2"] = best2
     full["passes"] = passes
-    # Noise telemetry (round-11 VERDICT item 6): load averages bracket
-    # the run; pass-to-pass spread (sum of per-query |p0−p1|) is the
-    # within-run noise floor. A 55s↔72s headline delta with loadavg ≫
-    # ncpus and a large spread is host contention, not a regression.
+    # Noise telemetry: load averages bracket the run; pass-to-pass spread
+    # (sum of per-query |p0−p1|) is the within-run noise floor. A 55s↔72s
+    # headline delta with loadavg ≫ ncpus and a large spread is host
+    # contention, not a regression.
     full["loadavg_start"] = [round(x, 2) for x in loadavg_start]
     full["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
     full["pass_spread_total"] = round(
@@ -275,17 +204,12 @@ def main() -> int:
             f.write("\n")
     except OSError as exc:  # bench result still prints even if the FS is RO
         print(f"# could not write {full_path}: {exc}", file=sys.stderr)
-    # compact separators: identical JSON to any parser, ~120 bytes lighter —
-    # headroom for the parallelism field and the round-15 headline addition
-    # under the driver's ~1800-byte tail-capture limit
+    # compact separators: identical JSON to any parser, ~120 bytes lighter
     line = json.dumps(out, separators=(",", ":"))
-    # loud overflow guard (round-9 ADVICE): the driver captures only the
-    # stdout TAIL and parses the final line, so silently outgrowing
-    # ~1,800 bytes re-breaks parsing the way round 7 did. Failing the
-    # bench is strictly better than shipping an unparseable record —
-    # adding headline queries must come with trimming this line.
-    # (round-10 ADVICE: a bare assert is stripped under `python -O`,
-    # silently reintroducing the failure mode — raise unconditionally.)
+    # Loud overflow guard: silently outgrowing ~1,800 bytes would make the
+    # captured tail unparseable, so failing the bench is strictly
+    # better — adding headline queries must come with trimming this line.
+    # Raised, not asserted, so `python -O` keeps it.
     if len(line) >= 1800:
         raise SystemExit(
             f"bench stdout line is {len(line)} bytes (driver tail-capture "

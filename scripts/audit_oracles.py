@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from als_pyspark_spark.registry import load_all_queries
+from als_pyspark_spark.runner import QueryError, built
 from als_pyspark_spark.session import build_session
 from als_pyspark_spark.sources.tables import TABLES
 
@@ -79,8 +80,9 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            spdf = q.build(spark, sf_dir).toPandas()
-        except Exception as e:
+            with built(spark, q, sf_dir) as sdf:
+                spdf = sdf.toPandas()
+        except QueryError as e:
             print(f"HAZARD {name}: spark error: {str(e)[:200]}")
             n_hazard += 1
             continue
@@ -111,6 +113,7 @@ def main() -> int:
             print(f"ok     {name}")
 
     print(f"\n{n_hazard} hazardous queries")
+    spark.stop()
     return 1 if n_hazard else 0
 
 

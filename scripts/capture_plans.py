@@ -3,15 +3,13 @@
 Usage: python scripts/capture_plans.py <outdir> <suffix> <query> [query ...]
 
 Writes <outdir>/<query>_<suffix>.txt per query (e.g. suffix 'before' /
-'after' for optimization-round evidence). Queries that materialize
-eagerly through caching.collected() are resolved through the same lazy
-plan helpers the explain audit uses, so the file shows the distributed
-plan, not a bounded LocalRelation.
+'after' around an optimization). Queries whose build runs on the driver
+are captured through their lazy ``Query.plan``, so the file shows the
+distributed plan, not a bounded LocalRelation.
 """
 
 from __future__ import annotations
 
-import importlib
 import io
 import os
 import sys
@@ -20,10 +18,8 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from als_pyspark_spark.registry import load_all_queries
+from als_pyspark_spark.runner import built
 from als_pyspark_spark.session import build_session
-
-# Same lazy-plan table as scripts/explain_audit.py (import it to stay in sync)
-from explain_audit import _LAZY_PLANS  # noqa: E402
 
 
 def main() -> int:
@@ -34,14 +30,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     queries = load_all_queries()
     for name in names:
-        if name in _LAZY_PLANS:
-            mod, fn = _LAZY_PLANS[name]
-            plan = getattr(importlib.import_module(mod), fn)(spark, sf_dir)
-            df = plan[0] if isinstance(plan, tuple) else plan
-        else:
-            df = queries[name].build(spark, sf_dir)
         buf = io.StringIO()
-        with redirect_stdout(buf):
+        with built(spark, queries[name], sf_dir, plan=True) as df, redirect_stdout(buf):
             df.explain("formatted")
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:

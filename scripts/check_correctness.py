@@ -6,12 +6,12 @@ Usage: python scripts/check_correctness.py [--bare] [sf_dir] [query ...]
 
 ``--bare`` builds a BARE SparkSession (``SparkSession.builder.master(...)``
 with no factory conf at all) instead of ``build_session`` — the shape of
-the EXTERNAL driver's session. Round 8 shipped a regression this mirror
-was structurally blind to: ``min_label_components`` required the
-checkpoint dir that only ``build_session`` wires, so both CC queries were
-locally green and driver-red. Every query must be self-sufficient on a
-bare session (per-query UTC pin, lazy checkpoint dir, per-query recursion
-limit); this flag is how that property is gated locally.
+an externally built session, on the same ``local[N]`` rule. Every query
+must be self-sufficient on a bare session (per-query UTC pin, lazy
+checkpoint dir, per-query recursion limit); a query that leans on
+``build_session`` conf — e.g. a checkpoint that needs the dir only the
+factory wires — passes here and fails on an externally built session, and
+this flag is how that property is gated locally.
 """
 
 from __future__ import annotations
@@ -24,10 +24,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from als_pyspark_spark.caching import release_deferred
 from als_pyspark_spark.canon import assert_scalar_schema, compare_result
 from als_pyspark_spark.registry import load_all_queries, requirements_met
-from als_pyspark_spark.session import build_session
+from als_pyspark_spark.runner import QueryError, built
+from als_pyspark_spark.session import build_session, local_cpus
 from als_pyspark_spark.sources.tables import TABLES
 
 
@@ -40,9 +40,8 @@ def main() -> int:
     if bare:
         from pyspark.sql import SparkSession
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
+            SparkSession.builder.master(f"local[{local_cpus()}]")
             .appName("check-correctness-bare")
             .getOrCreate()
         )
@@ -64,26 +63,21 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = q.build(spark, sf_dir)
-            assert_scalar_schema(sdf.schema, name)
-            s_rows = [tuple(r) for r in sdf.collect()]
-            s_cols = sdf.columns
-        except Exception as e:
+            with built(spark, q, sf_dir) as sdf:
+                assert_scalar_schema(sdf.schema, name)
+                s_rows = [tuple(r) for r in sdf.collect()]
+                s_cols = sdf.columns
+        except QueryError as e:
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"FAIL  {name}: spark error: {str(e)[:300]}")
             continue
-        finally:
-            # between-queries checkpoint for caching.deferred registrants
-            # (caches with corpus-proportional results and no cross-query
-            # readers — released here instead of leaking per session)
-            release_deferred()
         if q.oracle is None:
             print(f"ok(rows-only)  {name}: {len(s_rows)} rows  [{time.time()-t0:.1f}s]")
             continue
         try:
             # fetchdf(), not fetchall(): the driver compares through pandas,
-            # so the oracle side must cross the same dtype boundary (round-6
-            # red row: HUGEINT -> pandas float64 vs Spark int64).
+            # so the oracle side must cross the same dtype boundary (DuckDB
+            # HUGEINT -> pandas float64 vs Spark int64 was a real mismatch).
             d_df = con.execute(q.oracle).fetchdf()
         except Exception as e:
             failures.append((name, f"DUCKDB ERROR: {e}"))

@@ -8,10 +8,14 @@ whose summary shows an unexpected SortMergeJoin where a broadcast fits, or
 N exchanges where the partitioning should have been reused, gets fixed —
 tests/test_plans.py then pins the fixed shape.
 
-scripts/plan_baseline.txt holds the round-8 final-HEAD snapshot of this
-output (sf0.001); diff against a fresh run to catch plan drift — an
-exchange-count jump on an untouched query is how the CC exponential-
-lineage bug (3,133 exchanges) was caught.
+Queries whose build runs on the driver are audited through their lazy
+``Query.plan``, so the line shows the distributed plan, not the bounded
+local relation the build returns.
+
+scripts/plan_baseline.txt holds a snapshot of this output (sf0.001); diff
+against a fresh run to catch plan drift — an exchange-count jump on an
+untouched query is how the CC exponential-lineage bug (3,133 exchanges)
+was caught.
 """
 
 from __future__ import annotations
@@ -23,46 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from als_pyspark_spark.plans.inspect import exchange_count, join_kinds, pushed_filters
 from als_pyspark_spark.registry import load_all_queries
+from als_pyspark_spark.runner import QueryError, built
 from als_pyspark_spark.session import build_session
-
-# Queries that eagerly materialize through caching.collected() return a
-# bounded LOCAL relation — auditing q.build would (a) execute the query
-# end-to-end just to print a trivial plan and (b) blind the baseline diff
-# to drift in the real distributed plan (round-10 ADVICE). Resolve these
-# through the same lazy plan helpers tests/test_plans.py pins.
-_LAZY_PLANS = {
-    "q_pagerank_copurchase": ("als_pyspark_spark.operators.graph", "_pagerank_plan"),
-    "q_triangle_count_parts": ("als_pyspark_spark.operators.graph", "_triangle_top_plan"),
-    "q_bfs_part_distances": ("als_pyspark_spark.operators.graph", "_bfs_hist_plan"),
-    "q_equidepth_deciles": ("als_pyspark_spark.operators.aggregates", "_equidepth_plan"),
-    "q_ann_lsh_top10": ("als_pyspark_spark.similarity.queries", "_ann_lsh_plan"),
-    "q_ann_ivf_top10": ("als_pyspark_spark.similarity.queries", "_ivf_plan"),
-    "q_ann_ivfpq_top10": ("als_pyspark_spark.similarity.queries", "_ivfpq_plan"),
-    "q_rerank_two_stage_topk": ("als_pyspark_spark.similarity.queries", "_rerank_plan"),
-    "q_boilerplate_ngrams": (
-        "als_pyspark_spark.functions.curation_queries",
-        "_boilerplate_plan",
-    ),
-    "q_label_propagation_communities": (
-        "als_pyspark_spark.operators.graph",
-        "_lpa_plan",
-    ),
-    "q_kcore_peeling": ("als_pyspark_spark.operators.graph", "_kcore_plan"),
-    "q_pagerank_converged": ("als_pyspark_spark.operators.graph", "_prc_plan"),
-    "q_bpe_train_merges": ("als_pyspark_spark.functions.text_queries", "_bpe_plan"),
-    "q_pipeline_e2e": ("als_pyspark_spark.functions.pipeline_queries", "_e2e_plan"),
-}
-
-
-def _resolve_plan(name, q, spark, sf_dir):
-    """Return (df, caches): the lazy plan to inspect plus any persisted
-    intermediates the helper claimed (unpersist after inspection)."""
-    if name in _LAZY_PLANS:
-        import importlib
-
-        mod, fn = _LAZY_PLANS[name]
-        return getattr(importlib.import_module(mod), fn)(spark, sf_dir)
-    return q.build(spark, sf_dir), ()
 
 
 def main() -> int:
@@ -75,19 +41,17 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            df, caches = _resolve_plan(name, q, spark, sf_dir)
-            joins = join_kinds(df)
-            nex = exchange_count(df)
-            npush = sum("[]" not in p for p in pushed_filters(df))
-            for c in caches:
-                c.unpersist()
+            with built(spark, q, sf_dir, plan=True) as df:
+                joins = join_kinds(df)
+                nex = exchange_count(df)
+                npush = sum("[]" not in p for p in pushed_filters(df))
             print(
                 f"{name:42s} exchanges={nex:2d} "
                 f"joins={','.join(joins) if joins else '-':60s} "
                 f"scans_with_pushdown={npush}"
             )
-        except Exception as e:  # noqa: BLE001 — audit keeps going
-            print(f"{name:42s} ERROR {str(e)[:120]}")
+        except QueryError as e:  # the audit keeps going
+            print(f"{name:42s} ERROR {str(e.__cause__)[:120]}")
     spark.stop()
     return 0
 

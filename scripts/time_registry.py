@@ -2,12 +2,12 @@
 
 Usage: python scripts/time_registry.py [sf_dir] [query ...]
 
-The hotspot map for optimization rounds: bench.py times only the 52
-headline queries, but "optimize every operator" needs per-query wall
-for the full registry. One pass, noop sink, warm session (tables
-pre-counted so the first query doesn't pay JVM/codegen warmup), job
-descriptions set so the UI/eventlog is attributable. Prints one line
-per query (seconds, name) sorted by cost desc at the end.
+The hotspot map: bench.py times only the 53 headline queries, but
+"optimize every operator" needs per-query wall for the full registry.
+One pass, noop sink, warm session (tables pre-counted so the first query
+doesn't pay JVM/codegen warmup), job descriptions set by the runner so
+the UI/eventlog is attributable. Prints one line per query (seconds,
+name) sorted by cost desc at the end.
 """
 
 from __future__ import annotations
@@ -15,12 +15,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from als_pyspark_spark.caching import release_deferred
 from als_pyspark_spark.registry import load_all_queries, requirements_met
+from als_pyspark_spark.runner import QueryError, force
 from als_pyspark_spark.session import build_session
 from als_pyspark_spark.sources.tables import TABLES, load_table
 
@@ -39,17 +38,12 @@ def main() -> int:
             continue
         if not requirements_met(q):
             continue
-        spark.sparkContext.setJobDescription(name)
-        t0 = time.time()
         try:
-            q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            out[name] = round(time.time() - t0, 3)
-        except Exception as exc:  # keep the map complete even if one breaks
+            out[name] = round(force(spark, q, sf_dir), 3)
+        except QueryError as exc:  # keep the map complete even if one breaks
             out[name] = -1.0
-            print(f"# ERROR {name}: {exc}", file=sys.stderr)
-        release_deferred()
+            print(f"# ERROR {exc}", file=sys.stderr)
         print(f"# {name}: {out[name]:.2f}s", file=sys.stderr)
-    spark.sparkContext.setJobDescription(None)
     ok = {n: dt for n, dt in out.items() if dt >= 0}
     errors = sorted(n for n, dt in out.items() if dt < 0)
     for name, dt in sorted(ok.items(), key=lambda kv: -kv[1]):

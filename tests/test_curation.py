@@ -1,4 +1,4 @@
-"""Semantic properties of the round-4 curation operators (the oracle gate
+"""Semantic properties of the curation operators (the oracle gate
 proves Spark≡DuckDB; these prove the operators mean what they claim — and
 that their plans keep the scale-critical shape)."""
 
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from als_pyspark_spark.plans.inspect import plan_of
 from als_pyspark_spark.registry import load_all_queries
+from als_pyspark_spark.runner import built
 from als_pyspark_spark.sources.tables import load_table
 
 QUERIES = load_all_queries()
@@ -53,14 +54,9 @@ def test_boilerplate_ngrams_nonvacuous_and_bounded(spark, sf_dir):
 
 
 def test_boilerplate_uses_take_ordered(spark, sf_dir):
-    # the registered query materializes via caching.collected (round 10),
-    # so inspect the lazy helper's real distributed plan
-    from als_pyspark_spark.functions.curation_queries import _boilerplate_plan
-
-    top, caches = _boilerplate_plan(spark, sf_dir)
-    plan = plan_of(top)
-    for c in caches:
-        c.unpersist()
+    # the registered build collects, so inspect the distributed Query.plan
+    with built(spark, QUERIES["q_boilerplate_ngrams"], sf_dir, plan=True) as top:
+        plan = plan_of(top)
     assert "TakeOrderedAndProject" in plan, plan
 
 

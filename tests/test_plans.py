@@ -13,9 +13,17 @@ from pyspark.sql import functions as F
 
 from als_pyspark_spark.plans.inspect import formatted, plan_of
 from als_pyspark_spark.registry import load_all_queries
+from als_pyspark_spark.runner import built
 from als_pyspark_spark.sources.tables import load_table
 
 QUERIES = load_all_queries()
+
+
+def lazy_plan(spark, sf_dir, name, render=plan_of) -> str:
+    """``render`` of a query's lazy ``Query.plan``, for queries whose build
+    collects on the driver; the runner releases the plan's caches."""
+    with built(spark, QUERIES[name], sf_dir, plan=True) as df:
+        return render(df)
 
 
 def test_q6_pushes_filters_to_scan(spark, sf_dir):
@@ -205,8 +213,8 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
 
 def test_shuffle_order_no_single_partition_exchange(spark, sf_dir):
     """The global-position assignment must never funnel the corpus through
-    one partition: no SinglePartition exchange anywhere in the plan (the
-    round-2 version's partitionBy-less window planned exactly that)."""
+    one partition: no SinglePartition exchange anywhere in the plan (a
+    partitionBy-less window plans exactly that)."""
     plan = plan_of(QUERIES["q_shuffle_order"].build(spark, sf_dir))
     assert "SinglePartition" not in plan, plan
     # the corpus-side window is hash-partitioned on the bucket key
@@ -414,15 +422,8 @@ def test_ohlc_windows_partition_by_bucket(spark, sf_dir):
 def test_pagerank_topk_take_ordered_no_cartesian(spark, sf_dir):
     """PageRank: three unrolled join+agg iterations must stay keyed hash
     operations (no cartesian anywhere) and the final top-25 must be
-    TakeOrderedAndProject, not a global sort. (The registered query
-    materializes this plan via caching.collected, so inspect the lazy
-    helper.)"""
-    from als_pyspark_spark.operators.graph import _pagerank_plan
-
-    top, caches = _pagerank_plan(spark, sf_dir)
-    plan = plan_of(top)
-    for c in caches:
-        c.unpersist()
+    TakeOrderedAndProject, not a global sort."""
+    plan = lazy_plan(spark, sf_dir, "q_pagerank_copurchase")
     assert "CartesianProduct" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
 
@@ -628,12 +629,7 @@ def test_triangle_count_hash_joins_and_take_ordered(spark, sf_dir):
     """Triangles: wedge + closure joins stay keyed hash/sort-merge joins
     (never a nested loop over edge pairs); top-20 is TakeOrdered; no
     global sort or SinglePartition anywhere."""
-    from als_pyspark_spark.operators.graph import _triangle_top_plan
-
-    top, caches = _triangle_top_plan(spark, sf_dir)
-    plan = plan_of(top)
-    for c in caches:
-        c.unpersist()
+    plan = lazy_plan(spark, sf_dir, "q_triangle_count_parts")
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -645,12 +641,7 @@ def test_equidepth_deciles_bounded_windows(spark, sf_dir):
     ≤9-row collect): rows filter to the hit buckets map-side, the rank
     window partitions by bucket, the 9-row target table broadcasts — and
     no SinglePartition exchange survives into the returned plan."""
-    from als_pyspark_spark.operators.aggregates import _equidepth_plan
-
-    deciles, caches = _equidepth_plan(spark, sf_dir)
-    plan = plan_of(deciles)
-    for c in caches:
-        c.unpersist()
+    plan = lazy_plan(spark, sf_dir, "q_equidepth_deciles")
     assert "SinglePartition" not in plan, plan
     assert "hashpartitioning(b" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
@@ -668,12 +659,7 @@ def test_rolling_distinct_broadcasts_calendar(spark, sf_dir):
 def test_bfs_rounds_are_keyed_joins(spark, sf_dir):
     """BFS: every round is a keyed hash/merge join + hash aggregate —
     no cartesian/nested-loop expansion, no global sort."""
-    from als_pyspark_spark.operators.graph import _bfs_hist_plan
-
-    hist, caches = _bfs_hist_plan(spark, sf_dir)
-    plan = plan_of(hist)
-    for c in caches:
-        c.unpersist()
+    plan = lazy_plan(spark, sf_dir, "q_bfs_part_distances")
     assert "CartesianProduct" not in plan, plan
     assert "SinglePartition" not in plan, plan
 
@@ -719,18 +705,12 @@ def test_k_anonymity_level0_is_keyed_aggregate(spark, sf_dir):
 
 
 def test_rerank_two_stage_broadcasts_and_avoids_smj(spark, sf_dir):
-    """Round-8 shape gate: both rerank stages must broadcast their small
+    """Shape gate: both rerank stages must broadcast their small
     side (stage-1 query vectors against the bucketed corpus; stage-2
     shortlist + query vectors against the embedding table) — a
     SortMergeJoin anywhere means the corpus got sorted for a
-    shortlist-sized probe. (The registered query materializes this plan
-    via caching.collected since round 9, so inspect the lazy helper.)"""
-    from als_pyspark_spark.similarity.queries import _rerank_plan
-
-    top, caches = _rerank_plan(spark, sf_dir)
-    plan = plan_of(top)
-    for c in caches:
-        c.unpersist()
+    shortlist-sized probe."""
+    plan = lazy_plan(spark, sf_dir, "q_rerank_two_stage_topk")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -739,12 +719,7 @@ def test_rerank_stage2_reads_only_needed_columns(spark, sf_dir):
     """The stage-2 re-fetch joins the embedding table by id; the scan must
     prune to (vec_id, embedding) — dragging label or other columns through
     the rerank join would be wasted I/O at every scale."""
-    from als_pyspark_spark.similarity.queries import _rerank_plan
-
-    top, caches = _rerank_plan(spark, sf_dir)
-    plan = formatted(top)
-    for c in caches:
-        c.unpersist()
+    plan = lazy_plan(spark, sf_dir, "q_rerank_two_stage_topk", formatted)
     read_lines = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_lines
     assert all("label" not in l for l in read_lines), read_lines
@@ -790,14 +765,8 @@ def test_cms_probe_join_is_broadcast_and_topk_is_take_ordered(spark, sf_dir):
 def test_ivfpq_broadcast_only_no_smj(spark, sf_dir):
     """IVF-PQ: same join discipline as IVF — probes and per-query LUTs
     broadcast against the code table; a SortMergeJoin would mean the
-    corpus got sorted for a bounded probe. (Registered query materializes
-    via caching.collected; inspect the lazy helper.)"""
-    from als_pyspark_spark.similarity.queries import _ivfpq_plan
-
-    top, caches = _ivfpq_plan(spark, sf_dir)
-    plan = plan_of(top)
-    for c in caches:
-        c.unpersist()
+    corpus got sorted for a bounded probe."""
+    plan = lazy_plan(spark, sf_dir, "q_ann_ivfpq_top10")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -806,15 +775,8 @@ def test_ivfpq_broadcast_only_no_smj(spark, sf_dir):
 def test_ivf_broadcast_only_no_smj(spark, sf_dir):
     """IVF ANN: every join must broadcast its bounded side (centroid
     probes, shortlist, witness) — a SortMergeJoin means the corpus got
-    sorted for a query-set-sized probe. (The registered query
-    materializes via caching.collected since round 9, so inspect the
-    lazy helper.)"""
-    from als_pyspark_spark.similarity.queries import _ivf_plan
-
-    top, caches = _ivf_plan(spark, sf_dir)
-    plan = plan_of(top)
-    for c in caches:
-        c.unpersist()
+    sorted for a query-set-sized probe."""
+    plan = lazy_plan(spark, sf_dir, "q_ann_ivf_top10")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -841,15 +803,8 @@ def test_consistent_shard_zero_shuffle_probe(spark, sf_dir):
 def test_label_propagation_keyed_joins_no_window(spark, sf_dir):
     """LPA rounds are keyed hash operations over the persisted edge
     relation: no cartesian product, no window (the argmax is a packed
-    max AGGREGATE), and the bounded top-25 is TakeOrderedAndProject.
-    (The registered query materializes via caching.collected, so inspect
-    the lazy helper, as the pagerank/BFS tests do.)"""
-    from als_pyspark_spark.operators.graph import _lpa_plan
-
-    top, caches = _lpa_plan(spark, sf_dir)
-    plan = plan_of(top)
-    for c in caches:
-        c.unpersist()
+    max AGGREGATE), and the bounded top-25 is TakeOrderedAndProject."""
+    plan = lazy_plan(spark, sf_dir, "q_label_propagation_communities")
     assert "CartesianProduct" not in plan, plan
     assert "Window" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
@@ -862,12 +817,7 @@ def test_kcore_checkpoint_bounds_lineage(spark, sf_dir):
     checkpoint must truncate each round to a leaf scan: the final plan is
     three small aggregates over checkpoint RDD scans — bounded exchange
     count, no window, no cartesian."""
-    from als_pyspark_spark.operators.graph import _kcore_plan
-
-    out, caches = _kcore_plan(spark, sf_dir)
-    plan = plan_of(out)
-    for c in caches:
-        c.unpersist()
+    plan = lazy_plan(spark, sf_dir, "q_kcore_peeling")
     assert "CartesianProduct" not in plan, plan
     assert "Window" not in plan, plan
     assert plan.count("Exchange") <= 12, plan
@@ -893,16 +843,15 @@ def test_pagerank_converged_constant_plan_across_rounds(spark, sf_dir):
 
 
 def test_bpe_train_cluster_footprint_is_one_aggregate(spark, sf_dir):
-    """The BPE trainer's scaling claim after the round-14 driver-side
-    rewrite: the trainer's WHOLE cluster footprint is the one corpus
+    """The BPE trainer's scaling claim: with merge resolution on the
+    driver, the trainer's WHOLE cluster footprint is the one corpus
     collapse to the distinct-word table — a single partial+final count
     aggregate (one exchange), no joins, no per-merge jobs. Merge
     resolution is driver-side over that vocabulary-bounded table and
     never touches the cluster again at any merge count."""
-    from als_pyspark_spark.functions.text_queries import _bpe_plan
     from als_pyspark_spark.plans.inspect import exchange_count, join_kinds
 
-    df, _ = _bpe_plan(spark, sf_dir)
+    df, _ = QUERIES["q_bpe_train_merges"].plan(spark, sf_dir)
     plan = plan_of(df)
     assert exchange_count(df) == 1, plan
     assert join_kinds(df) == [], plan
@@ -917,13 +866,7 @@ def test_pipeline_e2e_single_documents_scan(spark, sf_dir):
     line would mean some stage grew its own disjoint corpus scan), the
     plan reuses caches (InMemoryTableScan present), and nothing
     degenerates to a cartesian product."""
-    from als_pyspark_spark.functions.pipeline_queries import _e2e_plan
-    from als_pyspark_spark.plans.inspect import plan_of
-
-    out, caches = _e2e_plan(spark, sf_dir)
-    plan = plan_of(out)
-    for c in caches:
-        c.unpersist()
+    plan = lazy_plan(spark, sf_dir, "q_pipeline_e2e")
     doc_scans = {
         l.strip().lstrip("+-: ")
         for l in plan.splitlines()
