@@ -4,7 +4,8 @@ the training pairs, print the MSE and timings.
 
     python -m als_pyspark_spark path/to/ratings.csv \
         [--rank 10] [--max-iter 5] [--reg-param 0.01] [--implicit] \
-        [--nonnegative] [--seed 0] [--top-k 0]
+        [--nonnegative] [--seed 0] [--top-k 0] \
+        [--num-user-blocks 10] [--num-item-blocks N]
 
 With no file argument it runs on the deterministic ratings fixture derived
 from the sf0.001 test tables — the same flagship flow as
@@ -33,8 +34,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--rank", type=int, default=10)
     ap.add_argument("--max-iter", type=int, default=5)
     ap.add_argument("--reg-param", type=float, default=0.01)
-    ap.add_argument("--num-user-blocks", type=int, default=10)
-    ap.add_argument("--num-item-blocks", type=int, default=10)
+    ap.add_argument("--num-user-blocks", type=int, default=10,
+                    help="user blocks; each seeds its own initial factors, so "
+                    "this count is part of the model (default: the reference's 10)")
+    ap.add_argument("--num-item-blocks", type=int, default=None,
+                    help="item blocks (layout only; default: derived from the "
+                    "row count, one per 125,000 ratings, at most --num-user-blocks)")
     ap.add_argument("--implicit", action="store_true")
     ap.add_argument("--alpha", type=float, default=1.0)
     ap.add_argument("--nonnegative", action="store_true")
@@ -61,6 +66,9 @@ def main(argv: list[str] | None = None) -> int:
         from als_pyspark_spark.sources.ratings import ratings as fixture_ratings
 
         df = fixture_ratings(spark, args.sf_dir)
+    # Deriving the item-block count, training and scoring each read the
+    # input; cache it so the file (or the fixture join) is scanned once.
+    df = df.cache()
 
     engine = ALSEngine(
         ALSParams(

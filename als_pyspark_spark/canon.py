@@ -4,10 +4,9 @@
 The external driver compares Spark vs DuckDB results by loading both into
 pandas, sorting with ``DataFrame.sort_values`` over every column, and
 hashing the values. Two contract consequences this module enforces so
-local green predicts driver green (round-5 lesson: the old local ``canon``
-sorted rows by ``repr``, which happily handles list cells the driver's
-``sort_values`` dies on — two queries shipped locally-green and came back
-as the project's first red driver rows):
+local green predicts driver green (a local gate that sorts rows by
+``repr`` happily handles list cells the driver's ``sort_values`` dies on,
+so a query can pass locally and fail at the driver):
 
 1. ``canon`` canonicalizes through pandas ``sort_values`` — a list/dict
    cell raises ``TypeError: unhashable type`` here exactly as it does in
@@ -47,11 +46,11 @@ def assert_dtype_parity(spark_rows, oracle_df, cols, name: str = "<query>") -> N
     """The driver materializes BOTH result sets as pandas frames before
     value-hashing, so a column whose pandas dtype KIND diverges between
     engines hash-mismatches even when every value compares equal in
-    Python (``15 == 15.0``). Round-6 red row: an un-cast DuckDB
-    ``SUM(BIGINT)`` typed the column HUGEINT, pandas materialized it as
-    float64, and the driver hashed ``15.0`` against Spark's int64 ``15``.
-    The old local gate fetched the oracle via ``fetchall()`` — Python
-    ints, dtype-blind — so local green did not predict driver red.
+    Python (``15 == 15.0``). Example: an un-cast DuckDB ``SUM(BIGINT)``
+    types the column HUGEINT, pandas materializes it as float64, and the
+    driver hashes ``15.0`` against Spark's int64 ``15``. A gate that
+    fetches the oracle via ``fetchall()`` (Python ints) is blind to
+    that.
 
     This check loads the Spark rows through the same pandas boundary and
     compares NUMERIC dtype kinds (int/float/bool) per column against the
@@ -95,9 +94,8 @@ def _dtype_parity_frames(sdf, oracle_df, cols, name: str = "<query>") -> None:
 
 def compare_result(s_rows, s_cols, d_df, name: str = "<query>") -> None:
     """The ONE comparison path both gate mirrors (tests/test_correctness.py
-    and scripts/check_correctness.py) share — the round-6 dtype blindness
-    survived locally precisely because the compare was duplicated in both
-    mirrors, so a fix applied to one could drift from the other. Raises
+    and scripts/check_correctness.py) share, so a fix to the compare
+    cannot reach one mirror and miss the other. Raises
     AssertionError/TypeError with a driver-shaped message on any mismatch
     (explicit raises, never bare ``assert`` — the CLI mirror must keep its
     per-query FAIL-and-continue contract under ``python -O`` too).
@@ -119,7 +117,7 @@ def compare_result(s_rows, s_cols, d_df, name: str = "<query>") -> None:
     # value-hash of an empty frame cannot mismatch on dtype either). The
     # empty-at-small-sf case is guarded statically instead: the registry
     # lint types every oracle's relation (test_registry) and rejects the
-    # HUGEINT/UHUGEINT/DECIMAL top-level outputs that caused the round-6
+    # HUGEINT/UHUGEINT/DECIMAL top-level outputs that cause the
     # int-vs-float hash split, independent of row counts; the sf1
     # full-registry sweep (PERF.md) covers the rest dynamically.
     if len(s_df) and len(d_df):
@@ -154,7 +152,7 @@ def _canon_frame(df, ndigits: int = 9):
             and len(first)
             and isinstance(first.iloc[0], _dt.date)
         ):
-            # Datetime normalization (round-7 ADVICE): through fetchdf a
+            # Datetime normalization: through fetchdf a
             # DATE cell materializes as pandas Timestamp while Spark's
             # collect yields datetime.date, and Timestamp == date is False
             # even for equal days — the first raw-DATE output column would
@@ -175,8 +173,8 @@ def _canon_frame(df, ndigits: int = 9):
         # multi-column sort factorizes object columns through numpy
         # fixed-width unicode, where a trailing NUL is PADDING — '' and
         # '\x00' compare as a tie and the stable mergesort then leaks the
-        # input row order into the "canonical" form (hypothesis-falsified
-        # in round 10 with [('', None, ''), ('', None, '\x00')]). UTF-8
+        # input row order into the "canonical" form (a property test found
+        # it with [('', None, ''), ('', None, '\x00')]). UTF-8
         # byte order equals code-point order for every valid code point,
         # so the key changes nothing except breaking NUL-padding ties.
         df = df.sort_values(

@@ -8,7 +8,7 @@ Parameter parity map (reference ALS.py:24-37 → pyspark.ml ALS):
 | rank=10                          | rank                     | |
 | max_iter=10                      | maxIter                  | |
 | reg_param=0.1                    | regParam                 | same ALS-WR λ·n scaling (ALS.py:500,523) |
-| num_user_blocks/num_item_blocks  | numUserBlocks/numItemBlocks | grid blocking (ALS.py:193-266) is internal to MLlib |
+| num_user_blocks/num_item_blocks  | numUserBlocks/numItemBlocks | grid blocking (ALS.py:193-266) is internal to MLlib; user blocks fix the seeded model, item blocks are layout (derived from the row count by default) |
 | implicit_prefs                   | implicitPrefs            | WORKS here; reference's is dead on arrival (broken compute_y_t_y, ALS.py:562-578) |
 | alpha                            | alpha                    | confidence c=1+α·r (ALS.py:511-515) |
 | nonnegative                      | nonnegative              | WORKS here; reference returns a malformed scipy tuple (Solver.py:99-101) |
@@ -26,6 +26,7 @@ dominant cost, SURVEY.md §3.4).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.ml.evaluation import RegressionEvaluator
@@ -42,7 +43,8 @@ class ALSParams:
     max_iter: int = 10
     reg_param: float = 0.1
     num_user_blocks: int = 10
-    num_item_blocks: int = 10
+    # None: derived from the training input's row count (derived_item_blocks)
+    num_item_blocks: int | None = None
     implicit_prefs: bool = False
     alpha: float = 1.0
     nonnegative: bool = False
@@ -51,6 +53,40 @@ class ALSParams:
     user_col: str = "user"
     item_col: str = "item"
     rating_col: str = "rating"
+
+
+# Training rows per item block when the count is derived. MLlib seeds each
+# USER block's initial factors separately (seed ^ blockId, as the reference
+# does, ALS.py:94-95,402-404), so the user-block count is part of the model
+# and stays at the caller's (default 10, the reference's). Every iteration
+# solves item factors from user factors first, so the initial item factors
+# are never read and the item-block count is layout only (PERF.md, "MLlib
+# ALS"). At ~600k ratings (sf0.1, local[4]) 10x4 was the fastest grid and
+# 10x1 was slower than 10x2, so large inputs keep several item blocks.
+RATINGS_PER_ITEM_BLOCK = 125_000
+
+
+def derived_item_blocks(n_ratings: int, num_user_blocks: int) -> int:
+    """Item-block count for ``n_ratings`` training rows: one block per
+    ``RATINGS_PER_ITEM_BLOCK`` rows, at least 1 and at most the user-block
+    count. Reads the row count only, so the grid (and the factors) never
+    depend on the core count."""
+    return min(num_user_blocks, max(1, math.ceil(n_ratings / RATINGS_PER_ITEM_BLOCK)))
+
+
+def _row_count(df: DataFrame) -> int:
+    """Rows of ``df``. A cached input is materialized (the fit would
+    materialize it next anyway) and its row count read from the cache's
+    statistics, so counting adds no job; anything else is counted. The count
+    only sets the item-block layout, so a statistic that is off (a rebuilt
+    cache partition counted twice) changes the layout, not the model."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() != "InMemoryRelation":
+        return df.count()
+    cache = plan.cacheBuilder()
+    if not cache.isCachedColumnBuffersLoaded():
+        cache.cachedColumnBuffers().count()
+    return int(cache.rowCountStats().value())
 
 
 class ALSEngine:
@@ -62,16 +98,21 @@ class ALSEngine:
         self.params = params or ALSParams()
         self.model: ALSModel | None = None
 
-    def estimator(self) -> ALS:
-        """The MLlib estimator for these params (storage levels left at
-        MLlib's defaults)."""
+    def estimator(self, ratings: DataFrame) -> ALS:
+        """The MLlib estimator for these params on ``ratings`` (storage
+        levels left at MLlib's defaults). An unset ``num_item_blocks`` is
+        derived from the row count of ``ratings``: no extra job on a cached
+        input, one extra scan otherwise."""
         p = self.params
+        item_blocks = p.num_item_blocks
+        if item_blocks is None:
+            item_blocks = derived_item_blocks(_row_count(ratings), p.num_user_blocks)
         return ALS(
             rank=p.rank,
             maxIter=p.max_iter,
             regParam=p.reg_param,
             numUserBlocks=p.num_user_blocks,
-            numItemBlocks=p.num_item_blocks,
+            numItemBlocks=item_blocks,
             implicitPrefs=p.implicit_prefs,
             alpha=p.alpha,
             nonnegative=p.nonnegative,
@@ -84,7 +125,7 @@ class ALSEngine:
         )
 
     def train(self, ratings: DataFrame) -> "ALSEngine":
-        self.model = self.estimator().fit(ratings)
+        self.model = self.estimator(ratings).fit(ratings)
         return self
 
     # -- factor tables: what NewALS.train returns (reference ALS.py:191) ----
@@ -174,6 +215,11 @@ def train(
       ignores it, ALS.py:36,101) — provided the session has a checkpoint
       dir (session.build_session sets one).
 
+    The 10/10 block defaults are the reference's. ``num_user_blocks`` fixes
+    the seeded model (each user block seeds its own initial factors);
+    ``num_item_blocks`` is layout only, and ``ALSEngine`` derives it from
+    the row count when it is left unset (``derived_item_blocks``).
+
     The storage-level strings accept any ``pyspark.StorageLevel`` name;
     the expected input schema is ``(user, item, rating)`` like the
     reference's Rating namedtuple (Rating.py:4-18).
@@ -193,7 +239,7 @@ def train(
         )
     )
     eng.model = (
-        eng.estimator()
+        eng.estimator(ratings)
         .setIntermediateStorageLevel(intermediate_rdd_storage_level)
         .setFinalStorageLevel(final_rdd_storage_level)
         .fit(ratings)

@@ -107,12 +107,14 @@ def _trained(spark: SparkSession, sf_dir: str) -> tuple[ALSEngine, DataFrame]:
 
 
 # Factor VALUES are float-iterative and engine-internal, so the ALS queries
-# certify deterministic structural + quality invariants the driver CAN hash
-# against an exact oracle: coverage (one factor row per entity, every pair
-# scored finitely, top-k shape per user) and a quality gate (mse < 1.5 —
-# measured ~0.79-0.82 at sf0.01/sf0.001, vs ~2.0 for a predict-the-mean
-# baseline, so the bound certifies a genuinely fitted model, with headroom
-# against seed/LAPACK jitter). Raw metric thresholds live in tests/test_als.py.
+# certify deterministic structural invariants the driver CAN hash against an
+# exact oracle: coverage (one factor row per entity, every pair scored
+# finitely, top-k shape per user) and a training-fit check (training
+# mse < 1.5, measured ~0.79-0.82 at sf0.01/sf0.001). The fit check shows the
+# solver ran and fitted its training pairs, not that the model predicts: the
+# derived rating carries no learnable signal, and at sf0.1 the flagship
+# model's held-out RMSE (1.77-1.80) is worse than predicting the mean
+# (1.414). Raw metric thresholds live in tests/test_als.py.
 
 
 @query(
@@ -165,8 +167,9 @@ SELECT TRUE AS mse_below_threshold, COUNT(*) AS n_scored FROM ratings
     tags=("als", "ml", "metric"),
 )
 def als_mse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-MSE quality gate (reference prints the raw value,
-    ALS.py:630): mse < 1.5 over ALL observed pairs, as a hashable row."""
+    """Training-fit check (reference prints the raw value, ALS.py:630):
+    mse < 1.5 over ALL observed (training) pairs, as a hashable row. It
+    measures fit to the training pairs, not held-out prediction quality."""
     eng, r = _trained(spark, sf_dir)
     preds = eng.predict(r)
     return preds.agg(
@@ -212,7 +215,7 @@ def als_implicit_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     This path is DEAD in the reference — compute_y_t_y crashes on Python
     syntax (defect D1, reference ALS.py:562-578), so implicit_prefs=True
     never ran there. Here it's MLlib's working implementation."""
-    r = ratings(spark, sf_dir)
+    _, r = _trained(spark, sf_dir)
     eng = ALSEngine(
         ALSParams(rank=10, max_iter=5, reg_param=0.1, seed=42, implicit_prefs=True, alpha=10.0)
     ).train(r)
@@ -238,7 +241,7 @@ def als_nonnegative_factor_bounds(spark: SparkSession, sf_dir: str) -> DataFrame
     Also dead in the reference — its NNLSSolver returns scipy's (x, rnorm)
     tuple instead of x (defect D3, reference Solver.py:99-101), corrupting
     every downstream factor. MLlib's projected-gradient NNLS works."""
-    r = ratings(spark, sf_dir)
+    _, r = _trained(spark, sf_dir)
     eng = ALSEngine(
         ALSParams(rank=5, max_iter=5, reg_param=0.1, seed=42, nonnegative=True)
     ).train(r)

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.ml.als import ALSEngine, ALSParams
+from als_pyspark_spark.ml.als import ALSEngine, ALSParams, derived_item_blocks
 from als_pyspark_spark.sources.ratings import ratings
 
 
@@ -61,8 +61,10 @@ def test_seed_reproducibility(rated):
 
 
 def test_block_count_invariance(rated):
-    # re-blocking must not change model quality materially (the whole point
-    # of the reference's partition_ratings grid, ALS.py:193-266)
+    # A different grid (the reference's partition_ratings, ALS.py:193-266)
+    # must not change model quality materially. The user-block count changes
+    # the seeded initial factors, so only the quality is compared here; the
+    # item-block count changes nothing (test_item_blocks_are_layout).
     base = ALSParams(rank=5, max_iter=3, reg_param=0.1, seed=7)
     reblocked = ALSParams(
         rank=5, max_iter=3, reg_param=0.1, seed=7, num_user_blocks=3, num_item_blocks=4
@@ -70,6 +72,87 @@ def test_block_count_invariance(rated):
     m1 = ALSEngine(base).train(rated).evaluate(rated, "rmse")
     m2 = ALSEngine(reblocked).train(rated).evaluate(rated, "rmse")
     assert m2 == pytest.approx(m1, rel=0.1)
+
+
+def _factors(params: ALSParams, rated) -> dict:
+    eng = ALSEngine(params).train(rated)
+    return {
+        (side, r["id"]): r["features"]
+        for side, df in (("user", eng.user_factors), ("item", eng.item_factors))
+        for r in df.collect()
+    }
+
+
+def _max_diff(a: dict, b: dict) -> float:
+    assert a.keys() == b.keys()
+    return max(abs(x - y) for k in a for x, y in zip(a[k], b[k]))
+
+
+@pytest.mark.parametrize(
+    "extra, tol",
+    [({}, 0.0), ({"implicit_prefs": True, "alpha": 10.0}, 1e-9), ({"nonnegative": True}, 1e-5)],
+    ids=["explicit", "implicit", "nonnegative"],
+)
+def test_item_blocks_are_layout(rated, extra, tol):
+    # Each iteration solves item factors from user factors first, so the
+    # initial item factors (the only thing the item-block count seeds) are
+    # never read: the factors do not depend on the item-block count.
+    # Explicit solves are bit-identical. The implicit solve adds a Gram
+    # matrix summed block by block, so its last bits may follow the count
+    # (identical at sf0.001, 1.1e-13 apart at sf0.01); NNLS may differ in
+    # the last float bits.
+    fits = [
+        _factors(ALSParams(rank=5, max_iter=3, seed=7, num_item_blocks=n, **extra), rated)
+        for n in (1, 10)
+    ]
+    assert _max_diff(*fits) <= tol
+
+
+def test_user_blocks_move_factors(rated):
+    # Each user block seeds its own initial factors (seed ^ blockId), so the
+    # user-block count is part of the model, unlike the item-block count.
+    base = _factors(ALSParams(rank=5, max_iter=3, seed=7, num_item_blocks=10), rated)
+    four = _factors(
+        ALSParams(rank=5, max_iter=3, seed=7, num_user_blocks=4, num_item_blocks=10), rated
+    )
+    assert _max_diff(base, four) > 0.1
+
+
+@pytest.mark.parametrize(
+    "n_ratings, blocks", [(0, 1), (47_000, 1), (600_000, 5), (10_000_000, 10)]
+)
+def test_derived_item_blocks(n_ratings, blocks):
+    assert derived_item_blocks(n_ratings, num_user_blocks=10) == blocks
+
+
+def test_item_blocks_derived_unless_set(rated):
+    # Unset, the count comes from the training rows (~6k at sf0.001: one
+    # block); an explicit count is passed through; user blocks stay at 10.
+    derived = ALSEngine(ALSParams()).estimator(rated)
+    assert derived.getNumItemBlocks() == derived_item_blocks(rated.count(), 10) == 1
+    assert derived.getNumUserBlocks() == 10
+    assert ALSEngine(ALSParams(num_item_blocks=7)).estimator(rated).getNumItemBlocks() == 7
+
+
+def test_row_count_reads_cache_statistics(spark, rated):
+    # Deriving the item-block count must not add a job on a materialized
+    # cache, and must materialize (not re-scan) an unmaterialized one.
+    from als_pyspark_spark.ml.als import _row_count
+
+    sc = spark.sparkContext
+    n = rated.count()
+    sc.setJobGroup("row_count", "row_count")
+    try:
+        assert _row_count(rated) == n
+        assert list(sc.statusTracker().getJobIdsForGroup("row_count")) == []
+        fresh = rated.select("user", "item").cache()
+        assert _row_count(fresh) == n
+        cache = fresh._jdf.queryExecution().optimizedPlan().cacheBuilder()
+        assert cache.isCachedColumnBuffersLoaded()
+        fresh.unpersist()
+        assert _row_count(rated.where("rating > 0")) == n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_more_iterations_not_worse(rated):
