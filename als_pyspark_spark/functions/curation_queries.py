@@ -508,7 +508,7 @@ WITH g0 AS (
 ), keep1 AS (
     -- CAST is load-bearing: DuckDB types SUM(BIGINT) as HUGEINT, UNION ALL
     -- promotes the whole n column, and pandas materializes HUGEINT as
-    -- float64 — hash-mismatching Spark's int64 (round-6 red driver row).
+    -- float64 — hash-mismatching Spark's int64.
     SELECT CAST(nation AS VARCHAR) AS nation, '*' AS segment,
            CAST(n AS BIGINT) AS n, CAST(1 AS BIGINT) AS level
     FROM g1 WHERE n >= 5

@@ -760,9 +760,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
             raise ValueError(
                 f"BPE trainer: distinct-word table has {n_words} rows, over "
                 f"the driver collect budget ({budget}; env "
-                "SPARK_GRAFT_BPE_DRIVER_ROWS). Revive the in-plan chunked "
-                "merge trainer (round-14 build, git history) for corpora "
-                "whose vocabulary outgrows the driver."
+                "SPARK_GRAFT_BPE_DRIVER_ROWS). A corpus whose vocabulary "
+                "outgrows the driver needs an in-plan merge trainer."
             )
         rows = words0.collect()  # vocabulary-bounded, now proven in-budget
     finally:

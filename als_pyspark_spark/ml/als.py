@@ -128,6 +128,20 @@ class ALSEngine:
         self.model = self.estimator(ratings).fit(ratings)
         return self
 
+    def release(self) -> None:
+        """Unpersist the trained model's factor RDDs, which MLlib persists
+        at fit time and never releases. Each is the ``ExternalRDD`` leaf of
+        its factor table's analyzed plan; the tables still work afterwards,
+        recomputing on read."""
+        if self.model is None:
+            return
+        for factors in (self.model.userFactors, self.model.itemFactors):
+            leaves = factors._jdf.queryExecution().analyzed().collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                if leaf.getClass().getSimpleName() == "ExternalRDD":
+                    leaf.rdd().unpersist(False)
+
     # -- factor tables: what NewALS.train returns (reference ALS.py:191) ----
     @property
     def user_factors(self) -> DataFrame:

@@ -226,12 +226,11 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     id), pinning Spark's merge semantics rather than trusting them: an
     event arriving EXACTLY at the previous event's ts + gap still MERGES
     (new session iff gap is STRICTLY greater than the duration;
-    session_end = last event + gap). Probed directly in round 8: both the
-    static and dynamic gap forms merge at the exact boundary, so the
-    oracle's gap test must be `>`, not `>=` — the fixture's microsecond
-    timestamps never land on the boundary, which is why `>=` survived
-    seven rounds of green driver rows; the session property test now
-    pins the boundary case."""
+    session_end = last event + gap). Both the static and dynamic gap
+    forms merge at the exact boundary, so the oracle's gap test must be
+    `>`, not `>=`. The fixture's microsecond timestamps never land on the
+    boundary, so the oracle cannot tell the two apart; the session
+    property test pins the boundary case."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")

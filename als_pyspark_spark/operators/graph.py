@@ -14,12 +14,104 @@ identical in both engines for the non-negative values involved.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+from functools import partial, reduce
+
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import collected
+from als_pyspark_spark.caching import deferred
 from als_pyspark_spark.registry import collected_query, query
+from als_pyspark_spark.session import ensure_checkpoint_dir
 from als_pyspark_spark.sources.tables import load_table
+
+
+def fixpoint(
+    first: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: Callable[[int, DataFrame, DataFrame | None], DataFrame],
+    *,
+    max_rounds: int,
+    checkpoint_every: int,
+    until: Callable[[list[Row]], bool] | None = None,
+    run: bool = True,
+) -> tuple[DataFrame, list]:
+    """Drive an iterative round loop: round 1 is ``first``, round r is
+    ``step(round r−1)``, for at most ``max_rounds`` rounds. After each
+    round, ``probe(r, round r, round r−1 or None)`` gives a small
+    DataFrame. Returns the last round's table and the per-round probe
+    results: collected rows when ``run``, else the lazy DataFrames.
+    With ``run``, the loop stops after the first round whose rows
+    satisfy ``until``.
+
+    This is the one place a round is persisted, checkpointed and
+    released — the reference's per-iteration persist → materialize →
+    unpersist (reference ALS.py:137-156) plus the periodic checkpoint it
+    declared but never implemented (ALS.py:36,101):
+
+    - Every ``checkpoint_every`` rounds the round is reliably
+      checkpointed, so the next round's plan is rooted at a leaf and
+      lineage stops growing with the round count. That bound is
+      mandatory when a round references its predecessor more than once,
+      since the unrolled plan then multiplies per round.
+    - Persist, THEN a lazy checkpoint: the probe's collect is the first
+      job over the marked RDD, so it materializes the cache and the
+      checkpoint write at that job's end reads the cache. An eager
+      checkpoint computes the round twice, once for its count and once
+      for the write.
+    - Once the probe has run, the previous round's cache is superseded,
+      and so is this round's on a checkpoint round, whose later reads
+      come from the files; both are unpersisted then. At most two round
+      caches are alive at once. Every round cache is also registered
+      with ``caching.deferred``, so the harness frees the one behind the
+      returned table once the caller's result is consumed, and any cache
+      a failed round left behind.
+    - ``Dataset.checkpoint`` needs a checkpoint dir, which a bare
+      embedding session lacks, so the driver claims one on the input's
+      own session (``session.ensure_checkpoint_dir``).
+
+    Without ``run`` the rounds are built lazily for ``Query.plan``: no
+    persist, no probe action, and no ``until``. A checkpoint round becomes
+    the leaf its checkpoint plans to (same output, partitioning and
+    statistics) over an empty RDD, because under AQE a lazy checkpoint
+    still runs the round's shuffle stages. The plan renders as the run's
+    does and starts no job, but it is for inspection: it returns no rows.
+    """
+    ensure_checkpoint_dir(first.sparkSession)
+    prev: DataFrame | None = None
+    held: DataFrame | None = None  # the cache behind ``prev``, if any
+    stats: list = []
+    for rnd in range(1, max_rounds + 1):
+        cur = cached = first if prev is None else step(prev)
+        if run:
+            deferred(cached.persist())
+        if rnd % checkpoint_every == 0:
+            cur = cur.checkpoint(eager=False) if run else _checkpoint_leaf(cur)
+        out = probe(rnd, cur, prev)
+        prev = cur
+        if run:
+            out = out.collect()
+            if held is not None:
+                held.unpersist()
+            if cur is not cached:  # checkpointed: later reads use the files
+                cached.unpersist()
+            held = cached if cur is cached else None
+        stats.append(out)
+        if run and until is not None and until(out):
+            break
+    return prev, stats
+
+
+def _checkpoint_leaf(df: DataFrame) -> DataFrame:
+    """The ``LogicalRDD`` leaf ``df.checkpoint()`` plans to, over an empty
+    RDD, so building it starts no job."""
+    spark, jvm = df.sparkSession, df.sparkSession._jvm
+    companion = getattr(jvm.org.apache.spark.sql.execution, "LogicalRDD$")
+    logical_rdd = getattr(companion, "MODULE$")
+    leaf = logical_rdd.fromDataset(spark._jsc.emptyRDD().rdd(), df._jdf, False)
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(df._jdf.sparkSession(), leaf)
+    return DataFrame(jdf, spark)
+
 
 _PR_ITERS = 3
 
@@ -92,19 +184,15 @@ def _pagerank_plan(spark: SparkSession, sf_dir: str):
     100 TB shape: per iteration one hash join of the rank vector with the
     (src-keyed) edge list and one hash aggregate on dst — the canonical
     distributed PageRank plan. The edge list with out-degrees is computed
-    once and persisted across iterations (the reference's C1-C3
-    persist/materialize/unpersist discipline, ALS.py:63-189); the 3
-    iterations are unrolled lineage here — safe because the rank vector
-    appears ONCE per round, so the plan grows linearly, never doubles. A
-    production run at higher iteration counts would checkpoint the rank
-    vector periodically the way ``min_label_components`` below
-    checkpoints every round (there the round plan embeds its predecessor
-    twice, so truncation is mandatory, not optional). Undirected edges
-    mean no dangling-mass correction is needed — every node has
-    out-degree ≥ 1 by construction.
+    once and persisted across iterations; the 3 iterations are unrolled
+    lineage here — safe because the rank vector appears ONCE per round,
+    so the plan grows linearly, never doubles. Higher iteration counts
+    run through :func:`fixpoint`, as ``q_pagerank_converged`` does.
+    Undirected edges mean no dangling-mass correction is needed — every
+    node has out-degree ≥ 1 by construction.
     """
     eo = _copurchase_rank_base(spark, sf_dir)
-    ranks = _pr_round1(eo)
+    ranks = _pr_round(eo)
     for _ in range(_PR_ITERS - 1):
         ranks = _pr_round(eo, ranks)
     top = (
@@ -169,7 +257,7 @@ def _copurchase_rank_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pr_round(eo: DataFrame, ranks: DataFrame) -> DataFrame:
+def _pr_round(eo: DataFrame, ranks: DataFrame | None = None) -> DataFrame:
     """One PageRank iteration in exact fixed-point integer arithmetic:
     each node sends ``r DIV od`` along every out-edge and receives
     ``150000 + (85 · Σ inbound) DIV 100`` — the single-round plan both
@@ -183,30 +271,22 @@ def _pr_round(eo: DataFrame, ranks: DataFrame) -> DataFrame:
     an inner join on src then keeps every edge, so the dst aggregate
     emits every node again). COALESCE(c, 0) never fires for the same
     reason. The DuckDB oracle keeps the generic left-join form and
-    hash-matches — the proof that the elision is output-identical."""
-    return (
-        eo.join(ranks.withColumnRenamed("node", "src"), "src")
-        .select("dst", F.expr("r DIV od").alias("share"))
-        .groupBy("dst")
-        .agg(F.sum("share").alias("c"))
-        .select(
-            F.col("dst").alias("node"),
-            (F.lit(150000).cast("long") + F.expr("(85 * c) DIV 100")).alias("r"),
-        )
-    )
+    hash-matches — the proof that the elision is output-identical.
 
-
-def _pr_round1(eo: DataFrame) -> DataFrame:
-    """Round 1 in CLOSED FORM: r0 ≡ _PR_R0 for every node, so
-    the rank⋈edge join is the identity — each edge's share is the
+    ``ranks=None`` is round 1 in CLOSED FORM: r0 ≡ _PR_R0 for every node,
+    so the rank⋈edge join is the identity — each edge's share is the
     constant ``_PR_R0 DIV od`` read straight off the persisted edge
-    table. Removes round 1's rank-vector shuffle + join AND the r0 node
-    table entirely (the same closed-form-first-round move as the LPA
-    min-neighbor round). Identical output to
-    ``_pr_round(eo, nodes-with-r0)`` by substitution."""
+    table. That removes round 1's rank-vector shuffle + join AND the r0
+    node table entirely (the same closed-form-first-round move as the
+    LPA min-neighbor round)."""
+    if ranks is None:
+        shares = eo.select("dst", F.expr(f"{_PR_R0} DIV od").alias("share"))
+    else:
+        shares = eo.join(ranks.withColumnRenamed("node", "src"), "src").select(
+            "dst", F.expr("r DIV od").alias("share")
+        )
     return (
-        eo.select("dst", F.expr(f"{_PR_R0} DIV od").alias("share"))
-        .groupBy("dst")
+        shares.groupBy("dst")
         .agg(F.sum("share").alias("c"))
         .select(
             F.col("dst").alias("node"),
@@ -287,19 +367,39 @@ FROM flagged f, rstar WHERE f.round <= rstar.rs
 """
 
 
+def _prc_residual(rnd: int, ranks: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """One row ``(l1, mass)``: Σ|r_t − r_{t−1}| and Σ r_t. Round 1 needs
+    no join: r0 ≡ _PR_R0 for every node, so there is no r0 table."""
+    if prev is None:
+        delta = F.col("r") - F.lit(_PR_R0)
+    else:
+        ranks = ranks.join(prev.withColumnRenamed("r", "r_prev"), "node")
+        delta = F.col("r") - F.col("r_prev")
+    return ranks.agg(F.sum(F.abs(delta)).alias("l1"), F.sum("r").alias("mass"))
+
+
+def _prc_point(rows: list[Row]) -> tuple[int, int]:
+    # SUM over zero rows is NULL: an empty node set reads as (0, 0)
+    return int(rows[0]["l1"] or 0), int(rows[0]["mass"] or 0)
+
+
+def _prc_rounds(eo: DataFrame, n_rounds: int, run: bool):
+    """Up to ``n_rounds`` convergence-PageRank rounds over the edge table
+    ``eo``; with ``run`` they stop at the first round where 2·L1 ≤ mass,
+    which includes the empty graph (mass 0)."""
+    return fixpoint(
+        _pr_round(eo), partial(_pr_round, eo), _prc_residual,
+        max_rounds=n_rounds, checkpoint_every=_PRC_CHECKPOINT_EVERY, run=run,
+        until=lambda rows: 2 * _prc_point(rows)[0] <= _prc_point(rows)[1],
+    )
+
+
 def _prc_chain(spark: SparkSession, sf_dir: str, n_rounds: int):
     """Lazy n-round convergence-PageRank chain for plan tests and the
-    explain audit: same per-round plan and checkpoint cadence as
-    ``q_pagerank_converged`` but with LAZY checkpoints (``eager=False``
-    plans each round, runs NO jobs, writes no files — the k-core
-    audit-path discipline), and no residual actions. Returns the final
-    rank plan + the persisted base tables."""
+    explain audit: the rounds of ``q_pagerank_converged`` in plan mode.
+    Returns the final rank plan + the persisted base tables."""
     eo = _copurchase_rank_base(spark, sf_dir)
-    ranks = _pr_round1(eo)
-    for rnd in range(2, n_rounds + 1):
-        ranks = _pr_round(eo, ranks)
-        if rnd % _PRC_CHECKPOINT_EVERY == 0:
-            ranks = ranks.checkpoint(eager=False)
+    ranks, _ = _prc_rounds(eo, n_rounds, run=False)
     return ranks, [eo]
 
 
@@ -325,85 +425,26 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the >3-round scaling proof for the iterative family: the
     round count is DATA-DEPENDENT (a driver-side loop over a bounded
     2-scalar aggregate per round — the Pregel aggregator shape, NOT a
-    collect of the rank vector), and the rank vector is RELIABLY
-    CHECKPOINTED every ``_PRC_CHECKPOINT_EVERY`` rounds, so the logical
+    collect of the rank vector), and :func:`fixpoint` checkpoints the
+    rank vector every ``_PRC_CHECKPOINT_EVERY`` rounds, so the logical
     plan is rooted at most 3 rounds above a leaf at ANY iteration count —
     lineage cannot grow with rounds (tests/test_plans.py pins plan-size
-    equality between rounds 4/7/10; contrast min_label_components, which
-    must checkpoint EVERY round because its round references its
-    predecessor twice). Between checkpoints each round persists and the
-    previous round unpersists after the residual action — exactly the
-    reference's C1-C3 per-iteration persist/unpersist discipline
-    (reference ALS.py:137-156) plus the C4 checkpointing it declared but
-    never implemented. At 100 TB: per round one rank⋈edge join against
-    the pre-partitioned persisted edge list (only the one-row-per-node
-    rank vector shuffles), one dst aggregate, one 16-byte-per-node
-    checkpoint write every 3 rounds — constant cost per round, bounded
-    driver memory, any round count.
+    equality between rounds 4/7/10). At 100 TB: per round one rank⋈edge
+    join against the pre-partitioned persisted edge list (only the
+    one-row-per-node rank vector shuffles), one dst aggregate, one
+    16-byte-per-node checkpoint write every 3 rounds — constant cost per
+    round, bounded driver memory, any round count.
     """
-    from als_pyspark_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     eo = _copurchase_rank_base(spark, sf_dir)
-    # round 1 is closed-form (_pr_round1) and its residual needs no join:
-    # r0 ≡ _PR_R0 per node, so l1 = Σ|r1 − _PR_R0| and mass = Σ r1 come
-    # off the round-1 table alone — the r0 node table is gone entirely
-    prev: DataFrame | None = None
-    prev_cache: DataFrame | None = None
-    curve: list[tuple[int, int, int, bool]] = []
-    for rnd in range(1, _PRC_CAP + 1):
-        new_cached = (
-            _pr_round1(eo) if rnd == 1 else _pr_round(eo, prev)
-        ).persist()
-        new = new_cached
-        if rnd % _PRC_CHECKPOINT_EVERY == 0:
-            # persist-THEN-lazy-checkpoint (the standard pairing): the
-            # residual action below materializes the cache and, being the
-            # first job over the checkpoint-marked RDD, triggers the
-            # reliable write — which then READS the cache instead of
-            # recomputing the round (eager=True paid compute twice:
-            # count() + a full recompute for the write)
-            new = new_cached.checkpoint(eager=False)
-        if rnd == 1:
-            residual = new.agg(
-                F.sum(F.abs(F.col("r") - F.lit(_PR_R0))).alias("l1"),
-                F.sum("r").alias("mass"),
-            )
-        else:
-            residual = new.join(
-                prev.withColumnRenamed("r", "r_prev"), "node"
-            ).agg(
-                F.sum(F.abs(F.col("r") - F.col("r_prev"))).alias("l1"),
-                F.sum("r").alias("mass"),
-            )
-        row = residual.collect()[0]
-        # SUM over zero rows is NULL: an empty node set must end the loop
-        # with an empty curve, not a TypeError
-        l1, mass = int(row["l1"] or 0), int(row["mass"] or 0)
-        # the residual action above materialized this round (and, on
-        # checkpoint rounds, completed the reliable write) — the
-        # superseded caches release NOW, so executor cache footprint is
-        # ≤2 rank vectors at any round count (the reference's
-        # per-iteration C3 unpersist, ALS.py:153-156)
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        if new is not new_cached:
-            # checkpoint round: subsequent reads come from the checkpoint
-            # files, so the pre-checkpoint cache is superseded too
-            new_cached.unpersist()
-            prev_cache = None
-        else:
-            prev_cache = new_cached
-        if mass == 0:
-            break
-        converged = 2 * l1 <= mass
-        curve.append((rnd, l1, mass, converged))
-        prev = new
-        if converged:
-            break
-    for c in (eo, prev_cache):
-        if c is not None:
-            c.unpersist()
+    try:
+        _, stats = _prc_rounds(eo, _PRC_CAP, run=True)
+    finally:
+        eo.unpersist()
+    curve = [
+        (rnd, l1, mass, 2 * l1 <= mass)
+        for rnd, (l1, mass) in enumerate(map(_prc_point, stats), 1)
+        if mass
+    ]
     return spark.createDataFrame(
         curve, "round long, l1_delta long, total_mass long, converged boolean"
     )
@@ -803,11 +844,11 @@ def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
     PageRank's linear unroll, this round's plan embeds ``dist`` TWICE
     (once directly in the union, once under ``expanded``), so the
     lineage doubles per round — bounded and cheap at the fixed 3 rounds
-    (8 leaf copies), but a deeper traversal must checkpoint each round
-    exactly as ``min_label_components`` does for the same
-    doubling-plan reason. The naive "frontier only" optimization (join
-    only newly-labeled nodes) drops the join's left side to the frontier
-    size per round — noted, not needed at 3 rounds.
+    (8 leaf copies), but a deeper traversal must run through
+    :func:`fixpoint` with a checkpoint every round. The naive "frontier
+    only" optimization (join only newly-labeled nodes) drops the join's
+    left side to the frontier size per round — noted, not needed at 3
+    rounds.
 
     The directed edge set (both directions, x ≠ y) is the undirected
     basket-expansion pair set (``_copurchase_edges`` — one lineitem
@@ -935,8 +976,7 @@ def _lpa_plan(spark: SparkSession, sf_dir: str):
     - The edge list persists PRE-PARTITIONED on the join key ``v`` (the
       PageRank-round discipline), so the round-2 join re-shuffles only
       the label table; ≤2 rounds keep the unrolled lineage bounded
-      (deeper fixpoints must checkpoint per round exactly as
-      ``min_label_components`` does).
+      (deeper fixpoints run through :func:`fixpoint`).
 
     Output is the bounded top-25 histogram, so ``collected`` frees the
     edge cache.
@@ -999,17 +1039,11 @@ def _lpa_plan(spark: SparkSession, sf_dir: str):
     return top, [e]
 
 
-# Reliable-checkpoint cadence for the CC loop. The PRC-style every-3
-# cadence measured SLOWER here despite the self-loop linear
-# lineage (15.7s → 21.4s for the two CC queries at sf0.1): between
-# checkpoints every round re-ANALYZES the accumulated logical tree —
-# including the LSH/shingle self-join base lineage — and at these label
-# sizes driver-side planning dominates the round. Every-round
-# checkpointing keeps the plan rooted at a leaf; the persist-then-lazy
-# pairing (vs the old eager=True) still removes the old per-round double
-# compute (eager wrote by RECOMPUTING the round, then the probe re-read
-# the files; now the probe materializes the cache once and the write
-# reads it).
+# Checkpoint every CC round. Every 3 rounds measured SLOWER despite the
+# self-loop linear lineage (15.7s → 21.4s for the two CC queries at
+# sf0.1): between checkpoints every round re-ANALYZES the accumulated
+# logical tree — including the LSH/shingle self-join base lineage — and
+# at these label sizes driver-side planning dominates the round.
 _CC_CHECKPOINT_EVERY = 1
 
 
@@ -1028,39 +1062,28 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     SELF-LOOP SINGLE-REFERENCE FORM. A round that references the previous
     label table TWICE (under the neighbor join and again under a left
     join folding the node's own label) doubles the unrolled plan per
-    round (3,133 exchanges after ~4 rounds) and must eager-checkpoint
-    every round — a full recompute + reliable write + read-back. Instead
-    the edge list
+    round (3,133 exchanges after ~4 rounds). Instead the edge list
     carries one tagged SELF-LOOP per node: the node's own previous label
     arrives through the same join + groupBy that folds neighbor labels
     (``label = min over incoming``, ``old = min over the self rows``, and
-    the convergence flag is ``label < old`` — exactly the old
+    the convergence flag is ``label < old`` — exactly the
     ``∃ neighbor label < own`` predicate), so each round references the
-    previous table ONCE, lineage grows LINEARLY, and the reliable
-    checkpoint drops to every ``_CC_CHECKPOINT_EVERY`` rounds with the
-    persist-then-lazy-checkpoint pairing the convergence-PageRank loop
-    proved (the probe action materializes the cache; the write reads it).
+    previous table ONCE and lineage grows LINEARLY; :func:`fixpoint`
+    checkpoints every ``_CC_CHECKPOINT_EVERY`` rounds.
     Round 1 is CLOSED-FORM: identity labels make the incoming label the
     src id itself, so the first round is one aggregate over the edge
     list — no join, no label table to build.
 
     Scale shape: one join + one groupBy per round, both keyed on node —
     shuffle volume bounded by the EDGE list (never all-pairs; the self
-    loops add |V| rows). The convergence probe stays a
-    ``where(improved).limit(1).count()`` over the round's cached table.
+    loops add |V| rows). The convergence probe is a FULL count of
+    improved nodes over the round's table, not ``limit(1)``: one narrow
+    pass materializes every partition, so the returned fixpoint never
+    recomputes through inputs the caller has already unpersisted.
     Unconverged labels are WRONG labels, so the bound raises instead of
-    returning them.
-
-    Session self-sufficiency: ``Dataset.checkpoint`` requires
-    ``SparkContext.setCheckpointDir`` to have run, and an application
-    embedding this package may build its own bare SparkSession where no
-    dir is set, so a checkpoint call would throw. The loop claims a
-    scratch dir LAZILY on the input DataFrame's own session
-    (session.ensure_checkpoint_dir — idempotent, respects a dir the
-    embedding application already configured, e.g. HDFS/S3 on a
-    cluster).
+    returning them; the fixpoint is fully materialized either way, so
+    the cached inputs are released before returning or raising.
     """
-    from als_pyspark_spark.session import ensure_checkpoint_dir
 
     def _round_agg(incoming: DataFrame) -> DataFrame:
         # label = min over ALL incoming labels (self row delivers the
@@ -1078,7 +1101,15 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             )
         )
 
-    ensure_checkpoint_dir(pairs.sparkSession)
+    def _step(prev: DataFrame) -> DataFrame:
+        labels = prev.select("node", "label").withColumnRenamed("node", "src")
+        return _round_agg(
+            edges.join(labels, "src").select("dst", F.col("label").alias("lbl"), "is_self")
+        )
+
+    def _settled(rows: list[Row]) -> bool:
+        return not rows[0]["n_improved"]  # NULL over an empty edge list
+
     pairs = pairs.persist()
     nbr = pairs.unionAll(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1093,86 +1124,48 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
         )
     )
     edges = nbr.unionAll(selfe).persist()
-
-    labels: DataFrame | None = None
-    prev_cache: DataFrame | None = None
-    converged = False
-    for rnd in range(1, max_rounds + 1):
-        if rnd == 1:
-            # closed form: identity labels ⇒ incoming label = src id
-            incoming = edges.select("dst", F.col("src").alias("lbl"), "is_self")
-        else:
-            incoming = edges.join(
-                labels.withColumnRenamed("node", "src"), "src"
-            ).select("dst", F.col("label").alias("lbl"), "is_self")
-        new_cached = _round_agg(incoming).persist()
-        new = new_cached
-        if rnd % _CC_CHECKPOINT_EVERY == 0:
-            # persist-then-lazy-checkpoint (the PRC pairing): the probe
-            # below is the first job over the marked RDD — the reliable
-            # write runs at that job's end, reading the cache
-            new = new_cached.checkpoint(eager=False)
-        # FULL aggregate, not limit(1): one narrow pass over the
-        # node-sized round table fully materializes the cache (so the
-        # returned fixpoint is disk-safe MEMORY_AND_DISK data, not a
-        # partially-populated cache whose missing partitions would
-        # recompute through inputs the caller has already unpersisted),
-        # and on checkpoint rounds the reliable write reads that cache.
-        row = new.agg(
-            F.sum(F.col("improved").cast("int")).alias("n_improved")
-        ).collect()[0]
-        changed = int(row["n_improved"] or 0)
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        if new is not new_cached:
-            new_cached.unpersist()
-            prev_cache = None
-        else:
-            prev_cache = new_cached
-        labels = new.select("node", "label")
-        if changed == 0:
-            converged = True
-            break
-
-    if not converged:
-        if prev_cache is not None:
-            prev_cache.unpersist()
+    try:
+        # closed form: identity labels ⇒ incoming label = src id
+        first = _round_agg(edges.select("dst", F.col("src").alias("lbl"), "is_self"))
+        labels, stats = fixpoint(
+            first, _step,
+            lambda rnd, cur, prev: cur.agg(
+                F.sum(F.col("improved").cast("int")).alias("n_improved")
+            ),
+            max_rounds=max_rounds, checkpoint_every=_CC_CHECKPOINT_EVERY, until=_settled,
+        )
+    finally:
         pairs.unpersist()
         edges.unpersist()
+    if not _settled(stats[-1]):
         raise RuntimeError(
             "connected-components min-label propagation did not converge "
             f"within {max_rounds} rounds; raise the bound for this corpus"
         )
-    # The fixpoint is fully materialized (cache or checkpoint files); the
-    # cached inputs can release now. A cache-backed fixpoint registers
-    # with caching.deferred so the harness frees it at its next
-    # between-queries checkpoint (the callers return LAZY results, so the
-    # cache must outlive this function but not the session).
-    if prev_cache is not None:
-        from als_pyspark_spark.caching import deferred
-
-        deferred(prev_cache)
-    pairs.unpersist()
-    edges.unpersist()
-    return labels
+    return labels.select("node", "label")
 
 
 _KCORE_K = 3
 _KCORE_ROUNDS = 3
 
 
-def _kcore_plan(spark: SparkSession, sf_dir: str, eager: bool = False):
-    """K-core shrinkage-curve plan + the per-round persisted edge tables.
+def _kcore_peel(cur: DataFrame) -> DataFrame:
+    """One peel round: drop nodes of degree < k, then edges touching them.
+    The round references its predecessor THREE times (degree + both
+    semi-join filters), so unrolled lineage grows 3^rounds."""
+    deg = cur.groupBy("u").agg(F.count("*").alias("c"))
+    keep = deg.where(F.col("c") >= _KCORE_K).select("u")
+    return (
+        cur.join(keep, "u", "left_semi")
+        .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
+        .select("u", "v")
+    )
 
-    ``eager`` controls checkpoint materialization, not plan shape — both
-    modes wrap each round in a ``LogicalRDD`` leaf, so the plan is
-    constant-size at any round count either way. The query body passes
-    ``eager=True`` (per-round materialization: each round's checkpoint is
-    written before the next round's 3 references read it, bounding
-    recompute at 2× per round instead of 3^rounds inside one final job).
-    ``Query.plan`` uses the default ``eager=False``, which plans each
-    round but runs NO jobs and writes no checkpoint files, so the audit
-    path stays lazy."""
+
+def _kcore_rounds(spark: SparkSession, sf_dir: str, run: bool):
+    """Per-round stats of the ``_KCORE_ROUNDS`` peel rounds (rows when
+    ``run``, else lazy DataFrames) + the persisted doubled edge list the
+    rounds start from."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -1181,38 +1174,27 @@ def _kcore_plan(spark: SparkSession, sf_dir: str, eager: bool = False):
         )
         .distinct()
     )
-    from als_pyspark_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
-    cur = (
+    base = (
         li.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionByName(li.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .persist()
     )
-    caches = [cur]
-    per_round = []
-    for r in range(1, _KCORE_ROUNDS + 1):
-        deg = cur.groupBy("u").agg(F.count("*").alias("c"))
-        keep = deg.where(F.col("c") >= _KCORE_K).select("u")
-        # eager reliable checkpoint: round r references round r−1 three
-        # times, so lineage would grow 3^rounds without truncation
-        cur = (
-            cur.join(keep, "u", "left_semi")
-            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .select("u", "v")
-            .checkpoint(eager=eager)
-        )
-        per_round.append(
-            cur.agg(
-                F.lit(r).cast("long").alias("peel_round"),
-                F.countDistinct("u").alias("n_nodes"),
-                F.count("*").alias("n_directed_edges"),
-            )
-        )
-    out = per_round[0]
-    for p in per_round[1:]:
-        out = out.unionByName(p)
-    return out, caches
+    _, stats = fixpoint(
+        _kcore_peel(base), _kcore_peel,
+        lambda rnd, cur, prev: cur.agg(
+            F.lit(rnd).cast("long").alias("peel_round"),
+            F.countDistinct("u").alias("n_nodes"),
+            F.count("*").alias("n_directed_edges"),
+        ),
+        max_rounds=_KCORE_ROUNDS, checkpoint_every=1, run=run,
+    )
+    return stats, [base]
+
+
+def _kcore_plan(spark: SparkSession, sf_dir: str):
+    """K-core shrinkage-curve plan + the persisted base edge table."""
+    stats, caches = _kcore_rounds(spark, sf_dir, run=False)
+    return reduce(DataFrame.unionByName, stats), caches
 
 
 @query(
@@ -1267,16 +1249,17 @@ def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     round r's cost is bounded by round r−1's survivors.
 
     Per round: one degree aggregate + two left-semi joins (both keyed on
-    a node id), each round's edge table CHECKPOINTED eagerly — round r's
-    plan references round r−1 THREE times (degree subtree + both
-    semi-join filter subtrees), so unrolled lineage grows 3^rounds (the
-    first audit measured 120 exchanges at 3 rounds); the reliable
-    checkpoint truncates each round to a leaf scan, exactly the
-    ``min_label_components`` discipline, and makes run-to-convergence
-    peeling safe, not just the fixed 3 rounds. Output is the 3-row
+    a node id). Round r's plan references round r−1 THREE times, so
+    :func:`fixpoint` checkpoints every round (unrolled, the first audit
+    measured 120 exchanges at 3 rounds), which also makes
+    run-to-convergence peeling safe, not just the fixed 3 rounds. Each
+    round's stats row is the round's probe. Output is the 3-row
     per-round (nodes, directed edges) shrinkage curve — integer counts,
-    exact unrolled DuckDB oracle; ``collected`` frees the base edge
-    cache.
+    exact unrolled DuckDB oracle.
     """
-    out, caches = _kcore_plan(spark, sf_dir, eager=True)
-    return collected(spark, out, *caches)
+    stats, [base] = _kcore_rounds(spark, sf_dir, run=True)
+    base.unpersist()
+    return spark.createDataFrame(
+        [row for rows in stats for row in rows],
+        "peel_round long, n_nodes long, n_directed_edges long",
+    )

@@ -115,12 +115,12 @@ def sweep_line_daily_max(starts: DataFrame, duration: str = "INTERVAL 30 MINUTES
     The running value after each net step therefore equals the true
     concurrency AT that instant under half-open semantics (opens at t
     count, closes at t don't) — there is no per-row partial prefix, so no
-    phantom intermediate state can inflate MAX. (Round-7 hypothesis
-    counterexample: two sessions ending exactly at midnight made the
-    per-ROW running sum report ``max_concurrent = 1`` on a day whose true
-    peak was 0; tests/test_properties.py keeps that spec as the guard.)
+    phantom intermediate state can inflate MAX. (Counterexample: two
+    sessions ending exactly at midnight make a per-ROW running sum report
+    ``max_concurrent = 1`` on a day whose true peak is 0;
+    tests/test_properties.py keeps that spec as the guard.)
 
-    Distributed two-phase shape (unchanged by the fix):
+    Distributed two-phase shape:
     1. net deltas per (day, t) — one hash aggregate, map-side partial;
     2. within-day prefix sums over the UNIQUE-t net deltas, partitioned
        by day (parallel across days);
@@ -191,7 +191,7 @@ def q_max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     max of the running sum), computed by :func:`sweep_line_daily_max` as
     a DISTRIBUTED two-phase prefix sum over per-(day, t) NET deltas, so
     simultaneous boundary events contribute one signed step and the MAX
-    never sees a phantom per-row partial prefix (the round-7 tie bug).
+    never sees a phantom per-row partial prefix.
     The DuckDB oracle mirrors the same pre-aggregation, then takes its
     single global window over the unique-instant net deltas.
 

@@ -63,9 +63,14 @@ def force(spark: SparkSession, q: Query, sf_dir: str) -> float:
 
 def reset_memos() -> None:
     """Clear the trained ALS models and the fixture clone-ratio statistics,
-    in place, so the next run re-pays them."""
+    in place, so the next run re-pays them. Each memoized model's factor
+    RDDs and cached ratings are unpersisted first, so the next run reads
+    neither warm."""
     from als_pyspark_spark.dedup import queries as dedup_queries
     from als_pyspark_spark.ml import queries as ml_queries
 
+    for engine, rated in ml_queries._TRAINED.values():
+        engine.release()
+        rated.unpersist()
     ml_queries._TRAINED.clear()
     dedup_queries._CLONE_RATIO.clear()

@@ -506,16 +506,13 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
         .where(F.col("neighbor_id") != F.col("query_id"))
     )
     # Two window passes — one over the probed subset (the IVF top-k),
-    # one over the full stream (the brute-force witness). An attempt
-    # merged them into ONE pass (row_number + a running count of
-    # probed rows over the same total order — provably identical output,
-    # verified by sorted-row diff) but the BENCH measured it 0.60× — a
-    # confirmed ~1.6s regression at sf0.1 — so the split form stays; the
-    # probed-side window sorts only ~nprobe/k of the stream, and the two
-    # jobs read the persisted corpus pass independently. Lesson recorded
-    # in OPTIMIZATION_r15.md: fewer logical passes is not fewer seconds
-    # when the merged pass carries extra columns + functions through the
-    # full-stream sort.
+    # one over the full stream (the brute-force witness). ONE merged pass
+    # (row_number + a running count of probed rows over the same total
+    # order) gives identical output but measured 0.60× at sf0.1 (~1.6s
+    # slower): it carries extra columns and functions through the
+    # full-stream sort, while the probed-side window sorts only ~nprobe/k
+    # of the stream and the two jobs read the persisted corpus pass
+    # independently.
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     # ≤ _N_QUERIES × _TOP_K rows, read twice (output + recall witness):
     # persisting it stops the whole candidate scan from running twice.
@@ -559,9 +556,8 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
 _PQ_M = 8  # product-quantizer subspaces (64 dims → 8 × 8-dim)
 _PQ_KSUB = 256  # centroids per subspace → 1 byte/code, 8 bytes/vector
 _PQ_ITERS = 6
-# ADC shortlist size refined by exact re-rank. 1024, from the
-# scripts/sweep_ivfpq.py sweep: on this isotropic corpus the
-# shortlist — not the probe count — was the binding recall constraint at
+# ADC shortlist size refined by exact re-rank. 1024: on this isotropic
+# corpus the shortlist — not the probe count — was the binding recall constraint at
 # sf1 (sim recall@10 0.82→0.92 at L=256→1024; real witness 0.66→0.76 at
 # sf1 / 0.86 at sf0.1, runtime unchanged), and the refine stage's cost is
 # L·|q| bounded rows, so the bump is ~free.

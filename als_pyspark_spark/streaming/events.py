@@ -277,7 +277,7 @@ def stream_stream_purchase_click_outer(
     ).select("p_user", "purchase_id", "p_ts", "c_user", "click_id", "c_ts")
 
 
-# Target bytes of source data per streaming STATE partition (round 15).
+# Target bytes of source data per streaming STATE partition.
 # Stateful operators pin their state partitioning to
 # spark.sql.shuffle.partitions at stream start, and every micro-batch —
 # including 0-row watermark-advance batches — pays a per-partition state

@@ -153,7 +153,7 @@ def q_stream_stateful_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no adaptive state-partition override: applyInPandasWithState is
     # PYTHON-COMPUTE bound (per-group pandas work dominates the per-
     # partition state-store cost the override targets) — measured
-    # 2.6s → 9.6s when the override squeezed it to 1 partition (round 15)
+    # 2.6s → 9.6s when the override squeezed it to 1 partition
     return run_to_memory(
         stream,
         name,
@@ -1306,8 +1306,8 @@ def q_stream_static_left_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     'UNKNOWN', so the enriched stream conserves row count — the
     invariant a star-schema ingest must hold when the dimension lags the
     fact stream (late-arriving dimensions). The fixture's dimension is
-    complete, which would leave the NULL branch vacuous (the round-2
-    planted-pair lesson), so the dimension deterministically DROPS every
+    complete, which would leave the NULL branch vacuous (an unexercised
+    branch passes every oracle), so the dimension deterministically DROPS every
     custkey ≡ 0 (mod 10) on both sides — ~10% of events genuinely take
     the unmatched path and the UNKNOWN buckets carry real counts. Unlike the outer
     STREAM-STREAM joins, stream-static left is STATELESS — no watermark,
@@ -1515,7 +1515,7 @@ def q_stream_idempotent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # witness 2 — algebraic: forcing the stale batch through the merge
     # must leave the state CONTENT unchanged (LWW absorbs redelivery).
-    # Compared DISTRIBUTED (round-9 ADVICE): symmetric exceptAll counts
+    # Compared DISTRIBUTED: symmetric exceptAll counts
     # instead of collecting the full per-user state to the driver twice —
     # at 100 TB the state table is executor-sized, and a multiset
     # difference is a keyed shuffle both engines handle at any scale.
@@ -1557,8 +1557,7 @@ SELECT b.batch, b.n_rows, b.n_users, t.n_batches, t.total_rows FROM b, t
     tags=("streaming", "throughput", "telemetry", "witness"),
 )
 def q_stream_throughput_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming THROUGHPUT/BATCH-STABILITY probe (VERDICT r12 item 7):
-    the correctness oracles can't see micro-batch structure, so a
+    """Streaming THROUGHPUT/BATCH-STABILITY probe: the correctness oracles can't see micro-batch structure, so a
     regression that silently merges, splits, or starves batches — a
     maxFilesPerTrigger regression, a source that stops honoring file
     boundaries, a batch that loses rows between source and sink — would

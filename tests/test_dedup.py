@@ -158,6 +158,40 @@ def test_min_label_components_multihop_chain(spark):
     }
 
 
+def test_min_label_components_empty_pairs(spark):
+    """An empty pair list is settled at round 1 (its improved count is
+    NULL): the result is an empty ``(node, label)`` table, not an error."""
+    from als_pyspark_spark.operators.graph import min_label_components
+
+    got = min_label_components(spark.createDataFrame([], "src long, dst long"))
+    assert got.columns == ["node", "label"]
+    assert got.collect() == []
+
+
+def test_min_label_components_unconverged_raises_and_releases(spark, monkeypatch):
+    """A diameter-3 chain still improves in round 2, so ``max_rounds=2``
+    raises instead of returning wrong labels, and no DataFrame the loop
+    persisted (inputs or rounds) stays cached."""
+    from pyspark import StorageLevel
+
+    from als_pyspark_spark.operators.graph import min_label_components
+
+    cls, persisted = type(spark.range(1)), []
+
+    def recording(self, *args, _original=cls.persist, **kwargs):
+        persisted.append(self)
+        return _original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", recording)
+    pairs = spark.createDataFrame([(10, 20), (20, 30), (30, 40)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge within 2 rounds"):
+        min_label_components(pairs, max_rounds=2)
+    monkeypatch.undo()
+    none = StorageLevel(False, False, False, False, 1)
+    assert len(persisted) == 4  # pairs, edges, two rounds
+    assert all(p.storageLevel == none for p in persisted)
+
+
 def test_intra_doc_spans_known_counts(spark, tmp_path):
     """Hand-computable fixture for the sorted-run arithmetic: a doc whose
     5-grams repeat in known multiplicities. tokens = A B C D E A B C D E

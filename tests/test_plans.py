@@ -9,6 +9,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from als_pyspark_spark.plans.inspect import formatted, plan_of
@@ -840,6 +841,22 @@ def test_pagerank_converged_constant_plan_across_rounds(spark, sf_dir):
         for c in caches:
             c.unpersist()
     assert shapes[0] == shapes[1] == shapes[2], shapes
+
+
+@pytest.mark.parametrize("name", ["q_kcore_peeling", "q_pagerank_converged"])
+def test_fixpoint_plan_starts_no_job(spark, sf_dir, name):
+    """A plan-mode build of a checkpointed loop runs none of its rounds:
+    once the first build has read the parquet schema, a second starts no
+    Spark job (under AQE a lazy checkpoint would run each round's shuffle
+    stages)."""
+    sc = spark.sparkContext
+    lazy_plan(spark, sf_dir, name)
+    sc.setJobGroup(f"plan-{name}", "plan-mode build")
+    try:
+        lazy_plan(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(f"plan-{name}")) == []
 
 
 def test_bpe_train_cluster_footprint_is_one_aggregate(spark, sf_dir):

@@ -4,6 +4,8 @@ here."""
 
 from __future__ import annotations
 
+from unittest.mock import Mock
+
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
@@ -92,8 +94,30 @@ def test_reset_memos_clears_in_place():
     from als_pyspark_spark.ml import queries as ml_queries
 
     trained, ratio = ml_queries._TRAINED, dedup_queries._CLONE_RATIO
-    trained[("app", "sf")] = (None, None)
+    trained[("app", "sf")] = (Mock(), Mock())
     ratio["sf"] = 0.5
     runner.reset_memos()
     assert ml_queries._TRAINED is trained and not trained
     assert dedup_queries._CLONE_RATIO is ratio and not ratio
+
+
+def test_reset_memos_releases_the_als_memo(spark, sf_dir):
+    """Clearing the ALS memo also uncaches its ratings and unpersists its
+    model's factor RDDs, so the next pass trains and reads cold."""
+    from als_pyspark_spark.ml import queries as ml_queries
+    from als_pyspark_spark.sources.ratings import ratings
+
+    runner.reset_memos()
+    runner.force(spark, QUERIES["als_mse"], sf_dir)
+    ((engine, _),) = ml_queries._TRAINED.values()
+    factor_rdds = set()
+    for factors in (engine.model.userFactors, engine.model.itemFactors):
+        leaves = factors._jdf.queryExecution().analyzed().collectLeaves()
+        factor_rdds |= {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert len(factor_rdds) == 2 and factor_rdds <= persistent()
+
+    runner.reset_memos()
+    plan = ratings(spark, sf_dir)._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" not in plan, plan
+    assert not factor_rdds & persistent()
