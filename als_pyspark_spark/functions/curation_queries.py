@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from als_pyspark_spark.caching import local_frame
 from als_pyspark_spark.functions.text import (
     STOPWORDS,
     mean_token_len,
@@ -413,7 +414,8 @@ def q_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     double arithmetic is the same IEEE ops on both engines. The plan table
     is |sources| rows; at 100 TB it broadcasts back onto the corpus."""
     d = load_table(spark, sf_dir, "documents")
-    tgt = spark.createDataFrame(
+    tgt = local_frame(
+        spark,
         sorted(_MIX_TARGETS.items()), "source string, target_share double"
     )
     c = d.groupBy("source").agg(F.count("*").alias("n_docs"))

@@ -13,6 +13,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from als_pyspark_spark.caching import local_frame
 from als_pyspark_spark.functions.text import (
     STOPWORDS,
     fingerprint,
@@ -839,7 +840,8 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB replay both gate the loop's exactness.
     """
     rows = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "round long, left_sym string, right_sym string, merged string, "
         "pair_count long, vocab_after long, corpus_tokens_after long",

@@ -27,6 +27,7 @@ dominant cost, SURVEY.md §3.4).
 from __future__ import annotations
 
 import math
+import re
 from dataclasses import dataclass
 
 from pyspark.ml.evaluation import RegressionEvaluator
@@ -72,6 +73,10 @@ def derived_item_blocks(n_ratings: int, num_user_blocks: int) -> int:
     count. Reads the row count only, so the grid (and the factors) never
     depend on the core count."""
     return min(num_user_blocks, max(1, math.ceil(n_ratings / RATINGS_PER_ITEM_BLOCK)))
+
+
+# Names MLlib gives the factor RDDs it persists during a fit.
+_FACTOR_RDD = re.compile(r"(user|item)Factors(-\d+)?")
 
 
 def _row_count(df: DataFrame) -> int:
@@ -129,18 +134,31 @@ class ALSEngine:
         return self
 
     def release(self) -> None:
-        """Unpersist the trained model's factor RDDs, which MLlib persists
-        at fit time and never releases. Each is the ``ExternalRDD`` leaf of
-        its factor table's analyzed plan; the tables still work afterwards,
-        recomputing on read."""
+        """Unpersist the RDDs MLlib persists at fit time and never releases:
+        the final ``userFactors``/``itemFactors`` (the ``ExternalRDD``
+        leaves of the factor tables' analyzed plans) and the intermediate
+        ``itemFactors-<iter>`` in their lineage. Only RDDs of those names
+        are touched, so the training input's SQL cache stays. The tables
+        still work afterwards, recomputing on read."""
         if self.model is None:
             return
+        stack, seen = [], set()
         for factors in (self.model.userFactors, self.model.itemFactors):
             leaves = factors._jdf.queryExecution().analyzed().collectLeaves()
             for i in range(leaves.size()):
                 leaf = leaves.apply(i)
                 if leaf.getClass().getSimpleName() == "ExternalRDD":
-                    leaf.rdd().unpersist(False)
+                    stack.append(leaf.rdd())
+        while stack:
+            rdd = stack.pop()
+            rdd_id = rdd.id()
+            if rdd_id in seen:
+                continue
+            seen.add(rdd_id)
+            if _FACTOR_RDD.fullmatch(rdd.name() or ""):
+                rdd.unpersist(False)
+            deps = rdd.dependencies()
+            stack.extend(deps.apply(i).rdd() for i in range(deps.size()))
 
     # -- factor tables: what NewALS.train returns (reference ALS.py:191) ----
     @property

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from als_pyspark_spark.caching import deferred
 from als_pyspark_spark.ml.als import ALSEngine, ALSParams
 from als_pyspark_spark.registry import query
 from als_pyspark_spark.sources.ratings import RATINGS_CTE, ratings
@@ -219,6 +220,7 @@ def als_implicit_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = ALSEngine(
         ALSParams(rank=10, max_iter=5, reg_param=0.1, seed=42, implicit_prefs=True, alpha=10.0)
     ).train(r)
+    deferred(eng.release)
     return _top3_shape(eng, r)
 
 
@@ -245,6 +247,7 @@ def als_nonnegative_factor_bounds(spark: SparkSession, sf_dir: str) -> DataFrame
     eng = ALSEngine(
         ALSParams(rank=5, max_iter=5, reg_param=0.1, seed=42, nonnegative=True)
     ).train(r)
+    deferred(eng.release)
     both = eng.user_factors.unionAll(eng.item_factors)
     elem = both.select(F.explode("features").alias("f"))
     return elem.agg(

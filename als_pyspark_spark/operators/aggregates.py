@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from als_pyspark_spark.caching import local_frame
 from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.sources.tables import load_table
 
@@ -802,7 +803,8 @@ def _equidepth_plan(spark: SparkSession, sf_dir: str):
         .select("decile", "r", "b", (F.col("r") - F.col("below")).alias("off"))
         .collect()
     )
-    hit_lit = spark.createDataFrame(
+    hit_lit = local_frame(
+        spark,
         [(int(h.decile), int(h.r), int(h.b), int(h.off)) for h in hits],
         "decile long, r long, hb long, off long",
     )

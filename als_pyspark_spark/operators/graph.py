@@ -20,7 +20,7 @@ from functools import partial, reduce
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import deferred
+from als_pyspark_spark.caching import deferred, local_frame
 from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.session import ensure_checkpoint_dir
 from als_pyspark_spark.sources.tables import load_table
@@ -445,8 +445,8 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         for rnd, (l1, mass) in enumerate(map(_prc_point, stats), 1)
         if mass
     ]
-    return spark.createDataFrame(
-        curve, "round long, l1_delta long, total_mass long, converged boolean"
+    return local_frame(
+        spark, curve, "round long, l1_delta long, total_mass long, converged boolean"
     )
 
 
@@ -766,7 +766,8 @@ def q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_est = n_samp * p_den**3
     rel_err = abs(n_est - n_exact) / n_exact if n_exact else 0.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(n_exact),
@@ -868,7 +869,7 @@ def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
         .agg(F.min("l_partkey").alias("r"))
         .collect()[0]["r"]
     )
-    dist = spark.createDataFrame([(int(root), 0)], "node long, dist int")
+    dist = local_frame(spark, [(int(root), 0)], "node long, dist int")
     caches = [e]
     for _ in range(_BFS_ROUNDS):
         # each round references dist TWICE (union + expanded), so the
@@ -1259,7 +1260,8 @@ def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     stats, [base] = _kcore_rounds(spark, sf_dir, run=True)
     base.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [row for rows in stats for row in rows],
         "peel_round long, n_nodes long, n_directed_edges long",
     )

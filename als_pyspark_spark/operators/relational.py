@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from als_pyspark_spark.caching import local_frame
 from als_pyspark_spark.registry import query
 from als_pyspark_spark.sources.tables import load_table
 
@@ -344,7 +345,8 @@ def q_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()  # the main pass
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["n_rows"], m["sum_qty"], m["n_returned"])],
         "n_rows bigint, sum_qty double, n_returned bigint",
     )

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from als_pyspark_spark.caching import local_frame
 from als_pyspark_spark.functions.arrays import cosine, l2_norm
 from als_pyspark_spark.registry import collected_query, query
 from als_pyspark_spark.sources.tables import load_table
@@ -467,7 +468,7 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
         d2 = ((cents - v) ** 2).sum(axis=1)
         for c in np.argsort(d2, kind="stable")[: min(_IVF_NPROBE, len(cents))]:
             probe_rows.append((int(r.vec_id), int(c)))
-    probes = spark.createDataFrame(probe_rows, "query_id long, cluster int")
+    probes = local_frame(spark, probe_rows, "query_id long, cluster int")
 
     # spread before the Arrow pass: the embeddings parquet may be a single
     # row group (1 task), and the assignment matmuls are the CPU-heavy step
@@ -799,10 +800,10 @@ def _ivfpq_plan(spark: SparkSession, sf_dir: str):
             [books[m] @ u[m * dsub : (m + 1) * dsub] for m in range(_PQ_M)]
         )
         lut_rows.append((int(r.vec_id), [float(x) for x in lut]))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, qi int, cluster int, qdotc double"
+    probes = local_frame(
+        spark, probe_rows, "query_id long, qi int, cluster int, qdotc double"
     )
-    luts = spark.createDataFrame(lut_rows, "query_id long, lut array<double>")
+    luts = local_frame(spark, lut_rows, "query_id long, lut array<double>")
 
     # spread before the Arrow pass: the embeddings parquet may be a single
     # row group (1 task), and the per-subspace code matmuls are the

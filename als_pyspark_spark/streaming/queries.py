@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from als_pyspark_spark.caching import local_frame
 from als_pyspark_spark.registry import query
 from als_pyspark_spark.streaming.events import (
     events_source_bytes,
@@ -1646,7 +1647,8 @@ def q_stream_throughput_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     if any(dt <= 0 for _, _, _, dt in seen):
         raise RuntimeError("non-positive per-batch wall time measured")
     total = sum(counts)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(b, n, u, k, total) for b, n, u, _ in sorted(seen)],
         "batch long, n_rows long, n_users long, n_batches long, total_rows long",
     )

@@ -8,7 +8,8 @@ is absent.
 
 The lints: every oracle's LIMIT sits under an ORDER BY, oracle output types
 survive the driver's pandas load, the comparator rejects non-scalar cells,
-and every ``.persist()`` in the package is released or documented.
+every ``.persist()`` in the package is released or documented, and
+driver-side rows enter Spark only through ``caching.local_frame``.
 """
 
 from __future__ import annotations
@@ -262,3 +263,26 @@ def test_every_persist_site_is_released_or_documented():
         "persist() without release, caller-release convention, or the "
         f"documented-cache marker: {offenders}"
     )
+
+
+def test_driver_rows_enter_spark_only_through_local_frame():
+    """``createDataFrame`` on a Python list plans a ``LogicalRDD`` over a
+    pickled Python RDD: every action on it runs a job through a second pool
+    of Python workers. The engine's one call sits in
+    ``caching.local_frame``, which hands Spark an Arrow table instead."""
+    pkg = os.path.join(_REPO, "als_pyspark_spark")
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            current = None
+            for i, line in enumerate(open(path).read().splitlines()):
+                if line.startswith("def "):
+                    current = line.split("(")[0][4:]
+                if "createDataFrame(" in line:
+                    where = (os.path.relpath(path, pkg), current)
+                    if where != ("caching.py", "local_frame"):
+                        offenders.append(f"{path}:{i + 1}")
+    assert not offenders, f"createDataFrame outside caching.local_frame: {offenders}"

@@ -121,3 +121,25 @@ def test_reset_memos_releases_the_als_memo(spark, sf_dir):
     plan = ratings(spark, sf_dir)._jdf.queryExecution().withCachedData().toString()
     assert "InMemoryRelation" not in plan, plan
     assert not factor_rdds & persistent()
+
+
+def test_no_als_factor_rdd_outlives_its_query(spark, sf_dir):
+    """The two ALS queries that train their own model release it when the
+    runner is done with the result, keeping the memo's ratings cache, and
+    no factor RDD of any fit (MLlib's intermediate ``itemFactors-<iter>``
+    included) is still persisted after ``reset_memos``."""
+    from als_pyspark_spark.ml import queries as ml_queries
+
+    def factor_rdds():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        names = [rdds.get(k).name() or "" for k in rdds.keySet()]
+        return sorted(n for n in names if n.startswith(("userFactors", "itemFactors")))
+
+    runner.reset_memos()
+    runner.force(spark, QUERIES["als_mse"], sf_dir)
+    ((_, rated),) = ml_queries._TRAINED.values()
+    for name in ("als_implicit_top3", "als_nonnegative_factor_bounds"):
+        runner.force(spark, QUERIES[name], sf_dir)
+        assert rated.storageLevel != _NONE, name
+    runner.reset_memos()
+    assert factor_rdds() == []
