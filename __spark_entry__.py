@@ -7,6 +7,7 @@ every operator from SURVEY.md §2 plus the extension operators registers a
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -15,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from als_pyspark_spark.caching import release_deferred
 from als_pyspark_spark.registry import load_all_queries, requirements_met
 
 
@@ -42,12 +44,27 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+def _after_release(
+    build: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """``build``, first releasing the deferred caches of the build before
+    it: the driver consumes one result before it builds the next query,
+    so each query's caches live until the next build starts."""
+
+    @functools.wraps(build)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_deferred()
+        return build(spark, sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Queries whose optional dependencies (Query.requires) are absent in
     # this environment are excluded — the registry itself is deterministic
     # across machines; availability only affects this sweep view.
     return {
-        name: q.build
+        name: _after_release(q.build)
         for name, q in load_all_queries().items()
         if requirements_met(q)
     }

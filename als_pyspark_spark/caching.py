@@ -1,5 +1,5 @@
-"""Bounded-result materialization for queries that persist intermediates,
-and the one way driver-side rows become a DataFrame.
+"""Cache lifetimes for queries that persist intermediates, and the one way
+driver-side rows become a DataFrame.
 
 Queries that ``persist()`` an intermediate (an edge list both sides of a
 self-join read, a bucket table reused across phases) must not leak that
@@ -8,14 +8,18 @@ session would otherwise accumulate hundreds of cached tables (the
 reference's C1-C3 persist→materialize→unpersist discipline, which its
 training loop applies per iteration, applies per QUERY here).
 
-``collected`` is for queries whose RESULT is bounded at any scale (top-k,
-fixed histograms, decile tables): run the final action inside the query,
-unpersist every intermediate in a ``finally``, and hand back the rows as a
-``LocalRelation`` with the original schema. The caller's later ``collect``
-is then free, and nothing stays cached.
+One rule covers every such cache: the query registers it with
+:func:`deferred` and returns its plan unrun, and the consumer calls
+:func:`release_deferred` once it is done with the result
+(``runner.built`` on exit, ``__spark_entry__.queries()`` before handing
+out the next build, perfbench after each operation).
 
-``local_frame`` is how every driver-side row list (``collected``'s rows,
-IVF probe tables, per-round statistics) enters Spark: the rows become an
+``collected`` (run a bounded result on the driver, unpersist, re-plan
+the rows) has no caller in the package; it is kept because perfbench's
+tracer wraps it by name.
+
+``local_frame`` is how every driver-side row list (IVF probe tables,
+per-round statistics) enters Spark: the rows become an
 Arrow table on the driver and the plan a ``LocalRelation`` with exact
 statistics. ``createDataFrame`` on a Python list would instead plan a
 ``LogicalRDD`` over a pickled ``PythonRDD`` with no statistics, so every
@@ -54,7 +58,8 @@ def collected(spark: SparkSession, result: DataFrame, *cached: DataFrame) -> Dat
     """Materialize ``result`` (must be bounded — top-k / fixed-grain only),
     unpersist ``cached`` intermediates even on failure, and return the rows
     as a ``LocalRelation`` (:func:`local_frame`) with ``result``'s exact
-    schema."""
+    schema. No query calls it: queries register caches with
+    :func:`deferred` and return their plan."""
     try:
         rows = result.collect()
     finally:
@@ -63,17 +68,11 @@ def collected(spark: SparkSession, result: DataFrame, *cached: DataFrame) -> Dat
     return local_frame(spark, rows, result.schema)
 
 
-# Caches whose query RESULT is corpus-proportional (so ``collected`` would
-# bottleneck the driver) but that have NO readers beyond their own query's
-# plan: they cannot be unpersisted before the caller materializes the
-# lazily-returned result, so they register here and are released when the
-# caller is done with the result — ``runner.built`` does it on exit, and an
-# embedding application that runs many queries per session should call
-# :func:`release_deferred` after consuming each result (otherwise such a
-# cache lives as long as the session). Distinct from the
-# 'deliberate session-lifetime cache' sites (dedup/similarity pair tables),
-# which ARE read by multiple queries and must stay resident between them.
-# A cache Spark holds outside any DataFrame (a trained model's factor RDDs)
+# Caches registered by the current query's build, released when the
+# consumer is done with its result. Distinct from the 'deliberate
+# session-lifetime cache' sites (dedup/similarity pair tables), which ARE
+# read by multiple queries and must stay resident between them. A cache
+# Spark holds outside any DataFrame (a trained model's factor RDDs)
 # registers its zero-argument release function instead.
 _DEFERRED: list[DataFrame | Callable[[], object]] = []
 _Releasable = TypeVar("_Releasable", DataFrame, Callable[[], object])

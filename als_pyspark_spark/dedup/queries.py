@@ -24,9 +24,9 @@ re-fetch) and the hash projection dominates the query — measured 56×
 slower when recomputed per reader (exchange reuse cannot substitute:
 column pruning specializes each reader's exchange subtree, so the
 shuffles are not canonically equal and ReuseExchange never fires). The
-results are pair lists (corpus-proportional), so the caching.collected
-release pattern used by the bounded top-k queries would encode a driver
-bottleneck instead. The cache therefore lives until session end — LRU-
+results are pair lists (corpus-proportional), so collecting them to free
+the cache would encode a driver bottleneck. The cache therefore lives
+until session end — LRU-
 evictable under memory pressure, natural in the one-job-per-query shape
 a 100 TB run has; a long multi-query session embedding these can wrap
 them with its own materialize-then-unpersist.

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import local_frame
+from als_pyspark_spark.caching import deferred, local_frame
 from als_pyspark_spark.functions.text import (
     STOPWORDS,
     mean_token_len,
@@ -37,7 +37,7 @@ from als_pyspark_spark.functions.text import (
     tokens,
     word_ngrams,
 )
-from als_pyspark_spark.registry import collected_query, query
+from als_pyspark_spark.registry import query
 from als_pyspark_spark.sources.tables import load_table
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -129,7 +129,7 @@ def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _G = " || ' ' || ".join(f"t[i+{j}]" if j else "t[i]" for j in range(_BOILER_N))
 
 
-@collected_query(
+@query(
     "q_boilerplate_ngrams",
     oracle=f"""
 WITH tk AS (
@@ -150,7 +150,7 @@ LIMIT {_BOILER_TOP}
 """,
     tags=("pipeline", "quality", "boilerplate"),
 )
-def _boilerplate_plan(spark: SparkSession, sf_dir: str):
+def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level boilerplate report: the top {n}-grams by the number of
     DISTINCT documents containing them (≥ threshold). The cross-document
     twin of per-doc repetition — in a web corpus these are cookie banners
@@ -160,15 +160,14 @@ def _boilerplate_plan(spark: SparkSession, sf_dir: str):
     aggregate is a plain COUNT(*) on (gram) — one shuffle with map-side
     combine, then TakeOrderedAndProject for the bounded report.
 
-    The gram table materializes through a released cache:
-    exploding an array built by an expensive inline HOF pipeline re-pays
-    the pipeline ~per OUTPUT row (the decontaminate Generate class) —
-    measured 6.2s inline vs 0.6s from the materialized column at sf1.
-    The result is a bounded ≤{top}-row report, so ``collected`` releases
-    the cache instead of leaking it."""
+    The gram table materializes through a deferred cache, released once
+    the caller is done with the result: exploding an array built by an
+    expensive inline HOF pipeline re-pays the pipeline ~per OUTPUT row
+    (the decontaminate Generate class) — measured 6.2s inline vs 0.6s
+    from the materialized column at sf1."""
     d = load_table(spark, sf_dir, "documents")
     n_part = spark.sparkContext.defaultParallelism
-    grams = (
+    grams = deferred(
         d.repartition(n_part, "doc_id")
         .select(
             "doc_id",
@@ -178,7 +177,7 @@ def _boilerplate_plan(spark: SparkSession, sf_dir: str):
         )
         .persist()
     )
-    top = (
+    return (
         grams.select(F.explode("gs").alias("gram"))
         .groupBy("gram")
         .agg(F.count("*").alias("n_docs"))
@@ -186,7 +185,6 @@ def _boilerplate_plan(spark: SparkSession, sf_dir: str):
         .orderBy(F.desc("n_docs"), F.asc("gram"))
         .limit(_BOILER_TOP)
     )
-    return top, [grams]
 
 
 @query(

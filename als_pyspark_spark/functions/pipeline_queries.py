@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from als_pyspark_spark.caching import deferred
 from als_pyspark_spark.functions.text import STOPWORDS, tokens, word_ngrams
-from als_pyspark_spark.registry import collected_query, query
+from als_pyspark_spark.registry import query
 from als_pyspark_spark.sources.tables import load_table
 
 # 'cd' = 205/256 ≈ 80.1% of uniformly-distributed 2-hex-digit prefixes.
@@ -1476,12 +1476,12 @@ tot t
 """
 
 
-@collected_query(
+@query(
     "q_pipeline_e2e",
     oracle=_e2e_oracle(),
     tags=("pipeline", "e2e", "composition", "dedup", "quality"),
 )
-def _e2e_plan(spark: SparkSession, sf_dir: str):
+def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE training-data pipeline as ONE composed DataFrame DAG:
     quality gate -> exact dedup -> near dedup (winnow-fp-blocked exact
     Jaccard >= 0.5, drop the larger doc of each pair) -> benchmark
@@ -1507,7 +1507,8 @@ def _e2e_plan(spark: SparkSession, sf_dir: str):
     independent cumsums per source, never a global sort. Gate survivor
     counts ride the dedup aggregate (sum of per-text copy counts), not a
     second corpus pass. The report is |sources| rows; every persisted
-    intermediate is released by ``collected``. At 100 TB the same DAG
+    intermediate is a deferred cache, released once the caller is done
+    with the report. At 100 TB the same DAG
     stages survivors to parquet between super-stages instead of caching
     text twice, but the operator composition is unchanged.
     """
@@ -1517,7 +1518,7 @@ def _e2e_plan(spark: SparkSession, sf_dir: str):
 
     d = load_table(spark, sf_dir, "documents")
     n_part = spark.sparkContext.defaultParallelism
-    base = (
+    base = deferred(
         d.repartition(n_part, "doc_id").select("doc_id", "source", "text").persist()
     )
     # stage 1+2 fused: gate filter, then exact-dedup collapse in one agg;
@@ -1532,14 +1533,16 @@ def _e2e_plan(spark: SparkSession, sf_dir: str):
         )
     )
     toks = tokens(F.col("text"))
-    shingled = kept_e.select(
-        "doc_id",
-        "source",
-        "text",
-        "nc",
-        F.array_distinct(word_ngrams(toks, _SHINGLE_N)).alias("grams"),
-        fingerprint(toks, _SHINGLE_N).alias("fp"),
-    ).persist()
+    shingled = deferred(
+        kept_e.select(
+            "doc_id",
+            "source",
+            "text",
+            "nc",
+            F.array_distinct(word_ngrams(toks, _SHINGLE_N)).alias("grams"),
+            fingerprint(toks, _SHINGLE_N).alias("fp"),
+        ).persist()
+    )
     a, b = shingled.alias("a"), shingled.alias("b")
     inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
     # integer form of jaccard >= 0.5: 2·|∩| >= |a|+|b|-|∩| (exactly
@@ -1553,9 +1556,11 @@ def _e2e_plan(spark: SparkSession, sf_dir: str):
         .select(F.col("b.doc_id").alias("doc_id"))
         .distinct()
     )
-    kept_n = shingled.select("doc_id", "source", "text").join(
-        drops, "doc_id", "anti"
-    ).persist()
+    kept_n = deferred(
+        shingled.select("doc_id", "source", "text")
+        .join(drops, "doc_id", "anti")
+        .persist()
+    )
     bench = (
         base.where(F.col("doc_id") % 97 == 0)
         .select(
@@ -1586,17 +1591,21 @@ def _e2e_plan(spark: SparkSession, sf_dir: str):
     last_chunk = F.floor(
         (F.greatest(m - F.lit(_CHUNK), F.lit(0)) + F.lit(_STRIDE - 1)) / F.lit(_STRIDE)
     ).cast("int")
-    chunks = kept_c.select(
-        "doc_id",
-        "source",
-        "m",
-        F.posexplode(F.sequence(F.lit(0), last_chunk)).alias("chunk_id", "k"),
-    ).select(
-        "doc_id",
-        "source",
-        F.col("chunk_id").cast("long").alias("chunk_id"),
-        F.least(F.lit(_CHUNK), m - F.col("k") * _STRIDE).cast("long").alias("n_tok"),
-    ).persist()
+    chunks = deferred(
+        kept_c.select(
+            "doc_id",
+            "source",
+            "m",
+            F.posexplode(F.sequence(F.lit(0), last_chunk)).alias("chunk_id", "k"),
+        )
+        .select(
+            "doc_id",
+            "source",
+            F.col("chunk_id").cast("long").alias("chunk_id"),
+            F.least(F.lit(_CHUNK), m - F.col("k") * _STRIDE).cast("long").alias("n_tok"),
+        )
+        .persist()
+    )
     h = _doc_hash()
     packed = chunks.select(
         "source", "doc_id", "chunk_id", "n_tok", h.alias("h")
@@ -1630,7 +1639,7 @@ def _e2e_plan(spark: SparkSession, sf_dir: str):
         F.sum("n_tok").alias("n_tokens"),
     )
     tot = chunks.agg(F.sum("n_tok").alias("total_tokens"))
-    out = (
+    return (
         s_in.join(s_g, "source", "left")
         .join(s_n, "source", "left")
         .join(s_c, "source", "left")
@@ -1655,4 +1664,3 @@ def _e2e_plan(spark: SparkSession, sf_dir: str):
             .alias("token_share"),
         )
     )
-    return out, [base, shingled, kept_n, chunks]

@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import local_frame
-from als_pyspark_spark.registry import collected_query, query
+from als_pyspark_spark.caching import deferred, local_frame
+from als_pyspark_spark.registry import query
 from als_pyspark_spark.sources.tables import load_table
 
 
@@ -725,7 +725,7 @@ def q_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@collected_query(
+@query(
     "q_equidepth_deciles",
     oracle="""
 WITH c AS (
@@ -745,7 +745,7 @@ FROM t JOIN s ON s.rn = t.r
 """,
     tags=("aggregate", "percentile", "equi-depth", "two-phase"),
 )
-def _equidepth_plan(spark: SparkSession, sf_dir: str):
+def q_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL exact equi-depth decile boundaries (value at rank ⌊k·n/10⌋,
     k=1..9) over order prices — without ever globally sorting the fact
     table. This is the distributed exact-quantile algorithm:
@@ -778,7 +778,7 @@ def _equidepth_plan(spark: SparkSession, sf_dir: str):
     o = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v")
     )
-    bucketed = o.select("v", F.expr("v DIV 100000").alias("b")).persist()
+    bucketed = deferred(o.select("v", F.expr("v DIV 100000").alias("b")).persist())
     counts = bucketed.groupBy("b").agg(F.count("*").alias("cnt"))
     cum_w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
     cum = counts.select(
@@ -825,4 +825,4 @@ def _equidepth_plan(spark: SparkSession, sf_dir: str):
             F.col("v").alias("value_cents"),
         )
     )
-    return deciles, [bucketed]
+    return deciles

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from als_pyspark_spark.caching import deferred, local_frame
-from als_pyspark_spark.registry import collected_query, query
+from als_pyspark_spark.registry import query
 from als_pyspark_spark.session import ensure_checkpoint_dir
 from als_pyspark_spark.sources.tables import load_table
 
@@ -116,7 +116,7 @@ def _checkpoint_leaf(df: DataFrame) -> DataFrame:
 _PR_ITERS = 3
 
 
-@collected_query(
+@query(
     "q_pagerank_copurchase",
     oracle=f"""
 WITH li AS (
@@ -168,7 +168,7 @@ LIMIT 25
 """,
     tags=("graph", "pagerank", "iterative"),
 )
-def _pagerank_plan(spark: SparkSession, sf_dir: str):
+def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, three iterations) over the undirected
     supplier↔part co-purchase graph derived from lineitem, in exact
     fixed-point integer arithmetic (micro-units): per iteration each node
@@ -191,7 +191,7 @@ def _pagerank_plan(spark: SparkSession, sf_dir: str):
     Undirected edges mean no dangling-mass correction is needed — every
     node has out-degree ≥ 1 by construction.
     """
-    eo = _copurchase_rank_base(spark, sf_dir)
+    eo = deferred(_copurchase_rank_base(spark, sf_dir))
     ranks = _pr_round(eo)
     for _ in range(_PR_ITERS - 1):
         ranks = _pr_round(eo, ranks)
@@ -208,7 +208,7 @@ def _pagerank_plan(spark: SparkSession, sf_dir: str):
         .limit(25)
         .drop("node")
     )
-    return top, [eo]
+    return top
 
 
 _PR_R0 = 1_000_000  # initial rank mass per node (micro-units)
@@ -550,7 +550,7 @@ def _tri_intersections(ed: DataFrame) -> DataFrame:
     ).where(F.size("s") > 0)
 
 
-@collected_query(
+@query(
     "q_triangle_count_parts",
     oracle="""
 WITH op AS (
@@ -576,7 +576,7 @@ LIMIT 20
 """,
     tags=("graph", "triangles", "self-join"),
 )
-def _triangle_top_plan(spark: SparkSession, sf_dir: str):
+def q_triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 parts by triangle participation in the part co-purchase
     graph (edge = two parts share an order): the clustering/community
     primitive behind recommendation diversity and graph-quality metrics.
@@ -620,7 +620,7 @@ def _triangle_top_plan(spark: SparkSession, sf_dir: str):
     oriented list itself does not persist: since the in-row edge explode
     (see ``_tri_intersections``), it is consumed exactly once.
     """
-    e = _copurchase_edges(spark, sf_dir).persist()
+    e = deferred(_copurchase_edges(spark, sf_dir).persist())
     inter = _tri_intersections(_oriented_edges(e))
     credits = inter.select(
         F.explode(
@@ -650,7 +650,7 @@ def _triangle_top_plan(spark: SparkSession, sf_dir: str):
         .orderBy(F.desc("n_triangles"), F.asc("p_partkey"))
         .limit(20)
     )
-    return top, [e]
+    return top
 
 
 @query(
@@ -786,7 +786,7 @@ def q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_ROUNDS = 3
 
 
-@collected_query(
+@query(
     "q_bfs_part_distances",
     oracle=f"""
 WITH op AS (
@@ -827,7 +827,7 @@ GROUP BY dist
 """,
     tags=("graph", "bfs", "shortest-path", "iterative"),
 )
-def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
+def q_bfs_part_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source BFS shortest-path distances (3 rounds) from the
     lowest part key over the part co-purchase graph — the FRONTIER
     iteration shape (expand + min-combine) that complements PageRank's
@@ -861,16 +861,17 @@ def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
     half = _copurchase_edges(spark, sf_dir).select(
         F.col("x").alias("src"), F.col("y").alias("dst")
     )
-    e = half.unionByName(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    e = deferred(
+        half.unionByName(
+            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).persist()
+    )
     root = (
         load_table(spark, sf_dir, "lineitem")
         .agg(F.min("l_partkey").alias("r"))
         .collect()[0]["r"]
     )
     dist = local_frame(spark, [(int(root), 0)], "node long, dist int")
-    caches = [e]
     for _ in range(_BFS_ROUNDS):
         # each round references dist TWICE (union + expanded), so the
         # unrolled tree re-COMPUTED 2^rounds copies of the edge join
@@ -878,8 +879,7 @@ def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
         # (node-sized) makes the second reference an InMemoryTableScan
         # — 3 edge joins total instead of 7 (measured 16.9s → ~4s at
         # sf0.1, identical histogram)
-        dist = dist.persist()
-        caches.append(dist)
+        dist = deferred(dist.persist())
         expanded = (
             e.join(dist.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
@@ -894,7 +894,7 @@ def _bfs_hist_plan(spark: SparkSession, sf_dir: str):
         F.min("node").alias("min_part"),
         F.max("node").alias("max_part"),
     )
-    return hist, caches
+    return hist
 
 
 _LPA_ROUNDS = 2
@@ -903,7 +903,7 @@ _LPA_ROUNDS = 2
 _LPA_LBL_SPACE = 1 << 32  # packed-argmax label space; node ids < 2^32
 
 
-@collected_query(
+@query(
     "q_label_propagation_communities",
     oracle="""
 WITH li AS (
@@ -939,7 +939,7 @@ ORDER BY n_members DESC, community ASC LIMIT 25
 """,
     tags=("graph", "community", "label-propagation", "iterative"),
 )
-def _lpa_plan(spark: SparkSession, sf_dir: str):
+def q_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over the
     parity-packed supplier↔part co-purchase graph (the PageRank graph:
     supplier→2k, part→2k+1, doubled to both directions), 2 rounds,
@@ -979,8 +979,7 @@ def _lpa_plan(spark: SparkSession, sf_dir: str):
       the label table; ≤2 rounds keep the unrolled lineage bounded
       (deeper fixpoints run through :func:`fixpoint`).
 
-    Output is the bounded top-25 histogram, so ``collected`` frees the
-    edge cache.
+    The edge cache is released once the caller is done with the result.
     """
     n_part = spark.sparkContext.defaultParallelism
     li = (
@@ -998,7 +997,7 @@ def _lpa_plan(spark: SparkSession, sf_dir: str):
         (F.col("src") < bound) & (F.col("dst") < bound), F.col("src")
     ).otherwise(F.raise_error("node id exceeds 2^32 packed-argmax space"))
     li = li.select(checked.alias("src"), "dst")
-    e = (
+    e = deferred(
         li.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionByName(li.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .repartition(n_part, "v")
@@ -1037,7 +1036,7 @@ def _lpa_plan(spark: SparkSession, sf_dir: str):
         .orderBy(F.desc("n_members"), F.asc("community"))
         .limit(25)
     )
-    return top, [e]
+    return top
 
 
 # Checkpoint every CC round. Every 3 rounds measured SLOWER despite the

@@ -4,11 +4,20 @@ Every operator/query this engine claims (SURVEY.md §2 inventory + the
 extension operators) registers here with:
 
 - ``build(spark, sf_dir) -> DataFrame``  — the Spark-native implementation
-- ``plan(spark, sf_dir) -> (df, caches)`` — for queries whose build runs on
-  the driver, the distributed plan before it runs, plus the intermediates
-  it persisted; ``None`` when ``build`` itself is lazy
+- ``plan(spark, sf_dir) -> (df, caches)`` — for the queries whose build
+  runs a driver loop with a data-dependent stop, that loop's distributed
+  plan before it runs plus the intermediates it persisted; ``None`` when
+  ``build`` itself is lazy
 - ``oracle``                             — equivalent DuckDB ANSI SQL, or
   ``None`` for genuinely non-SQL-expressible ops (ML training, LSH, streaming)
+
+One cache-lifetime rule holds for every build: a cache the plan reads
+(a persisted intermediate, a trained model's factors) registers with
+:func:`caching.deferred` and is released by the consumer once it is done
+with the result — ``runner.built`` on exit, ``__spark_entry__.queries()``
+before the next build. A build returns its plan unrun; only driver-side
+work that must see data (a quantizer fit, a convergence loop) runs jobs
+in the build.
 
 ``__spark_entry__.queries()`` / ``oracle_sql()`` and the pytest correctness
 gate are both thin views over this registry, so local tests exercise exactly
@@ -17,7 +26,6 @@ the driver's contract.
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
@@ -57,7 +65,8 @@ def query(
     plan: Plan | None = None,
 ):
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``,
-    with ``plan`` as its lazy view when ``fn`` runs jobs on the driver.
+    with ``plan`` as its lazy view when ``fn`` runs a data-dependent
+    driver loop.
     Raises ``ValueError`` if ``name`` is already registered."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
@@ -76,28 +85,6 @@ def query(
             requires=requires,
             plan=plan,
         )
-        return fn
-
-    return deco
-
-
-def collected_query(name: str, **kwargs):
-    """Decorator: register the lazy plan ``fn(spark, sf_dir) -> (df, caches)``
-    of a query with a bounded result under ``name`` (``kwargs`` as for
-    :func:`query`). Its build collects ``df`` through
-    :func:`caching.collected`, which frees ``caches``."""
-
-    def deco(fn: Plan):
-        @functools.wraps(fn)
-        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Looked up per call, not bound at import, so a wrapper a
-            # tracer installs on ``caching.collected`` is always seen.
-            from als_pyspark_spark import caching
-
-            df, caches = fn(spark, sf_dir)
-            return caching.collected(spark, df, *caches)
-
-        query(name, plan=fn, **kwargs)(build)
         return fn
 
     return deco

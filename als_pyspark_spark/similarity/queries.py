@@ -23,9 +23,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import local_frame
+from als_pyspark_spark.caching import deferred, local_frame
 from als_pyspark_spark.functions.arrays import cosine, l2_norm
-from als_pyspark_spark.registry import collected_query, query
+from als_pyspark_spark.registry import query
 from als_pyspark_spark.sources.tables import load_table
 
 _DIM = 64
@@ -172,7 +172,7 @@ def _with_buckets(e: DataFrame, n_planes: int, n_blocks: int, spread: bool = Fal
     )
 
 
-@collected_query(
+@query(
     "q_ann_lsh_top10",
     oracle=f"""
 WITH bk AS (
@@ -195,7 +195,7 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id 
 """,
     tags=("similarity", "ann", "lsh"),
 )
-def _ann_lsh_plan(spark: SparkSession, sf_dir: str):
+def q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN top-10: candidates share a random-hyperplane bucket
     in ≥1 of 4 blocks; exact cosine re-rank within candidates.
 
@@ -207,10 +207,8 @@ def _ann_lsh_plan(spark: SparkSession, sf_dir: str):
     measure-zero on isotropic float data. Recall vs q_ann_bruteforce_top10
     additionally asserted in tests.
 
-    Bounded result (≤ _N_QUERIES × _TOP_K rows): materialized via
-    ``collected`` so the persisted bucket table is released instead of
-    leaking for the session lifetime (the caching.collected discipline
-    every other persisting query follows).
+    The persisted bucket table is a deferred cache: it is released once
+    the caller is done with the result, not kept for the session.
     """
     e = load_table(spark, sf_dir, "embeddings")
     # Bucket ONCE and derive the query side by filter: the bucketing plan
@@ -218,7 +216,9 @@ def _ann_lsh_plan(spark: SparkSession, sf_dir: str):
     # inside a HOF pipeline), and the query vectors are corpus rows, so a
     # second _with_buckets pass would re-analyze and re-run the identical
     # expression for no new information.
-    corpus = _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS, spread=True).persist()
+    corpus = deferred(
+        _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS, spread=True).persist()
+    )
     queries = corpus.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "bucket"
     )
@@ -239,7 +239,7 @@ def _ann_lsh_plan(spark: SparkSession, sf_dir: str):
         .where(F.col("rk") <= _TOP_K)
         .select("query_id", "neighbor_id")
     )
-    return top, [corpus]
+    return top
 
 
 @query(
@@ -399,8 +399,8 @@ def _assign_batches(cents: np.ndarray, q_units: np.ndarray):
     return assign
 
 
-@collected_query("q_ann_ivf_top10", oracle=None, tags=("similarity", "ann", "ivf"))
-def _ivf_plan(spark: SparkSession, sf_dir: str):
+@query("q_ann_ivf_top10", oracle=None, tags=("similarity", "ann", "ivf"))
+def q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-10: coarse quantizer fit on a bounded seeded sample →
     inverted lists by cluster id → probe the nprobe nearest centroids per
     query → exact cosine re-rank within the probed lists.
@@ -428,9 +428,8 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
     bounded query set — the labeled recall baseline; at 100 TB you would
     drop the witness and sample-audit recall offline instead.
 
-    Bounded result (≤ _N_QUERIES × _TOP_K rows): materialized via
-    ``collected`` so the persisted assignment table is released instead
-    of leaking for the session lifetime (same as the LSH/rerank pair).
+    The persisted tables are deferred caches, released once the caller
+    is done with the result (same as the LSH/rerank pair).
 
     The persisted tables are the ones read more than once: the cluster
     assignment (candidate lists + witness) and the ≤ q·k-row top-k
@@ -472,7 +471,7 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
 
     # spread before the Arrow pass: the embeddings parquet may be a single
     # row group (1 task), and the assignment matmuls are the CPU-heavy step
-    assigned = (
+    assigned = deferred(
         e.select("vec_id", "embedding")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .mapInArrow(
@@ -517,7 +516,7 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     # ≤ _N_QUERIES × _TOP_K rows, read twice (output + recall witness):
     # persisting it stops the whole candidate scan from running twice.
-    ivf = (
+    ivf = deferred(
         pairs.join(F.broadcast(probes), ["query_id", "cluster"])
         .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= _TOP_K)
@@ -548,10 +547,9 @@ def _ivf_plan(spark: SparkSession, sf_dir: str):
         "recall10",
         (F.avg("recall10").over(all_q) >= 0.5).alias("within_bound"),
     )
-    top = ivf.join(F.broadcast(witnessed), "query_id").select(
+    return ivf.join(F.broadcast(witnessed), "query_id").select(
         "query_id", "neighbor_id", "cos_rounded", "recall10", "within_bound"
     )
-    return top, [assigned, ivf]
 
 
 _PQ_M = 8  # product-quantizer subspaces (64 dims → 8 × 8-dim)
@@ -719,10 +717,8 @@ def _pq_encode_batches(
     return encode
 
 
-@collected_query(
-    "q_ann_ivfpq_top10", oracle=None, tags=("similarity", "ann", "ivf", "pq")
-)
-def _ivfpq_plan(spark: SparkSession, sf_dir: str):
+@query("q_ann_ivfpq_top10", oracle=None, tags=("similarity", "ann", "ivf", "pq"))
+def q_ann_ivfpq_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN top-10 — the memory-compressed scale tier of the ANN
     stack (the FAISS IVFPQ + refine architecture): coarse inverted lists
     over unit vectors (cosine = inner product on the unit sphere),
@@ -759,8 +755,8 @@ def _ivfpq_plan(spark: SparkSession, sf_dir: str):
     witness-free production form scores only probed clusters via the
     LUTs.
 
-    Bounded result (≤ _N_QUERIES × _TOP_K rows): materialized via
-    ``collected``; caches released (assigned codes + the ≤50-row top-k).
+    The assigned codes and the ≤50-row top-k are deferred caches,
+    released once the caller is done with the result.
     """
     e = load_table(spark, sf_dir, "embeddings")
     fit_rows = (
@@ -808,7 +804,7 @@ def _ivfpq_plan(spark: SparkSession, sf_dir: str):
     # spread before the Arrow pass: the embeddings parquet may be a single
     # row group (1 task), and the per-subspace code matmuls are the
     # CPU-heavy step (measured 7.1s single-task → sub-second spread)
-    assigned = (
+    assigned = deferred(
         e.select("vec_id", "embedding")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .mapInArrow(
@@ -859,7 +855,7 @@ def _ivfpq_plan(spark: SparkSession, sf_dir: str):
     w_cos = Window.partitionBy("query_id").orderBy(
         F.desc("cos"), F.asc("neighbor_id")
     )
-    pq_top = (
+    pq_top = deferred(
         shortlist.withColumn("rk2", F.row_number().over(w_cos))
         .where(F.col("rk2") <= _TOP_K)
         .select("query_id", "neighbor_id", F.round("adc", 4).alias("adc_rounded"))
@@ -905,10 +901,9 @@ def _ivfpq_plan(spark: SparkSession, sf_dir: str):
         "recall10",
         (F.avg("recall10").over(all_q) >= _PQ_RECALL_FLOOR).alias("within_bound"),
     )
-    top = pq_top.join(F.broadcast(witnessed), "query_id").select(
+    return pq_top.join(F.broadcast(witnessed), "query_id").select(
         "query_id", "neighbor_id", "adc_rounded", "recall10", "within_bound"
     )
-    return top, [assigned, pq_top]
 
 
 # Planted near-dups: scaled copies of the first _PLANT vectors, ids offset
@@ -1126,7 +1121,7 @@ _RERANK_CAND = 40
 _RERANK_K = 5
 
 
-@collected_query(
+@query(
     "q_rerank_two_stage_topk",
     oracle=f"""
 WITH bk AS (
@@ -1165,7 +1160,7 @@ WHERE rk <= {_RERANK_K}
 """,
     tags=("similarity", "ann", "rerank", "two-stage"),
 )
-def _rerank_plan(spark: SparkSession, sf_dir: str):
+def q_rerank_two_stage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieve-then-rerank top-k: stage 1 shortlists 40
     candidates per query by LSH-bucketed cosine (the q_ann_lsh_top10
     recall stage); stage 2 re-fetches ONLY the shortlist's vectors and
@@ -1186,12 +1181,13 @@ def _rerank_plan(spark: SparkSession, sf_dir: str):
     shortlist, and the neighbor-vector re-fetch is a keyed join against
     the (bucketed) embedding table, broadcast on the shortlist side.
 
-    Bounded result (≤ _N_QUERIES × _RERANK_K rows): materialized via
-    ``collected`` so the stage-1 bucket cache is released instead of
-    leaking for the session lifetime.
+    The stage-1 bucket cache is deferred, released once the caller is
+    done with the result.
     """
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS, spread=True).persist()
+    corpus = deferred(
+        _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS, spread=True).persist()
+    )
     queries = corpus.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "bucket"
     )
@@ -1234,7 +1230,7 @@ def _rerank_plan(spark: SparkSession, sf_dir: str):
         (sum_d(mins) / sum_d(maxs)).alias("xscore"),
     )
     w2 = Window.partitionBy("query_id").orderBy(F.desc("xscore"), F.asc("neighbor_id"))
-    top = (
+    return (
         rescored.withColumn("rk", F.row_number().over(w2))
         .where(F.col("rk") <= _RERANK_K)
         .select(
@@ -1243,7 +1239,6 @@ def _rerank_plan(spark: SparkSession, sf_dir: str):
             F.col("rk").cast("long").alias("rerank_pos"),
         )
     )
-    return top, [corpus]
 
 
 # Semantic dedup: embedding-threshold clustering. Planted construction

@@ -3,9 +3,9 @@
 Usage: python scripts/capture_plans.py <outdir> <suffix> <query> [query ...]
 
 Writes <outdir>/<query>_<suffix>.txt per query (e.g. suffix 'before' /
-'after' around an optimization). Queries whose build runs on the driver
-are captured through their lazy ``Query.plan``, so the file shows the
-distributed plan, not a bounded LocalRelation.
+'after' around an optimization). Queries whose build runs a data-dependent
+driver loop are captured through their lazy ``Query.plan``, so the file
+shows the distributed plan, not the rows the loop returns.
 """
 
 from __future__ import annotations

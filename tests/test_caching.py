@@ -1,8 +1,8 @@
-"""caching.deferred / release_deferred — the harness-checkpoint release
-path for caches whose query RESULT is corpus-proportional (collected()
-would bottleneck the driver) but that have no cross-query readers
-(round-11 ADVICE: the decontaminate gram table leaked for the session
-lifetime) — and caching.local_frame, the Arrow LocalRelation path every
+"""caching.deferred / release_deferred — the one release path for the
+caches a query's plan reads, freed by the consumer once it is done with
+the result (the decontaminate gram table once leaked for the session
+lifetime) — caching.collected, the bounded-result helper perfbench's
+tracer wraps, and caching.local_frame, the Arrow LocalRelation path every
 driver-side row list takes back into Spark."""
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ from decimal import Decimal
 
 import pytest
 from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -28,8 +29,6 @@ from pyspark.sql.types import (
 
 from als_pyspark_spark import caching
 from als_pyspark_spark.caching import deferred, local_frame, release_deferred
-from als_pyspark_spark.registry import load_all_queries
-from als_pyspark_spark.runner import built
 
 
 def _is_cached(df) -> bool:
@@ -155,9 +154,31 @@ def test_local_frame_zero_rows(spark):
     _assert_local_relation(df)
 
 
-def test_collected_result_is_a_local_relation(spark, sf_dir):
-    """A @collected_query's result (here the IVF index build) comes back as
-    a LocalRelation, not a LogicalRDD over a Python RDD."""
-    with built(spark, load_all_queries()["q_ann_ivf_top10"], sf_dir) as df:
-        _assert_local_relation(df)
-        assert df.count() > 0
+def test_collected_result_is_a_local_relation(spark):
+    """``caching.collected`` (the helper perfbench's tracer wraps) returns a
+    bounded result as a LocalRelation with the result's schema, and
+    unpersists the caches it is handed."""
+    cached = spark.range(20).persist()
+    result = cached.where("id % 5 = 0").selectExpr("id", "id * 2 AS twice")
+    df = caching.collected(spark, result, cached)
+    _assert_local_relation(df)
+    assert df.schema == result.schema
+    assert [tuple(r) for r in df.collect()] == [(i, 2 * i) for i in (0, 5, 10, 15)]
+    assert not _is_cached(cached)
+
+
+def test_driver_entry_releases_the_previous_query_caches(spark, sf_dir):
+    """A build handed out by ``__spark_entry__.queries()`` first releases
+    the deferred caches of the build before it, so a driver that consumes
+    each result before building the next query holds one query's caches
+    at a time."""
+    import __spark_entry__
+
+    builds = __spark_entry__.queries()
+    release_deferred()
+    builds["q_equidepth_deciles"](spark, sf_dir).collect()
+    held = [c for c in caching._DEFERRED if isinstance(c, DataFrame)]
+    assert held and all(_is_cached(c) for c in held)
+    builds["q1_pricing_summary"](spark, sf_dir).collect()
+    assert not any(_is_cached(c) for c in held)
+    release_deferred()

@@ -54,8 +54,7 @@ def test_boilerplate_ngrams_nonvacuous_and_bounded(spark, sf_dir):
 
 
 def test_boilerplate_uses_take_ordered(spark, sf_dir):
-    # the registered build collects, so inspect the distributed Query.plan
-    with built(spark, QUERIES["q_boilerplate_ngrams"], sf_dir, plan=True) as top:
+    with built(spark, QUERIES["q_boilerplate_ngrams"], sf_dir) as top:
         plan = plan_of(top)
     assert "TakeOrderedAndProject" in plan, plan
 

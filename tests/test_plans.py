@@ -9,6 +9,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,11 +20,12 @@ from als_pyspark_spark.runner import built
 from als_pyspark_spark.sources.tables import load_table
 
 QUERIES = load_all_queries()
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def lazy_plan(spark, sf_dir, name, render=plan_of) -> str:
-    """``render`` of a query's lazy ``Query.plan``, for queries whose build
-    collects on the driver; the runner releases the plan's caches."""
+    """``render`` of a query's lazy plan (its ``Query.plan`` where it
+    declares one, else its build); the runner releases the plan's caches."""
     with built(spark, QUERIES[name], sf_dir, plan=True) as df:
         return render(df)
 
@@ -843,20 +846,80 @@ def test_pagerank_converged_constant_plan_across_rounds(spark, sf_dir):
     assert shapes[0] == shapes[1] == shapes[2], shapes
 
 
-@pytest.mark.parametrize("name", ["q_kcore_peeling", "q_pagerank_converged"])
-def test_fixpoint_plan_starts_no_job(spark, sf_dir, name):
-    """A plan-mode build of a checkpointed loop runs none of its rounds:
-    once the first build has read the parquet schema, a second starts no
-    Spark job (under AQE a lazy checkpoint would run each round's shuffle
-    stages)."""
+def _jobs_in_second_build(spark, sf_dir, name, plan) -> int:
+    """Spark jobs started by a build of ``name`` (its ``Query.plan`` with
+    ``plan``) once a first build has read the parquet schemas."""
     sc = spark.sparkContext
-    lazy_plan(spark, sf_dir, name)
-    sc.setJobGroup(f"plan-{name}", "plan-mode build")
+
+    def build():
+        with built(spark, QUERIES[name], sf_dir, plan=plan):
+            pass
+
+    build()
+    sc.setJobGroup(f"build-{name}", "second build")
     try:
-        lazy_plan(spark, sf_dir, name)
+        build()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(f"plan-{name}")) == []
+    return len(sc.statusTracker().getJobIdsForGroup(f"build-{name}"))
+
+
+@pytest.mark.parametrize("name", ["q_kcore_peeling", "q_pagerank_converged"])
+def test_fixpoint_plan_starts_no_job(spark, sf_dir, name):
+    """A plan-mode build of a checkpointed loop runs none of its rounds
+    (under AQE a lazy checkpoint would run each round's shuffle stages)."""
+    assert _jobs_in_second_build(spark, sf_dir, name, plan=True) == 0
+
+
+# The bounded queries whose build is their lazy plan, with the jobs of the
+# bounded driver phase each may still run (counted at sf0.01): the IVF and
+# IVF-PQ quantizer fit and probe routing, BFS's root lookup, and
+# equidepth's row count and ≤9-row hit table.
+_LAZY_BUILD_JOBS = {
+    "q_ann_ivf_top10": 2,
+    "q_ann_ivfpq_top10": 2,
+    "q_ann_lsh_top10": 0,
+    "q_bfs_part_distances": 2,
+    "q_boilerplate_ngrams": 0,
+    "q_equidepth_deciles": 7,
+    "q_label_propagation_communities": 0,
+    "q_pagerank_copurchase": 0,
+    "q_pipeline_e2e": 0,
+    "q_rerank_two_stage_topk": 0,
+    "q_triangle_count_parts": 0,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LAZY_BUILD_JOBS))
+def test_bounded_build_runs_only_its_driver_phase(spark, sf_dir, name):
+    """A bounded query's build returns its plan unrun: the only jobs it
+    starts are its bounded driver phase, never the query itself."""
+    assert QUERIES[name].plan is None
+    jobs = _jobs_in_second_build(spark, sf_dir, name, plan=False)
+    assert jobs <= _LAZY_BUILD_JOBS[name]
+
+
+def _audit_module():
+    """``scripts/explain_audit.py``, imported from its path."""
+    import importlib.util
+
+    path = os.path.join(_REPO, "scripts", "explain_audit.py")
+    spec = importlib.util.spec_from_file_location("explain_audit", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+@pytest.mark.parametrize("name", [*sorted(_LAZY_BUILD_JOBS), "als_implicit_top3"])
+def test_audit_line_matches_plan_baseline(spark, sf_dir, name):
+    """The audit's line for ``name`` is the one scripts/plan_baseline.txt
+    holds (an sf0.001 snapshot), so a plan change on these queries, or a
+    baseline left stale, fails here."""
+    if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+        pytest.skip("plan_baseline.txt is an sf0.001 snapshot")
+    with open(os.path.join(_REPO, "scripts", "plan_baseline.txt")) as f:
+        baseline = {line.split()[0]: line.rstrip("\n") for line in f}
+    assert _audit_module().audit_line(spark, QUERIES[name], sf_dir) == baseline[name]
 
 
 def test_bpe_train_cluster_footprint_is_one_aggregate(spark, sf_dir):

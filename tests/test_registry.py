@@ -218,7 +218,7 @@ def test_dtype_parity_catches_hugeint_class():
 def test_every_persist_site_is_released_or_documented():
     """Mechanical closure of the round-9 cache-leak class: every
     ``.persist()`` in the engine must sit in a function that either
-    releases the cache (``caching.collected`` / an explicit
+    releases the cache (``caching.deferred`` / an explicit
     ``unpersist``), hands it to its caller for release (the
     ``return <df>, [caches]`` lazy-plan-helper convention), or carries
     the 'deliberate session-lifetime cache' marker comment pointing at
@@ -252,8 +252,7 @@ def test_every_persist_site_is_released_or_documented():
                 )
                 released = (
                     "unpersist" in body
-                    or "collected(" in body
-                    or "deferred(" in body  # harness-checkpoint release
+                    or "deferred(" in body  # released by the consumer
                     or re.search(r"return .*, \[", body) is not None
                     or re.search(r"return .*, caches", body) is not None
                 )
