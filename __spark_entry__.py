@@ -3,6 +3,8 @@
 Thin view over the engine's query registry (als_pyspark_spark.registry):
 every operator from SURVEY.md §2 plus the extension operators registers a
 ``queries()`` entry there, with a DuckDB oracle where SQL-expressible.
+Every build runs on a fresh engine session (``session.engine_session``),
+so the caller's own session is left as it was.
 """
 
 from __future__ import annotations
@@ -11,13 +13,27 @@ import functools
 import os
 import sys
 from collections.abc import Callable
+from contextlib import AbstractContextManager
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from als_pyspark_spark.caching import release_deferred
 from als_pyspark_spark.registry import load_all_queries, requirements_met
+from als_pyspark_spark.session import engine_session
+
+
+def _engine(spark: SparkSession) -> AbstractContextManager[SparkSession]:
+    """:func:`engine_session` on ``spark``, whose Python workers import the
+    engine from this checkout too: the driver's ``sys.path`` does not
+    reach them, the context's PYTHONPATH environment entry does."""
+    env = spark.sparkContext.environment
+    path = env.get("PYTHONPATH", "")
+    if _HERE not in path.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(filter(None, (_HERE, path)))
+    return engine_session(spark)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,30 +47,33 @@ def entry(spark: SparkSession) -> DataFrame:
     from als_pyspark_spark.sources.ratings import ratings
 
     sf_dir = "/root/testdata/sf0.001"
-    r = ratings(spark, sf_dir).cache()
-    eng = ALSEngine(ALSParams(rank=10, max_iter=5, reg_param=0.1, seed=42)).train(r)
-    preds = eng.predict(r)
-    return (
-        preds.groupBy("user")
-        .agg(
-            F.count("*").alias("n_rated"),
-            F.avg(F.pow(F.col("prediction") - F.col("rating"), 2)).alias("user_mse"),
+    with _engine(spark) as spark:
+        r = ratings(spark, sf_dir).cache()
+        eng = ALSEngine(ALSParams(rank=10, max_iter=5, reg_param=0.1, seed=42)).train(r)
+        preds = eng.predict(r)
+        return (
+            preds.groupBy("user")
+            .agg(
+                F.count("*").alias("n_rated"),
+                F.avg(F.pow(F.col("prediction") - F.col("rating"), 2)).alias("user_mse"),
+            )
+            .orderBy("user")
         )
-        .orderBy("user")
-    )
 
 
-def _after_release(
+def _on_engine_session(
     build: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """``build``, first releasing the deferred caches of the build before
-    it: the driver consumes one result before it builds the next query,
-    so each query's caches live until the next build starts."""
+    """``build`` on a fresh engine session, first releasing the deferred
+    caches of the build before it: the driver consumes one result before
+    it builds the next query, so each query's caches live until the next
+    build starts."""
 
     @functools.wraps(build)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         release_deferred()
-        return build(spark, sf_dir)
+        with _engine(spark) as session:
+            return build(session, sf_dir)
 
     return run
 
@@ -64,7 +83,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # this environment are excluded — the registry itself is deterministic
     # across machines; availability only affects this sweep view.
     return {
-        name: _after_release(q.build)
+        name: _on_engine_session(q.build)
         for name, q in load_all_queries().items()
         if requirements_met(q)
     }

@@ -245,7 +245,7 @@ def train(
       (x, rnorm) tuple, D3);
     - ``check_point_interval`` actually checkpoints (reference accepts and
       ignores it, ALS.py:36,101) — provided the session has a checkpoint
-      dir (session.build_session sets one).
+      dir (build_session and every engine session claim one).
 
     The 10/10 block defaults are the reference's. ``num_user_blocks`` fixes
     the seeded model (each user block seeds its own initial factors);

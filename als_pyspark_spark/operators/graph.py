@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from als_pyspark_spark.caching import deferred, local_frame
 from als_pyspark_spark.registry import query
-from als_pyspark_spark.session import ensure_checkpoint_dir
 from als_pyspark_spark.sources.tables import load_table
 
 
@@ -65,10 +64,8 @@ def fixpoint(
       caches are alive at once. Every round cache is also registered
       with ``caching.deferred``, so the harness frees the one behind the
       returned table once the caller's result is consumed, and any cache
-      a failed round left behind.
-    - ``Dataset.checkpoint`` needs a checkpoint dir, which a bare
-      embedding session lacks, so the driver claims one on the input's
-      own session (``session.ensure_checkpoint_dir``).
+      a failed round left behind. ``Dataset.checkpoint`` needs the
+      checkpoint dir every engine session claims.
 
     Without ``run`` the rounds are built lazily for ``Query.plan``: no
     persist, no probe action, and no ``until``. A checkpoint round becomes
@@ -77,7 +74,6 @@ def fixpoint(
     still runs the round's shuffle stages. The plan renders as the run's
     does and starts no job, but it is for inspection: it returns no rows.
     """
-    ensure_checkpoint_dir(first.sparkSession)
     prev: DataFrame | None = None
     held: DataFrame | None = None  # the cache behind ``prev``, if any
     stats: list = []

@@ -395,18 +395,12 @@ def q_recursive_referral_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     The walk materializes ~n·log2(n) rows, which exceeds Spark's default
     1M-row recursion safety guard at SF ≥ ~0.5 (measured: sf1's 1.5M
     customers need ~31M rows). The guard is a runaway-recursion limit,
-    not a capacity bound, so build_session raises the ROW limit
-    engine-wide while keeping the LEVEL limit (depth is what catches a
-    non-terminating recursion); set spark.sql.cteRecursionRowLimit on a
-    caller-owned session accordingly. The conf must be set at execution
-    time, not build time — recursion limits are read when the returned
-    (lazy) DataFrame runs, so a set-then-restore around this builder
-    would silently re-trip the guard at collect."""
+    not a capacity bound, so the engine session's runtime conf raises
+    the ROW limit while keeping the LEVEL limit (depth is what catches a
+    non-terminating recursion)."""
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "recursive_referral_customer"
     )
-    if int(spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000")) < 10**9:
-        spark.conf.set("spark.sql.cteRecursionRowLimit", str(1_000_000_000))
     return spark.sql(
         _REFERRAL_SQL.format(customer="recursive_referral_customer", div="DIV")
     )

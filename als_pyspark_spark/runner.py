@@ -1,7 +1,7 @@
 """The one way harnesses run a registered query: :func:`built` builds it
-(or its lazy ``Query.plan``) and releases what it cached on exit,
-:func:`force` runs it into the noop sink, and :func:`reset_memos` makes the
-next run re-pay the cross-query memos."""
+(or its lazy ``Query.plan``) on a fresh engine session and releases what
+it cached on exit, :func:`force` runs it into the noop sink, and
+:func:`reset_memos` makes the next run re-pay the cross-query memos."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from als_pyspark_spark.caching import release_deferred
 from als_pyspark_spark.registry import Query
+from als_pyspark_spark.session import engine_session
 
 
 class QueryError(RuntimeError):
@@ -29,20 +30,22 @@ def built(
     spark: SparkSession, q: Query, sf_dir: str, plan: bool = False
 ) -> Iterator[DataFrame]:
     """Yield ``q``'s DataFrame, or with ``plan`` its ``Query.plan`` where it
-    declares one, with the query name as the job description. On exit,
-    unpersist the plan's caches and every deferred cache. A failure
-    re-raises as :class:`QueryError`, in phase ``build`` while building
-    and ``execute`` in the caller's body."""
+    declares one, built on a fresh ``session.engine_session(spark)`` (so
+    ``spark`` is left as it was) with the query name as the job
+    description. On exit, unpersist the plan's caches and every deferred
+    cache. A failure re-raises as :class:`QueryError`, in phase ``build``
+    while building and ``execute`` in the caller's body."""
     sc = spark.sparkContext
     sc.setJobDescription(q.name)
     phase, caches = "build", ()
     try:
-        if plan and q.plan is not None:
-            df, caches = q.plan(spark, sf_dir)
-        else:
-            df = q.build(spark, sf_dir)
-        phase = "execute"
-        yield df
+        with engine_session(spark) as session:
+            if plan and q.plan is not None:
+                df, caches = q.plan(session, sf_dir)
+            else:
+                df = q.build(session, sf_dir)
+            phase = "execute"
+            yield df
     except Exception as exc:
         raise QueryError(q.name, phase, exc) from exc
     finally:

@@ -1,14 +1,16 @@
-"""SparkSession factory tuned for this engine.
+"""The engine's session policy, in one place.
 
-Defaults are chosen for a single local box but every knob is the one you
-would also set on a 1000-executor cluster:
-
-- AQE on (runtime re-plan: coalesce shuffle partitions, skew-join split).
-- Arrow on (vectorized pandas UDF / toPandas transfers).
-- Session timezone pinned to UTC so timestamp semantics match the DuckDB
-  oracle regardless of host TZ.
-- shuffle.partitions sized to cores locally; on a real cluster this scales
-  with executors (AQE coalesces the excess, so over-provisioning is safe).
+Rule: every query runs on an engine session (:func:`engine_session`): a
+new session on the caller's context with the engine's runtime SQL conf
+(:func:`runtime_conf`: shuffle partitions at the context's parallelism,
+AQE, Arrow, UTC, broadcast threshold, recursion limit, nanosAsLong) and
+a checkpoint dir. ``runner.built`` and ``__spark_entry__`` are the only
+places the engine takes a session from outside, so no query pins a
+setting itself or changes state another query can see. Only
+stream-scoped overrides remain elsewhere (``run_to_memory``'s state
+partitions, ``q_stream_tws_user_max``'s state-store provider).
+:func:`build_session` starts a local context with the same runtime conf
+plus the static settings (driver memory, UI off, checkpoint cleaner).
 """
 
 from __future__ import annotations
@@ -17,6 +19,8 @@ import atexit
 import os
 import shutil
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -88,15 +92,11 @@ def _sweep_stale_checkpoints(base: str, max_age_s: float = 3 * 3600) -> None:
                 if not _pid_alive(pid):
                     shutil.rmtree(path, ignore_errors=True)
                 elif os.path.getmtime(marker) < time.time() - _PID_REUSE_AGE_S:
-                    # "alive" may be an unrelated process that recycled
-                    # the dead owner's pid — past the 48 h fallback gate
-                    # no genuine local session can still own this dir.
-                    # Age is judged from the MARKER's mtime, which the
-                    # owner re-touches on every ensure_checkpoint_dir
-                    # call: checkpoint WRITES land in nested rdd-N subdirs
-                    # and never bump the base dir's mtime, so a live long
-                    # session would look idle by dir mtime. Liveness is
-                    # owner-asserted, not inferred from write patterns.
+                    # "alive" may be an unrelated process that recycled the
+                    # dead owner's pid. Age is the MARKER's mtime, which the
+                    # owner re-touches on every ensure_checkpoint_dir call:
+                    # checkpoint writes land in nested rdd-N subdirs and
+                    # never bump the base dir's mtime.
                     shutil.rmtree(path, ignore_errors=True)
                 continue
             if os.path.getmtime(path) < cutoff:
@@ -108,18 +108,11 @@ def _sweep_stale_checkpoints(base: str, max_age_s: float = 3 * 3600) -> None:
 def ensure_checkpoint_dir(spark: SparkSession) -> str:
     """Set (and hygienically manage) a scratch checkpoint directory on
     ``spark`` if none is configured; return the directory URI.
+    ``Dataset.checkpoint`` (the fixpoint loop in operators/graph.py) throws
+    without one, so every engine session claims it.
 
-    Session-SELF-SUFFICIENT on purpose: callers that need
-    ``Dataset.checkpoint`` (the connected-components loop in
-    operators/graph.py) invoke this lazily on the DataFrame's OWN session,
-    so the iterative queries work on any externally-built bare
-    SparkSession, where ``Dataset.checkpoint`` would otherwise throw for
-    want of a dir. Same pattern as the per-query UTC pin in
-    sources/tables.py.
-
-    Hygiene owned here (idempotent; a dir already set — by this helper,
-    by ``build_session``, or by the embedding application — is respected
-    untouched):
+    Hygiene owned here (idempotent; a dir already set — by this helper or
+    by the embedding application — is respected untouched):
 
     - startup sweep of dirs leaked by DEAD sessions (liveness-marker
       gated, see :func:`_sweep_stale_checkpoints`);
@@ -134,11 +127,10 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
     sc = spark.sparkContext
     own = sc.getCheckpointDir()
     if own is not None:
-        # Dir already claimed (by an earlier call here, build_session, or
-        # the embedding app). If the liveness marker in it is OURS,
-        # re-touch it: every query that lazily claims checkpointing
-        # refreshes the owner-asserted heartbeat the 48 h sweep fallback
-        # reads, so a long-lived session that keeps working keeps its dir.
+        # Dir already claimed (by an earlier call here or the embedding
+        # app). If the liveness marker in it is OURS, re-touch it: every
+        # engine session refreshes the owner-asserted heartbeat the 48 h
+        # sweep fallback reads, so a long-lived process keeps its dir.
         local = own.removeprefix("file:") if own.startswith("file:") else own
         marker = os.path.join(local, _OWNER_MARKER)
         try:
@@ -148,27 +140,20 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
         except (OSError, ValueError):
             pass  # foreign/absent marker: not ours to touch
         return own
-    else:
-        base = os.path.abspath(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "..",
-                ".scratch",
-                "checkpoints",
-            )
-        )
-        _sweep_stale_checkpoints(base)
-        sc.setCheckpointDir(base)
-        # getCheckpointDir returns a file: URI in local mode — strip the
-        # scheme for filesystem work but return the URI Spark reported.
-        own = sc.getCheckpointDir()
-        local = own.removeprefix("file:") if own.startswith("file:") else own
-        try:
-            with open(os.path.join(local, _OWNER_MARKER), "w") as f:
-                f.write(str(os.getpid()))
-        except OSError:
-            pass  # marker is an optimization; the age gate still applies
-        atexit.register(shutil.rmtree, local, ignore_errors=True)
+    here = os.path.dirname(os.path.abspath(__file__))
+    base = os.path.abspath(os.path.join(here, "..", ".scratch", "checkpoints"))
+    _sweep_stale_checkpoints(base)
+    sc.setCheckpointDir(base)
+    # getCheckpointDir returns a file: URI in local mode — strip the
+    # scheme for filesystem work but return the URI Spark reported.
+    own = sc.getCheckpointDir()
+    local = own.removeprefix("file:") if own.startswith("file:") else own
+    try:
+        with open(os.path.join(local, _OWNER_MARKER), "w") as f:
+            f.write(str(os.getpid()))
+    except OSError:
+        pass  # marker is an optimization; the age gate still applies
+    atexit.register(shutil.rmtree, local, ignore_errors=True)
     return own
 
 
@@ -179,55 +164,83 @@ def local_cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 
-def build_session(
-    app_name: str = "als-pyspark-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    cpus = local_cpus()
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = (
-            int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
-        )
-
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Local mode: driver heap is the only memory knob. 16g is measured
-        # flat vs 8g at sf0.1 while giving sf1+ headroom; 48g measured 2x
-        # SLOWER end-to-end (heap commit + GC region overhead dominates).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+def runtime_conf(shuffle_partitions: int) -> dict[str, str]:
+    """The engine's runtime SQL conf: what every engine session sets."""
+    return {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # Recursive CTEs: the default 1M-row limit is a runaway-recursion
         # guard sized for toy queries — a log-depth hierarchy walk over a
         # real table exceeds it by SF ~0.5 (q_recursive_referral_depth
         # needs ~n·log2(n) rows: ~31M at sf1). The level limit (100)
         # stays: depth, not volume, is what catches a non-terminating
         # recursion.
-        .config("spark.sql.cteRecursionRowLimit", str(1_000_000_000))
+        "spark.sql.cteRecursionRowLimit": str(1_000_000_000),
+        # events.ts ships as parquet TIMESTAMP(NANOS) in some data drops,
+        # which Spark reads only as raw int64 (sources/tables.py).
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }
+
+
+@contextmanager
+def engine_session(spark: SparkSession) -> Iterator[SparkSession]:
+    """A new session on ``spark``'s context with :func:`runtime_conf` set
+    and a checkpoint dir claimed, active for the block (Spark resolves a
+    registered Python data source on the active session); the session
+    active before is restored on exit. The new session has its own conf,
+    temp views and functions, and shares the context and the cache
+    manager with ``spark``, which it leaves untouched."""
+    session = spark.newSession()
+    for k, v in runtime_conf(spark.sparkContext.defaultParallelism).items():
+        session.conf.set(k, v)
+    ensure_checkpoint_dir(session)
+    jvm_class = SparkSession._get_j_spark_session_class(spark._jvm)
+    jvm_before, before = jvm_class.getActiveSession(), SparkSession._activeSession
+    jvm_class.setActiveSession(session._jsparkSession)
+    SparkSession._activeSession = session
+    try:
+        yield session
+    finally:
+        if jvm_before.isDefined():
+            jvm_class.setActiveSession(jvm_before.get())
+        else:
+            jvm_class.clearActiveSession()
+        SparkSession._activeSession = before
+
+
+def build_session(
+    app_name: str = "als-pyspark-spark",
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """A local ``local[N]`` session (N from :func:`local_cpus`) with the
+    runtime conf, the static settings below and ``extra_conf``."""
+    cpus = local_cpus()
+    conf = {
+        **runtime_conf(int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))),
+        # Local mode: driver heap is the only memory knob. 16g is measured
+        # flat vs 8g at sf0.1 while giving sf1+ headroom; 48g measured 2x
+        # SLOWER end-to-end (heap commit + GC region overhead dominates).
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        "spark.ui.enabled": "false",
         # Delete a checkpointed RDD's files as soon as the driver GCs its
         # last reference — without this, a session that runs the iterative
-        # CC queries many times (gate sweeps, bench passes) accumulates
-        # every superseded round's checkpoint on disk until JVM exit.
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    )
-    for k, v in (extra_conf or {}).items():
+        # queries many times (gate sweeps, bench passes) accumulates every
+        # superseded round's checkpoint on disk until JVM exit.
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        **(extra_conf or {}),
+    }
+    b = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    # Checkpointing support (reference declares check_point_interval but
-    # never implements it — ALS.py:36,101 defect; MLlib's works but SKIPS
-    # silently unless a checkpoint dir exists). Lineage truncation is what
-    # keeps iterative jobs (ALS, KMeans) plannable past ~10 iterations.
-    # The wiring lives in ensure_checkpoint_dir so queries that NEED a dir
-    # (the CC loop) can also claim one lazily on a bare external session.
+    # Lineage truncation is what keeps iterative jobs (ALS, KMeans, the
+    # fixpoint loops) plannable past ~10 iterations; MLlib's checkpointing
+    # SKIPS silently unless a dir exists (the reference declares
+    # check_point_interval but never implements it — ALS.py:36,101).
     ensure_checkpoint_dir(spark)
     return spark

@@ -80,25 +80,19 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    # Timestamp semantics contract with the DuckDB oracle: all date_format/
-    # date_trunc/window results assume UTC. build_session pins this, but
-    # queries must also hold under a CALLER-OWNED session (the round driver
-    # builds its own), so pin it on the load path every query goes through.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) in some data
         # drops and TIMESTAMP(MICROS) (no tz → NTZ) in others, so the
         # loader adapts to the file rather than pinning one physical type:
-        #   - nanos  → read the raw int64 (nanosAsLong) and truncate with
-        #     exact integer division to micros, bit-identical to DuckDB's
-        #     own nanos→micros truncation;
-        #   - micros NTZ → cast to session-local TIMESTAMP; the session
-        #     timezone is pinned UTC above, so the cast is identity on the
+        #   - nanos  → read the raw int64 (the engine session's nanosAsLong)
+        #     and truncate with exact integer division to micros,
+        #     bit-identical to DuckDB's own nanos→micros truncation;
+        #   - micros NTZ → cast to session-local TIMESTAMP; the engine
+        #     session's timezone is UTC, so the cast is identity on the
         #     underlying micros and matches DuckDB's naive TIMESTAMP.
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        spark.conf.set(_NANOS_AS_LONG, "true")
         df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
@@ -114,7 +108,6 @@ def events_ts_physical_type(spark: SparkSession, sf_dir: str):
     on): LongType for TIMESTAMP(NANOS) files, TimestampNTZType for
     TIMESTAMP(MICROS) files. Streaming readers need it to pin a matching
     explicit schema (file-source streams cannot infer)."""
-    spark.conf.set(_NANOS_AS_LONG, "true")
     return _read_parquet(spark, f"{sf_dir}/events.parquet").schema["ts"].dataType
 
 

@@ -60,7 +60,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from als_pyspark_spark.sources.tables import events_ts_physical_type
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ts_type = events_ts_physical_type(spark, sf_dir)
     # file-source streams take a DIRECTORY; select just events.parquet
     # from the shared sf_dir with a glob filter.

@@ -7,11 +7,10 @@ Usage: python scripts/check_correctness.py [--bare] [sf_dir] [query ...]
 ``--bare`` builds a BARE SparkSession (``SparkSession.builder.master(...)``
 with no factory conf at all) instead of ``build_session`` — the shape of
 an externally built session, on the same ``local[N]`` rule. Every query
-must be self-sufficient on a bare session (per-query UTC pin, lazy
-checkpoint dir, per-query recursion limit); a query that leans on
-``build_session`` conf — e.g. a checkpoint that needs the dir only the
-factory wires — passes here and fails on an externally built session, and
-this flag is how that property is gated locally.
+runs on an engine session (``session.engine_session``) whatever the
+caller built, so results and speed must match the plain run; a query that
+leans on ``build_session`` conf the engine session does not carry passes
+there and fails here, and this flag is how that property is gated locally.
 """
 
 from __future__ import annotations

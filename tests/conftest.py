@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("pytest", shuffle_partitions=8)
+    s = build_session("pytest")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

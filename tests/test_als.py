@@ -12,6 +12,23 @@ from als_pyspark_spark.ml.als import ALSEngine, ALSParams, derived_item_blocks
 from als_pyspark_spark.sources.ratings import ratings
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _release_trained_models():
+    """Unpersist the factor RDDs of every model trained in this module once
+    it is done, so none outlives it into another module's checks."""
+    trained, train = [], ALSEngine.train
+
+    def recording(self, *args, **kwargs):
+        trained.append(self)
+        return train(self, *args, **kwargs)
+
+    ALSEngine.train = recording
+    yield
+    ALSEngine.train = train
+    for eng in trained:
+        eng.release()
+
+
 @pytest.fixture(scope="module")
 def rated(spark, sf_dir):
     r = ratings(spark, sf_dir).cache()

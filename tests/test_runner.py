@@ -8,9 +8,10 @@ from unittest.mock import Mock
 
 import pytest
 from pyspark import StorageLevel
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from als_pyspark_spark import caching, runner
+from als_pyspark_spark import caching, runner, session
 from als_pyspark_spark.caching import deferred
 from als_pyspark_spark.registry import Query, load_all_queries
 from als_pyspark_spark.runner import QueryError, built
@@ -160,3 +161,51 @@ def test_no_als_factor_rdd_outlives_its_query(spark, sf_dir):
         assert rated.storageLevel != _NONE, name
     runner.reset_memos()
     assert factor_rdds() == []
+
+
+# Queries that register temp views, UDTFs, a memory sink or conf on the
+# session they are built on, or (k-core, through caching.local_frame's
+# createDataFrame) make it the active session.
+STATEFUL = (
+    "q_lateral_top2_orders_per_customer",
+    "q_grouping_sets_orders",
+    "q_recursive_referral_depth",
+    "q_udtf_char_ngrams",
+    "q_udtf_polymorphic_split",
+    "q_stream_apws_user_max",
+    "q_kcore_peeling",
+)
+
+
+def _session_state(s):
+    views = sorted(t.name for t in s.catalog.listTables() if t.isTemporary)
+    functions = sorted(r[0] for r in s.sql("SHOW USER FUNCTIONS").collect())
+    conf = {k: s.conf.get(k) for k in session.runtime_conf(1)}
+    active = SparkSession.getActiveSession()._jsparkSession.hashCode()
+    return views, functions, conf, active
+
+
+def test_runner_leaves_the_caller_session_as_it_was(spark, sf_dir):
+    """Queries that register views, UDTFs, a memory sink or conf do so on
+    their own engine session: the caller's temp views, functions and conf,
+    and the active session, are unchanged after they run. The caller is a
+    new session on the test context, so state an earlier test left cannot
+    hide a leak."""
+    caller = spark.newSession()
+    before = _session_state(caller)
+    for name in STATEFUL:
+        runner.force(caller, QUERIES[name], sf_dir)
+    assert _session_state(caller) == before
+
+
+def test_runner_builds_at_the_context_parallelism(spark, sf_dir):
+    """A caller session left at Spark's default of 200 shuffle partitions
+    still gets queries planned at the context's parallelism, and keeps its
+    own 200."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "200")
+    parallelism = str(spark.sparkContext.defaultParallelism)
+    with built(caller, QUERIES["q1_pricing_summary"], sf_dir) as df:
+        assert df.sparkSession.conf.get("spark.sql.shuffle.partitions") == parallelism
+        assert caller.conf.get("spark.sql.shuffle.partitions") == "200"
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "200"

@@ -121,14 +121,13 @@ def test_sweep_ignores_plain_files_and_missing_base(tmp_path):
 
 
 def test_bare_session_gate_on_checkpoint_dependent_queries():
-    """Round-9 gate for the round-8 regression CLASS: every query must be
-    self-sufficient on a BARE SparkSession (the external driver builds its
-    own — no build_session conf exists there). A bare builder inside this
-    pytest process would just return the factory session, so the gate runs
-    in a SUBPROCESS via ``check_correctness.py --bare`` over the two
-    queries that exercise the one correctness-critical session dependency
-    (Dataset.checkpoint needs a checkpoint dir; UTC and the CTE recursion
-    limit are already pinned per-query)."""
+    """Every query must be correct on a BARE SparkSession (the external
+    driver builds its own — no build_session conf exists there), which
+    holds because the runner builds it on an engine session. A bare
+    builder inside this pytest process would just return the factory
+    session, so the gate runs in a SUBPROCESS via ``check_correctness.py
+    --bare`` over two queries that need the checkpoint dir an engine
+    session claims (Dataset.checkpoint throws without one)."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -150,6 +149,39 @@ def test_bare_session_gate_on_checkpoint_dependent_queries():
     assert "0 failures" in proc.stdout
 
 
+def test_entry_workers_import_the_engine_outside_the_checkout(sf_dir, tmp_path):
+    """A driver started outside the checkout, with no PYTHONPATH, loads
+    ``__spark_entry__`` by file path on a bare session: the Python workers
+    of q_ann_ivf_top10's ``mapInArrow`` still import the engine, because
+    the entry puts the checkout on the workers' PYTHONPATH too."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import importlib.util
+spec = importlib.util.spec_from_file_location(
+    "__spark_entry__", {os.path.join(repo, "__spark_entry__.py")!r})
+entry = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(entry)
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+rows = entry.queries()["q_ann_ivf_top10"](spark, {sf_dir!r}).collect()
+print("rows", len(rows))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=tmp_path,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert int(proc.stdout.split("rows")[-1]) > 0
+
+
 def test_session_has_checkpoint_dir_and_cleaner(spark):
     own = spark.sparkContext.getCheckpointDir()
     assert own and ".scratch/checkpoints" in own
@@ -160,7 +192,7 @@ def test_session_has_checkpoint_dir_and_cleaner(spark):
 
 
 def test_ensure_checkpoint_dir_refreshes_own_heartbeat(spark):
-    """Every lazy per-query claim re-touches OUR .owner_pid marker, so the
+    """Every engine session's claim re-touches OUR .owner_pid marker, so the
     48 h pid-reuse sweep fallback reads an owner-asserted heartbeat
     instead of inferring liveness from dir write patterns (round-11
     ADVICE — checkpoint writes land in nested rdd-N subdirs and never
