@@ -11,6 +11,9 @@ stream-scoped overrides remain elsewhere (``run_to_memory``'s state
 partitions, ``q_stream_tws_user_max``'s state-store provider).
 :func:`build_session` starts a local context with the same runtime conf
 plus the static settings (driver memory, UI off, checkpoint cleaner).
+
+Rule: a Python-worker stage gets one task per Arrow batch of its input
+(:func:`python_stage_tasks`), not one per core.
 """
 
 from __future__ import annotations
@@ -185,6 +188,31 @@ def runtime_conf(shuffle_partitions: int) -> dict[str, str]:
         # which Spark reads only as raw int64 (sources/tables.py).
         "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
+
+
+def python_stage_tasks(spark: SparkSession, rows: int | None) -> int:
+    """Tasks for a Python-worker stage (``mapInArrow``, a pandas UDF, the
+    state of ``applyInPandasWithState``) over ``rows`` input rows: one per
+    Arrow batch, ``ceil(rows / spark.sql.execution.arrow.maxRecordsPerBatch)``,
+    at least 1 and at most the context's parallelism, which is also the
+    count when ``rows`` is unknown (None). A non-positive batch size means
+    no limit: one batch, one task.
+
+    Each pooled Python worker a task occupies lives for the session (about
+    134 MB each at sf0.01 on ``local[4]``), and a stage that feeds a
+    persisted plan or a stream's state keeps its partition count (AQE
+    coalesces neither), so a stage sized by cores fans a few hundred rows
+    out over every worker.
+    Callers repartition to this count even when it is 1: the exchange is
+    what spreads a single-row-group file once the input outgrows a batch.
+    """
+    cap = spark.sparkContext.defaultParallelism
+    if rows is None:
+        return cap
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if batch <= 0:
+        return 1
+    return max(1, min(cap, -(-rows // batch)))
 
 
 @contextmanager

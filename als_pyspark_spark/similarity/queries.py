@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 from als_pyspark_spark.caching import deferred, local_frame
 from als_pyspark_spark.functions.arrays import cosine, l2_norm
 from als_pyspark_spark.registry import query
-from als_pyspark_spark.sources.tables import load_table
+from als_pyspark_spark.session import python_stage_tasks
+from als_pyspark_spark.sources.tables import load_table, table_python_tasks
 
 _DIM = 64
 _N_QUERIES = 5
@@ -159,14 +160,17 @@ def _bucket_udf(planes: np.ndarray):
 
 
 def _with_buckets(e: DataFrame, n_planes: int, n_blocks: int, spread: bool = False) -> DataFrame:
-    """spread=True repartitions before bucketing: the n_blocks×n_planes
-    dot products are the CPU-heavy step and the embeddings parquet may be
-    a single row group (1 task) — same discipline as the LSH dedup
-    signature pipeline (dedup/queries.py). Only for the corpus side; a
-    handful of query vectors doesn't warrant a shuffle."""
-    if spread:
-        e = e.repartition(e.sparkSession.sparkContext.defaultParallelism, "vec_id")
+    """``e`` exploded to one row per (vector, LSH block bucket) by
+    :func:`_bucket_udf`. spread=True (the corpus side) first repartitions
+    by ``vec_id`` to the context's parallelism, not to the row rule's
+    count (``session.python_stage_tasks``): the persisted bucket table
+    keeps the width it is built with and the JVM joins that read it
+    inherit that width, so one task there measured near-dup 0.67 → 1.72 s
+    at sf0.1 on local[4]. A handful of query vectors doesn't warrant a
+    shuffle."""
     planes = _hyperplanes(n_blocks, n_planes)
+    if spread:
+        e = e.repartition(python_stage_tasks(e.sparkSession, None), "vec_id")
     return e.withColumn(
         "bucket", F.explode(_bucket_udf(planes)(F.col("embedding")))
     )
@@ -414,10 +418,10 @@ def q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — one scale-safe TakeOrderedAndProject pass, deterministic, no
     count() needed), the k centroids, and the _N_QUERIES query vectors
     (collected once to route probes with |q|×k numpy distances — a
-    constant, never corpus-proportional). Corpus assignment +
-    unit-normalization is ONE vectorized Arrow batch pass
-    (:func:`_assign_udf`); candidate and witness scoring is a single
-    JVM-side dot fold over unit vectors.
+    constant, never corpus-proportional). Corpus assignment,
+    unit-normalization and the cosine to every query vector are ONE
+    vectorized Arrow batch pass (:func:`_assign_batches`); the candidate
+    and witness stages both rank those fused scores.
 
     Rows-only check (the learned quantizer makes the neighbor set
     implementation-specific) — but the ROWS THEMSELVES witness the
@@ -469,11 +473,9 @@ def q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_rows.append((int(r.vec_id), int(c)))
     probes = local_frame(spark, probe_rows, "query_id long, cluster int")
 
-    # spread before the Arrow pass: the embeddings parquet may be a single
-    # row group (1 task), and the assignment matmuls are the CPU-heavy step
     assigned = deferred(
         e.select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
+        .repartition(table_python_tasks(spark, sf_dir, "embeddings"), "vec_id")
         .mapInArrow(
             _assign_batches(cents, np.array(q_units)),
             "vec_id long, cluster int, scores array<double>",
@@ -801,12 +803,9 @@ def q_ann_ivfpq_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     luts = local_frame(spark, lut_rows, "query_id long, lut array<double>")
 
-    # spread before the Arrow pass: the embeddings parquet may be a single
-    # row group (1 task), and the per-subspace code matmuls are the
-    # CPU-heavy step (measured 7.1s single-task → sub-second spread)
     assigned = deferred(
         e.select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
+        .repartition(table_python_tasks(spark, sf_dir, "embeddings"), "vec_id")
         .mapInArrow(
             _pq_encode_batches(
                 cents,
@@ -1379,8 +1378,9 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB run folds the two sums into pass 2's aggregate instead.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    n_part = spark.sparkContext.defaultParallelism
-    spread = e.select("vec_id", "embedding").repartition(n_part, "vec_id")
+    spread = e.select("vec_id", "embedding").repartition(
+        table_python_tasks(spark, sf_dir, "embeddings"), "vec_id"
+    )
     iu0, iu1 = np.triu_indices(_DIM)
 
     def moments(batches):

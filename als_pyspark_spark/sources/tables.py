@@ -29,14 +29,23 @@ Only schemas are kept, never DataFrames, so the memo is not tied to a
 session. Directories and non-local URIs (any path that is not a local regular
 file) are inferred on every load, as Spark's own listing decides what they
 contain.
+
+Row memo: :func:`table_rows` reads a file's row count from its parquet
+footer (``pyarrow.parquet.read_metadata``, no Spark job), memoized under the
+same key. :func:`table_python_tasks` sizes a Python stage over a table from
+it (``session.python_stage_tasks``). A directory or non-local URI has no
+known count (None).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from als_pyspark_spark.session import python_stage_tasks
 
 TABLES = (
     "region",
@@ -54,27 +63,54 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-_SCHEMAS: dict[tuple[str, int, int, str], StructType] = {}
+_MemoKey = tuple[str, int, int, str]
+_SCHEMAS: dict[_MemoKey, StructType] = {}
+_ROWS: dict[_MemoKey, int] = {}
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, inferring a regular file's schema only
-    on its first read (see the module docstring for the memo key)."""
-    if not os.path.isfile(path):  # a directory or a non-local URI
-        return spark.read.parquet(path)
+def _memo_key(spark: SparkSession, path: str) -> _MemoKey | None:
+    """The memo key of a local regular file (see the module docstring);
+    None for a directory or a non-local URI."""
+    if not os.path.isfile(path):
+        return None
     st = os.stat(path)
-    key = (
+    return (
         os.path.abspath(path),
         st.st_mtime_ns,
         st.st_size,
         spark.conf.get(_NANOS_AS_LONG, "false"),
     )
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a regular file's schema only
+    on its first read (see the module docstring for the memo key)."""
+    key = _memo_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
     schema = _SCHEMAS.get(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
     df = spark.read.parquet(path)
     _SCHEMAS[key] = df.schema
     return df
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int | None:
+    """The row count in table ``name``'s parquet footer, or None when the
+    file is not a local regular file (see the module docstring)."""
+    key = _memo_key(spark, f"{sf_dir}/{name}.parquet")
+    if key is None:
+        return None
+    if key not in _ROWS:
+        _ROWS[key] = pq.read_metadata(key[0]).num_rows
+    return _ROWS[key]
+
+
+def table_python_tasks(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Tasks for a Python-worker stage over table ``name``:
+    ``session.python_stage_tasks`` of its :func:`table_rows`."""
+    return python_stage_tasks(spark, table_rows(spark, sf_dir, name))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

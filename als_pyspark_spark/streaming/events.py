@@ -293,7 +293,7 @@ _STATE_TARGET_BYTES = 8 * 1024 * 1024
 def source_bytes(*paths: str) -> int:
     """Total on-disk bytes of the given source files/directories (staging
     dirs count their part files; hidden/metadata files excluded) — the
-    input-size signal :func:`run_to_memory` sizes state partitions from."""
+    input-size signal :func:`adaptive_state_partitions` sizes JVM state from."""
     total = 0
     for p in paths:
         if p.startswith("file:"):
@@ -316,19 +316,23 @@ def source_bytes(*paths: str) -> int:
     return total
 
 
-def events_source_bytes(spark: SparkSession, sf_dir: str) -> int:
-    """Source-size signal for streams read via :func:`read_events_stream`
-    (the events.parquet file inside the shared fixture dir)."""
-    return source_bytes(os.path.join(sf_dir, "events.parquet"))
-
-
 def adaptive_state_partitions(spark: SparkSession, nbytes: int) -> int:
-    """Scale-adaptive state partition count: one partition per
-    ``_STATE_TARGET_BYTES`` of source data, at least 1, at most
+    """Scale-adaptive partition count for JVM stream state: one partition
+    per ``_STATE_TARGET_BYTES`` of source data, at least 1, at most
     4 × defaultParallelism (the cluster-proportional cap — on a real
-    cluster parallelism scales with executors, so the cap does too)."""
+    cluster parallelism scales with executors, so the cap does too).
+    State held by a Python stage is sized by rows instead
+    (``session.python_stage_tasks``)."""
     cap = 4 * spark.sparkContext.defaultParallelism
     return max(1, min(cap, -(-nbytes // _STATE_TARGET_BYTES)))
+
+
+def events_state_partitions(spark: SparkSession, sf_dir: str) -> int:
+    """:func:`adaptive_state_partitions` for JVM state over a stream read
+    via :func:`read_events_stream` (the fixture dir's events.parquet)."""
+    return adaptive_state_partitions(
+        spark, source_bytes(os.path.join(sf_dir, "events.parquet"))
+    )
 
 
 def run_to_memory(
@@ -336,7 +340,7 @@ def run_to_memory(
     name: str,
     mode: str = "append",
     expect_single_batch: bool = False,
-    state_source_bytes: int | None = None,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain the stream with trigger=availableNow into a memory sink and
     return the materialized result.
@@ -355,27 +359,23 @@ def run_to_memory(
     flag turns that assumption into a loud runtime check instead of a silent
     oracle divergence.
 
-    ``state_source_bytes``: when the caller knows its source size
-    (:func:`source_bytes` / :func:`events_source_bytes`), the stream runs
-    with ``spark.sql.shuffle.partitions`` set to
-    :func:`adaptive_state_partitions` for its duration (restored after the
-    drain — queries here run sequentially, matching the bench/driver
-    contract). Stateful operators pin state partitioning at stream start
-    and pay per-partition store open/commit on EVERY micro-batch, so
-    sizing state partitions to the data instead of the session constant
-    is the §2 scale-adaptive rule, not a local-mode tune: more data →
-    more partitions, capped in proportion to the cluster. Output is
+    ``state_partitions``: the stream runs with
+    ``spark.sql.shuffle.partitions`` set to it for its duration (restored
+    after the drain — queries here run sequentially, matching the
+    bench/driver contract). Stateful operators pin state partitioning at
+    stream start and pay per-partition store open/commit on EVERY
+    micro-batch, so callers size it from their input instead of the
+    session constant (the §2 scale-adaptive rule): JVM state by source
+    bytes (:func:`adaptive_state_partitions`), state kept by a Python
+    stage by rows (``session.python_stage_tasks``). Output is
     partitioning-independent (keyed aggregates/joins/dedup-on-unique-key),
     which the oracle gate re-proves per query.
     """
     spark = stream_df.sparkSession
     old_parts: str | None = None
-    if state_source_bytes is not None:
+    if state_partitions is not None:
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(adaptive_state_partitions(spark, state_source_bytes)),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         q = (
             stream_df.writeStream.format("memory")

@@ -17,8 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from als_pyspark_spark.caching import local_frame
 from als_pyspark_spark.registry import query
+from als_pyspark_spark.sources.tables import table_python_tasks
 from als_pyspark_spark.streaming.events import (
-    events_source_bytes,
+    adaptive_state_partitions,
+    events_state_partitions,
     read_events_stream,
     run_to_memory,
     running_user_value,
@@ -54,7 +56,7 @@ def q_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="complete",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
 
 
@@ -83,7 +85,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="complete",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
 
 
@@ -118,7 +120,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         name,
         mode="append",
         expect_single_batch=True,
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
     return drained.groupBy("p_user").agg(F.count("*").alias("n_pairs"))
 
@@ -151,15 +153,12 @@ def q_stream_stateful_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "mem_stream_stateful_threshold"
     spark.catalog.dropTempView(name) if spark.catalog.tableExists(name) else None
     stream = running_user_value(read_events_stream(spark, sf_dir), threshold=1000.0)
-    # no adaptive state-partition override: applyInPandasWithState is
-    # PYTHON-COMPUTE bound (per-group pandas work dominates the per-
-    # partition state-store cost the override targets) — measured
-    # 2.6s → 9.6s when the override squeezed it to 1 partition
     return run_to_memory(
         stream,
         name,
         mode="append",
         expect_single_batch=True,
+        state_partitions=table_python_tasks(spark, sf_dir, "events"),
     )
 
 
@@ -213,13 +212,15 @@ def q_stream_tws_user_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         stream = user_max_value_tws(read_events_stream(spark, sf_dir), threshold=400.0)
-        # no adaptive state-partition override: Python-compute bound
-        # (see q_stream_stateful_threshold)
+        # Unverified: the row-sized state has only been measured where
+        # google.protobuf is absent, which skips this query; its APWS twin
+        # runs the same sizing.
         return run_to_memory(
             stream,
             name,
             mode="append",
             expect_single_batch=True,
+            state_partitions=table_python_tasks(spark, sf_dir, "events"),
         )
     finally:
         if saved is None:
@@ -255,13 +256,12 @@ def q_stream_apws_user_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "mem_stream_apws_user_max"
     spark.catalog.dropTempView(name) if spark.catalog.tableExists(name) else None
     stream = user_max_value_apws(read_events_stream(spark, sf_dir), threshold=400.0)
-    # no adaptive state-partition override: Python-compute bound
-    # (see q_stream_stateful_threshold)
     return run_to_memory(
         stream,
         name,
         mode="append",
         expect_single_batch=True,
+        state_partitions=table_python_tasks(spark, sf_dir, "events"),
     )
 
 
@@ -290,7 +290,7 @@ def q_stream_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="append",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
     return drained.groupBy("event_type").agg(F.count("*").alias("n_unique"))
 
@@ -326,7 +326,7 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
         stream,
         name,
         mode="append",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
     return drained.groupBy("event_type").agg(F.count("*").alias("n_unique"))
 
@@ -360,7 +360,7 @@ def q_stream_sliding_halfhour(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="complete",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
 
 
@@ -420,7 +420,7 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="complete",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
 
 
@@ -529,7 +529,7 @@ def q_stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="complete",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
 
 
@@ -630,7 +630,7 @@ def q_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         name,
         mode="append",
-        state_source_bytes=source_bytes(staged),
+        state_partitions=adaptive_state_partitions(spark, source_bytes(staged)),
     )
     return (
         drained.where(F.col("p_ts") <= F.lit(cutoff))
@@ -702,7 +702,7 @@ def q_stream_update_mode_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         name,
         mode="update",
-        state_source_bytes=source_bytes(staged),
+        state_partitions=adaptive_state_partitions(spark, source_bytes(staged)),
     )
     return drained.groupBy("event_type").agg(
         F.max("n_events").alias("n_events"),
@@ -800,7 +800,7 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="append",
-        state_source_bytes=source_bytes(staged),
+        state_partitions=adaptive_state_partitions(spark, source_bytes(staged)),
     )
 
     closed = drained.where(
@@ -1077,7 +1077,7 @@ def q_stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         name,
         mode="append",
-        state_source_bytes=source_bytes(staged),
+        state_partitions=adaptive_state_partitions(spark, source_bytes(staged)),
     )
     return (
         drained.where(F.col("w.end") <= F.lit(cutoff))
@@ -1168,7 +1168,7 @@ def q_stream_dynamic_session_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         name,
         mode="complete",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
 
 
@@ -1265,7 +1265,7 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         name,
         mode="append",
-        state_source_bytes=source_bytes(staged),
+        state_partitions=adaptive_state_partitions(spark, source_bytes(staged)),
     )
     closed = drained.where(
         F.when(
@@ -1341,7 +1341,7 @@ def q_stream_static_left_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         name,
         mode="complete",
-        state_source_bytes=events_source_bytes(spark, sf_dir),
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
 
 

@@ -10,6 +10,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -955,3 +956,52 @@ def test_pipeline_e2e_single_documents_scan(spark, sf_dir):
     assert len(doc_scans) == 1, doc_scans
     assert "InMemoryTableScan" in plan
     assert "CartesianProduct" not in plan
+
+
+_PYTHON_NODE = re.compile(r"ArrowEvalPython|MapInArrow|MapInPandas|BatchEvalPython")
+_EXCHANGE_WIDTH = re.compile(r"Exchange (SinglePartition|hashpartitioning\(.*, (\d+)\))")
+
+
+@pytest.mark.parametrize(
+    "name, sized_by_rows",
+    [
+        ("q_ann_ivf_top10", True),
+        ("q_ann_ivfpq_top10", True),
+        ("q_embedding_pca_project", True),
+        ("q_ann_lsh_top10", False),
+        ("q_embedding_neardup_pairs", False),
+        ("q_rerank_two_stage_topk", False),
+        ("q_semantic_dedup_clusters", False),
+    ],
+)
+def test_embedding_python_stage_width(spark, sf_dir, monkeypatch, name, sized_by_rows):
+    """IVF, IVF-PQ and PCA read their Python node over an exchange one
+    partition per Arrow batch of input (session.python_stage_tasks): a
+    single partition for the fixture's 500 vectors. The four queries that
+    persist an LSH bucket table keep one partition per core, since the JVM
+    joins reading that table inherit its width. The bucket frames are read
+    as built, since semantic dedup's returned plan starts from its
+    components' checkpoint."""
+    from als_pyspark_spark.similarity import queries as sim
+
+    if not sf_dir.endswith("sf0.001"):
+        pytest.skip("widths pinned for the sf0.001 fixture")
+    bucketed = []
+    with_buckets = sim._with_buckets
+
+    def recording(*args, **kwargs):
+        bucketed.append(with_buckets(*args, **kwargs))
+        return bucketed[-1]
+
+    monkeypatch.setattr(sim, "_with_buckets", recording)
+    plans = [lazy_plan(spark, sf_dir, name)] + [plan_of(b) for b in bucketed]
+    lines = "\n".join(plans).splitlines()
+    widths = []
+    for i, line in enumerate(lines):
+        if _PYTHON_NODE.search(line):
+            # a run plan puts a ShuffleQueryStage between the two
+            m = _EXCHANGE_WIDTH.search("".join(lines[i + 1 : i + 3]))
+            assert m, f"{name}: no exchange under {line.strip()}"
+            widths.append(1 if m.group(1) == "SinglePartition" else int(m.group(2)))
+    want = 1 if sized_by_rows else spark.sparkContext.defaultParallelism
+    assert widths and set(widths) == {want}, (name, widths)

@@ -285,3 +285,20 @@ def test_driver_rows_enter_spark_only_through_local_frame():
                     if where != ("caching.py", "local_frame"):
                         offenders.append(f"{path}:{i + 1}")
     assert not offenders, f"createDataFrame outside caching.local_frame: {offenders}"
+
+
+def test_similarity_sizes_python_stages_by_rows():
+    """The embedding queries size their Python stages with
+    ``session.python_stage_tasks`` (one task per Arrow batch of input, or
+    the context's parallelism where a persisted table's width must stay
+    per core); none reads the parallelism itself."""
+    pkg = os.path.join(_REPO, "als_pyspark_spark", "similarity")
+    offenders = [
+        f"{os.path.join(root, fn)}:{i + 1}"
+        for root, _dirs, files in os.walk(pkg)
+        for fn in files
+        if fn.endswith(".py")
+        for i, line in enumerate(open(os.path.join(root, fn)).read().splitlines())
+        if "defaultParallelism" in line
+    ]
+    assert not offenders, f"defaultParallelism under similarity/: {offenders}"

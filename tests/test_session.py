@@ -250,3 +250,42 @@ def test_build_session_defaults_to_usable_cpus(monkeypatch):
     session.build_session()
     assert seen["master"] == "local[3]"
     assert seen["spark.sql.shuffle.partitions"] == "3"
+
+
+def test_python_stage_tasks_counts_arrow_batches(spark):
+    """One task per Arrow batch of input rows, at least 1, at most the
+    context's parallelism, which unknown rows fall back to."""
+    from als_pyspark_spark.session import python_stage_tasks
+
+    cap = spark.sparkContext.defaultParallelism
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    got = [python_stage_tasks(spark, r) for r in (0, 1, batch, batch + 1, 10**9)]
+    assert got == [1, 1, 1, min(2, cap), cap]
+    assert python_stage_tasks(spark, None) == cap
+
+    small = spark.newSession()
+    small.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+    assert python_stage_tasks(small, 1000) == min(2, cap)
+
+
+def test_table_rows_reads_the_footer_without_a_job(spark, sf_dir, tmp_path):
+    """The row count comes from the parquet footer (no Spark job); a
+    missing file or a non-local path has none, so its Python stage gets
+    the context's parallelism."""
+    import pyarrow.parquet as pq
+
+    from als_pyspark_spark.sources.tables import table_python_tasks, table_rows
+
+    sc = spark.sparkContext
+    sc.setJobGroup("table-rows", "footer read")
+    try:
+        rows = table_rows(spark, sf_dir, "embeddings")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == pq.read_metadata(f"{sf_dir}/embeddings.parquet").num_rows
+    assert sc.statusTracker().getJobIdsForGroup("table-rows") == []
+
+    cap = sc.defaultParallelism
+    for where in (str(tmp_path), "s3a://bucket/sf0.01"):
+        assert table_rows(spark, where, "embeddings") is None
+        assert table_python_tasks(spark, where, "embeddings") == cap

@@ -436,3 +436,39 @@ def test_source_bytes_reads_every_file_uri_form(tmp_path):
     quoted = p.replace(" ", "%20")
     for uri in (p, f"file:{p}", f"file://{p}", f"file://localhost{quoted}"):
         assert source_bytes(uri) == 123, uri
+
+
+@pytest.mark.parametrize(
+    "name", ["q_stream_apws_user_max", "q_stream_stateful_threshold"]
+)
+def test_python_state_is_sized_by_rows(spark, sf_dir, monkeypatch, name):
+    """A stream whose state lives in a Python stage runs with one state
+    partition per Arrow batch of its input (session.python_stage_tasks):
+    one for the sf0.001 fixture's 1,000 events. The drain's override of
+    the shuffle width ends with the drain."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from als_pyspark_spark.registry import load_all_queries
+    from als_pyspark_spark.session import engine_session
+
+    if not sf_dir.endswith("sf0.001"):
+        pytest.skip("width pinned for the sf0.001 fixture")
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    with engine_session(spark) as s:
+        before = s.conf.get("spark.sql.shuffle.partitions")
+        load_all_queries()[name].build(s, sf_dir).collect()
+        assert s.conf.get("spark.sql.shuffle.partitions") == before
+    (q,) = started
+    widths = {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    }
+    assert widths == {1}, widths
