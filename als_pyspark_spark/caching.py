@@ -1,18 +1,21 @@
-"""Cache lifetimes for queries that persist intermediates, and the one way
-driver-side rows become a DataFrame.
+"""The one cache lifetime for queries that persist intermediates, and the
+one way driver-side rows become a DataFrame.
 
 Queries that ``persist()`` an intermediate (an edge list both sides of a
 self-join read, a bucket table reused across phases) must not leak that
-cache past their own lifetime: a full registry sweep in one Spark
-session would otherwise accumulate hundreds of cached tables (the
-reference's C1-C3 persist→materialize→unpersist discipline, which its
-training loop applies per iteration, applies per QUERY here).
+cache past their own lifetime: Spark's cache lives in the state every
+session of the context shares, so a cache one query kept would be read
+warm, or dropped, by the next (the reference's C1-C3
+persist→materialize→unpersist discipline, which its training loop
+applies per iteration, applies per QUERY here).
 
-One rule covers every such cache: the query registers it with
-:func:`deferred` and returns its plan unrun, and the consumer calls
+One rule covers every such cache: every persist in the package is
+``deferred(x.persist())``. The query returns its plan unrun, every
+reader within the query shares the cache, and the consumer calls
 :func:`release_deferred` once it is done with the result
 (``runner.built`` on exit, ``__spark_entry__.queries()`` before handing
-out the next build, perfbench after each operation).
+out the next build, perfbench after each operation). No cache outlives
+its query.
 
 ``collected`` (run a bounded result on the driver, unpersist, re-plan
 the rows) has no caller in the package; it is kept because perfbench's
@@ -69,11 +72,9 @@ def collected(spark: SparkSession, result: DataFrame, *cached: DataFrame) -> Dat
 
 
 # Caches registered by the current query's build, released when the
-# consumer is done with its result. Distinct from the 'deliberate
-# session-lifetime cache' sites (dedup/similarity pair tables), which ARE
-# read by multiple queries and must stay resident between them. A cache
-# Spark holds outside any DataFrame (a trained model's factor RDDs)
-# registers its zero-argument release function instead.
+# consumer is done with its result. A cache Spark holds outside any
+# DataFrame (a trained model's factor RDDs) registers its zero-argument
+# release function instead.
 _DEFERRED: list[DataFrame | Callable[[], object]] = []
 _Releasable = TypeVar("_Releasable", DataFrame, Callable[[], object])
 

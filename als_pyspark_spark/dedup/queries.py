@@ -17,19 +17,10 @@ cross join. At 100 TB the bucket join shuffles ~n_docs×bands rows of
 whose expected size is O(1) for near-uniform hash keys. Skewed buckets
 (e.g. empty-doc signatures) are pre-filtered.
 
-Cache-lifetime note: the pair queries persist their
-signature/shingle table DELIBERATELY without an in-query release. The
-table is read 3-4× per execution (both self-join sides + the verify
-re-fetch) and the hash projection dominates the query — measured 56×
-slower when recomputed per reader (exchange reuse cannot substitute:
-column pruning specializes each reader's exchange subtree, so the
-shuffles are not canonically equal and ReuseExchange never fires). The
-results are pair lists (corpus-proportional), so collecting them to free
-the cache would encode a driver bottleneck. The cache therefore lives
-until session end — LRU-
-evictable under memory pressure, natural in the one-job-per-query shape
-a 100 TB run has; a long multi-query session embedding these can wrap
-them with its own materialize-then-unpersist.
+The pair queries persist the signature/shingle table that both self-join
+sides and the verify read (recomputed per reader it measured 56x slower)
+and register it with ``caching.deferred``, so it lives as long as its
+query.
 """
 
 from __future__ import annotations
@@ -191,16 +182,13 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the corpus parquet may be a single row group (1 task); persist
     # because the projection feeds BOTH sides of the fp-blocked self-join
     n_part = spark.sparkContext.defaultParallelism
-    shingled = (
+    shingled = deferred(
         d.repartition(n_part, "doc_id")
         .select(
             "doc_id",
             F.array_distinct(word_ngrams(toks, _SHINGLE_N)).alias("grams"),
             fingerprint(toks, _SHINGLE_N).alias("fp"),
         )
-        # deliberate session-lifetime cache — see the module docstring's
-        # cache-lifetime note (3-4 readers; recompute measured 56x; result
-        # unbounded so collected() would bottleneck on the driver)
         .persist()
     )
     a = shingled.alias("a")
@@ -577,11 +565,8 @@ def _minhash_plan(spark: SparkSession, sf_dir: str, collapse: bool) -> DataFrame
             F.array("doc_id").alias("docs"),
             "grams",
         )
-    sig = (
+    sig = deferred(
         cls.withColumn("sig", minhash_signature(F.col("grams"), _NUM_HASHES))
-        # deliberate session-lifetime cache — see the module docstring's
-        # cache-lifetime note (3-4 readers; recompute measured 56x; result
-        # unbounded so collected() would bottleneck on the driver)
         .persist()
     )
     banded = sig.select(
@@ -709,11 +694,8 @@ def _simhash_plan(spark: SparkSession, sf_dir: str, collapse: bool) -> DataFrame
             F.array("doc_id").alias("docs"),
             "text",
         )
-    cls = (
+    cls = deferred(
         grouped.select("gid", "docs", simhash64(tokens(F.col("text"))).alias("sh"))
-        # deliberate session-lifetime cache — see the module docstring's
-        # cache-lifetime note (3-4 readers; recompute measured 56x; result
-        # unbounded so collected() would bottleneck on the driver)
         .persist()
     )
     chunks = cls.select(
@@ -883,7 +865,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU-heavy gram build otherwise runs on ONE task, and the self-join
     # re-ran it for BOTH sides. Measured at sf0.1: pair build 4.8-6.9s →
     # 0.7-1.3s, identical pairs.
-    shingled = (
+    shingled = deferred(
         d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
@@ -902,12 +884,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(inter.cast("double") / union >= 0.5)
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
     )
-    labels = min_label_components(pairs)
-    # min_label_components ran its loop eagerly and the returned fixpoint
-    # is fully materialized (MEMORY_AND_DISK cache or checkpoint files),
-    # so the shingle cache has no readers left
-    shingled.unpersist()
-    return labels.select(
+    return min_label_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
@@ -961,16 +938,13 @@ def q_dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     n_part = spark.sparkContext.defaultParallelism
-    shingled = (
+    shingled = deferred(
         d.repartition(n_part, "doc_id")
         .select(
             "doc_id",
             F.array_distinct(word_ngrams(toks, _SHINGLE_N)).alias("grams"),
             fingerprint(toks, _SHINGLE_N).alias("fp"),
         )
-        # deliberate session-lifetime cache — see the module docstring's
-        # cache-lifetime note (3-4 readers; recompute measured 56x; result
-        # unbounded so collected() would bottleneck on the driver)
         .persist()
     )
     a = shingled.alias("a")
@@ -1303,11 +1277,9 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("grams")
         .agg(F.min("doc_id").alias("gid"), F.count("*").alias("n_docs"))
     )
-    # deliberate session-lifetime cache — the module docstring's
-    # cache-lifetime note (band + verify readers; the per-epoch index)
-    hsig = hcls.withColumn(
-        "sig", minhash_signature(F.col("grams"), _NUM_HASHES)
-    ).persist()
+    hsig = deferred(
+        hcls.withColumn("sig", minhash_signature(F.col("grams"), _NUM_HASHES)).persist()
+    )
     hband = hsig.select(
         "gid",
         F.explode(lsh_bands(F.col("sig"), _BANDS, _ROWS_PER_BAND)).alias("band"),
@@ -1315,8 +1287,7 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the incoming batch: doc-level (each row needs its own verdict)
     nb = _new_batch(d)
-    # deliberate session-lifetime cache — module note (batch band+verify readers)
-    bsig = (
+    bsig = deferred(
         nb.repartition(n_part, "doc_id")
         .select("doc_id", "source", grams.alias("grams"))
         .where(F.size("grams") > 0)
@@ -2040,8 +2011,9 @@ def q_dedup_tier_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — one IEEE division, bit-identical both sides.
 
     Composition: the three tiers' registered builders run as
-    subplans (sharing their session-lifetime signature caches — the
-    audit costs ONE extra pair-set join, not three recomputed tiers),
+    subplans, each with its own deferred signature cache that all of
+    its readers in the audit share and that is released with the audit
+    (the audit costs ONE extra pair-set join over the tiers' own work),
     one left join onto the truth pair set, one per-tier rollup, and a
     broadcast single-row truth count. The oracle string is COMPOSED from
     the three tiers' own oracle SQL at import time, so audit and audited

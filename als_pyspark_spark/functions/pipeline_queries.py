@@ -209,13 +209,9 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     that pipeline ~per OUTPUT row (Generate evaluation, 18×: 11.6s inline
     vs 0.74s materialize + 0.47s explode; a shuffle barrier does NOT help
     because the optimizer reorders the projection across it). Query total
-    11.6 → 1.7s warm. Cache lifetime: the result is
-    corpus-proportional so collected() would bottleneck the driver, and
-    the gram table has no readers outside this query's own plan — so it
-    registers with ``caching.deferred`` and the runner releases it once
-    the caller is done with the result instead of leaking it for the
-    session lifetime (a one-job-per-query 100 TB run releases at session
-    end either way, or stages grams to a temp table)."""
+    11.6 → 1.7s warm. Like every cache, it registers with
+    ``caching.deferred`` and the runner releases it once the caller is
+    done with the result."""
     d = load_table(spark, sf_dir, "documents")
     # repartition BEFORE the gram projection: shingling is the CPU-heavy
     # step and the corpus parquet may be a single row group (1 task) — same

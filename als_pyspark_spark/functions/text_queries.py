@@ -13,7 +13,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from als_pyspark_spark.caching import local_frame
+from als_pyspark_spark.caching import deferred, local_frame
 from als_pyspark_spark.functions.text import (
     STOPWORDS,
     fingerprint,
@@ -621,13 +621,13 @@ def _bpe_words0(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_plan(spark: SparkSession, sf_dir: str):
+def _bpe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audit plan for the trainer's DISTRIBUTED portion: the one
     corpus-sized job (explode -> partial+final count aggregate on the
     distinct-word grain). Merge resolution itself is driver-side over the
     vocabulary-bounded collect of this table (see _bpe_train), so this IS
     the trainer's whole cluster footprint at any merge count."""
-    return _bpe_words0(spark, sf_dir), ()
+    return _bpe_words0(spark, sf_dir)
 
 
 def _bpe_train_ctes() -> str:
@@ -753,20 +753,17 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     and REJECTED as inexact: pair counts sum wc over words, so many wc=1
     words can jointly host a winning pair — dropping them could change the
     learned merge list."""
-    words0 = _bpe_words0(spark, sf_dir).persist()
-    try:
-        n_words = words0.count()
-        budget = _bpe_driver_row_budget()
-        if n_words > budget:
-            raise ValueError(
-                f"BPE trainer: distinct-word table has {n_words} rows, over "
-                f"the driver collect budget ({budget}; env "
-                "SPARK_GRAFT_BPE_DRIVER_ROWS). A corpus whose vocabulary "
-                "outgrows the driver needs an in-plan merge trainer."
-            )
-        rows = words0.collect()  # vocabulary-bounded, now proven in-budget
-    finally:
-        words0.unpersist()
+    words0 = deferred(_bpe_words0(spark, sf_dir).persist())
+    n_words = words0.count()
+    budget = _bpe_driver_row_budget()
+    if n_words > budget:
+        raise ValueError(
+            f"BPE trainer: distinct-word table has {n_words} rows, over "
+            f"the driver collect budget ({budget}; env "
+            "SPARK_GRAFT_BPE_DRIVER_ROWS). A corpus whose vocabulary "
+            "outgrows the driver needs an in-plan merge trainer."
+        )
+    rows = words0.collect()  # vocabulary-bounded, now proven in-budget
     words: list[tuple[tuple[str, ...], int]] = [
         (tuple(r["w"][1:-1].split(_BPE_SEP2)), int(r["wc"])) for r in rows
     ]

@@ -187,7 +187,7 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Undirected edges mean no dangling-mass correction is needed — every
     node has out-degree ≥ 1 by construction.
     """
-    eo = deferred(_copurchase_rank_base(spark, sf_dir))
+    eo = _copurchase_rank_base(spark, sf_dir)
     ranks = _pr_round(eo)
     for _ in range(_PR_ITERS - 1):
         ranks = _pr_round(eo, ranks)
@@ -213,7 +213,7 @@ _PR_R0 = 1_000_000  # initial rank mass per node (micro-units)
 def _copurchase_rank_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted out-degree-annotated edge table for the supplier↔part
     PageRank family — shared by the fixed-3-iteration query and the
-    convergence-driven one. Caller owns the unpersist.
+    convergence-driven one — registered with ``caching.deferred``.
 
     SINGLE-EXCHANGE build: the doubling happens in-row (explode of both
     orientations — one lineitem scan instead of a union's two), ONE
@@ -245,7 +245,7 @@ def _copurchase_rank_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e")
     ).select("e.src", "e.dst")
     n_part = spark.sparkContext.defaultParallelism
-    return (
+    return deferred(
         edges.repartition(n_part, "src")
         .dropDuplicates(["src", "dst"])
         .withColumn("od", F.count("*").over(Window.partitionBy("src")))
@@ -390,16 +390,14 @@ def _prc_rounds(eo: DataFrame, n_rounds: int, run: bool):
     )
 
 
-def _prc_chain(spark: SparkSession, sf_dir: str, n_rounds: int):
+def _prc_chain(spark: SparkSession, sf_dir: str, n_rounds: int) -> DataFrame:
     """Lazy n-round convergence-PageRank chain for plan tests and the
-    explain audit: the rounds of ``q_pagerank_converged`` in plan mode.
-    Returns the final rank plan + the persisted base tables."""
-    eo = _copurchase_rank_base(spark, sf_dir)
-    ranks, _ = _prc_rounds(eo, n_rounds, run=False)
-    return ranks, [eo]
+    explain audit: the rounds of ``q_pagerank_converged`` in plan mode."""
+    ranks, _ = _prc_rounds(_copurchase_rank_base(spark, sf_dir), n_rounds, run=False)
+    return ranks
 
 
-def _prc_plan(spark: SparkSession, sf_dir: str):
+def _prc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Steady-state audit plan: one round past a checkpoint boundary."""
     return _prc_chain(spark, sf_dir, _PRC_CHECKPOINT_EVERY + 1)
 
@@ -431,11 +429,7 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-byte-per-node checkpoint write every 3 rounds — constant cost per
     round, bounded driver memory, any round count.
     """
-    eo = _copurchase_rank_base(spark, sf_dir)
-    try:
-        _, stats = _prc_rounds(eo, _PRC_CAP, run=True)
-    finally:
-        eo.unpersist()
+    _, stats = _prc_rounds(_copurchase_rank_base(spark, sf_dir), _PRC_CAP, run=True)
     curve = [
         (rnd, l1, mass, 2 * l1 <= mass)
         for rnd, (l1, mass) in enumerate(map(_prc_point, stats), 1)
@@ -716,9 +710,6 @@ def q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # appears three times inside each _oriented_edges call, and the
     # exact and sampled counts are two separate jobs that cannot
     # share exchanges — without the persist it would execute ≥2×.
-    # All persisted intermediates are tracked and unpersisted in ONE
-    # finally, so a failure during either action cannot leak a cached
-    # edge list for the session.
     def _tri_total(ed: DataFrame) -> int:
         # one row per base edge with a non-empty closure; Σ|s| = T
         row = (
@@ -728,37 +719,36 @@ def q_triangle_count_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return int(row["n"])
 
-    e = _copurchase_edges(spark, sf_dir).persist()
-    try:
-        # materialize the shared edge cache ONCE with a narrow action,
-        # then run the two independent tier jobs CONCURRENTLY (guide
-        # §2.6 "overlap independent jobs"): the sampled tier's tasks
-        # back-fill executor slots freed by the exact tier's stragglers
-        # instead of waiting for the whole tier to drain. The oriented
-        # lists do not persist: with the in-row edge explode in
-        # _tri_intersections, each is consumed exactly once (the
-        # adjacency groupBy) — only the raw edge set has multiple
-        # readers (degree union + edge probe per tier).
-        e.count()
+    e = deferred(_copurchase_edges(spark, sf_dir).persist())
+    # materialize the shared edge cache ONCE with a narrow action, then
+    # run the two independent tier jobs CONCURRENTLY (guide §2.6 "overlap
+    # independent jobs"): the sampled tier's tasks back-fill executor
+    # slots freed by the exact tier's stragglers instead of waiting for
+    # the whole tier to drain. One aggregate over both tiers, tagged and
+    # grouped by tier, measured slower at sf0.01 and sf0.1 (PERF.md). The
+    # two jobs share the engine session but set no conf on it. The oriented lists
+    # do not persist: with the in-row edge explode in _tri_intersections,
+    # each is consumed exactly once (the adjacency groupBy) — only the
+    # raw edge set has multiple readers (degree union + edge probe per
+    # tier).
+    e.count()
 
-        p_den = 2  # keep-probability 1/p_den
-        edge_key = F.concat_ws(
-            ",", F.col("x").cast("string"), F.col("y").cast("string")
-        )
-        kept = e.where(
-            F.conv(F.substring(F.md5(edge_key), 1, 8), 16, 10).cast("long")
-            % p_den
-            == 0
-        )
-        from concurrent.futures import ThreadPoolExecutor
+    p_den = 2  # keep-probability 1/p_den
+    edge_key = F.concat_ws(
+        ",", F.col("x").cast("string"), F.col("y").cast("string")
+    )
+    kept = e.where(
+        F.conv(F.substring(F.md5(edge_key), 1, 8), 16, 10).cast("long")
+        % p_den
+        == 0
+    )
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_exact = pool.submit(_tri_total, _oriented_edges(e))
-            f_samp = pool.submit(_tri_total, _oriented_edges(kept))
-            n_exact = f_exact.result()
-            n_samp = f_samp.result()
-    finally:
-        e.unpersist()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_exact = pool.submit(_tri_total, _oriented_edges(e))
+        f_samp = pool.submit(_tri_total, _oriented_edges(kept))
+        n_exact = f_exact.result()
+        n_samp = f_samp.result()
 
     n_est = n_samp * p_den**3
     rel_err = abs(n_est - n_exact) / n_exact if n_exact else 0.0
@@ -1077,8 +1067,9 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     pass materializes every partition, so the returned fixpoint never
     recomputes through inputs the caller has already unpersisted.
     Unconverged labels are WRONG labels, so the bound raises instead of
-    returning them; the fixpoint is fully materialized either way, so
-    the cached inputs are released before returning or raising.
+    returning them. The persisted pair and edge lists register with
+    ``caching.deferred``, like every round cache, so they are released
+    with the query whether it returns or raises.
     """
 
     def _round_agg(incoming: DataFrame) -> DataFrame:
@@ -1106,7 +1097,7 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     def _settled(rows: list[Row]) -> bool:
         return not rows[0]["n_improved"]  # NULL over an empty edge list
 
-    pairs = pairs.persist()
+    pairs = deferred(pairs.persist())
     nbr = pairs.unionAll(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).withColumn("is_self", F.lit(False))
@@ -1119,20 +1110,16 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             F.lit(True).alias("is_self"),
         )
     )
-    edges = nbr.unionAll(selfe).persist()
-    try:
-        # closed form: identity labels ⇒ incoming label = src id
-        first = _round_agg(edges.select("dst", F.col("src").alias("lbl"), "is_self"))
-        labels, stats = fixpoint(
-            first, _step,
-            lambda rnd, cur, prev: cur.agg(
-                F.sum(F.col("improved").cast("int")).alias("n_improved")
-            ),
-            max_rounds=max_rounds, checkpoint_every=_CC_CHECKPOINT_EVERY, until=_settled,
-        )
-    finally:
-        pairs.unpersist()
-        edges.unpersist()
+    edges = deferred(nbr.unionAll(selfe).persist())
+    # closed form: identity labels ⇒ incoming label = src id
+    first = _round_agg(edges.select("dst", F.col("src").alias("lbl"), "is_self"))
+    labels, stats = fixpoint(
+        first, _step,
+        lambda rnd, cur, prev: cur.agg(
+            F.sum(F.col("improved").cast("int")).alias("n_improved")
+        ),
+        max_rounds=max_rounds, checkpoint_every=_CC_CHECKPOINT_EVERY, until=_settled,
+    )
     if not _settled(stats[-1]):
         raise RuntimeError(
             "connected-components min-label propagation did not converge "
@@ -1160,8 +1147,8 @@ def _kcore_peel(cur: DataFrame) -> DataFrame:
 
 def _kcore_rounds(spark: SparkSession, sf_dir: str, run: bool):
     """Per-round stats of the ``_KCORE_ROUNDS`` peel rounds (rows when
-    ``run``, else lazy DataFrames) + the persisted doubled edge list the
-    rounds start from."""
+    ``run``, else lazy DataFrames) from the persisted, deferred doubled
+    edge list."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -1170,7 +1157,7 @@ def _kcore_rounds(spark: SparkSession, sf_dir: str, run: bool):
         )
         .distinct()
     )
-    base = (
+    base = deferred(
         li.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionByName(li.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .persist()
@@ -1184,13 +1171,12 @@ def _kcore_rounds(spark: SparkSession, sf_dir: str, run: bool):
         ),
         max_rounds=_KCORE_ROUNDS, checkpoint_every=1, run=run,
     )
-    return stats, [base]
+    return stats
 
 
-def _kcore_plan(spark: SparkSession, sf_dir: str):
-    """K-core shrinkage-curve plan + the persisted base edge table."""
-    stats, caches = _kcore_rounds(spark, sf_dir, run=False)
-    return reduce(DataFrame.unionByName, stats), caches
+def _kcore_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K-core shrinkage-curve plan."""
+    return reduce(DataFrame.unionByName, _kcore_rounds(spark, sf_dir, run=False))
 
 
 @query(
@@ -1253,10 +1239,8 @@ def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round (nodes, directed edges) shrinkage curve — integer counts,
     exact unrolled DuckDB oracle.
     """
-    stats, [base] = _kcore_rounds(spark, sf_dir, run=True)
-    base.unpersist()
     return local_frame(
         spark,
-        [row for rows in stats for row in rows],
+        [row for rows in _kcore_rounds(spark, sf_dir, run=True) for row in rows],
         "peel_round long, n_nodes long, n_directed_edges long",
     )

@@ -4,20 +4,20 @@ Every operator/query this engine claims (SURVEY.md §2 inventory + the
 extension operators) registers here with:
 
 - ``build(spark, sf_dir) -> DataFrame``  — the Spark-native implementation
-- ``plan(spark, sf_dir) -> (df, caches)`` — for the queries whose build
+- ``plan(spark, sf_dir) -> DataFrame``   — for the queries whose build
   runs a driver loop with a data-dependent stop, that loop's distributed
-  plan before it runs plus the intermediates it persisted; ``None`` when
-  ``build`` itself is lazy
+  plan before it runs; ``None`` when ``build`` itself is lazy
 - ``oracle``                             — equivalent DuckDB ANSI SQL, or
   ``None`` for genuinely non-SQL-expressible ops (ML training, LSH, streaming)
 
-One cache-lifetime rule holds for every build: a cache the plan reads
-(a persisted intermediate, a trained model's factors) registers with
-:func:`caching.deferred` and is released by the consumer once it is done
-with the result — ``runner.built`` on exit, ``__spark_entry__.queries()``
-before the next build. A build returns its plan unrun; only driver-side
-work that must see data (a quantizer fit, a convergence loop) runs jobs
-in the build.
+One cache lifetime holds for every build and plan: every cache it
+persists (an intermediate, a trained model's factors) registers with
+:func:`caching.deferred` where it is made and is released with its
+query, by the consumer once it is done with the result —
+``runner.built`` on exit, ``__spark_entry__.queries()`` before the next
+build. No cache outlives its query, so no query reads a cache another
+left. A build returns its plan unrun; only driver-side work that must
+see data (a quantizer fit, a convergence loop) runs jobs in the build.
 
 ``__spark_entry__.queries()`` / ``oracle_sql()`` and the pytest correctness
 gate are both thin views over this registry, so local tests exercise exactly
@@ -26,20 +26,19 @@ the driver's contract.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-# ``(spark, sf_dir) -> (df, caches)``: the distributed plan, not yet run, and
-# the intermediates it persisted (the caller unpersists them when done).
-Plan = Callable[[SparkSession, str], tuple[DataFrame, Sequence[DataFrame]]]
+# ``(spark, sf_dir) -> DataFrame``: the signature of a build and of a plan.
+Build = Callable[[SparkSession, str], DataFrame]
 
 
 @dataclass
 class Query:
     name: str
-    build: Callable[[SparkSession, str], DataFrame]
+    build: Build
     oracle: str | None = None
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
@@ -51,7 +50,7 @@ class Query:
     # a deterministic skip, never as an environment-dependent registry or a
     # guaranteed-red driver row.
     requires: tuple[str, ...] = field(default_factory=tuple)
-    plan: Plan | None = None
+    plan: Build | None = None
 
 
 QUERIES: dict[str, Query] = {}
@@ -62,14 +61,14 @@ def query(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     requires: tuple[str, ...] = (),
-    plan: Plan | None = None,
+    plan: Build | None = None,
 ):
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``,
     with ``plan`` as its lazy view when ``fn`` runs a data-dependent
     driver loop.
     Raises ``ValueError`` if ``name`` is already registered."""
 
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
+    def deco(fn: Build):
         prev = QUERIES.get(name)
         if prev is not None:
             raise ValueError(

@@ -32,25 +32,20 @@ def built(
     """Yield ``q``'s DataFrame, or with ``plan`` its ``Query.plan`` where it
     declares one, built on a fresh ``session.engine_session(spark)`` (so
     ``spark`` is left as it was) with the query name as the job
-    description. On exit, unpersist the plan's caches and every deferred
-    cache. A failure re-raises as :class:`QueryError`, in phase ``build``
-    while building and ``execute`` in the caller's body."""
+    description. On exit, release every deferred cache. A failure
+    re-raises as :class:`QueryError`, in phase ``build`` while building
+    and ``execute`` in the caller's body."""
     sc = spark.sparkContext
     sc.setJobDescription(q.name)
-    phase, caches = "build", ()
+    phase = "build"
     try:
         with engine_session(spark) as session:
-            if plan and q.plan is not None:
-                df, caches = q.plan(session, sf_dir)
-            else:
-                df = q.build(session, sf_dir)
+            df = (q.plan if plan and q.plan is not None else q.build)(session, sf_dir)
             phase = "execute"
             yield df
     except Exception as exc:
         raise QueryError(q.name, phase, exc) from exc
     finally:
-        for c in caches:
-            c.unpersist()
         release_deferred()
         sc.setJobDescription(None)
 

@@ -159,18 +159,16 @@ def _bucket_udf(planes: np.ndarray):
     return buckets
 
 
-def _with_buckets(e: DataFrame, n_planes: int, n_blocks: int, spread: bool = False) -> DataFrame:
+def _with_buckets(e: DataFrame, n_planes: int, n_blocks: int) -> DataFrame:
     """``e`` exploded to one row per (vector, LSH block bucket) by
-    :func:`_bucket_udf`. spread=True (the corpus side) first repartitions
-    by ``vec_id`` to the context's parallelism, not to the row rule's
-    count (``session.python_stage_tasks``): the persisted bucket table
-    keeps the width it is built with and the JVM joins that read it
-    inherit that width, so one task there measured near-dup 0.67 → 1.72 s
-    at sf0.1 on local[4]. A handful of query vectors doesn't warrant a
-    shuffle."""
+    :func:`_bucket_udf`, first repartitioned by ``vec_id`` to the
+    context's parallelism, not to the row rule's count
+    (``session.python_stage_tasks``): the persisted bucket table keeps
+    the width it is built with and the JVM joins that read it inherit
+    that width, so one task there measured near-dup 0.67 → 1.72 s at
+    sf0.1 on local[4]."""
     planes = _hyperplanes(n_blocks, n_planes)
-    if spread:
-        e = e.repartition(python_stage_tasks(e.sparkSession, None), "vec_id")
+    e = e.repartition(python_stage_tasks(e.sparkSession, None), "vec_id")
     return e.withColumn(
         "bucket", F.explode(_bucket_udf(planes)(F.col("embedding")))
     )
@@ -221,7 +219,7 @@ def q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second _with_buckets pass would re-analyze and re-run the identical
     # expression for no new information.
     corpus = deferred(
-        _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS, spread=True).persist()
+        _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS).persist()
     )
     queries = corpus.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "bucket"
@@ -946,11 +944,7 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the bucket computation and persist: the bucketed table feeds
     # BOTH sides of the self-join — without persist Spark recomputes every
     # hyperplane dot product twice
-    # deliberate session-lifetime cache (both self-join sides read the
-    # bucketed table; pair output is corpus-proportional, so collected()
-    # would bottleneck on the driver) — same trade as the dedup pair
-    # family, see dedup/queries.py module docstring's cache-lifetime note
-    b = _with_buckets(e.unionByName(planted), _DUP_PLANES, _DUP_BLOCKS, spread=True).persist()
+    b = deferred(_with_buckets(e.unionByName(planted), _DUP_PLANES, _DUP_BLOCKS).persist())
     a = b.alias("a")
     c = b.alias("b")
     # threshold BEFORE the dedup shuffle (shuffle fewer bytes): a pair
@@ -1185,7 +1179,7 @@ def q_rerank_two_stage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = deferred(
-        _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS, spread=True).persist()
+        _with_buckets(e, _ANN_PLANES, _ANN_BLOCKS).persist()
     )
     queries = corpus.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "bucket"
@@ -1299,7 +1293,7 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     union = e.unionByName(plant(_SEM_OFF_B, 1.5)).unionByName(
         plant(_SEM_OFF_C, 2.25)
     )
-    b = _with_buckets(union, _DUP_PLANES, _DUP_BLOCKS, spread=True).persist()
+    b = deferred(_with_buckets(union, _DUP_PLANES, _DUP_BLOCKS).persist())
     a, c = b.alias("a"), b.alias("b")
     # threshold BEFORE the dedup shuffle: the distinct would ship every
     # bucket collision + cosine; filtering first ships only the qualifying
@@ -1321,7 +1315,6 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     labels = min_label_components(pairs)
-    b.unpersist()
     # cluster size as a window over the SAME key the stats aggregate
     # used — one exchange on label instead of groupBy + join-back
     # (operations keyed the same way share one exchange)

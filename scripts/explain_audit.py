@@ -1,7 +1,11 @@
 """Plan-quality audit: print a one-line physical summary per registered
 query (join strategies, shuffle-exchange count, pushed filters on scans).
 
-Usage: python scripts/explain_audit.py [sf_dir] [query ...]
+Usage: python scripts/explain_audit.py [--formatted DIR] [sf_dir] [query ...]
+
+``--formatted DIR`` also writes each audited query's
+``explain("formatted")`` text to ``DIR/<query>.txt`` (for example one
+directory before and one after an optimization, then ``diff -r``).
 
 This is the per-operator review loop the 100 TB design demands: a query
 whose summary shows an unexpected SortMergeJoin where a broadcast fits, or
@@ -26,17 +30,26 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from als_pyspark_spark.plans.inspect import exchange_count, join_kinds, pushed_filters
+from als_pyspark_spark.plans.inspect import (
+    exchange_count,
+    formatted,
+    join_kinds,
+    pushed_filters,
+)
 from als_pyspark_spark.registry import Query, load_all_queries
 from als_pyspark_spark.runner import QueryError, built
 from als_pyspark_spark.session import build_session
 
 
-def audit_line(spark, q: Query, sf_dir: str) -> str:
-    """``q``'s one-line plan summary, as plan_baseline.txt holds it; a
+def audit_line(spark, q: Query, sf_dir: str, formatted_dir: str | None = None) -> str:
+    """``q``'s one-line plan summary, as plan_baseline.txt holds it, and
+    with ``formatted_dir`` its formatted plan in ``<name>.txt`` there; a
     query that fails yields an ERROR line, so the audit keeps going."""
     try:
         with built(spark, q, sf_dir, plan=True) as df:
+            if formatted_dir is not None:
+                with open(os.path.join(formatted_dir, f"{q.name}.txt"), "w") as f:
+                    f.write(formatted(df))
             joins = join_kinds(df)
             nex = exchange_count(df)
             npush = sum("[]" not in p for p in pushed_filters(df))
@@ -50,6 +63,11 @@ def audit_line(spark, q: Query, sf_dir: str) -> str:
 
 
 def main() -> int:
+    formatted_dir = None
+    if sys.argv[1:2] == ["--formatted"]:
+        formatted_dir = sys.argv.pop(2)
+        del sys.argv[1]
+        os.makedirs(formatted_dir, exist_ok=True)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
     spark = build_session("explain-audit")
@@ -57,7 +75,7 @@ def main() -> int:
 
     for name, q in sorted(load_all_queries().items()):
         if not only or name in only:
-            print(audit_line(spark, q, sf_dir))
+            print(audit_line(spark, q, sf_dir, formatted_dir))
     spark.stop()
     return 0
 

@@ -170,10 +170,13 @@ def test_min_label_components_empty_pairs(spark):
 
 def test_min_label_components_unconverged_raises_and_releases(spark, monkeypatch):
     """A diameter-3 chain still improves in round 2, so ``max_rounds=2``
-    raises instead of returning wrong labels, and no DataFrame the loop
-    persisted (inputs or rounds) stays cached."""
+    raises instead of returning wrong labels, and once the consumer
+    releases the query's deferred caches (as ``runner.built`` does on
+    exit) no DataFrame the loop persisted (inputs or rounds) stays
+    cached."""
     from pyspark import StorageLevel
 
+    from als_pyspark_spark.caching import release_deferred
     from als_pyspark_spark.operators.graph import min_label_components
 
     cls, persisted = type(spark.range(1)), []
@@ -187,6 +190,7 @@ def test_min_label_components_unconverged_raises_and_releases(spark, monkeypatch
     with pytest.raises(RuntimeError, match="did not converge within 2 rounds"):
         min_label_components(pairs, max_rounds=2)
     monkeypatch.undo()
+    release_deferred()
     none = StorageLevel(False, False, False, False, 1)
     assert len(persisted) == 4  # pairs, edges, two rounds
     assert all(p.storageLevel == none for p in persisted)

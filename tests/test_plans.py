@@ -835,15 +835,15 @@ def test_pagerank_converged_constant_plan_across_rounds(spark, sf_dir):
     lazy chain to rounds 4, 7, and 10 (one past each checkpoint
     boundary): identical exchange counts and identical operator mix —
     the plan does not grow with the round number."""
+    from als_pyspark_spark.caching import release_deferred
     from als_pyspark_spark.operators.graph import _prc_chain
     from als_pyspark_spark.plans.inspect import exchange_count, join_kinds
 
     shapes = []
     for n in (4, 7, 10):
-        df, caches = _prc_chain(spark, sf_dir, n)
+        df = _prc_chain(spark, sf_dir, n)
         shapes.append((exchange_count(df), tuple(sorted(join_kinds(df)))))
-        for c in caches:
-            c.unpersist()
+    release_deferred()
     assert shapes[0] == shapes[1] == shapes[2], shapes
 
 
@@ -932,7 +932,7 @@ def test_bpe_train_cluster_footprint_is_one_aggregate(spark, sf_dir):
     never touches the cluster again at any merge count."""
     from als_pyspark_spark.plans.inspect import exchange_count, join_kinds
 
-    df, _ = QUERIES["q_bpe_train_merges"].plan(spark, sf_dir)
+    df = QUERIES["q_bpe_train_merges"].plan(spark, sf_dir)
     plan = plan_of(df)
     assert exchange_count(df) == 1, plan
     assert join_kinds(df) == [], plan

@@ -216,16 +216,18 @@ def test_dtype_parity_catches_hugeint_class():
 
 
 def test_every_persist_site_is_released_or_documented():
-    """Mechanical closure of the round-9 cache-leak class: every
-    ``.persist()`` in the engine must sit in a function that either
-    releases the cache (``caching.deferred`` / an explicit
-    ``unpersist``), hands it to its caller for release (the
-    ``return <df>, [caches]`` lazy-plan-helper convention), or carries
-    the 'deliberate session-lifetime cache' marker comment pointing at
-    the documented trade (dedup/queries.py module docstring: 3-4 readers,
-    measured 56x recompute, corpus-proportional results). A bare persist
-    with none of these is exactly how the r8/r9 ADVICE leaks shipped."""
-    import re
+    """Every ``.persist()`` in the engine sits inside a ``deferred(...)``
+    call: the one cache lifetime, registered where the cache is made and
+    released with its query by the consumer (``caching.deferred``). A
+    persist in any other form is how caches came to outlive their query
+    (the r8/r9 ADVICE leaks, the pair tables once kept for the session)."""
+    import ast
+
+    def is_call(node, name):
+        f = getattr(node, "func", None)
+        return isinstance(node, ast.Call) and name in (
+            getattr(f, "id", None), getattr(f, "attr", None)
+        )
 
     pkg = os.path.join(_REPO, "als_pyspark_spark")
     offenders = []
@@ -234,34 +236,20 @@ def test_every_persist_site_is_released_or_documented():
             if not fn.endswith(".py"):
                 continue
             path = os.path.join(root, fn)
-            src = open(path).read().splitlines()
-            defs = [
-                (i, re.match(r"\s*def (\w+)", l).group(1))
-                for i, l in enumerate(src)
-                if re.match(r"\s*def \w+", l)
+            tree = ast.parse(open(path).read())
+            deferred = {
+                id(n)
+                for call in ast.walk(tree)
+                if is_call(call, "deferred")
+                for arg in call.args
+                for n in ast.walk(arg)
+            }
+            offenders += [
+                f"{path}:{n.lineno}"
+                for n in ast.walk(tree)
+                if is_call(n, "persist") and id(n) not in deferred
             ]
-            for i, line in enumerate(src):
-                if ".persist()" not in line or line.strip().startswith("#"):
-                    continue
-                start = max((d for d in defs if d[0] <= i), default=(0, "<module>"))
-                end = min((d[0] for d in defs if d[0] > i), default=len(src))
-                body = "\n".join(src[start[0] : end])
-                documented = any(
-                    "deliberate session-lifetime cache" in l
-                    for l in src[max(0, i - 6) : i]
-                )
-                released = (
-                    "unpersist" in body
-                    or "deferred(" in body  # released by the consumer
-                    or re.search(r"return .*, \[", body) is not None
-                    or re.search(r"return .*, caches", body) is not None
-                )
-                if not (documented or released):
-                    offenders.append(f"{path}:{i + 1} in {start[1]}")
-    assert not offenders, (
-        "persist() without release, caller-release convention, or the "
-        f"documented-cache marker: {offenders}"
-    )
+    assert not offenders, f"persist() outside a deferred(...) call: {offenders}"
 
 
 def test_driver_rows_enter_spark_only_through_local_frame():

@@ -17,15 +17,27 @@ from als_pyspark_spark.registry import Query, load_all_queries
 from als_pyspark_spark.runner import QueryError, built
 
 QUERIES = load_all_queries()
+# The queries that once kept a cache for the session; with
+# ``q_dedup_clusters``, the one that released a cache they shared.
+SESSION_CACHED = (
+    "q_dedup_ngram_jaccard",
+    "q_dedup_minhash_lsh",
+    "q_dedup_simhash",
+    "q_dedup_ngram_containment",
+    "q_dedup_minhash_incremental",
+    "q_embedding_neardup_pairs",
+    "q_dedup_clusters",
+)
 # The three queries whose ``Query.plan`` is a data-dependent driver loop,
-# and the eleven bounded queries whose lazy build persists intermediates.
-PERSISTING = (
+# and the queries whose build persists intermediates.
+PERSISTING = SESSION_CACHED + (
     "q_ann_ivf_top10",
     "q_ann_ivfpq_top10",
     "q_ann_lsh_top10",
     "q_bfs_part_distances",
     "q_boilerplate_ngrams",
     "q_bpe_train_merges",
+    "q_dedup_tier_recall",
     "q_equidepth_deciles",
     "q_kcore_peeling",
     "q_label_propagation_communities",
@@ -33,8 +45,13 @@ PERSISTING = (
     "q_pagerank_copurchase",
     "q_pipeline_e2e",
     "q_rerank_two_stage_topk",
+    "q_semantic_dedup_clusters",
+    "q_triangle_count_doulion",
     "q_triangle_count_parts",
 )
+# Builds whose result is driver-side rows by design, with no lazy plan:
+# doulion returns the one-row estimate its two counting jobs computed.
+DRIVER_ROWS = ("q_triangle_count_doulion",)
 _NONE = StorageLevel(False, False, False, False, 1)
 
 
@@ -42,7 +59,7 @@ _NONE = StorageLevel(False, False, False, False, 1)
 def test_plan_releases_every_cache_it_persisted(name, spark, sf_dir, monkeypatch):
     """Every DataFrame the plan (or lazy build) persists is uncached once
     the runner context exits, and the yielded DataFrame is the distributed
-    plan, not a leaf of collected rows."""
+    plan, not a leaf of collected rows (except for ``DRIVER_ROWS``)."""
     cls, persisted = type(spark.range(1)), []
     for method in ("persist", "cache"):
 
@@ -53,25 +70,40 @@ def test_plan_releases_every_cache_it_persisted(name, spark, sf_dir, monkeypatch
         monkeypatch.setattr(cls, method, recording)
     with built(spark, QUERIES[name], sf_dir, plan=True) as df:
         root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-        assert root not in ("LocalRelation", "LogicalRDD"), root
+        assert name in DRIVER_ROWS or root not in ("LocalRelation", "LogicalRDD"), root
     monkeypatch.undo()
     leaked = [p for p in persisted if p.storageLevel != _NONE]
     assert not leaked, f"{name} left {len(leaked)} of {len(persisted)} caches"
 
 
+def test_no_cache_outlives_its_query(spark, sf_dir):
+    """Forced one after another in one session, the queries that persist
+    the dedup and near-dup pair tables leave Spark's shared cache empty
+    and no new persistent RDD: no query can read a cache another left,
+    or drop one another still reads."""
+    runner.reset_memos()
+    spark.catalog.clearCache()  # caches earlier tests' fixtures held
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    rdds = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    before = rdds()
+    for name in SESSION_CACHED:
+        runner.force(spark, QUERIES[name], sf_dir)
+    assert cache.isEmpty()
+    assert rdds() <= before
+
+
 def _failing_query(spark, fail_in: str) -> tuple[Query, list]:
-    """A query that registers a deferred cache and a plan cache, then fails
-    while building or while its result is written."""
+    """A query that registers a deferred cache, then fails while building
+    or while its result is written."""
     caches = []
 
     def plan(spark, sf_dir):
         caches.append(deferred(spark.range(5).persist()))
-        caches.append(spark.range(6).persist())
         if fail_in == "build":
             raise ValueError("boom")
-        return spark.range(3).select(F.raise_error(F.lit("boom"))), [caches[-1]]
+        return spark.range(3).select(F.raise_error(F.lit("boom")))
 
-    q = Query(name="q_runner_probe", build=lambda s, d: plan(s, d)[0], plan=plan)
+    q = Query(name="q_runner_probe", build=plan, plan=plan)
     return q, caches
 
 
@@ -96,15 +128,14 @@ def test_execute_failure_names_query_and_phase(spark, sf_dir):
     assert (err.value.name, err.value.phase) == ("q_runner_probe", "execute")
     assert "q_runner_probe: execute failed" in str(err.value)
     assert not caching._DEFERRED
-    assert [c.storageLevel for c in caches] == [_NONE, _NONE]
+    assert [c.storageLevel for c in caches] == [_NONE]
 
     with pytest.raises(QueryError) as err:
         runner.force(spark, q, sf_dir)
     assert err.value.phase == "execute"
     assert not caching._DEFERRED
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None
-    for c in caches:
-        c.unpersist()
+    assert [c.storageLevel for c in caches] == [_NONE, _NONE]
 
 
 def test_reset_memos_clears_in_place():
