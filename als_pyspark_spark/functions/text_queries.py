@@ -7,9 +7,6 @@ shuffles are the final aggregates.
 
 from __future__ import annotations
 
-import os
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -584,24 +581,8 @@ _BPE_MIN_PAIR = 2  # stop early when the best pair is unrepeated
 # Driver-collect row budget for the trainer's distinct-word table (see
 # _bpe_train). 10M short-word rows ≈ hundreds of MB of driver
 # heap — generous for any natural-language vocabulary, small enough to fail
-# loudly before the JVM does. SPARK_GRAFT_BPE_DRIVER_ROWS overrides it; it
-# is read when the trainer runs, so a malformed value cannot break the
-# import of this module.
+# loudly before the JVM does.
 _BPE_DRIVER_ROW_BUDGET = 10_000_000
-
-
-def _bpe_driver_row_budget() -> int:
-    raw = os.environ.get("SPARK_GRAFT_BPE_DRIVER_ROWS")
-    if raw is None:
-        return _BPE_DRIVER_ROW_BUDGET
-    try:
-        return int(raw)
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_BPE_DRIVER_ROWS={raw!r} is not an integer; using "
-            f"the default budget of {_BPE_DRIVER_ROW_BUDGET} rows"
-        )
-        return _BPE_DRIVER_ROW_BUDGET
 
 
 def _bpe_words0(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,15 +600,6 @@ def _bpe_words0(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wc",
         )
     )
-
-
-def _bpe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit plan for the trainer's DISTRIBUTED portion: the one
-    corpus-sized job (explode -> partial+final count aggregate on the
-    distinct-word grain). Merge resolution itself is driver-side over the
-    vocabulary-bounded collect of this table (see _bpe_train), so this IS
-    the trainer's whole cluster footprint at any merge count."""
-    return _bpe_words0(spark, sf_dir)
 
 
 def _bpe_train_ctes() -> str:
@@ -746,22 +718,20 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     inside collect(). The word table is persisted, counted (one cheap
     action on the cached table — the corpus-sized job still runs exactly
     once), and the collect only proceeds under ``_BPE_DRIVER_ROW_BUDGET``
-    rows (env ``SPARK_GRAFT_BPE_DRIVER_ROWS``; default 10M ≈ several
-    hundred MB of driver heap for short words). Over budget, the trainer
-    raises a clear error pointing at the archived in-plan chunked trainer
-    instead of dying in the JVM. A frequency-floor prune was considered
+    rows (10M ≈ several hundred MB of driver heap for short words). Over
+    budget, the trainer raises a clear error pointing at the archived
+    in-plan chunked trainer instead of dying in the JVM. A frequency-floor prune was considered
     and REJECTED as inexact: pair counts sum wc over words, so many wc=1
     words can jointly host a winning pair — dropping them could change the
     learned merge list."""
     words0 = deferred(_bpe_words0(spark, sf_dir).persist())
     n_words = words0.count()
-    budget = _bpe_driver_row_budget()
-    if n_words > budget:
+    if n_words > _BPE_DRIVER_ROW_BUDGET:
         raise ValueError(
             f"BPE trainer: distinct-word table has {n_words} rows, over "
-            f"the driver collect budget ({budget}; env "
-            "SPARK_GRAFT_BPE_DRIVER_ROWS). A corpus whose vocabulary "
-            "outgrows the driver needs an in-plan merge trainer."
+            f"the driver collect budget ({_BPE_DRIVER_ROW_BUDGET}). A corpus "
+            "whose vocabulary outgrows the driver needs an in-plan merge "
+            "trainer."
         )
     rows = words0.collect()  # vocabulary-bounded, now proven in-budget
     words: list[tuple[tuple[str, ...], int]] = [
@@ -808,7 +778,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     "q_bpe_train_merges",
     oracle=_bpe_oracle(),
     tags=("text", "bpe", "tokenizer", "iterative", "convergence"),
-    plan=_bpe_plan,
 )
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL iterative BPE tokenizer training (Sennrich): up to

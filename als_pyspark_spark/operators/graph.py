@@ -15,7 +15,7 @@ identical in both engines for the non-negative values involved.
 from __future__ import annotations
 
 from collections.abc import Callable
-from functools import partial, reduce
+from functools import partial
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,15 +33,13 @@ def fixpoint(
     max_rounds: int,
     checkpoint_every: int,
     until: Callable[[list[Row]], bool] | None = None,
-    run: bool = True,
-) -> tuple[DataFrame, list]:
+) -> tuple[DataFrame, list[list[Row]]]:
     """Drive an iterative round loop: round 1 is ``first``, round r is
     ``step(round r−1)``, for at most ``max_rounds`` rounds. After each
     round, ``probe(r, round r, round r−1 or None)`` gives a small
-    DataFrame. Returns the last round's table and the per-round probe
-    results: collected rows when ``run``, else the lazy DataFrames.
-    With ``run``, the loop stops after the first round whose rows
-    satisfy ``until``.
+    DataFrame, which is collected. Returns the last round's table and
+    the per-round probe rows; the loop stops after the first round whose
+    rows satisfy ``until``.
 
     This is the one place a round is persisted, checkpointed and
     released — the reference's per-iteration persist → materialize →
@@ -66,47 +64,25 @@ def fixpoint(
       returned table once the caller's result is consumed, and any cache
       a failed round left behind. ``Dataset.checkpoint`` needs the
       checkpoint dir every engine session claims.
-
-    Without ``run`` the rounds are built lazily for ``Query.plan``: no
-    persist, no probe action, and no ``until``. A checkpoint round becomes
-    the leaf its checkpoint plans to (same output, partitioning and
-    statistics) over an empty RDD, because under AQE a lazy checkpoint
-    still runs the round's shuffle stages. The plan renders as the run's
-    does and starts no job, but it is for inspection: it returns no rows.
     """
     prev: DataFrame | None = None
     held: DataFrame | None = None  # the cache behind ``prev``, if any
-    stats: list = []
+    stats: list[list[Row]] = []
     for rnd in range(1, max_rounds + 1):
-        cur = cached = first if prev is None else step(prev)
-        if run:
-            deferred(cached.persist())
+        cur = cached = deferred((first if prev is None else step(prev)).persist())
         if rnd % checkpoint_every == 0:
-            cur = cur.checkpoint(eager=False) if run else _checkpoint_leaf(cur)
-        out = probe(rnd, cur, prev)
+            cur = cur.checkpoint(eager=False)
+        rows = probe(rnd, cur, prev).collect()
         prev = cur
-        if run:
-            out = out.collect()
-            if held is not None:
-                held.unpersist()
-            if cur is not cached:  # checkpointed: later reads use the files
-                cached.unpersist()
-            held = cached if cur is cached else None
-        stats.append(out)
-        if run and until is not None and until(out):
+        if held is not None:
+            held.unpersist()
+        if cur is not cached:  # checkpointed: later reads use the files
+            cached.unpersist()
+        held = cached if cur is cached else None
+        stats.append(rows)
+        if until is not None and until(rows):
             break
     return prev, stats
-
-
-def _checkpoint_leaf(df: DataFrame) -> DataFrame:
-    """The ``LogicalRDD`` leaf ``df.checkpoint()`` plans to, over an empty
-    RDD, so building it starts no job."""
-    spark, jvm = df.sparkSession, df.sparkSession._jvm
-    companion = getattr(jvm.org.apache.spark.sql.execution, "LogicalRDD$")
-    logical_rdd = getattr(companion, "MODULE$")
-    leaf = logical_rdd.fromDataset(spark._jsc.emptyRDD().rdd(), df._jdf, False)
-    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(df._jdf.sparkSession(), leaf)
-    return DataFrame(jdf, spark)
 
 
 _PR_ITERS = 3
@@ -379,34 +355,21 @@ def _prc_point(rows: list[Row]) -> tuple[int, int]:
     return int(rows[0]["l1"] or 0), int(rows[0]["mass"] or 0)
 
 
-def _prc_rounds(eo: DataFrame, n_rounds: int, run: bool):
+def _prc_rounds(eo: DataFrame, n_rounds: int):
     """Up to ``n_rounds`` convergence-PageRank rounds over the edge table
-    ``eo``; with ``run`` they stop at the first round where 2·L1 ≤ mass,
-    which includes the empty graph (mass 0)."""
+    ``eo``, stopping at the first round where 2·L1 ≤ mass, which
+    includes the empty graph (mass 0)."""
     return fixpoint(
         _pr_round(eo), partial(_pr_round, eo), _prc_residual,
-        max_rounds=n_rounds, checkpoint_every=_PRC_CHECKPOINT_EVERY, run=run,
+        max_rounds=n_rounds, checkpoint_every=_PRC_CHECKPOINT_EVERY,
         until=lambda rows: 2 * _prc_point(rows)[0] <= _prc_point(rows)[1],
     )
-
-
-def _prc_chain(spark: SparkSession, sf_dir: str, n_rounds: int) -> DataFrame:
-    """Lazy n-round convergence-PageRank chain for plan tests and the
-    explain audit: the rounds of ``q_pagerank_converged`` in plan mode."""
-    ranks, _ = _prc_rounds(_copurchase_rank_base(spark, sf_dir), n_rounds, run=False)
-    return ranks
-
-
-def _prc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Steady-state audit plan: one round past a checkpoint boundary."""
-    return _prc_chain(spark, sf_dir, _PRC_CHECKPOINT_EVERY + 1)
 
 
 @query(
     "q_pagerank_converged",
     oracle=_prc_oracle(),
     tags=("graph", "pagerank", "iterative", "convergence"),
-    plan=_prc_plan,
 )
 def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank run to CONVERGENCE instead of a fixed unroll: iterate the
@@ -429,7 +392,7 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-byte-per-node checkpoint write every 3 rounds — constant cost per
     round, bounded driver memory, any round count.
     """
-    _, stats = _prc_rounds(_copurchase_rank_base(spark, sf_dir), _PRC_CAP, run=True)
+    _, stats = _prc_rounds(_copurchase_rank_base(spark, sf_dir), _PRC_CAP)
     curve = [
         (rnd, l1, mass, 2 * l1 <= mass)
         for rnd, (l1, mass) in enumerate(map(_prc_point, stats), 1)
@@ -1145,10 +1108,9 @@ def _kcore_peel(cur: DataFrame) -> DataFrame:
     )
 
 
-def _kcore_rounds(spark: SparkSession, sf_dir: str, run: bool):
-    """Per-round stats of the ``_KCORE_ROUNDS`` peel rounds (rows when
-    ``run``, else lazy DataFrames) from the persisted, deferred doubled
-    edge list."""
+def _kcore_rounds(spark: SparkSession, sf_dir: str) -> list[list[Row]]:
+    """Per-round stats rows of the ``_KCORE_ROUNDS`` peel rounds from the
+    persisted, deferred doubled edge list."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -1169,14 +1131,9 @@ def _kcore_rounds(spark: SparkSession, sf_dir: str, run: bool):
             F.countDistinct("u").alias("n_nodes"),
             F.count("*").alias("n_directed_edges"),
         ),
-        max_rounds=_KCORE_ROUNDS, checkpoint_every=1, run=run,
+        max_rounds=_KCORE_ROUNDS, checkpoint_every=1,
     )
     return stats
-
-
-def _kcore_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-core shrinkage-curve plan."""
-    return reduce(DataFrame.unionByName, _kcore_rounds(spark, sf_dir, run=False))
 
 
 @query(
@@ -1214,7 +1171,6 @@ SELECT CAST(3 AS BIGINT), CAST(COUNT(DISTINCT u) AS BIGINT),
        CAST(COUNT(*) AS BIGINT) FROM e3
 """,
     tags=("graph", "kcore", "iterative", "peeling"),
-    plan=_kcore_plan,
 )
 def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core peeling (k = 3, 3 synchronous rounds) over the
@@ -1241,6 +1197,6 @@ def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return local_frame(
         spark,
-        [row for rows in _kcore_rounds(spark, sf_dir, run=True) for row in rows],
+        [row for rows in _kcore_rounds(spark, sf_dir) for row in rows],
         "peel_round long, n_nodes long, n_directed_edges long",
     )

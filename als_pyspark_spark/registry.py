@@ -3,21 +3,21 @@
 Every operator/query this engine claims (SURVEY.md §2 inventory + the
 extension operators) registers here with:
 
-- ``build(spark, sf_dir) -> DataFrame``  — the Spark-native implementation
-- ``plan(spark, sf_dir) -> DataFrame``   — for the queries whose build
-  runs a driver loop with a data-dependent stop, that loop's distributed
-  plan before it runs; ``None`` when ``build`` itself is lazy
-- ``oracle``                             — equivalent DuckDB ANSI SQL, or
-  ``None`` for genuinely non-SQL-expressible ops (ML training, LSH, streaming)
+- ``build(spark, sf_dir) -> DataFrame`` — the Spark-native implementation,
+  the query's one entry point
+- ``oracle`` — equivalent DuckDB ANSI SQL, or ``None`` for genuinely
+  non-SQL-expressible ops (ML training, LSH, streaming)
 
-One cache lifetime holds for every build and plan: every cache it
+One cache lifetime holds for every build: every cache it
 persists (an intermediate, a trained model's factors) registers with
 :func:`caching.deferred` where it is made and is released with its
 query, by the consumer once it is done with the result —
 ``runner.built`` on exit, ``__spark_entry__.queries()`` before the next
 build. No cache outlives its query, so no query reads a cache another
 left. A build returns its plan unrun; only driver-side work that must
-see data (a quantizer fit, a convergence loop) runs jobs in the build.
+see data (a quantizer fit, a convergence loop) runs jobs in the build,
+and a build whose loop has a data-dependent stop (k-core peeling,
+converged PageRank, BPE training) returns the rows that loop collected.
 
 ``__spark_entry__.queries()`` / ``oracle_sql()`` and the pytest correctness
 gate are both thin views over this registry, so local tests exercise exactly
@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-# ``(spark, sf_dir) -> DataFrame``: the signature of a build and of a plan.
+# ``(spark, sf_dir) -> DataFrame``: the signature of a build.
 Build = Callable[[SparkSession, str], DataFrame]
 
 
@@ -50,7 +50,6 @@ class Query:
     # a deterministic skip, never as an environment-dependent registry or a
     # guaranteed-red driver row.
     requires: tuple[str, ...] = field(default_factory=tuple)
-    plan: Build | None = None
 
 
 QUERIES: dict[str, Query] = {}
@@ -61,11 +60,8 @@ def query(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     requires: tuple[str, ...] = (),
-    plan: Build | None = None,
 ):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``,
-    with ``plan`` as its lazy view when ``fn`` runs a data-dependent
-    driver loop.
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
     Raises ``ValueError`` if ``name`` is already registered."""
 
     def deco(fn: Build):
@@ -82,7 +78,6 @@ def query(
             tags=tags,
             doc=fn.__doc__ or "",
             requires=requires,
-            plan=plan,
         )
         return fn
 

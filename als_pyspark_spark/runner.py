@@ -1,7 +1,7 @@
 """The one way harnesses run a registered query: :func:`built` builds it
-(or its lazy ``Query.plan``) on a fresh engine session and releases what
-it cached on exit, :func:`force` runs it into the noop sink, and
-:func:`reset_memos` makes the next run re-pay the cross-query memos."""
+on a fresh engine session and releases what it cached on exit,
+:func:`force` runs it into the noop sink, and :func:`reset_memos` makes
+the next run re-pay the cross-query memos."""
 
 from __future__ import annotations
 
@@ -26,21 +26,18 @@ class QueryError(RuntimeError):
 
 
 @contextmanager
-def built(
-    spark: SparkSession, q: Query, sf_dir: str, plan: bool = False
-) -> Iterator[DataFrame]:
-    """Yield ``q``'s DataFrame, or with ``plan`` its ``Query.plan`` where it
-    declares one, built on a fresh ``session.engine_session(spark)`` (so
-    ``spark`` is left as it was) with the query name as the job
-    description. On exit, release every deferred cache. A failure
-    re-raises as :class:`QueryError`, in phase ``build`` while building
-    and ``execute`` in the caller's body."""
+def built(spark: SparkSession, q: Query, sf_dir: str) -> Iterator[DataFrame]:
+    """Yield ``q``'s DataFrame, built on a fresh
+    ``session.engine_session(spark)`` (so ``spark`` is left as it was)
+    with the query name as the job description. On exit, release every
+    deferred cache. A failure re-raises as :class:`QueryError`, in phase
+    ``build`` while building and ``execute`` in the caller's body."""
     sc = spark.sparkContext
     sc.setJobDescription(q.name)
     phase = "build"
     try:
         with engine_session(spark) as session:
-            df = (q.plan if plan and q.plan is not None else q.build)(session, sf_dir)
+            df = q.build(session, sf_dir)
             phase = "execute"
             yield df
     except Exception as exc:

@@ -60,8 +60,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 _MemoKey = tuple[str, int, int, str]
 _SCHEMAS: dict[_MemoKey, StructType] = {}

@@ -12,9 +12,10 @@ whose summary shows an unexpected SortMergeJoin where a broadcast fits, or
 N exchanges where the partitioning should have been reused, gets fixed —
 tests/test_plans.py then pins the fixed shape.
 
-Queries whose build runs a data-dependent driver loop are audited through
-their lazy ``Query.plan``, so the line shows the distributed plan, not the
-rows the loop returns.
+Every query is audited through its ``build``, the plan that runs: a
+query whose build runs a data-dependent driver loop (k-core peeling,
+converged PageRank, BPE training) returns the rows that loop collected,
+so its line reads ``exchanges= 0 joins=-``.
 
 scripts/plan_baseline.txt holds a snapshot of this output (sf0.001); diff
 against a fresh run to catch plan drift — an exchange-count jump on an
@@ -46,7 +47,7 @@ def audit_line(spark, q: Query, sf_dir: str, formatted_dir: str | None = None) -
     with ``formatted_dir`` its formatted plan in ``<name>.txt`` there; a
     query that fails yields an ERROR line, so the audit keeps going."""
     try:
-        with built(spark, q, sf_dir, plan=True) as df:
+        with built(spark, q, sf_dir) as df:
             if formatted_dir is not None:
                 with open(os.path.join(formatted_dir, f"{q.name}.txt"), "w") as f:
                     f.write(formatted(df))

@@ -33,7 +33,8 @@ def _release_trained_models():
 def rated(spark, sf_dir):
     r = ratings(spark, sf_dir).cache()
     r.count()
-    return r
+    yield r
+    r.unpersist()
 
 
 @pytest.fixture(scope="module")

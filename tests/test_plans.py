@@ -25,10 +25,23 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def lazy_plan(spark, sf_dir, name, render=plan_of) -> str:
-    """``render`` of a query's lazy plan (its ``Query.plan`` where it
-    declares one, else its build); the runner releases the plan's caches."""
-    with built(spark, QUERIES[name], sf_dir, plan=True) as df:
+    """``render`` of the lazy plan a query's build returns; the runner
+    releases the caches the build persisted."""
+    with built(spark, QUERIES[name], sf_dir) as df:
         return render(df)
+
+
+def _recording(probe, shapes: dict):
+    """``probe`` for :func:`fixpoint` that first records, per round, the
+    (plan, exchange count, join kinds) of the round's table, then returns
+    ``probe``'s DataFrame."""
+    from als_pyspark_spark.plans.inspect import exchange_count, join_kinds
+
+    def recording(rnd, cur, prev):
+        shapes[rnd] = (plan_of(cur), exchange_count(cur), tuple(sorted(join_kinds(cur))))
+        return probe(rnd, cur, prev)
+
+    return recording
 
 
 def test_q6_pushes_filters_to_scan(spark, sf_dir):
@@ -815,45 +828,68 @@ def test_label_propagation_keyed_joins_no_window(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_kcore_checkpoint_bounds_lineage(spark, sf_dir):
+def test_kcore_checkpoint_bounds_lineage(spark, sf_dir, monkeypatch):
     """K-core's round plan references its predecessor THREE times (degree
     + both semi-join filters), so unrolled lineage grows 3^rounds — 120
-    exchanges measured at 3 rounds before the fix. The per-round eager
-    checkpoint must truncate each round to a leaf scan: the final plan is
-    three small aggregates over checkpoint RDD scans — bounded exchange
-    count, no window, no cartesian."""
-    plan = lazy_plan(spark, sf_dir, "q_kcore_peeling")
-    assert "CartesianProduct" not in plan, plan
-    assert "Window" not in plan, plan
-    assert plan.count("Exchange") <= 12, plan
+    exchanges measured at 3 rounds before the fix. The per-round
+    checkpoint must truncate each round to a leaf scan: bounded exchange
+    count, no window, no cartesian in every round the query's build
+    runs."""
+    from als_pyspark_spark.operators import graph
+
+    shapes, fixpoint = {}, graph.fixpoint
+    monkeypatch.setattr(
+        graph, "fixpoint",
+        lambda first, step, probe, **kw: fixpoint(first, step, _recording(probe, shapes), **kw),
+    )
+    with built(spark, QUERIES["q_kcore_peeling"], sf_dir):
+        pass
+    assert sorted(shapes) == [1, 2, 3], shapes
+    for plan, n_exchanges, _ in shapes.values():
+        assert "CartesianProduct" not in plan, plan
+        assert "Window" not in plan, plan
+        assert n_exchanges <= 12, plan
 
 
 def test_pagerank_converged_constant_plan_across_rounds(spark, sf_dir):
     """The convergence-driven PageRank's whole scaling claim: with a
     reliable checkpoint every 3 rounds, the round plan is rooted at most
-    3 rounds above a leaf at ANY iteration count. Pin it by building the
-    lazy chain to rounds 4, 7, and 10 (one past each checkpoint
-    boundary): identical exchange counts and identical operator mix —
-    the plan does not grow with the round number."""
+    3 rounds above a leaf at ANY iteration count. Pin it by running the
+    query's own rounds, with no convergence stop, to round 10: rounds 4,
+    7 and 10 (one past each checkpoint boundary) run identical exchange
+    counts and identical operator mix — the plan does not grow with the
+    round number."""
+    from functools import partial
+
     from als_pyspark_spark.caching import release_deferred
-    from als_pyspark_spark.operators.graph import _prc_chain
-    from als_pyspark_spark.plans.inspect import exchange_count, join_kinds
+    from als_pyspark_spark.operators.graph import (
+        _PRC_CHECKPOINT_EVERY,
+        _copurchase_rank_base,
+        _pr_round,
+        _prc_residual,
+        fixpoint,
+    )
 
-    shapes = []
-    for n in (4, 7, 10):
-        df = _prc_chain(spark, sf_dir, n)
-        shapes.append((exchange_count(df), tuple(sorted(join_kinds(df)))))
-    release_deferred()
-    assert shapes[0] == shapes[1] == shapes[2], shapes
+    shapes = {}
+    eo = _copurchase_rank_base(spark, sf_dir)
+    try:
+        fixpoint(
+            _pr_round(eo), partial(_pr_round, eo), _recording(_prc_residual, shapes),
+            max_rounds=10, checkpoint_every=_PRC_CHECKPOINT_EVERY,
+        )
+    finally:
+        release_deferred()
+    rounds = [shapes[r][1:] for r in (4, 7, 10)]
+    assert rounds[0] == rounds[1] == rounds[2], rounds
 
 
-def _jobs_in_second_build(spark, sf_dir, name, plan) -> int:
-    """Spark jobs started by a build of ``name`` (its ``Query.plan`` with
-    ``plan``) once a first build has read the parquet schemas."""
+def _jobs_in_second_build(spark, sf_dir, name) -> int:
+    """Spark jobs started by a build of ``name`` once a first build has
+    read the parquet schemas."""
     sc = spark.sparkContext
 
     def build():
-        with built(spark, QUERIES[name], sf_dir, plan=plan):
+        with built(spark, QUERIES[name], sf_dir):
             pass
 
     build()
@@ -863,13 +899,6 @@ def _jobs_in_second_build(spark, sf_dir, name, plan) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(f"build-{name}"))
-
-
-@pytest.mark.parametrize("name", ["q_kcore_peeling", "q_pagerank_converged"])
-def test_fixpoint_plan_starts_no_job(spark, sf_dir, name):
-    """A plan-mode build of a checkpointed loop runs none of its rounds
-    (under AQE a lazy checkpoint would run each round's shuffle stages)."""
-    assert _jobs_in_second_build(spark, sf_dir, name, plan=True) == 0
 
 
 # The bounded queries whose build is their lazy plan, with the jobs of the
@@ -895,8 +924,7 @@ _LAZY_BUILD_JOBS = {
 def test_bounded_build_runs_only_its_driver_phase(spark, sf_dir, name):
     """A bounded query's build returns its plan unrun: the only jobs it
     starts are its bounded driver phase, never the query itself."""
-    assert QUERIES[name].plan is None
-    jobs = _jobs_in_second_build(spark, sf_dir, name, plan=False)
+    jobs = _jobs_in_second_build(spark, sf_dir, name)
     assert jobs <= _LAZY_BUILD_JOBS[name]
 
 
@@ -911,7 +939,14 @@ def _audit_module():
     return module
 
 
-@pytest.mark.parametrize("name", [*sorted(_LAZY_BUILD_JOBS), "als_implicit_top3"])
+# Builds that return the rows their data-dependent driver loop collected:
+# their audit line reads the local relation those rows become.
+_DRIVER_LOOP = ("q_bpe_train_merges", "q_kcore_peeling", "q_pagerank_converged")
+
+
+@pytest.mark.parametrize(
+    "name", [*sorted(_LAZY_BUILD_JOBS), *_DRIVER_LOOP, "als_implicit_top3"]
+)
 def test_audit_line_matches_plan_baseline(spark, sf_dir, name):
     """The audit's line for ``name`` is the one scripts/plan_baseline.txt
     holds (an sf0.001 snapshot), so a plan change on these queries, or a
@@ -930,9 +965,10 @@ def test_bpe_train_cluster_footprint_is_one_aggregate(spark, sf_dir):
     aggregate (one exchange), no joins, no per-merge jobs. Merge
     resolution is driver-side over that vocabulary-bounded table and
     never touches the cluster again at any merge count."""
+    from als_pyspark_spark.functions.text_queries import _bpe_words0
     from als_pyspark_spark.plans.inspect import exchange_count, join_kinds
 
-    df = QUERIES["q_bpe_train_merges"].plan(spark, sf_dir)
+    df = _bpe_words0(spark, sf_dir)
     plan = plan_of(df)
     assert exchange_count(df) == 1, plan
     assert join_kinds(df) == [], plan

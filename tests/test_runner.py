@@ -28,8 +28,7 @@ SESSION_CACHED = (
     "q_embedding_neardup_pairs",
     "q_dedup_clusters",
 )
-# The three queries whose ``Query.plan`` is a data-dependent driver loop,
-# and the queries whose build persists intermediates.
+# The queries whose build persists intermediates.
 PERSISTING = SESSION_CACHED + (
     "q_ann_ivf_top10",
     "q_ann_ivfpq_top10",
@@ -50,16 +49,23 @@ PERSISTING = SESSION_CACHED + (
     "q_triangle_count_parts",
 )
 # Builds whose result is driver-side rows by design, with no lazy plan:
-# doulion returns the one-row estimate its two counting jobs computed.
-DRIVER_ROWS = ("q_triangle_count_doulion",)
+# doulion returns the one-row estimate its two counting jobs computed;
+# k-core, converged PageRank and BPE training return the rows their
+# data-dependent loop collected.
+DRIVER_ROWS = (
+    "q_bpe_train_merges",
+    "q_kcore_peeling",
+    "q_pagerank_converged",
+    "q_triangle_count_doulion",
+)
 _NONE = StorageLevel(False, False, False, False, 1)
 
 
 @pytest.mark.parametrize("name", PERSISTING)
 def test_plan_releases_every_cache_it_persisted(name, spark, sf_dir, monkeypatch):
-    """Every DataFrame the plan (or lazy build) persists is uncached once
-    the runner context exits, and the yielded DataFrame is the distributed
-    plan, not a leaf of collected rows (except for ``DRIVER_ROWS``)."""
+    """Every DataFrame the build persists is uncached once the runner
+    context exits, and the yielded DataFrame is the distributed plan, not
+    a leaf of collected rows (except for ``DRIVER_ROWS``)."""
     cls, persisted = type(spark.range(1)), []
     for method in ("persist", "cache"):
 
@@ -68,7 +74,7 @@ def test_plan_releases_every_cache_it_persisted(name, spark, sf_dir, monkeypatch
             return _original(self, *args, **kwargs)
 
         monkeypatch.setattr(cls, method, recording)
-    with built(spark, QUERIES[name], sf_dir, plan=True) as df:
+    with built(spark, QUERIES[name], sf_dir) as df:
         root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
         assert name in DRIVER_ROWS or root not in ("LocalRelation", "LogicalRDD"), root
     monkeypatch.undo()
@@ -97,21 +103,19 @@ def _failing_query(spark, fail_in: str) -> tuple[Query, list]:
     or while its result is written."""
     caches = []
 
-    def plan(spark, sf_dir):
+    def build(spark, sf_dir):
         caches.append(deferred(spark.range(5).persist()))
         if fail_in == "build":
             raise ValueError("boom")
         return spark.range(3).select(F.raise_error(F.lit("boom")))
 
-    q = Query(name="q_runner_probe", build=plan, plan=plan)
-    return q, caches
+    return Query(name="q_runner_probe", build=build), caches
 
 
-@pytest.mark.parametrize("use_plan", [False, True])
-def test_build_failure_names_query_and_phase(spark, sf_dir, use_plan):
+def test_build_failure_names_query_and_phase(spark, sf_dir):
     q, caches = _failing_query(spark, "build")
     with pytest.raises(QueryError) as err:
-        with built(spark, q, sf_dir, plan=use_plan):
+        with built(spark, q, sf_dir):
             pass
     assert (err.value.name, err.value.phase) == ("q_runner_probe", "build")
     assert "q_runner_probe: build failed" in str(err.value)
@@ -123,7 +127,7 @@ def test_build_failure_names_query_and_phase(spark, sf_dir, use_plan):
 def test_execute_failure_names_query_and_phase(spark, sf_dir):
     q, caches = _failing_query(spark, "execute")
     with pytest.raises(QueryError) as err:
-        with built(spark, q, sf_dir, plan=True) as df:
+        with built(spark, q, sf_dir) as df:
             df.write.format("noop").mode("overwrite").save()
     assert (err.value.name, err.value.phase) == ("q_runner_probe", "execute")
     assert "q_runner_probe: execute failed" in str(err.value)

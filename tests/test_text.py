@@ -144,35 +144,3 @@ def test_bpe_encode_per_doc_bounds(spark, sf_dir):
         (df.n_bpe_tokens < df.n_words) | (df.n_bpe_tokens > df.n_chars)
     )
     assert bad.isEmpty()
-
-
-def test_bpe_driver_budget_env_is_read_lazily(monkeypatch):
-    """A malformed SPARK_GRAFT_BPE_DRIVER_ROWS must not break importing the
-    text-queries module; the trainer falls back to the 10M default and
-    warns."""
-    import os
-    import subprocess
-    import sys
-
-    import pytest
-
-    from als_pyspark_spark.functions import text_queries
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_GRAFT_BPE_DRIVER_ROWS="ten million")
-    proc = subprocess.run(
-        [sys.executable, "-c", "import als_pyspark_spark.functions.text_queries"],
-        cwd=repo,
-        env=env,
-        capture_output=True,
-        text=True,
-    )
-    assert proc.returncode == 0, proc.stderr
-
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_ROWS", "ten million")
-    with pytest.warns(UserWarning, match="not an integer"):
-        assert text_queries._bpe_driver_row_budget() == 10_000_000
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_ROWS", "5")
-    assert text_queries._bpe_driver_row_budget() == 5
-    monkeypatch.delenv("SPARK_GRAFT_BPE_DRIVER_ROWS")
-    assert text_queries._bpe_driver_row_budget() == 10_000_000
