@@ -40,25 +40,26 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: derive ratings from
     lineitem⋈orders, train ALS (rank=10, maxIter=5, seed=42), score all
     observed pairs and return per-user prediction quality — the reference's
-    whole __main__ pipeline (reference ALS.py:581-631) as one DataFrame."""
+    whole __main__ pipeline (reference ALS.py:581-631) as one DataFrame.
+    Built like every ``queries()`` entry, so its caches are released when
+    the next build starts."""
     from pyspark.sql import functions as F
 
-    from als_pyspark_spark.ml.als import ALSEngine, ALSParams
-    from als_pyspark_spark.sources.ratings import ratings
+    from als_pyspark_spark.ml.queries import fit
 
-    sf_dir = "/root/testdata/sf0.001"
-    with _engine(spark) as spark:
-        r = ratings(spark, sf_dir).cache()
-        eng = ALSEngine(ALSParams(rank=10, max_iter=5, reg_param=0.1, seed=42)).train(r)
-        preds = eng.predict(r)
+    def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+        eng, r = fit(spark, sf_dir)
         return (
-            preds.groupBy("user")
+            eng.predict(r)
+            .groupBy("user")
             .agg(
                 F.count("*").alias("n_rated"),
                 F.avg(F.pow(F.col("prediction") - F.col("rating"), 2)).alias("user_mse"),
             )
             .orderBy("user")
         )
+
+    return _on_engine_session(flagship)(spark, "/root/testdata/sf0.001")
 
 
 def _on_engine_session(

@@ -23,7 +23,6 @@ Differences from the reference, on purpose:
 from __future__ import annotations
 
 import argparse
-import sys
 import time
 
 
@@ -50,6 +49,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="fixture dir used when no ratings file is given")
     args = ap.parse_args(argv)
 
+    from als_pyspark_spark.caching import deferred, release_deferred
     from als_pyspark_spark.ml.als import ALSEngine, ALSParams
     from als_pyspark_spark.session import build_session
 
@@ -68,7 +68,8 @@ def main(argv: list[str] | None = None) -> int:
         df = fixture_ratings(spark, args.sf_dir)
     # Deriving the item-block count, training and scoring each read the
     # input; cache it so the file (or the fixture join) is scanned once.
-    df = df.cache()
+    # The cache and the model's factor RDDs are released before returning.
+    df = deferred(df.persist())
 
     engine = ALSEngine(
         ALSParams(
@@ -83,18 +84,22 @@ def main(argv: list[str] | None = None) -> int:
             seed=args.seed,
         )
     )
+    deferred(engine.release)
 
-    t0 = time.time()
-    engine.train(df)
-    print(f"training time {time.time() - t0:.3f}s")
+    try:
+        t0 = time.time()
+        engine.train(df)
+        print(f"training time {time.time() - t0:.3f}s")
 
-    t0 = time.time()
-    mse = engine.evaluate(df, "mse")
-    print(f"mse {mse:.6f}")
-    print(f"scoring time {time.time() - t0:.3f}s")
+        t0 = time.time()
+        mse = engine.evaluate(df, "mse")
+        print(f"mse {mse:.6f}")
+        print(f"scoring time {time.time() - t0:.3f}s")
 
-    if args.top_k > 0:
-        engine.recommend_for_all_users(args.top_k).show(10, truncate=False)
+        if args.top_k > 0:
+            engine.recommend_for_all_users(args.top_k).show(10, truncate=False)
+    finally:
+        release_deferred()
     return 0
 
 

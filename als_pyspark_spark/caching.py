@@ -13,8 +13,9 @@ One rule covers every such cache: every persist in the package is
 ``deferred(x.persist())``. The query returns its plan unrun, every
 reader within the query shares the cache, and the consumer calls
 :func:`release_deferred` once it is done with the result
-(``runner.built`` on exit, ``__spark_entry__.queries()`` before handing
-out the next build, perfbench after each operation). No cache outlives
+(``runner.built`` on exit; ``__spark_entry__.queries()`` and
+``__spark_entry__.entry()`` before handing out the next build; the CLI
+before it returns; perfbench after each operation). No cache outlives
 its query.
 
 ``collected`` (run a bounded result on the driver, unpersist, re-plan

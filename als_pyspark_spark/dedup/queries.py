@@ -61,37 +61,28 @@ _ROWS_PER_BAND = 4  # 16 = 4 bands × 4 rows; ~0.5 candidate prob at j≈0.7
 # agg-only job (HLL partials, no wide shuffle — at 100 TB this is the
 # cheapest full-scan statistic there is), and a ±2% estimate error can
 # only misclassify corpora near the threshold, where BOTH plans are
-# correct and within noise of each other. Memoized per fixture dir —
-# the three tiers share one scan, exactly like a warehouse reusing
-# ANALYZE statistics (``runner.reset_memos`` clears the memo, so every
-# bench pass reprices it honestly).
+# correct and within noise of each other. Each dedup query prices its
+# own scan.
 _COLLAPSE_MAX_DISTINCT_RATIO = 0.95
-_CLONE_RATIO: dict[str, float] = {}
+# Cleared by name by perfbench's ``isolate``; nothing in the package uses it.
+_CLONE_RATIO: dict = {}
 
 
 def _clone_ratio(spark: SparkSession, sf_dir: str) -> float:
-    """Memoized distinct-text ratio (≈ n_text_classes / n_docs) of the
-    fixture's documents table."""
-    got = _CLONE_RATIO.get(sf_dir)
-    if got is None:
-        # xxhash64, not md5: the statistic never faces an oracle, so the
-        # cheapest 64-bit hash wins — measured ~3× cheaper per decision
-        # scan on the long text column (the scan is repriced every bench
-        # pass, so its cost is part of the first dedup query's number)
-        row = (
-            load_table(spark, sf_dir, "documents")
-            .agg(
-                F.approx_count_distinct(F.xxhash64("text"), 0.02).alias(
-                    "classes"
-                ),
-                F.count("*").alias("docs"),
-            )
-            .collect()[0]
+    """Distinct-text ratio (≈ n_text_classes / n_docs) of the fixture's
+    documents table."""
+    # xxhash64, not md5: the statistic never faces an oracle, so the
+    # cheapest 64-bit hash wins — measured ~3× cheaper per decision scan
+    # on the long text column (every dedup tier pays this scan)
+    row = (
+        load_table(spark, sf_dir, "documents")
+        .agg(
+            F.approx_count_distinct(F.xxhash64("text"), 0.02).alias("classes"),
+            F.count("*").alias("docs"),
         )
-        got = _CLONE_RATIO[sf_dir] = (
-            row["classes"] / row["docs"] if row["docs"] else 1.0
-        )
-    return got
+        .collect()[0]
+    )
+    return row["classes"] / row["docs"] if row["docs"] else 1.0
 
 
 def _collapse_clones(spark: SparkSession, sf_dir: str) -> bool:

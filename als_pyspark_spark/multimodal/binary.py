@@ -1,9 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-No image/audio libraries exist in this container, so the DECODE step is a
-clearly-marked stub (NotImplementedError) with a deterministic fake used by
-tests — but the Spark-side plumbing is real and the part that matters at
-100 TB:
+No image/audio/video libraries are available, so the DECODE step is a
+deterministic fake (byte-level features, byte-slice frames) — but the
+Spark-side plumbing is real and the part that matters at 100 TB:
 
 - payloads live in a BINARY column, never in driver memory;
 - metadata is a typed STRUCT column (format, n_bytes) so pruning works —
@@ -41,18 +40,6 @@ def with_binary_payload(documents: DataFrame) -> DataFrame:
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real decoder stub — would be PIL.Image.open(io.BytesIO(payload)).
-
-    Kept as an explicit NotImplementedError so the boundary between real
-    plumbing and stubbed decode is unmissable.
-    """
-    raise NotImplementedError(
-        "image decode requires an image library not present in this "
-        "container; extract_features() uses a deterministic fake instead"
-    )
-
-
 def _fake_features(batch: pd.DataFrame) -> pd.DataFrame:
     """Deterministic stand-in for decode→feature-extract on one Arrow batch.
 
@@ -80,14 +67,6 @@ _FRAME_STEP = 4  # sample every 4th frame
 _RESIZE_BYTES = 8  # fake resize: keep the first 8 bytes of a frame
 
 
-def decode_video_frame(payload: bytes, offset: int) -> "object":
-    """Real frame decoder stub — would be ffmpeg/av seek+decode."""
-    raise NotImplementedError(
-        "video decode requires ffmpeg/av, absent from this container; "
-        "sample_frames() uses deterministic byte slices instead"
-    )
-
-
 def sample_frames(multimodal: DataFrame) -> DataFrame:
     """Frame-sample + resize over 'video' payloads via mapInPandas.
 
@@ -96,7 +75,7 @@ def sample_frames(multimodal: DataFrame) -> DataFrame:
     keeping the first _RESIZE_BYTES bytes, and emits the md5 per sampled
     frame — one-to-many per input row, the exact shape of a real
     frame-extraction job (and byte-deterministic, so it carries a full
-    DuckDB oracle). Swap the slice for decode_video_frame + a real
+    DuckDB oracle). Swap the slice for a real frame decoder and
     resampler later; the Spark-side batching/schema doesn't change.
     """
 

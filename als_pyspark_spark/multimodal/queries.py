@@ -101,8 +101,8 @@ def q_multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     each BINARY payload into 64-byte windows (the last may be short) and
     fingerprint each — the windowing step an audio feature pipeline runs
     before STFT/mel extraction, here with a deterministic fake in place of
-    the codec decode (no audio libs in this container; see
-    multimodal/binary.py for the stub boundary).
+    the codec decode (no audio library is available; see
+    multimodal/binary.py).
 
     Unlike the mapInPandas feature path, this one stays ENTIRELY JVM-side:
     sequence+explode for the window index, binary substring for the slice,

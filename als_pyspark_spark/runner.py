@@ -1,7 +1,8 @@
 """The one way harnesses run a registered query: :func:`built` builds it
-on a fresh engine session and releases what it cached on exit,
-:func:`force` runs it into the noop sink, and :func:`reset_memos` makes
-the next run re-pay the cross-query memos."""
+on a fresh engine session and releases what it cached on exit, and
+:func:`force` runs it into the noop sink. No query keeps state for the
+next, so every run pays its whole cost (an ALS query fits its own model,
+a dedup tier rescans its clone-ratio statistic)."""
 
 from __future__ import annotations
 
@@ -55,17 +56,3 @@ def force(spark: SparkSession, q: Query, sf_dir: str) -> float:
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-
-def reset_memos() -> None:
-    """Clear the trained ALS models and the fixture clone-ratio statistics,
-    in place, so the next run re-pays them. Each memoized model's factor
-    RDDs and cached ratings are unpersisted first, so the next run reads
-    neither warm."""
-    from als_pyspark_spark.dedup import queries as dedup_queries
-    from als_pyspark_spark.ml import queries as ml_queries
-
-    for engine, rated in ml_queries._TRAINED.values():
-        engine.release()
-        rated.unpersist()
-    ml_queries._TRAINED.clear()
-    dedup_queries._CLONE_RATIO.clear()

@@ -5,7 +5,6 @@ Jobs provided:
 
 - tumbling/sliding window aggregates with a watermark (late-data bound)
 - streaming exact dedup (dropDuplicates within the watermark)
-- session windows per user (gap-based)
 - custom stateful op via applyInPandasWithState (running per-user value sum
   emitting only on change past a threshold)
 
@@ -129,21 +128,6 @@ def streaming_dedup_within_watermark(
     pins."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
-    )
-
-
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user session windows with a 30-minute inactivity gap."""
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
     )
 
 

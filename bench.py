@@ -121,14 +121,13 @@ def main() -> int:
     # host with multi-× transient per-query outliers (measured: the same
     # query swinging 1.6s ↔ 6.5s between back-to-back runs at identical
     # plans); min-of-2 measures the ENGINE, not the neighbors. Every query
-    # still executes its complete plan each pass — streaming queries
-    # re-drain their state machines, ALS retrains and the clone-ratio
-    # statistics are rescanned, because the memos are reset per pass.
-    # Each timing is build + noop write, cold plans; cache release is not
-    # timed.
+    # executes its complete plan each run — streaming queries re-drain
+    # their state machines, every ALS query fits its own model and every
+    # dedup tier rescans its clone-ratio statistic, since no query keeps
+    # state for the next. Each timing is build + noop write, cold plans;
+    # cache release is not timed.
     passes: list[dict[str, float]] = []
     for pass_i in range(2):
-        runner.reset_memos()
         timings: dict[str, float] = {}
         for name in HEADLINE:
             dt = runner.force(spark, queries[name], sf_dir)
@@ -150,7 +149,6 @@ def main() -> int:
     # fast tier sums to a few seconds, not a third full pass.
     fast = [n for n in HEADLINE if best[n] < 2.0]
     if fast:
-        runner.reset_memos()
         for name in fast:
             dt = round(runner.force(spark, queries[name], sf_dir), 3)
             print(f"# pass3(fast) {name}: {dt:.2f}s", file=sys.stderr)

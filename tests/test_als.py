@@ -15,16 +15,18 @@ from als_pyspark_spark.sources.ratings import ratings
 @pytest.fixture(scope="module", autouse=True)
 def _release_trained_models():
     """Unpersist the factor RDDs of every model trained in this module once
-    it is done, so none outlives it into another module's checks."""
-    trained, train = [], ALSEngine.train
+    it is done, so none outlives it into another module's checks. Both fit
+    paths (``ALSEngine.train`` and the reference-signature ``train``) build
+    their estimator through ``ALSEngine.estimator``, so that is recorded."""
+    trained, estimator = [], ALSEngine.estimator
 
     def recording(self, *args, **kwargs):
         trained.append(self)
-        return train(self, *args, **kwargs)
+        return estimator(self, *args, **kwargs)
 
-    ALSEngine.train = recording
+    ALSEngine.estimator = recording
     yield
-    ALSEngine.train = train
+    ALSEngine.estimator = estimator
     for eng in trained:
         eng.release()
 
@@ -39,7 +41,9 @@ def rated(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def engine(rated):
-    return ALSEngine(ALSParams(rank=10, max_iter=5, reg_param=0.1, seed=42)).train(rated)
+    eng = ALSEngine(ALSParams(rank=10, max_iter=5, reg_param=0.1, seed=42)).train(rated)
+    yield eng
+    eng.release()
 
 
 def test_training_rmse_below_threshold(engine, rated):

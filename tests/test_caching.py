@@ -182,3 +182,17 @@ def test_driver_entry_releases_the_previous_query_caches(spark, sf_dir):
     builds["q1_pricing_summary"](spark, sf_dir).collect()
     assert not any(_is_cached(c) for c in held)
     release_deferred()
+
+
+def test_driver_flagship_entry_releases_its_caches(spark, sf_dir):
+    """``__spark_entry__.entry`` is built like every ``queries()`` build:
+    once the driver has collected it and the next query, neither the
+    flagship's ratings cache nor a factor RDD of its model is left."""
+    import __spark_entry__
+
+    __spark_entry__.entry(spark).collect()
+    __spark_entry__.queries()["q1_pricing_summary"](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    names = [rdds.get(k).name() or "" for k in rdds.keySet()]
+    assert not [n for n in names if n.startswith(("userFactors", "itemFactors"))]

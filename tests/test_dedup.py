@@ -511,7 +511,7 @@ def test_adaptive_collapse_paths_identical(spark, sf_dir):
 
 def test_adaptive_collapse_decision(spark, tmp_path):
     """The decision statistic: clone-dense fixture → collapse; the
-    memo is per-fixture-dir and survives repeat calls."""
+    clone-free standard fixture → doc-level."""
     from als_pyspark_spark.dedup import queries as dq
 
     rows = [(i, f"doc body number {i % 4} repeated text") for i in range(40)]
@@ -520,11 +520,7 @@ def test_adaptive_collapse_decision(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
 
-    dq._CLONE_RATIO.pop(str(tmp_path), None)
     assert dq._collapse_clones(spark, str(tmp_path))  # 4/40 distinct
-    assert str(tmp_path) in dq._CLONE_RATIO
-    # clone-free standard fixture decides doc-level
-    dq._CLONE_RATIO.pop("/root/testdata/sf0.001", None)
     assert not dq._collapse_clones(spark, "/root/testdata/sf0.001")
 
 

@@ -1,15 +1,13 @@
-"""Multimodal plumbing: binary round-trip, mapInPandas batch shape, stub
-boundary."""
+"""Multimodal plumbing: binary round-trip, mapInPandas batch shape,
+payload pruning."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from als_pyspark_spark.multimodal.binary import (
-    decode_image,
     extract_features,
     with_binary_payload,
 )
@@ -33,11 +31,6 @@ def test_features_deterministic(spark, sf_dir):
         assert r.n_bytes == len(text.encode())
         assert r.head_hash == hashlib.md5(text.encode()[:16]).hexdigest()
         assert 0.0 <= r.fake_mean_luma <= 1.0
-
-
-def test_decode_stub_is_explicit():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG...")
 
 
 def test_metadata_only_query_prunes_payload(spark, sf_dir):

@@ -216,40 +216,39 @@ def test_dtype_parity_catches_hugeint_class():
 
 
 def test_every_persist_site_is_released_or_documented():
-    """Every ``.persist()`` in the engine sits inside a ``deferred(...)``
-    call: the one cache lifetime, registered where the cache is made and
-    released with its query by the consumer (``caching.deferred``). A
-    persist in any other form is how caches came to outlive their query
-    (the r8/r9 ADVICE leaks, the pair tables once kept for the session)."""
+    """Every ``.persist()`` or ``.cache()`` in the engine and the driver
+    entry sits inside a ``deferred(...)`` call: the one cache lifetime,
+    registered where the cache is made and released with its query by the
+    consumer (``caching.deferred``). A cache made in any other form is how
+    caches came to outlive their query (the r8/r9 ADVICE leaks, the pair
+    tables once kept for the session, the flagship's ratings)."""
     import ast
 
-    def is_call(node, name):
+    def is_call(node, *names):
         f = getattr(node, "func", None)
-        return isinstance(node, ast.Call) and name in (
-            getattr(f, "id", None), getattr(f, "attr", None)
+        return isinstance(node, ast.Call) and bool(
+            {getattr(f, "id", None), getattr(f, "attr", None)} & set(names)
         )
 
-    pkg = os.path.join(_REPO, "als_pyspark_spark")
+    paths = [os.path.join(_REPO, "__spark_entry__.py")]
+    for root, _dirs, files in os.walk(os.path.join(_REPO, "als_pyspark_spark")):
+        paths += [os.path.join(root, fn) for fn in files if fn.endswith(".py")]
     offenders = []
-    for root, _dirs, files in os.walk(pkg):
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(root, fn)
-            tree = ast.parse(open(path).read())
-            deferred = {
-                id(n)
-                for call in ast.walk(tree)
-                if is_call(call, "deferred")
-                for arg in call.args
-                for n in ast.walk(arg)
-            }
-            offenders += [
-                f"{path}:{n.lineno}"
-                for n in ast.walk(tree)
-                if is_call(n, "persist") and id(n) not in deferred
-            ]
-    assert not offenders, f"persist() outside a deferred(...) call: {offenders}"
+    for path in paths:
+        tree = ast.parse(open(path).read())
+        deferred = {
+            id(n)
+            for call in ast.walk(tree)
+            if is_call(call, "deferred")
+            for arg in call.args
+            for n in ast.walk(arg)
+        }
+        offenders += [
+            f"{path}:{n.lineno}"
+            for n in ast.walk(tree)
+            if is_call(n, "persist", "cache") and id(n) not in deferred
+        ]
+    assert not offenders, f"persist()/cache() outside a deferred(...) call: {offenders}"
 
 
 def test_driver_rows_enter_spark_only_through_local_frame():

@@ -4,8 +4,6 @@ here."""
 
 from __future__ import annotations
 
-from unittest.mock import Mock
-
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import SparkSession
@@ -17,6 +15,15 @@ from als_pyspark_spark.registry import Query, load_all_queries
 from als_pyspark_spark.runner import QueryError, built
 
 QUERIES = load_all_queries()
+# The ALS queries: each persists its ratings and fits its own model.
+ALS = (
+    "als_implicit_top3",
+    "als_mse",
+    "als_nonnegative_factor_bounds",
+    "als_predictions",
+    "als_top3_recs_per_user",
+    "als_user_factors",
+)
 # The queries that once kept a cache for the session; with
 # ``q_dedup_clusters``, the one that released a cache they shared.
 SESSION_CACHED = (
@@ -47,7 +54,7 @@ PERSISTING = SESSION_CACHED + (
     "q_semantic_dedup_clusters",
     "q_triangle_count_doulion",
     "q_triangle_count_parts",
-)
+) + ALS
 # Builds whose result is driver-side rows by design, with no lazy plan:
 # doulion returns the one-row estimate its two counting jobs computed;
 # k-core, converged PageRank and BPE training return the rows their
@@ -87,8 +94,6 @@ def test_no_cache_outlives_its_query(spark, sf_dir):
     the dedup and near-dup pair tables leave Spark's shared cache empty
     and no new persistent RDD: no query can read a cache another left,
     or drop one another still reads."""
-    runner.reset_memos()
-    spark.catalog.clearCache()  # caches earlier tests' fixtures held
     cache = spark._jsparkSession.sharedState().cacheManager()
     rdds = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     before = rdds()
@@ -142,60 +147,19 @@ def test_execute_failure_names_query_and_phase(spark, sf_dir):
     assert [c.storageLevel for c in caches] == [_NONE, _NONE]
 
 
-def test_reset_memos_clears_in_place():
-    from als_pyspark_spark.dedup import queries as dedup_queries
-    from als_pyspark_spark.ml import queries as ml_queries
-
-    trained, ratio = ml_queries._TRAINED, dedup_queries._CLONE_RATIO
-    trained[("app", "sf")] = (Mock(), Mock())
-    ratio["sf"] = 0.5
-    runner.reset_memos()
-    assert ml_queries._TRAINED is trained and not trained
-    assert dedup_queries._CLONE_RATIO is ratio and not ratio
-
-
-def test_reset_memos_releases_the_als_memo(spark, sf_dir):
-    """Clearing the ALS memo also uncaches its ratings and unpersists its
-    model's factor RDDs, so the next pass trains and reads cold."""
-    from als_pyspark_spark.ml import queries as ml_queries
-    from als_pyspark_spark.sources.ratings import ratings
-
-    runner.reset_memos()
-    runner.force(spark, QUERIES["als_mse"], sf_dir)
-    ((engine, _),) = ml_queries._TRAINED.values()
-    factor_rdds = set()
-    for factors in (engine.model.userFactors, engine.model.itemFactors):
-        leaves = factors._jdf.queryExecution().analyzed().collectLeaves()
-        factor_rdds |= {leaves.apply(i).rdd().id() for i in range(leaves.size())}
-    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    assert len(factor_rdds) == 2 and factor_rdds <= persistent()
-
-    runner.reset_memos()
-    plan = ratings(spark, sf_dir)._jdf.queryExecution().withCachedData().toString()
-    assert "InMemoryRelation" not in plan, plan
-    assert not factor_rdds & persistent()
-
-
 def test_no_als_factor_rdd_outlives_its_query(spark, sf_dir):
-    """The two ALS queries that train their own model release it when the
-    runner is done with the result, keeping the memo's ratings cache, and
-    no factor RDD of any fit (MLlib's intermediate ``itemFactors-<iter>``
-    included) is still persisted after ``reset_memos``."""
-    from als_pyspark_spark.ml import queries as ml_queries
+    """Every ALS query fits its own model and releases it with its query:
+    once the runner is done with the result, no factor RDD of any fit
+    (MLlib's intermediate ``itemFactors-<iter>`` included) is persisted."""
 
     def factor_rdds():
         rdds = spark.sparkContext._jsc.getPersistentRDDs()
         names = [rdds.get(k).name() or "" for k in rdds.keySet()]
         return sorted(n for n in names if n.startswith(("userFactors", "itemFactors")))
 
-    runner.reset_memos()
-    runner.force(spark, QUERIES["als_mse"], sf_dir)
-    ((_, rated),) = ml_queries._TRAINED.values()
-    for name in ("als_implicit_top3", "als_nonnegative_factor_bounds"):
+    for name in ALS:
         runner.force(spark, QUERIES[name], sf_dir)
-        assert rated.storageLevel != _NONE, name
-    runner.reset_memos()
-    assert factor_rdds() == []
+        assert factor_rdds() == [], name
 
 
 # Queries that register temp views, UDTFs, a memory sink or conf on the

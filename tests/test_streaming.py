@@ -18,7 +18,6 @@ from als_pyspark_spark.streaming.events import (
     read_events_stream,
     run_to_memory,
     running_user_value,
-    session_windows,
     sliding_counts,
     streaming_dedup,
     tumbling_hourly,
@@ -54,17 +53,6 @@ def test_sliding_double_counts(spark, sf_dir):
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     # 1h window / 30min slide → every event in exactly 2 windows
     assert total_windowed == 2 * n_events
-
-
-def test_session_windows(spark, sf_dir):
-    stream = session_windows(read_events_stream(spark, sf_dir))
-    got = run_to_memory(stream, "t_sessions", mode="complete")
-    assert got.count() > 0
-    # session bounds are ordered and per-user event counts add up
-    bad = got.where(F.col("session_start") > F.col("session_end")).count()
-    assert bad == 0
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert got.agg(F.sum("n_events")).collect()[0][0] == n_events
 
 
 def test_stateful_running_value(spark, sf_dir):
