@@ -147,6 +147,34 @@ def test_execute_failure_names_query_and_phase(spark, sf_dir):
     assert [c.storageLevel for c in caches] == [_NONE, _NONE]
 
 
+def test_reset_memos_releases_the_als_memo(spark, sf_dir, monkeypatch):
+    """What the retired ALS memo held, the ratings cache and the model's
+    factor RDDs, is released with the query that fit them: persisted while
+    its result is built, uncached and unpersisted once the runner is done,
+    so the next query trains and reads cold."""
+    from als_pyspark_spark.ml import queries as ml_queries
+    from als_pyspark_spark.sources.ratings import ratings
+
+    fits, real_fit = [], ml_queries.fit
+    monkeypatch.setattr(
+        ml_queries, "fit", lambda *a, **k: fits.append(real_fit(*a, **k)) or fits[-1]
+    )
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    with built(spark, QUERIES["als_mse"], sf_dir):
+        ((engine, rated),) = fits
+        factor_rdds = set()
+        for factors in (engine.model.userFactors, engine.model.itemFactors):
+            leaves = factors._jdf.queryExecution().analyzed().collectLeaves()
+            factor_rdds |= {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+        assert len(factor_rdds) == 2 and factor_rdds <= persistent()
+        assert rated.storageLevel != _NONE
+
+    plan = ratings(spark, sf_dir)._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" not in plan, plan
+    assert not factor_rdds & persistent()
+    assert rated.storageLevel == _NONE
+
+
 def test_no_als_factor_rdd_outlives_its_query(spark, sf_dir):
     """Every ALS query fits its own model and releases it with its query:
     once the runner is done with the result, no factor RDD of any fit
